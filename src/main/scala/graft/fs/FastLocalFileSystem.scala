@@ -1,7 +1,11 @@
 package graft.fs
 
+import java.net.URI
 import java.nio.file.attribute.PosixFilePermission
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Local filesystem without the per-file process forks.
@@ -11,28 +15,38 @@ import org.apache.hadoop.fs.permission.FsPermission
   * create and EVERY mkdir, because the committer and the writers pass
   * explicit permissions — forks a `chmod` process, and every
   * permission-carrying `getFileStatus` forks `ls -ld`
-  * (`loadPermissionInfo`). A fork of a large JVM costs ~5–10 ms, so a
-  * dynamic-partition write that touches 128 partition directories
-  * (dirs + data files + .crc files) pays HUNDREDS of forks ≈ 2 s of
-  * pure process-spawn per append — stack-sampled on the q110s band
-  * append (`Shell.runCommand <- RawLocalFileSystem.setPermission <-
-  * LocalFSFileOutputStream.<init>` and `<- mkOneDirWithMode`). The
-  * same cost rides every staged write, swap write, snapshot commit
-  * and streaming state-store checkpoint in the engine.
+  * (`loadPermissionInfo`), and every `getFileLinkStatus` forks
+  * `readlink` (`FileUtil.readLink`). A fork of a large JVM costs
+  * ~2–10 ms, so a dynamic-partition write that touches 128 partition
+  * directories (dirs + data files + .crc files) pays HUNDREDS of forks
+  * ≈ 2 s of pure process-spawn per append — stack-sampled on the q110s
+  * band append (`Shell.runCommand <- RawLocalFileSystem.setPermission <-
+  * LocalFSFileOutputStream.<init>` and `<- mkOneDirWithMode`).
+  *
+  * Hadoop reaches `file://` through two APIs, and each needs its own
+  * binding to this class:
+  *   - the `FileSystem` API (writers, readers, `Snapshots`,
+  *     `ManifestIO`, staged and swap writes) through
+  *     [[FastLocalFileSystem]];
+  *   - the `FileContext` API (Structured Streaming offset and commit
+  *     logs, state-store deltas, snapshots and checksum sidecars, all
+  *     written by Spark's `FileContextBasedCheckpointFileManager`)
+  *     through [[FastLocalFs]].
   *
   * This subclass implements the same operations with java.nio calls
   * (one syscall, no fork) — the same local-FS fast-path idea as
   * [[graft.Fs.listDataFiles]]. Semantics are preserved: permissions
   * are still applied (via `Files.setPosixFilePermissions`), statuses
   * still carry real permissions (via `PosixFileAttributes`); special
-  * bits (sticky/setuid — unused by any write path here) fall back to
-  * the shell implementation. On a production cluster the native
-  * `libhadoop` makes stock Hadoop behave this way already; object
-  * stores never fork at all — registering this class for `file://`
-  * makes local runs measure the engine, not process-spawn overhead.
+  * bits (sticky/setuid — unused by any write path here) and symlink
+  * statuses fall back to the shell implementation. On a production
+  * cluster the native `libhadoop` makes stock Hadoop behave this way
+  * already; object stores never fork at all — registering this class
+  * for `file://` makes local runs measure the engine, not process-spawn
+  * overhead.
   *
-  * Registered via `spark.hadoop.fs.file.impl` by every session
-  * builder ([[graft.SessionFs.configure]]).
+  * Registered for both APIs by every session builder
+  * ([[graft.SessionFs.configure]]).
   */
 class FastRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -90,6 +104,14 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
       case _: UnsupportedOperationException => super.getFileStatus(f)
     }
 
+  /** `AbstractFileSystem.renameInternal` asks for the link status of both
+    * ends of every `FileContext` rename. The superclass forks `readlink`
+    * (`FileUtil.readLink`) and then returns `getFileStatus`; a path that
+    * is not a symlink skips the fork, and only a real symlink takes it. */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(nioPath(f))) super.getFileLinkStatus(f)
+    else getFileStatus(f)
+
   override def listStatus(f: Path): Array[FileStatus] = {
     val np = nioPath(f)
     if (!java.nio.file.Files.isDirectory(np)) {
@@ -111,7 +133,29 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
   }
 }
 
-/** The checksummed (`file://`) wrapper over [[FastRawLocalFileSystem]]
-  * — byte-identical on-disk behavior to stock `LocalFileSystem`
-  * (including .crc sidecars), minus the process forks. */
+/** `file://` for the `FileSystem` API: the checksummed wrapper over
+  * [[FastRawLocalFileSystem]] — byte-identical on-disk behavior to stock
+  * `LocalFileSystem` (including .crc sidecars), minus the process forks. */
 class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem)
+
+/** `file://` for the `FileContext` API, which streaming checkpoints use:
+  * the checksummed wrapper over [[FastRawLocalFs]], mirroring stock
+  * `org.apache.hadoop.fs.local.LocalFs`, which likewise ignores `uri`
+  * (there is only one local filesystem). */
+class FastLocalFs(uri: URI, conf: Configuration)
+  extends ChecksumFs(new FastRawLocalFs(FsConstants.LOCAL_FS_URI, conf)) {
+  def this(conf: Configuration) = this(FsConstants.LOCAL_FS_URI, conf)
+}
+
+/** `FileContext` binding of [[FastRawLocalFileSystem]], mirroring stock
+  * `org.apache.hadoop.fs.local.RawLocalFs`. */
+class FastRawLocalFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new FastRawLocalFileSystem, conf,
+    FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults
+  override def getServerDefaults(): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}
