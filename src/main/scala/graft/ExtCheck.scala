@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end SparkSessionExtensions check, in its own JVM: the
   * in-suite test can only exercise [[graft.functions.GraftExtensions]]
   * against a bare `SparkSessionExtensions` instance because
@@ -15,13 +13,8 @@ import org.apache.spark.sql.SparkSession
   * verdict. Run: `sbt "runMain graft.ExtCheck"`. */
 object ExtCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SessionFs.configure(SparkSession.builder())
-      .master("local[2]")
-      .appName("graft-ext-check")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(2, "spark.app.name" -> "graft-ext-check",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions")
     spark.sparkContext.setLogLevel("WARN")
     try {
       // (a) injected functions resolve and compute from plain SQL

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-JOB profile of a single registered query (dev tool, not
   * part of the contract). For a lifecycle query that runs dozens of
@@ -24,12 +23,7 @@ object JobProfile {
     val name = args.headOption.getOrElse(sys.error("query name required"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -50,33 +44,13 @@ object JobProfile {
       }
     }
     val fn = SparkEntry.queries(name)
-    // mirror the bench's untimed staging (Bench.runSweep) so the
-    // profiled walls match bench timings instead of folding clone /
-    // model / state staging into the measured rep
-    def stageFor(): Unit = {
-      def is(set: Set[String]) = set.exists(p => name.startsWith(p + "_"))
-      if (Bench.modelStagers.exists(p => name.startsWith(p)))
-        operators.Similarity.stageModels(spark, sfDir)
-      if (is(Bench.gramStagers)) operators.Curation.stageGrams(spark, sfDir)
-      if (is(Bench.cloneStagers))
-        operators.Dedup.stageIngestClones(spark, sfDir, 1)
-      if (is(Bench.snapStagers))
-        operators.Dedup.stageSnapClones(spark, sfDir, 1)
-      if (is(Bench.stateStagers))
-        operators.Dedup.stageResidentState(spark, sfDir)
-      if (is(Bench.vocabStagers))
-        operators.TextAnalysis.stageVocabStats(spark, sfDir)
-      if (is(Bench.bm25SnapStagers))
-        operators.TextAnalysis.stageBm25SnapClones(spark, sfDir, 1)
-      if (is(Bench.ivfSnapStagers))
-        operators.Similarity.stageIvfSnapClones(spark, sfDir, 1)
-      if (is(Bench.pqSnapStagers))
-        operators.Similarity.stagePqSnapClones(spark, sfDir, 1)
-    }
     // warmup rep(s) then the measured rep — mirrors the bench's
-    // staged/warm regime so JIT and one-time staging don't pollute
+    // staged/warm regime so JIT and one-time staging don't pollute; each
+    // rep first runs the bench's untimed per-sweep staging (Bench.stage)
+    // so the profiled walls match bench timings instead of folding
+    // clone / model / state staging into the measured rep
     for (r <- 1 to reps) {
-      stageFor()
+      Bench.stage(spark, sfDir, Seq(name), s"rep $r")
       jobs.clear(); order.clear()
       if (r == reps) spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SCALE REHEARSAL: self-union documents/embeddings into a ~Nx corpus
@@ -122,13 +121,8 @@ object Rehearsal {
     // repeating the whole multi-hour pass (full runs omit it)
     val onlyQ = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val dir = Fs.createStagingDir(spark, "graft-rehearsal")
     try {
@@ -139,7 +133,7 @@ object Rehearsal {
         val big = (0 until factor)
           .map(k => base.withColumn(idCol, col(idCol) + lit(k * step)))
           .reduce(_ unionByName _)
-        big.repartition(cpus.toInt)
+        big.repartition(cpus)
           .write.mode("overwrite").parquet(s"$dir/$table.parquet")
         spark.read.parquet(s"$dir/$table.parquet").count()
       }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level filesystem wiring shared by every entry point (Bench,
-  * Verify, JobProfile, Probe, tests): binds `file://` to the fork-free
+/** Session-level filesystem wiring, applied by [[Sessions.local]] (every
+  * entry point and the test session): binds `file://` to the fork-free
   * local filesystem for both Hadoop APIs, so local runs do not fork a
   * process per file create / mkdir / permission stat (see
   * [[graft.fs.FastRawLocalFileSystem]] for the stack-sampled

@@ -40,4 +40,29 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.map(_._2).reduce(_ ++ _)
+
+  /** The queries a run covers: with `SPARK_GRAFT_ONLY=q31,q32` (a dev
+    * subset) those whose name contains any listed pattern; unset (a
+    * full run) every query. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case Some(v) =>
+        val pats = v.split(",").map(_.trim).filter(_.nonEmpty)
+        queries.filter { case (n, _) => pats.exists(n.contains) }
+      case None => queries
+    }
+
+  /** JSON string literal for `s`: escapes backslash, quote and ALL
+    * control chars (<0x20) — a tab or CR in an oracle SQL string would
+    * otherwise make `oracle_sql.json` unparseable for the DuckDB
+    * compare. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,31 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import SparkEntry.jsonStr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failures = List.empty[(String, String)]
-    // dev convenience: SPARK_GRAFT_ONLY=q32,q33 runs a subset (substring
-    // match); unset (the driver's invocation) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) =>
-        pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>
@@ -37,18 +22,6 @@ object Verify {
       // small heap otherwise accumulate dead block storage)
       graft.streaming.Replay.releaseOutputs()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The driver keys its correctness report by the OUTPUT DIRECTORY name
     // (including the `.parquet` suffix), not the bare query name — round 1's
     // oracle entries were all invisible to it (`err: no_oracle`). Emit each
@@ -56,7 +29,7 @@ object Verify {
     // so any lookup convention finds it.
     val json = SparkEntry.oracleSql
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     try Files.writeString(Paths.get("oracle_sql.json"), json)
     catch { case e: Throwable =>
@@ -66,7 +39,7 @@ object Verify {
     // exit code 0 even on failures — stderr lines scroll away, a file
     // doesn't)
     val failJson = failures.sortBy(_._1)
-      .map { case (n, m) => s"${q(n)}: ${q(m)}" }.mkString("{", ",", "}")
+      .map { case (n, m) => s"${jsonStr(n)}: ${jsonStr(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
     spark.stop()
   }

@@ -158,7 +158,8 @@ object Curation {
         .select(explode(grams5(col("toks"))).as("gram")).distinct()))
 
   /** Force the memoized benchmark-gram relation for `d` NOW — the
-    * bench harness's untimed pre-stage hook (Bench.gramStagers). The
+    * bench harness's untimed pre-stage hook (the `gram` row of
+    * [[graft.Bench.staging]]). The
     * gram set is index-like ("build once per eval-suite version,
     * probe every batch"), so its materialization belongs with the
     * trained models' stage_sec, not inside whichever streaming

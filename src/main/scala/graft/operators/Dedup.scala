@@ -2552,7 +2552,8 @@ object Dedup {
     java.util.concurrent.ConcurrentLinkedQueue[String]]()
 
   /** Pre-stage `n` clones of the saved LSH index UNTIMED (the bench's
-    * per-sweep stage hook, Bench.cloneStagers): the lifecycle queries
+    * per-sweep stage hook, the `clone` row of [[graft.Bench.staging]]):
+    * the lifecycle queries
     * (q103/q103b/q103s/q107) each MUTATE a private clone so the shared
     * q99 artifact stays immutable across re-runs — but the clone is
     * harness setup, not lifecycle work (a production pipeline appends/
@@ -2652,7 +2653,8 @@ object Dedup {
     * corpora, it survives clearMemos: in production this is a parquet
     * table maintained batch over batch, not a per-job derivation).
     * Returns the table directory. The bench calls this from its
-    * untimed stage block (Bench.stateStagers) so the one-time
+    * untimed stage block ([[graft.Bench.staging]], `state` row) so the
+    * one-time
     * derivation is charged to stage_sec, not to whichever q110 run a
     * sweep hits first; Verify and tests hit the same lazy path
     * inline. */
@@ -2781,7 +2783,7 @@ object Dedup {
     java.util.concurrent.ConcurrentLinkedQueue[String]]()
 
   /** Pre-stage `n` byte-copies of the committed-v1 snapshot index
-    * UNTIMED (Bench.snapStagers) — the q109 analogue of
+    * UNTIMED ([[graft.Bench.staging]], `snap` row) — the q109 analogue of
     * [[stageIngestClones]]: the initial save + v1 commit is a shared
     * immutable artifact; what q109 demonstrates (and times) is the
     * append → commit v2 → dual as-of serves. */

@@ -546,7 +546,8 @@ object Similarity {
     })
 
   /** Force-train every memoized ANN model for (session, dir) — the
-    * bench's untimed per-sweep pre-stage ([[graft.Bench.modelStagers]]).
+    * bench's untimed per-sweep pre-stage (the `model` row of
+    * [[graft.Bench.staging]]).
     * Training is eager ([[graft.Materialize.cut]] materializes on
     * call), so after this returns the model queries hit warm memos and
     * time only the query path — the "train once per corpus version,
@@ -1661,7 +1662,8 @@ object Similarity {
     java.util.concurrent.ConcurrentLinkedQueue[String]]()
 
   /** Pre-stage `n` byte-copies of the committed-v1 IVF snapshot index
-    * UNTIMED (Bench.ivfSnapStagers): the training + save + v1 commit
+    * UNTIMED ([[graft.Bench.staging]], `ivf-snap` row): the training +
+    * save + v1 commit
     * is a shared immutable artifact; what q130 demonstrates (and
     * times) is the append, the v2 commit and the dual as-of serves. */
   def stageIvfSnapClones(s: SparkSession, d: String, n: Int): Unit = {
@@ -1695,7 +1697,8 @@ object Similarity {
     java.util.concurrent.ConcurrentLinkedQueue[String]]()
 
   /** Pre-stage `n` byte-copies of the committed-v1 PQ snapshot index
-    * UNTIMED (Bench.pqSnapStagers) — the q130 accounting applied to
+    * UNTIMED ([[graft.Bench.staging]], `pq-snap` row) — the q130
+    * accounting applied to
     * the PQ family. */
   def stagePqSnapClones(s: SparkSession, d: String, n: Int): Unit = {
     val src = pqSnapDir(s, d)

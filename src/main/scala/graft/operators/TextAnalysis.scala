@@ -978,7 +978,8 @@ object TextAnalysis {
     java.util.concurrent.ConcurrentLinkedQueue[String]]()
 
   /** Pre-stage `n` byte-copies of the committed-v1 BM25 snapshot index
-    * UNTIMED (Bench.bm25SnapStagers): the initial save + v1 commit is
+    * UNTIMED ([[graft.Bench.staging]], `bm25-snap` row): the initial
+    * save + v1 commit is
     * a shared immutable artifact; what q129 demonstrates (and times)
     * is the append/delete/compact commits and the four as-of serves. */
   def stageBm25SnapClones(s: SparkSession, d: String, n: Int): Unit = {

@@ -4,15 +4,46 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Guards the bench harness's knowledge of which queries use keyed
-  * replay staging: [[Bench.replayStagers]] must list exactly the
-  * query prefixes that pass a `stageKey = Some(s"qNN:...")` to
+/** Guards the bench harness's knowledge of which queries need untimed
+  * staging: each row of [[Bench.staging]] must list exactly the
+  * queries that consume what it stages — for the replay row, the query
+  * prefixes that pass a `stageKey = Some(s"qNN:...")` to
   * [[graft.streaming.Replay.run]] or call `Replay.stageOnce(s,
   * s"qNN:...")` directly. A replay query added without updating the
-  * set would silently lose its untimed pre-stage pass and re-absorb
+  * row would silently lose its untimed pre-stage pass and re-absorb
   * the one-time staging write into sweep 1's timing — the exact skew
   * the pass exists to remove. */
 class BenchConfigSpec extends AnyFunSuite {
+
+  /** The keys the staging table's row `row` serves. */
+  private def declared(row: String): Set[String] =
+    Bench.staging.filter(_.name == row).flatMap(_.keys).toSet
+
+  /** Keys of the `"qNN_…" ->` map entries of operators/`file` whose
+    * body contains any of `markers`. An entry's body ends at the NEXT
+    * entry or at its Map literal's closing paren, whichever comes
+    * first — the regex matches both the queries and the oracle maps,
+    * and the last entry of each map would otherwise swallow the helper
+    * DEFINITIONS that follow (ingestLoop, takeClone, ...) and
+    * self-attribute their names. */
+  private def consumersOf(file: String, markers: String*): Set[String] = {
+    val text = Files.readString(Paths.get(
+      "src", "main", "scala", "graft", "operators", file))
+    val ms = """"(q[0-9]+[a-z]*)_[a-z0-9_]*"\s*->""".r
+      .findAllMatchIn(text).toList
+    assert(ms.nonEmpty, s"no query entries found in $file — pattern rot?")
+    ms.zipWithIndex.flatMap { case (m, i) =>
+      val next = if (i + 1 < ms.size) ms(i + 1).start else text.length
+      val close = text.indexOf("\n  )\n", m.end)
+      val end = if (close == -1) next else math.min(close, next)
+      if (markers.exists(text.substring(m.end, end).contains))
+        Some(m.group(1))
+      else None
+    }.toSet
+  }
+
+  private lazy val bench = Files.readString(
+    Paths.get("src", "main", "scala", "graft", "Bench.scala"))
 
   test("Bench.replayStagers matches the stageKey call sites in source") {
     val root = Paths.get("src", "main", "scala")
@@ -30,32 +61,22 @@ class BenchConfigSpec extends AnyFunSuite {
       pat.findAllMatchIn(text).map(_.group(1))
     }.toSet
     assert(found.nonEmpty, "no stageKey call sites found — pattern rot?")
-    assert(found === Bench.replayStagers,
-      s"Bench.replayStagers=${Bench.replayStagers.toSeq.sorted} but source " +
-        s"call sites use ${found.toSeq.sorted} — update Bench.replayStagers")
+    assert(found === declared("replay"),
+      s"Bench staging row replay=${declared("replay").toSeq.sorted} but " +
+        s"source call sites use ${found.toSeq.sorted} — update Bench's " +
+        "replay row")
   }
 
   test("Bench.gramStagers matches the benchGramsRel consumers in Curation") {
-    // same coupling idea as replayStagers: a query that consumes the
+    // same coupling idea as the replay row: a query that consumes the
     // memoized benchmark-gram relation must be listed so its
     // materialization is pre-staged untimed (r11: the unstaged rebuild
     // doubled q84's median on an unchanged stream plan)
-    val text = Files.readString(Paths.get(
-      "src", "main", "scala", "graft", "operators", "Curation.scala"))
-    val entry = """"(q[0-9]+[a-z]*)_[a-z0-9_]*"\s*->""".r
-    val ms = entry.findAllMatchIn(text).toList
-    assert(ms.nonEmpty, "no query entries found in Curation — pattern rot?")
-    val consumers = ms.zipWithIndex.flatMap { case (m, i) =>
-      val end = if (i + 1 < ms.size) ms(i + 1).start else text.length
-      if (text.substring(m.end, end).contains("benchGramsRel(")) Some(m.group(1))
-      else None
-    }.toSet
+    val consumers = consumersOf("Curation.scala", "benchGramsRel(")
     assert(consumers.nonEmpty, "no benchGramsRel consumers found — pattern rot?")
-    assert(consumers === Bench.gramStagers,
-      s"Bench.gramStagers=${Bench.gramStagers.toSeq.sorted} but Curation " +
-        s"queries using benchGramsRel are ${consumers.toSeq.sorted}")
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
+    assert(consumers === declared("gram"),
+      s"Bench staging row gram=${declared("gram").toSeq.sorted} but " +
+        s"Curation queries using benchGramsRel are ${consumers.toSeq.sorted}")
     assert(bench.contains("Curation.stageGrams("),
       "Bench's stage block never calls Curation.stageGrams")
   }
@@ -65,47 +86,26 @@ class BenchConfigSpec extends AnyFunSuite {
     // (Dedup.takeClone) must be listed so the bench pre-stages its
     // clone untimed — an unlisted consumer silently re-absorbs the
     // ~4-5 s byte copy into its timed median (the r12 accounting bug)
-    val text = Files.readString(Paths.get(
-      "src", "main", "scala", "graft", "operators", "Dedup.scala"))
-    val entry = """"(q[0-9]+[a-z]*)_[a-z0-9_]*"\s*->""".r
-    val ms = entry.findAllMatchIn(text).toList
-    assert(ms.nonEmpty, "no query entries found in Dedup — pattern rot?")
-    // an entry's body ends at the NEXT entry or at its Map literal's
-    // closing paren, whichever comes first — the regex matches both
-    // the queries and the oracle maps, and the last entry of each map
-    // would otherwise swallow the helper DEFINITIONS that follow
-    // (ingestLoop, takeClone, ...) and self-attribute their names
-    def bodyEnd(from: Int, nextStart: Int): Int = {
-      val close = text.indexOf("\n  )\n", from)
-      if (close == -1) nextStart else math.min(close, nextStart)
-    }
-    def consumersOf(markers: String*): Set[String] =
-      ms.zipWithIndex.flatMap { case (m, i) =>
-        val next = if (i + 1 < ms.size) ms(i + 1).start else text.length
-        val body = text.substring(m.end, bodyEnd(m.end, next))
-        if (markers.exists(body.contains)) Some(m.group(1)) else None
-      }.toSet
     // direct takeClone call or via the shared ingestLoop helper
     // (which takeClones internally)
-    val consumers = consumersOf("takeClone(", "ingestLoop(")
+    val consumers = consumersOf("Dedup.scala", "takeClone(", "ingestLoop(")
     assert(consumers.nonEmpty, "no takeClone consumers found — pattern rot?")
-    assert(consumers === Bench.cloneStagers,
-      s"Bench.cloneStagers=${Bench.cloneStagers.toSeq.sorted} but Dedup " +
-        s"queries consuming clones are ${consumers.toSeq.sorted}")
+    assert(consumers === declared("clone"),
+      s"Bench staging row clone=${declared("clone").toSeq.sorted} but " +
+        s"Dedup queries consuming clones are ${consumers.toSeq.sorted}")
     // the committed-v1 snapshot clones (q109) have their own pool
-    val snapConsumers = consumersOf("takeSnapClone(")
-    assert(snapConsumers === Bench.snapStagers,
-      s"Bench.snapStagers=${Bench.snapStagers.toSeq.sorted} but Dedup " +
+    val snapConsumers = consumersOf("Dedup.scala", "takeSnapClone(")
+    assert(snapConsumers === declared("snap"),
+      s"Bench staging row snap=${declared("snap").toSeq.sorted} but Dedup " +
         s"queries consuming snap clones are ${snapConsumers.toSeq.sorted}")
     // the persisted resident-label state table (q110 family): direct
     // stageResidentState call or the residentLabelsServed reader
-    val stateConsumers =
-      consumersOf("residentLabelsServed(", "stageResidentState(")
-    assert(stateConsumers === Bench.stateStagers,
-      s"Bench.stateStagers=${Bench.stateStagers.toSeq.sorted} but Dedup " +
-        s"queries consuming the label state are ${stateConsumers.toSeq.sorted}")
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
+    val stateConsumers = consumersOf("Dedup.scala",
+      "residentLabelsServed(", "stageResidentState(")
+    assert(stateConsumers === declared("state"),
+      s"Bench staging row state=${declared("state").toSeq.sorted} but " +
+        s"Dedup queries consuming the label state are " +
+        s"${stateConsumers.toSeq.sorted}")
     assert(bench.contains("Dedup.stageIngestClones("),
       "Bench's stage block never calls Dedup.stageIngestClones")
     assert(bench.contains("Dedup.stageSnapClones("),
@@ -117,75 +117,57 @@ class BenchConfigSpec extends AnyFunSuite {
   test("Bench.vocabStagers matches the stageVocabStats consumers in TextAnalysis") {
     // q116's persisted vocabulary-stats table is derived once per
     // session (files, like the label state table); a consumer missing
-    // from vocabStagers pays the one-time resident-corpus aggregate
+    // from the vocab row pays the one-time resident-corpus aggregate
     // inside whichever sweep times it first (the r13 advice item)
-    val text = Files.readString(Paths.get(
-      "src", "main", "scala", "graft", "operators", "TextAnalysis.scala"))
-    val entry = """"(q[0-9]+[a-z]*)_[a-z0-9_]*"\s*->""".r
-    val ms = entry.findAllMatchIn(text).toList
-    assert(ms.nonEmpty, "no query entries found in TextAnalysis — pattern rot?")
-    def bodyEnd(from: Int, nextStart: Int): Int = {
-      val close = text.indexOf("\n  )\n", from)
-      if (close == -1) nextStart else math.min(close, nextStart)
-    }
-    val consumers = ms.zipWithIndex.flatMap { case (m, i) =>
-      val next = if (i + 1 < ms.size) ms(i + 1).start else text.length
-      val body = text.substring(m.end, bodyEnd(m.end, next))
-      if (body.contains("stageVocabStats(")) Some(m.group(1)) else None
-    }.toSet
+    val consumers = consumersOf("TextAnalysis.scala", "stageVocabStats(")
     assert(consumers.nonEmpty, "no stageVocabStats consumers found — pattern rot?")
-    assert(consumers === Bench.vocabStagers,
-      s"Bench.vocabStagers=${Bench.vocabStagers.toSeq.sorted} but TextAnalysis " +
-        s"queries consuming vocab stats are ${consumers.toSeq.sorted}")
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
+    assert(consumers === declared("vocab"),
+      s"Bench staging row vocab=${declared("vocab").toSeq.sorted} but " +
+        s"TextAnalysis queries consuming vocab stats are " +
+        s"${consumers.toSeq.sorted}")
     assert(bench.contains("TextAnalysis.stageVocabStats("),
       "Bench's stage block never calls TextAnalysis.stageVocabStats")
   }
 
   test("Bench.bm25SnapStagers/ivfSnapStagers match the snap-clone consumers") {
     // the committed-v1 snapshot clones of the BM25 and IVF families
-    // (q129/q130) follow the same accounting as Dedup's snapStagers: a
-    // consumer missing from its set re-absorbs the index build + v1
+    // (q129/q130) follow the same accounting as Dedup's snap row: a
+    // consumer missing from its row re-absorbs the index build + v1
     // commit into its timed median
-    def consumersIn(file: String, marker: String): Set[String] = {
-      val text = Files.readString(Paths.get(
-        "src", "main", "scala", "graft", "operators", file))
-      val entry = """"(q[0-9]+[a-z]*)_[a-z0-9_]*"\s*->""".r
-      val ms = entry.findAllMatchIn(text).toList
-      def bodyEnd(from: Int, nextStart: Int): Int = {
-        val close = text.indexOf("\n  )\n", from)
-        if (close == -1) nextStart else math.min(close, nextStart)
-      }
-      ms.zipWithIndex.flatMap { case (m, i) =>
-        val next = if (i + 1 < ms.size) ms(i + 1).start else text.length
-        val body = text.substring(m.end, bodyEnd(m.end, next))
-        if (body.contains(marker)) Some(m.group(1)) else None
-      }.toSet
-    }
-    val bm25 = consumersIn("TextAnalysis.scala", "takeBm25SnapClone(")
+    val bm25 = consumersOf("TextAnalysis.scala", "takeBm25SnapClone(")
     assert(bm25.nonEmpty, "no takeBm25SnapClone consumers — pattern rot?")
-    assert(bm25 === Bench.bm25SnapStagers,
-      s"Bench.bm25SnapStagers=${Bench.bm25SnapStagers.toSeq.sorted} but " +
-        s"TextAnalysis consumers are ${bm25.toSeq.sorted}")
-    val ivf = consumersIn("Similarity.scala", "takeIvfSnapClone(")
+    assert(bm25 === declared("bm25-snap"),
+      s"Bench staging row bm25-snap=${declared("bm25-snap").toSeq.sorted} " +
+        s"but TextAnalysis consumers are ${bm25.toSeq.sorted}")
+    val ivf = consumersOf("Similarity.scala", "takeIvfSnapClone(")
     assert(ivf.nonEmpty, "no takeIvfSnapClone consumers — pattern rot?")
-    assert(ivf === Bench.ivfSnapStagers,
-      s"Bench.ivfSnapStagers=${Bench.ivfSnapStagers.toSeq.sorted} but " +
-        s"Similarity consumers are ${ivf.toSeq.sorted}")
-    val pq = consumersIn("Similarity.scala", "takePqSnapClone(")
+    assert(ivf === declared("ivf-snap"),
+      s"Bench staging row ivf-snap=${declared("ivf-snap").toSeq.sorted} " +
+        s"but Similarity consumers are ${ivf.toSeq.sorted}")
+    val pq = consumersOf("Similarity.scala", "takePqSnapClone(")
     assert(pq.nonEmpty, "no takePqSnapClone consumers — pattern rot?")
-    assert(pq === Bench.pqSnapStagers,
-      s"Bench.pqSnapStagers=${Bench.pqSnapStagers.toSeq.sorted} but " +
-        s"Similarity consumers are ${pq.toSeq.sorted}")
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
+    assert(pq === declared("pq-snap"),
+      s"Bench staging row pq-snap=${declared("pq-snap").toSeq.sorted} " +
+        s"but Similarity consumers are ${pq.toSeq.sorted}")
     assert(bench.contains("TextAnalysis.stageBm25SnapClones("),
       "Bench's stage block never calls TextAnalysis.stageBm25SnapClones")
     assert(bench.contains("Similarity.stageIvfSnapClones("),
       "Bench's stage block never calls Similarity.stageIvfSnapClones")
     assert(bench.contains("Similarity.stagePqSnapClones("),
       "Bench's stage block never calls Similarity.stagePqSnapClones")
+  }
+
+  test("every staging-table key is a registered query key and every row " +
+      "serves a query") {
+    // rows match by key equality, so a mistyped key would silently
+    // unstage its query instead of failing anywhere
+    val registered = SparkEntry.queries.keySet.map(Bench.key)
+    for (row <- Bench.staging) {
+      assert(row.keys.nonEmpty, s"staging row ${row.name} serves no query")
+      val unknown = row.keys -- registered
+      assert(unknown.isEmpty, s"staging row ${row.name} names keys with no " +
+        s"registered query: ${unknown.toSeq.sorted}")
+    }
   }
 
   test("partialSelection: heaviest-first admission under the remaining " +
@@ -248,8 +230,6 @@ class BenchConfigSpec extends AnyFunSuite {
     // (the same grep-coupling style as the stager tests): the flush
     // call sits INSIDE runSweep, and both the sweep loop and the guard
     // loop consult elapsed + lastSweepWall against the budget.
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
     assert(bench.contains("SPARK_GRAFT_TIME_BUDGET_S"),
       "Bench has no wall-clock budget env knob")
     val sweepBody = bench.substring(bench.indexOf("def runSweep("))
@@ -359,8 +339,6 @@ class BenchConfigSpec extends AnyFunSuite {
       .map(_.getFileName.toString.stripSuffix(".scala"))
       .toSet
     assert(definers.nonEmpty, "no clearMemos definers found — pattern rot?")
-    val bench = Files.readString(
-      Paths.get("src", "main", "scala", "graft", "Bench.scala"))
     val uncleared = definers.filterNot(m => bench.contains(s"$m.clearMemos()"))
     assert(uncleared.isEmpty,
       s"modules define clearMemos but Bench's sweep loop never calls them: " +

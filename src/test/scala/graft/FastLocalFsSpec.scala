@@ -120,7 +120,10 @@ class FastLocalFsSpec extends SparkSpec {
             text.substring(0, m.start).endsWith("SessionFs.configure("))
         }
       } finally walk.close()
-    assert(sites.nonEmpty, "no SparkSession.builder() found — pattern rot?")
+    // one builder, in Sessions: every entry point gets the same wiring
+    assert(sites.size == 1 && sites.head._1.contains("/Sessions.scala:"),
+      s"expected exactly one SparkSession.builder(), in Sessions.scala; " +
+        s"found ${sites.map(_._1)}")
     val bare = sites.collect { case (at, false) => at }
     assert(bare.isEmpty, s"session builders without SessionFs.configure: $bare")
   }

@@ -833,9 +833,9 @@ class ScaleShapeSpec extends SparkSpec {
       p.collectFirst {
         case _: GlobalLimit => (); case _: LocalLimit => ()
       }.isDefined
-    val skip = Bench.replayStagers
+    val skip = Bench.staging.filter(_.name == "replay").flatMap(_.keys).toSet
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-        if !skip.exists(p => name.startsWith(p + "_"))) {
+        if !skip(Bench.key(name))) {
       val plan = fn(s, sf).queryExecution.optimizedPlan
       plan.foreach {
         case w: LWindow if w.partitionSpec.isEmpty =>

@@ -5,13 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test session: one JVM-wide SparkSession for all suites. */
 object SparkSpec {
-  lazy val spark: SparkSession = SessionFs.configure(SparkSession.builder())
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.local(4, "spark.app.name" -> "graft-test")
 
   val sf: String = "/root/testdata/sf0.001"
 }
