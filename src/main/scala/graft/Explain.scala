@@ -51,7 +51,7 @@ object Explain {
     "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan carries (band_id, kbucket) PartitionFilters from the batch's collected bucket set — the resident corpus is never rescanned",
     "q100_ann_recall" -> "ANN recall@10 self-evaluation: exact leg is a broadcast probe cross join with SALTED two-stage per-probe top-k (no single task sorts a probe's full candidate stream); IVF leg is cell-bounded under the broadcast centroid/cell relations",
     "q101_zorder_range" -> "2-D range over the Z-order clustered layout: the query box maps driver-side to its coarse Morton cells, which reach the scan as a static zbucket PartitionFilters — unmatched cells' files are never opened, for boxes and single-dimension ranges alike",
-    "q99b_lsh_admission" -> "batch admission verdict: ONE probe sketch (materialized) feeds both legs — the file-pruned broadcast corpus join and the within-batch band self-join; verdict assembly is two left joins on the batch-sized id relation",
+    "q99b_lsh_admission" -> "batch admission verdict: ONE probe sketch (materialized) feeds both legs — the file-pruned broadcast corpus join and the within-batch band self-join; verdict assembly unions the spine, corpus-hit and batch-hit (doc_id, c, b) rows into ONE grouping on the batch-sized id set",
     // ---- every remaining >=1 s query (BENCH_r12 medians), so plan
     // drift on the whole expensive set is pinned here and guarded by
     // PlanDocsSpec. For replay/lifecycle queries the pinned plan is

@@ -134,14 +134,21 @@ object Dedup {
     * fold-of-min-hex-prefix because the fold is order-isomorphic to
     * the fixed-length prefix. coalesce keeps the legacy NULL-tokset →
     * array-of-16-NULLs shape that `array(sig0, ..., sig15)` yielded. */
-  def withMinhash(docs: DataFrame): DataFrame = {
-    val base = withToks(docs).withColumn("sig",
+  def withMinhash(docs: DataFrame): DataFrame =
+    // one projection for all K positions (withColumns over an ordered
+    // map keeps withColumn's append-or-replace semantics and column
+    // order): a withColumn per position re-analyzes the growing plan
+    // K times per call
+    withSig(docs).withColumns(scala.collection.immutable.ListMap(
+      (0 until K).map(i => s"sig$i" -> col("sig").getItem(i)): _*))
+
+  /** [[withToks]] plus the K-long `sig` array alone — the sketch
+    * without the per-position columns, for callers that index `sig`
+    * directly. */
+  private def withSig(docs: DataFrame): DataFrame =
+    withToks(docs).withColumn("sig",
       coalesce(graft.functions.VectorFunctions.minhash16(col("tokset")),
         array((0 until K).map(_ => lit(null).cast("long")): _*)))
-    (0 until K).foldLeft(base) { (df, i) =>
-      df.withColumn(s"sig$i", col("sig").getItem(i))
-    }
-  }
 
   /** Oracle twin of the kernel, two stages: p_i = lexicographic min of
     * the position's 8-hex-char digest slice over the token set, then
@@ -363,33 +370,56 @@ object Dedup {
     * text never survives past the sketch projection.
     *
     * Same adaptive exchange placement as [[minhashSignatures]]: when
-    * the source scan is narrower than the configured parallelism (a
+    * the input is narrower than the configured parallelism (a
     * single-split corpus file — the sf0.1 bench case), pre-shuffle the
     * raw docs by doc_id so the K-md5 sketch spreads across n cores
     * instead of one (measured: q99 8.3 s → the sketch was the whole
-    * cost); a scan already wide keeps its partitioning and nothing
+    * cost); an input already wide keeps its partitioning and nothing
     * moves before the skinny projection. */
   private[graft] def indexBandRows(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    // file count as the parallelism proxy (inputFiles reads the
-    // already-listed scan relation; .rdd would force a full plan +
-    // deserializer codegen per call — measured ~2 s per serve on the
-    // bench corpus). A multi-file corpus scans at least one split per
-    // file, so the spread only fires for genuinely narrow scans.
-    val spread = if (docs.inputFiles.length < n)
+    val spread = if (scanWidth(docs) < n)
       docs.repartition(n, col("doc_id")) else docs
-    val sig = withMinhash(spread)
-    val hexed = sig.select(col("doc_id") +: col("sig") +:
+    // band keys read sig[i] straight from the array: the K per-position
+    // columns of withMinhash would only be projected away again
+    val hexed = withSig(spread).select(col("doc_id") +: col("sig") +:
       (0 until Bands).map { b =>
         md5(concat_ws(":", (b * RowsPerBand until (b + 1) * RowsPerBand)
-          .map(i => col(s"sig$i").cast("string")): _*)).as(s"hx$b")
+          .map(i => col("sig").getItem(i).cast("string")): _*)).as(s"hx$b")
       }: _*)
     val keyed = hexed.select(col("doc_id") +: col("sig") +:
       (0 until Bands).map(b => expr(Tokens.hex48(s"hx$b")).as(s"bk$b")): _*)
     keyed.select(col("doc_id"), col("sig"), col("bk0"),
         posexplode(array((0 until Bands).map(b => col(s"bk$b")): _*)))
       .toDF("doc_id", "sig", "bk0", "band_id", "band_key")
+  }
+
+  /** How many tasks `docs` already scans in, read off the optimized
+    * plan without building the physical one (`.rdd` would force a full
+    * plan + deserializer codegen per call — measured ~2 s per serve on
+    * the bench corpus):
+    *   - a driver-local relation (every localized or `createDataFrame`
+    *     batch) scans in min(rows, leaf parallelism) slices — a 100-doc
+    *     batch on local[4] is already 4-way, and a spread would only
+    *     add a shuffle job in front of a 25-row-per-task sketch;
+    *   - a materialized relation (`LogicalRDD`, e.g. a checkpoint)
+    *     scans in its RDD's partitions;
+    *   - anything else counts its input files: a multi-file corpus
+    *     scans at least one split per file, so the spread only fires
+    *     for genuinely narrow scans. */
+  private def scanWidth(docs: DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val s = docs.sparkSession
+    docs.queryExecution.optimizedPlan match {
+      case lr: LocalRelation =>
+        math.min(lr.data.size, s.conf.getOption(
+          "spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+          .getOrElse(s.sparkContext.defaultParallelism))
+      case r: LogicalRDD => r.rdd.getNumPartitions
+      case _ => docs.inputFiles.length
+    }
   }
 
   private def minhashPairsUncached(s: SparkSession, d: String): DataFrame = {

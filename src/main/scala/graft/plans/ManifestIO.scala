@@ -25,12 +25,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the planner via a pre-populated FileStatusCache
   * ([[org.apache.spark.sql.execution.datasources
   * .GraftManifestReadBridge]]). Partition-column inference (basePath),
-  * schema inference (incl. mergeSchema), partition pruning and the
-  * scan itself are Spark's own unchanged code paths — the only thing
-  * removed is the redundant listing. Data files under a committed
-  * table are immutable once visible (every lifecycle here is
-  * copy-on-write), which is what makes the enumeration-then-plan
-  * handoff safe. */
+  * partition pruning and the scan itself are Spark's own unchanged
+  * code paths. The data schema comes from the one footer Spark's
+  * inference would read, read on the driver: without mergeSchema a
+  * manifest-fed read launches no Spark job at all (Spark's inference
+  * ships that single footer read to a one-task job); with mergeSchema
+  * Spark's parallel merge job reads every file as before. Data files
+  * under a committed table are immutable once visible (every
+  * lifecycle here is copy-on-write), which is what makes the
+  * enumeration-then-plan handoff safe. */
 object ManifestIO {
 
   /** Scheme-tolerant key for matching enumerated statuses to the

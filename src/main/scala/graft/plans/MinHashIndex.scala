@@ -36,11 +36,17 @@ import graft.operators.Dedup
   * `serve` probes a batch: the batch is sketched map-side with the
   * exact q31 kernel, BROADCAST (the incremental contract is
   * batch ≪ corpus), and hash-joined against the pruned scan — no
-  * shuffle of index rows at all. Hot band keys (boilerplate / empty
-  * documents sharing one signature) cost candidate VOLUME here, not a
-  * single-reducer stall: the broadcast join fans the hot bucket out
-  * across the scan's file partitions, unlike the self-join case that
-  * needs [[Dedup]]'s salted-triangle guard.
+  * shuffle of index rows at all. The pruning set — the batch's
+  * (band_id, kbucket) pairs — is read on the driver off the localized
+  * sketch. A committed index then reads exactly the current (or
+  * pinned) version's manifested files under those
+  * `band_id=b/kbucket=k/` directories; an uncommitted one reads its
+  * directory with the pairs as a partition predicate. Hot band keys
+  * (boilerplate / empty documents sharing one signature) cost
+  * candidate VOLUME here, not a single-reducer stall: the broadcast
+  * join fans the hot bucket out across the scan's file partitions,
+  * unlike the self-join case that needs [[Dedup]]'s salted-triangle
+  * guard.
   */
 object MinHashIndex {
 
@@ -64,6 +70,34 @@ object MinHashIndex {
   private def withBucket(rows: DataFrame): DataFrame =
     rows.withColumn("kbucket", kbucket(col("band_key")))
 
+  /** The one band writer: write-sized-for-read, one shuffle by the
+    * partition key so each (band_id, kbucket) directory gets ONE file
+    * (each key hashes to exactly one task) — without it every sketch
+    * task writes a sliver into every directory (32 tasks × 128 dirs ≈
+    * 4k files) and the serve path's pruned scan pays the per-file open
+    * cost the partitioning was meant to save. The partition count is
+    * explicit (`spark.sql.shuffle.partitions`): a count-less
+    * repartition lets AQE coalesce a batch-sized shuffle into ONE
+    * write task that creates every touched directory's file one after
+    * another; an explicit count is never coalesced, so the files land
+    * n-wide. */
+  private def writeBands(rows: DataFrame, path: String, mode: String): Unit = {
+    val n = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.repartition(n, col("band_id"), col("kbucket"))
+      .write.mode(mode).partitionBy("band_id", "kbucket").parquet(path)
+  }
+
+  /** The (band_id, kbucket) partition a bands-tree file sits in, read
+    * off its `band_id=b/kbucket=k/` path segments. */
+  private def partitionOf(f: String): (Int, Int) = {
+    val segs = f.split('/')
+    def seg(c: String) = segs.find(_.startsWith(c + "="))
+      .map(_.drop(c.length + 1).toInt)
+      .getOrElse(throw new IllegalStateException(
+        s"MinHashIndex: no $c= segment in $f"))
+    (seg("band_id"), seg("kbucket"))
+  }
+
   /** The OCC append's LANDING step, writer-exact: sketch `docs`' band
     * rows into a private staging subdir and move them into the live
     * (band_id, kbucket) layout ([[Snapshots.landStaged]]), returning
@@ -74,10 +108,8 @@ object MinHashIndex {
   private[graft] def landBands(s: SparkSession, bands: String,
       docs: DataFrame): Seq[String] =
     Snapshots.landStaged(s, bands) { stage =>
-      withBucket(Dedup.indexBandRows(docs))
-        .repartition(col("band_id"), col("kbucket"))
-        .write.mode("append").partitionBy("band_id", "kbucket")
-        .parquet(stage)
+      graft.Jobs.labeled(s, "lsh: land band rows")(
+        writeBands(withBucket(Dedup.indexBandRows(docs)), stage, "append"))
     }
 
   /** Sketch `residentDocs` ((doc_id, text)) and persist the banded
@@ -86,15 +118,8 @@ object MinHashIndex {
   def save(s: SparkSession, residentDocs: DataFrame, docsPath: String,
       indexDir: String): Handle = {
     val base = IvfTopK.qualify(s, indexDir)
-    withBucket(Dedup.indexBandRows(residentDocs))
-      // write-sized-for-read: one shuffle by the partition key so each
-      // (band_id, kbucket) directory gets ONE file — without it every
-      // sketch task writes a sliver into every directory (32 tasks ×
-      // 128 dirs ≈ 4k files) and the serve path's pruned scan pays the
-      // per-file open cost the partitioning was meant to save
-      .repartition(col("band_id"), col("kbucket"))
-      .write.mode("overwrite").partitionBy("band_id", "kbucket")
-      .parquet(s"$base/bands")
+    writeBands(withBucket(Dedup.indexBandRows(residentDocs)),
+      s"$base/bands", "overwrite")
     import s.implicits._
     Seq(docsPath).toDF("docs_path")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
@@ -144,12 +169,9 @@ object MinHashIndex {
           "— re-ingest of a deleted id requires a purgeCommit first")
     }
     val obs = new org.apache.spark.sql.Observation()
-    graft.Jobs.labeled(s, "lsh: append band rows")(
+    graft.Jobs.labeled(s, "lsh: append band rows")(writeBands(
       withBucket(Dedup.indexBandRows(
-        staged.observe(obs, count(lit(1)).as("n"))))
-      .repartition(col("band_id"), col("kbucket"))
-      .write.mode("append").partitionBy("band_id", "kbucket")
-      .parquet(bands))
+        staged.observe(obs, count(lit(1)).as("n")))), bands, "append"))
     val n = obs.get("n") match {
       case v: java.lang.Long => v.longValue()
       case other => sys.error(s"unexpected observe metric: $other")
@@ -264,18 +286,26 @@ object MinHashIndex {
     Snapshots.files(s, bands, v)
       .partition(f => !f.startsWith(s"$bands/deletes/"))
 
-  /** Version `v`'s effective bands RELATION: the manifested band files
-    * (basePath keeps (band_id, kbucket) pruning) with that version's
-    * tombstones anti-joined out (broadcast — tombstones are
-    * delete-sized, never corpus-sized). */
+  /** Version `v`'s effective bands RELATION over the `touched`
+    * (band_id, kbucket) partitions: exactly the manifested band files
+    * under those `band_id=b/kbucket=k/` directories (basePath keeps the
+    * partition columns), with that version's tombstones anti-joined
+    * out (broadcast — tombstones are delete-sized, never corpus-sized).
+    * Pruning is a file-list choice made on the driver, so the read
+    * stats and plans only the files the probe can reach instead of
+    * planning every manifested file under a 2×[[KBuckets]]-term OR
+    * predicate. No touched partition holding a file leaves an empty
+    * relation of the same schema. */
   private def versionRelation(s: SparkSession, bands: String,
-      v: Int): DataFrame = {
+      v: Int, touched: Set[(Int, Int)]): DataFrame = {
     val (bandF, tombF) = manifestPieces(s, bands, v)
-    val rel =
-      if (bandF.isEmpty)
-        throw new IllegalStateException(
-          s"snapshot v$v under $bands references no band files")
-      else ManifestIO.read(s, bands, bandF)
+    if (bandF.isEmpty)
+      throw new IllegalStateException(
+        s"snapshot v$v under $bands references no band files")
+    val rel = bandF.filter(f => touched(partitionOf(f))) match {
+      case Seq() => ManifestIO.read(s, bands, bandF.take(1)).where(lit(false))
+      case files => ManifestIO.read(s, bands, files)
+    }
     if (tombF.isEmpty) rel
     else rel.join(broadcast(s.read.parquet(tombF: _*)),
       Seq("doc_id"), "left_anti")
@@ -340,15 +370,7 @@ object MinHashIndex {
       throw new IllegalStateException(
         s"purgeCommit: no committed snapshot under $bands"))
     val (bandF, tombF) = manifestPieces(s, bands, v)
-    def partOf(f: String): (Int, Int) = {
-      val segs = f.split('/')
-      def seg(c: String) = segs.find(_.startsWith(c + "="))
-        .map(_.drop(c.length + 1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"purgeCommit: no $c= segment in $f"))
-      (seg("band_id"), seg("kbucket"))
-    }
-    val fragged: Set[(Int, Int)] = bandF.groupBy(partOf)
+    val fragged: Set[(Int, Int)] = bandF.groupBy(partitionOf)
       .collect { case (p, fl) if fl.size > maxFiles => p }.toSet
     val tombed: Set[(Int, Int)] =
       if (tombF.isEmpty) Set.empty
@@ -359,16 +381,14 @@ object MinHashIndex {
     val touched = fragged ++ tombed
     if (touched.isEmpty && tombF.isEmpty) return v
     if (touched.nonEmpty) {
-      val files = bandF.filter(f => touched(partOf(f)))
+      val files = bandF.filter(f => touched(partitionOf(f)))
       val cur = ManifestIO.read(s, bands, files)
       val purged =
         if (tombF.isEmpty) cur
         else cur.join(broadcast(s.read.parquet(tombF: _*)),
           Seq("doc_id"), "left_anti")
       val merged = graft.Materialize.cut(purged)
-      merged.repartition(col("band_id"), col("kbucket"))
-        .write.mode("append").partitionBy("band_id", "kbucket")
-        .parquet(bands)
+      writeBands(merged, bands, "append")
       graft.Materialize.release(merged)
     }
     Snapshots.commitReplacing(s, bands, v,
@@ -400,7 +420,11 @@ object MinHashIndex {
     * claim that re-selects an already-selected file, converting any
     * residual mis-claim into a loud conflict instead of duplicated
     * band rows. `expected` is the base version the caller read (None =
-    * read current at entry). Returns (committedVersion,
+    * read current at entry). A driver-local batch (a `LocalRelation`:
+    * its rows are inline in the plan, so a retry's re-validation
+    * recomputes them exactly) is used as is; any other batch is
+    * materialized once ([[graft.Materialize.cut]]) so the landing and
+    * every re-validation see the same rows. Returns (committedVersion,
     * conflictsObserved). */
   def appendCommitRetrying(s: SparkSession, indexDir: String,
       newDocs: DataFrame, expected: Option[Int] = None,
@@ -409,7 +433,9 @@ object MinHashIndex {
     var v = expected.orElse(Snapshots.current(s, bands)).getOrElse(
       throw new IllegalStateException(
         s"appendCommitRetrying: no committed snapshot under $bands"))
-    val staged = graft.Materialize.cut(newDocs)
+    val local = newDocs.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val staged = if (local) newDocs else graft.Materialize.cut(newDocs)
     val ids = staged.select(col("doc_id")).distinct()
     def checkTombstones(w: Int): Unit = {
       val tombF = manifestPieces(s, bands, w)._2
@@ -422,9 +448,9 @@ object MinHashIndex {
             "are unreferenced; expire() reclaims them)")
       }
     }
-    // `staged` must stay materialized through the retry loop — every
-    // re-validation's `ids` derives from it (releasing it after the
-    // landing would make a retry recompute a truncated-lineage
+    // a materialized `staged` must stay so through the retry loop —
+    // every re-validation's `ids` derives from it (releasing it after
+    // the landing would make a retry recompute a truncated-lineage
     // checkpoint)
     try {
       checkTombstones(v)
@@ -449,7 +475,7 @@ object MinHashIndex {
         }
       }
       throw new IllegalStateException("unreachable")
-    } finally graft.Materialize.release(staged)
+    } finally if (!local) graft.Materialize.release(staged)
   }
 
   /** File-level copy of a saved index (bands + meta). Mutation-testing
@@ -519,11 +545,10 @@ object MinHashIndex {
     // (doc, band) with band_id 0..Bands-1 dense per doc, so the
     // band-0 row count IS the distinct doc count
     val obs = new org.apache.spark.sql.Observation()
-    graft.Jobs.labeled(s, "lsh: append band rows")(withBucket(bandRows)
-      .observe(obs, count(when(col("band_id") === 0, 1)).as("docs"))
-      .repartition(col("band_id"), col("kbucket"))
-      .write.mode("append").partitionBy("band_id", "kbucket")
-      .parquet(s"$base/bands"))
+    graft.Jobs.labeled(s, "lsh: append band rows")(writeBands(
+      withBucket(bandRows)
+        .observe(obs, count(when(col("band_id") === 0, 1)).as("docs")),
+      s"$base/bands", "append"))
     obs.get("docs") match {
       case n: java.lang.Long => n.longValue()
       case other => sys.error(s"unexpected observe metric: $other")
@@ -560,10 +585,9 @@ object MinHashIndex {
     * committed before a [[deleteCommit]] still sees the deleted docs,
     * one committed after does not. */
   def serveRowsAsOf(s: SparkSession, indexDir: String, version: Int,
-      probeRows: DataFrame): DataFrame = {
-    val base = IvfTopK.qualify(s, indexDir)
-    serveOn(versionRelation(s, s"$base/bands", version), probeRows)
-  }
+      probeRows: DataFrame): DataFrame =
+    serveOn(s, s"${IvfTopK.qualify(s, indexDir)}/bands", Some(version),
+      probeRows)
 
   /** [[serve]] over ALREADY-SKETCHED probe band rows (callers that
     * reuse one probe sketch across several legs — q110 feeds the same
@@ -572,24 +596,18 @@ object MinHashIndex {
     serveFrom(s, h, probeRows)
 
   /** [[serve]] body over pre-materialized probe band rows, so the
-    * admission verdict can reuse one probe sketch for both its legs. */
+    * admission verdict can reuse one probe sketch for both its legs.
+    * The LIVE bands relation: for an uncommitted index a plain
+    * directory read; for a MANIFEST-COMMITTED index ([[Snapshots]])
+    * the CURRENT version's exact file set — a direct directory read
+    * would silently DOUBLE-COUNT rows after a copy-on-write compaction
+    * ([[compactCommitSnapshot]]), because the merged files land as
+    * siblings of the files older versions still reference and both
+    * stay on disk until [[Snapshots.expire]]. One manifest-dir
+    * existence check on the happy path. */
   private def serveFrom(s: SparkSession, h: Handle,
       probeRows: DataFrame): DataFrame =
-    serveOn(bandsRelation(s, h.bandsPath), probeRows)
-
-  /** The LIVE bands relation of an index dir. For an uncommitted index
-    * this is a plain directory read; for a MANIFEST-COMMITTED index
-    * ([[Snapshots]]) it is the CURRENT version's exact file set — a
-    * direct directory read would silently DOUBLE-COUNT rows after a
-    * copy-on-write compaction ([[compactCommitSnapshot]]), because the
-    * merged files land as siblings of the files older versions still
-    * reference and both stay on disk until [[Snapshots.expire]]. One
-    * manifest-dir existence check on the happy path. */
-  private def bandsRelation(s: SparkSession, bandsPath: String): DataFrame =
-    Snapshots.current(s, bandsPath) match {
-      case Some(v) => versionRelation(s, bandsPath, v)
-      case None => ManifestIO.readDir(s, bandsPath)
-    }
+    serveOn(s, h.bandsPath, Snapshots.current(s, h.bandsPath), probeRows)
 
   /** Driver-side twin of the serve's touched-bucket collection for
     * probes whose optimized plan is a [[LocalRelation]] (every
@@ -617,10 +635,12 @@ object MinHashIndex {
       case _ => None
     }
 
-  /** The serve join against an arbitrary bands RELATION (live dir or
-    * a snapshot file set) — bucket-set pruning, broadcast probe,
-    * first-collision-band gate. */
-  private def serveOn(idxRel: DataFrame, probeRows: DataFrame): DataFrame = {
+  /** The serve join against the bands under `bands` — the live
+    * directory (`version` None) or a committed version's file set —
+    * with bucket-set pruning, broadcast probe and first-collision-band
+    * gate. */
+  private def serveOn(s: SparkSession, bands: String, version: Option[Int],
+      probeRows: DataFrame): DataFrame = {
     val probe = probeRows.select(
       col("doc_id").as("probe_doc"), col("sig").as("sig_a"),
       col("bk0").as("probe_bk0"), col("band_id"), col("band_key"))
@@ -635,10 +655,15 @@ object MinHashIndex {
       .select(col("band_id"), kbucket(col("band_key")).as("kbucket"))
       .distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSeq)
-    val pruned = touched
-      .map { case (b, kb) => col("band_id") === b && col("kbucket") === kb }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val idx = idxRel.where(pruned)
+    // a committed version prunes by FILE LIST (versionRelation); the
+    // uncommitted directory read prunes by partition predicate
+    val idxRel = version match {
+      case Some(v) => versionRelation(s, bands, v, touched.toSet)
+      case None => ManifestIO.readDir(s, bands).where(touched
+        .map { case (b, kb) => col("band_id") === b && col("kbucket") === kb }
+        .reduceOption(_ || _).getOrElse(lit(false)))
+    }
+    val idx = idxRel
       .select(col("doc_id").as("corpus_doc"), col("sig").as("sig_b"),
         col("bk0").as("corpus_bk0"), col("band_id"), col("band_key"))
     idx.join(broadcast(probe), Seq("band_id", "band_key"))
@@ -666,28 +691,33 @@ object MinHashIndex {
 
   /** [[admit]] over ALREADY-SKETCHED probe band rows. The verdict's
     * per-doc spine comes from the sketch itself (every doc carries
-    * exactly Bands rows, so `distinct doc_id` over the local relation
-    * is the batch's id set) — no second scan of the probe documents. */
+    * exactly Bands rows, so its doc_ids are the batch's id set) — no
+    * second scan of the probe documents. Spine, corpus hits and
+    * in-batch hits are unioned as (doc_id, c, b) rows and summed in ONE
+    * grouping: one shuffle (3 Spark jobs per verdict), where a distinct
+    * spine with two aggregated left joins onto it needs three (7
+    * jobs). A doc with no hit keeps its zero spine rows, so every id
+    * gets exactly one verdict row. */
   def admitRows(s: SparkSession, h: Handle, probe: DataFrame): DataFrame = {
-    val corpusHits = serveFrom(s, h, probe)
-      .groupBy(col("probe_doc").as("doc_id"))
-      .agg(count(lit(1)).as("n_corpus_hits"))
     def side(p: String) = probe.select(
       col("doc_id").as(s"doc_$p"), col("sig").as(s"sig_$p"),
       col("bk0").as(s"bk0_$p"), col("band_id"), col("band_key"))
-    val batchHits = side("a").join(side("b"), Seq("band_id", "band_key"))
+    val batchPairs = side("a").join(side("b"), Seq("band_id", "band_key"))
       .where(col("doc_a") < col("doc_b"))
       .where(col("band_id") === 0 || col("bk0_a") =!= col("bk0_b"))
       .where(estOf(col("sig_a"), col("sig_b")) >= Dedup.EstThreshold)
-      .groupBy(col("doc_b").as("doc_id"))
-      .agg(count(lit(1)).as("n_batch_hits"))
-    probe.select(col("doc_id")).distinct()
-      .join(corpusHits, Seq("doc_id"), "left")
-      .join(batchHits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_corpus_hits"), lit(0L)).as("n_corpus_hits"),
-        coalesce(col("n_batch_hits"), lit(0L)).as("n_batch_hits"),
-        (col("n_corpus_hits").isNull && col("n_batch_hits").isNull)
-          .as("admitted"))
+    def hits(id: String, c: Long, b: Long)(df: DataFrame) =
+      df.select(col(id).as("doc_id"), lit(c).as("c"), lit(b).as("b"))
+    // a NULL doc_id is no document's id: its corpus hits count toward
+    // no verdict
+    hits("doc_id", 0L, 0L)(probe)
+      .unionAll(hits("probe_doc", 1L, 0L)(
+        serveFrom(s, h, probe).where(col("probe_doc").isNotNull)))
+      .unionAll(hits("doc_b", 0L, 1L)(batchPairs))
+      .groupBy(col("doc_id"))
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n_corpus_hits"),
+        coalesce(sum(col("b")), lit(0L)).as("n_batch_hits"))
+      .withColumn("admitted",
+        col("n_corpus_hits") === 0L && col("n_batch_hits") === 0L)
   }
 }

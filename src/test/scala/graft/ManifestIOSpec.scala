@@ -211,6 +211,45 @@ class ManifestIOSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
   }
 
+  test("schema from one footer on the driver: a manifest-fed read " +
+      "launches no Spark job and matches spark.read.parquet on flat, hive " +
+      "and widened trees; mergeSchema keeps Spark's job") {
+    val dir = Fs.createStagingDir(spark, "graft-manifestio-footer")
+    try {
+      spark.range(100).select(col("id"), (col("id") * 2).as("v"))
+        .repartition(6).write.parquet(s"$dir/flat")
+      spark.range(90).select(col("id"),
+          pmod(col("id"), lit(3)).cast("int").as("band_id"),
+          pmod(col("id"), lit(5)).cast("int").as("kbucket"))
+        .write.partitionBy("band_id", "kbucket").parquet(s"$dir/hive")
+      spark.range(10).select(col("id")).repartition(3)
+        .write.parquet(s"$dir/wide")
+      spark.range(10, 20).select(col("id"), lit("w").as("wide"))
+        .repartition(3).write.mode("append").parquet(s"$dir/wide")
+      for (t <- Seq("flat", "hive", "wide")) {
+        val base = s"$dir/$t"
+        val files = dataFiles(base)
+        assert(files.size > 4, s"$t: the listing branch needs > 4 files")
+        val (df, jobs) = JobWatch.jobsOf(spark)(
+          graft.plans.ManifestIO.read(spark, base, files))
+        assert(jobs.isEmpty, s"$t: manifest-fed read launched jobs: $jobs")
+        assert(df.schema === spark.read.parquet(base).schema, s"$t: schema")
+        assert(df.schema ===
+          spark.read.option("basePath", base).parquet(files: _*).schema,
+          s"$t: schema vs the explicit-path read")
+      }
+      val wide = dataFiles(s"$dir/wide")
+      val (merged, mergeJobs) = JobWatch.jobsOf(spark)(
+        graft.plans.ManifestIO.read(spark, s"$dir/wide", wide,
+          mergeSchema = true))
+      assert(mergeJobs.nonEmpty, "mergeSchema should keep Spark's merge job")
+      assert(merged.schema === spark.read.option("mergeSchema", "true")
+        .parquet(s"$dir/wide").schema)
+      assert(merged.columns.contains("wide"))
+    } finally Fs.deleteRecursively(dir,
+      spark.sparkContext.hadoopConfiguration)
+  }
+
   test("mergeSchema serve over a widened tree") {
     val dir = Fs.createStagingDir(spark, "graft-manifestio-merge")
     try {

@@ -1602,6 +1602,52 @@ class ScaleShapeSpec extends SparkSpec {
     }
   }
 
+  test("MinHash committed serve reads exactly the touched partitions' " +
+      "manifested files; rows equal serveAsOf and a fresh uncommitted index") {
+    val s = spark
+    import graft.plans.{MinHashIndex, Snapshots}
+    val staging = java.nio.file.Files.createTempDirectory("mh_touched").toString
+    try {
+      val docs = Tables.documents(s, sf).select(col("doc_id"), col("text"))
+      val idx = s"$staging/idx"
+      MinHashIndex.save(s, docs.where(pmod(col("doc_id"), lit(10)).between(1, 8)),
+        s"$sf/documents.parquet", idx)
+      val bands = s"$idx/bands"
+      Snapshots.commit(s, bands)
+      val (v2, _) = MinHashIndex.appendCommitRetrying(s, idx,
+        docs.where(pmod(col("doc_id"), lit(10)) === 9))
+      val probe = MinHashIndex.localize(s,
+        docs.where(pmod(col("doc_id"), lit(10)) === 0))
+      val touched = probe.select(col("band_id"),
+          pmod(col("band_key"), lit(MinHashIndex.KBuckets)).cast("int"))
+        .distinct().collect().map(r => s"band_id=${r.getInt(0)}/kbucket=${r.getInt(1)}/")
+        .toSet
+      val path = (f: String) => new java.net.URI(f).getPath
+      val all = Snapshots.files(s, bands, v2).map(path)
+      val want = all.filter(f => touched.exists(f.contains)).toSet
+      assert(want.nonEmpty && want.size < all.size,
+        s"fixture rot: ${want.size} of ${all.size} files touched")
+      val served = MinHashIndex.serveRows(s, MinHashIndex.load(s, idx), probe)
+      assert(served.inputFiles.map(path).toSet === want,
+        "the committed serve must scan exactly the touched partitions' " +
+          "manifested files")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val got = rows(served)
+      assert(got.nonEmpty, "fixture rot: the probe matched nothing")
+      assert(got == rows(MinHashIndex.serveRowsAsOf(s, idx, v2, probe)),
+        "live committed serve diverges from serveAsOf at the same version")
+      val fresh = s"$staging/fresh"
+      MinHashIndex.save(s, docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
+        s"$sf/documents.parquet", fresh)
+      assert(got == rows(MinHashIndex.serveRows(s,
+          MinHashIndex.load(s, fresh), probe)),
+        "committed serve diverges from an uncommitted index of the same docs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
+    }
+  }
+
   test("as-of serves keep partition pruning through the manifest read " +
       "(basePath contract: IVF cid, BM25 tbucket)") {
     // the scale claim of every as-of read: pinning a version is a
