@@ -82,11 +82,11 @@ object Bench {
     Staging("gram", Set("q84", "q84b"), perSweep = Some((s, sf, _) =>
       graft.operators.Curation.stageGrams(s, sf))),
 
-    /** Queries that MUTATE a per-invocation clone of the persisted LSH
-      * index ([[graft.operators.Dedup.stageIngestClones]]). The clone is
-      * harness setup — a production pipeline appends/deletes in place —
-      * so r12 charging the ~4-5 s byte copy to each lifecycle query's
-      * timed window reported copy cost as lifecycle cost. Each sweep
+    /** Queries that COMMIT into a per-invocation clone of the persisted
+      * LSH index ([[graft.operators.Dedup.stageIngestClones]]). The clone
+      * is harness setup — a production pipeline commits into its one
+      * index — so r12 charging the ~4-5 s byte copy to each lifecycle
+      * query's timed window reported copy cost as lifecycle cost. Each sweep
       * pre-stages one clone per selected query here, untimed
       * (stage_sec); the timed queries then measure admit/append/compact/
       * delete work only. */

@@ -48,7 +48,7 @@ object Explain {
     "q39c_ivf_serve" -> "IVF serve from saved artifacts: driver-side probe over the reloaded k-row centroid table, then a static `cid IN (...)` PartitionFilters scan of the persisted assignment — the unprobed cells' files are never opened",
     "q89c_pq_serve" -> "PQ serve from saved artifacts: packed codes unpacked by a map-side shift/mask projection at the scan, then the q89b broadcast-ADC join — one row per vector on disk, floats never load",
     "q97b_hybrid_served" -> "hybrid retrieval with the lexical leg from the persisted BM25 index: tbucket PartitionFilters + pushed term predicate on the postings scan; scorer and fusion identical to q97",
-    "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan carries (band_id, kbucket) PartitionFilters from the batch's collected bucket set — the resident corpus is never rescanned",
+    "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan reads only the current version's manifested files in the (band_id, kbucket) partitions the batch's collected bucket set touches — the resident corpus is never rescanned",
     "q100_ann_recall" -> "ANN recall@10 self-evaluation: exact leg is a broadcast probe cross join with SALTED two-stage per-probe top-k (no single task sorts a probe's full candidate stream); IVF leg is cell-bounded under the broadcast centroid/cell relations",
     "q101_zorder_range" -> "2-D range over the Z-order clustered layout: the query box maps driver-side to its coarse Morton cells, which reach the scan as a static zbucket PartitionFilters — unmatched cells' files are never opened, for boxes and single-dimension ranges alike",
     "q99b_lsh_admission" -> "batch admission verdict: ONE probe sketch (materialized) feeds both legs — the file-pruned broadcast corpus join and the within-batch band self-join; verdict assembly unions the spine, corpus-hit and batch-hit (doc_id, c, b) rows into ONE grouping on the batch-sized id set",
@@ -85,10 +85,10 @@ object Explain {
     "q102_stream_stream_join" -> "watermarked stream-stream interval join (clicks x purchases within 30 min), both sides streaming: inner join emits eagerly, watermark + time bound evict both state sides; pinned plan is the post-replay assembly",
     "q102b_stream_stream_left" -> "left-outer interval join: unmatched clicks emit on watermark timeout, dual far-future sentinels (Replay.sentinelAfterStage) flush the global watermark at replay end; pinned plan is the post-replay assembly",
     "q103_ingest_loop" -> "3 sequential admit -> append rounds against a pre-staged clone of the persisted LSH index: each batch broadcast-probes the file-pruned bands scan AS IT STANDS; pinned plan is the verdict assembly over the staged per-batch results",
-    "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.compact (one file per (band_id, kbucket) after append fragmentation) — identical verdict oracle proves the rewrite result-neutral",
+    "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.purgeCommit (maxFiles = 1): each partition fragmented by the appends is merged copy-on-write into one file and committed as the next version — identical verdict oracle proves the rewrite result-neutral",
     "q103s_stream_ingest" -> "q103 driven through the engine's micro-batch cycle: foreachBatch admits each arriving batch (verdicts staged to parquet, admitted ids JOINED — no In-literal) and appends before the next trigger; pinned plan is the final verdict read",
     "q104_stream_budget" -> "transformWithState on RocksDB state v2: per-source Long counter seeded from the initial-state budget relation, arrival-ordered cap; pinned plan is the post-replay ordering over the sink cut",
-    "q107_index_delete" -> "retention delete from the persisted LSH index: touched-partition set from a bounded semi-join, dynamic partition overwrite rewrites ONLY those partitions, emptied dirs removed; pinned plan is the serve scan over the surviving index",
+    "q107_index_delete" -> "retention delete from the persisted LSH index: a tombstone commit, then a partition-local purge commit that rewrites ONLY the partitions holding the deleted docs' band rows as new files; pinned plan is the serve scan over the purged version's manifested files",
     "q109_index_timetravel" -> "snapshot-isolated index with time travel (manifest commits): append adds files + commits v2, then ONE probe sketch serves as-of v1 AND v2 — the v1 leg reads the v1 manifest's file set (basePath keeps (band_id, kbucket) pruning), blind to the append by construction",
     "q110_incremental_clusters" -> "incremental cluster maintenance: batch edges from the persisted-index serve + within-batch band join (one shared probe sketch), label propagation on the QUOTIENT graph (batch docs + touched cluster labels only), broadcast label remap back onto the resident state — never a corpus re-cluster",
     "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented (band_id, kbucket) partitions lands NEW sibling files and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
@@ -96,7 +96,7 @@ object Explain {
     "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, upserts the bucket-partitioned label table partition-locally (partitionFromKey — no resident scan), and appends to the index before the next trigger; pinned plan is the final label-table read",
     "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and mutates the table partition-locally before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the final label-table read",
     "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; retired rows leave via partition-local delete, relabels land via partition-local upsert; pinned plan is the final label-table read",
-    "q112_ingest_autocompact" -> "q103's ingest loop under the threshold-triggered PARTITION-LOCAL compaction policy: after each append, only (band_id, kbucket) directories whose file count crossed the threshold are rewritten — write amplification bounded by where arrivals landed, never the index size; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
+    "q112_ingest_autocompact" -> "q103's ingest loop under threshold-triggered PARTITION-LOCAL compaction (purgeCommit, maxFiles = 2) after each append: only (band_id, kbucket) partitions whose current-version file count crossed the threshold are rewritten — write amplification bounded by where arrivals landed, never the index size; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
     "q108_cluster_split" -> "leakage-proof split from the near-dup CLUSTER label: stateless column expression over the memoized cluster relation (pinned plan reads the label cut) — the timed cost in a sweep is the shared minhash-pairs + cluster memo it happens to pay first",
     "q115_cms_freq" -> "count-min sketch build: map-side partials collapse the token stream to the fixed D×W geometry before the one exchange (≤ D×W cells per task); estimates are min-over-rows lookups against the BROADCAST sketch — no shuffled join on term anywhere",
     "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + partition-local upsert — the corpus aggregate never re-runs; pinned plan is the post-increment stats read",

@@ -85,6 +85,18 @@ object Fs {
     dir
   }
 
+  /** Byte-copy a directory tree (an index clone, a side artifact
+    * such as meta / stats / terms / centroids), loudly. */
+  def copyDir(s: org.apache.spark.sql.SparkSession, srcDir: String,
+      destDir: String): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val (srcFs, srcPath) = resolve(srcDir, conf)
+    val (dstFs, dstPath) = resolve(destDir, conf)
+    require(org.apache.hadoop.fs.FileUtil.copy(
+      srcFs, srcPath, dstFs, dstPath, false, conf),
+      s"artifact copy $srcDir -> $destDir failed")
+  }
+
   /** Best-effort recursive delete; failures are swallowed — used only
     * for temp-dir reclamation where a leftover file is preferable to
     * a failed query. */

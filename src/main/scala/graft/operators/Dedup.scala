@@ -1309,33 +1309,33 @@ object Dedup {
     // entered the index) — and the oracle unrolls the same three
     // stages as chained CTEs, so the driver gate proves the loop's
     // sequential semantics, not just one probe. Each invocation clones
-    // the resident artifact (the loop mutates its index; the shared
-    // q99 artifact stays immutable) — a production pipeline appends in
-    // place and skips the clone.
+    // the resident artifact (the loop commits into its index; the
+    // shared q99 artifact stays as saved) — a production pipeline
+    // commits into its one index and skips the clone.
     "q103_ingest_loop" -> { (s, d) => ingestLoop(s, d, compactAfter = None) },
 
     // The same loop with a COMPACTION between batches 1 and 2
-    // ([[graft.plans.MinHashIndex.compact]]): appends accumulate one
-    // small file per touched partition per batch, and the rewrite
-    // collapses each (band_id, kbucket) partition back to one file
-    // without moving the layout the serve path prunes on. Identical
-    // oracle SQL to q103 — the driver gate is the proof that
-    // compaction is result-neutral mid-loop (batch 2 admits against,
-    // and appends into, the compacted index).
+    // ([[graft.plans.MinHashIndex.purgeCommit]] with maxFiles = 1):
+    // appends accumulate one small file per touched partition per
+    // batch, and the copy-on-write rewrite collapses each fragmented
+    // (band_id, kbucket) partition back to one file, committed as the
+    // next version, without moving the layout the serve path prunes
+    // on. Identical oracle SQL to q103 — the driver gate is the proof
+    // that compaction is result-neutral mid-loop (batch 2 admits
+    // against, and appends into, the compacted version).
     "q103b_ingest_compacted" ->
       { (s, d) => ingestLoop(s, d, compactAfter = Some(1)) },
 
-    // AUTO-COMPACTION POLICY — the same loop with the threshold-
-    // triggered PARTITION-LOCAL policy after every append
-    // ([[graft.plans.MinHashIndex.compactInPlaceIfFragmented]]):
-    // q103b's mid-loop compact is one full-table rewrite (quadratic
-    // total writing if run per batch at scale); the policy instead
-    // rewrites only (band_id, kbucket) directories whose file count
-    // crossed the threshold, bounding write amplification by where
-    // the arrivals actually landed while still capping per-partition
-    // file growth under continuous ingest — the lakehouse OPTIMIZE
-    // scheduler shape. Identical oracle SQL to q103: the gate proves
-    // the policy result-neutral at every point in the loop.
+    // AUTO-COMPACTION POLICY — the same loop with a threshold-
+    // triggered PARTITION-LOCAL compaction after every append
+    // ([[graft.plans.MinHashIndex.purgeCommit]] with maxFiles = 2):
+    // only (band_id, kbucket) partitions whose current-version file
+    // count crossed the threshold are rewritten, bounding write
+    // amplification by where the arrivals actually landed while still
+    // capping per-partition file growth under continuous ingest — the
+    // lakehouse OPTIMIZE scheduler shape. Identical oracle SQL to
+    // q103: the gate proves the policy result-neutral at every point
+    // in the loop.
     "q112_ingest_autocompact" ->
       { (s, d) => ingestLoop(s, d, compactAfter = None,
           autoCompactMaxFiles = Some(2)) },
@@ -1380,15 +1380,15 @@ object Dedup {
           batches = 3, stageKey = Some(s"q103s:$d")) { batch =>
           val rows = MinHashIndex.localize(s,
             batch.select(col("doc_id"), col("text")))
-          // verdict lands on disk BEFORE the append mutates the index
-          // its lazy plan reads (the write is the materialization the
-          // batch twin gets from Materialize.cut)
+          // verdict lands on disk BEFORE the append commits the next
+          // version (the write is the materialization the batch twin
+          // gets from Materialize.cut)
           MinHashIndex.admitRows(s, h, rows)
             .write.mode("append").parquet(verdictDir)
           // earlier batches' admitted ids are absent from `rows`, so
           // the inner join restricts the cumulative verdict relation
           // to this batch by construction
-          MinHashIndex.appendRows(s, runDir, rows.join(
+          MinHashIndex.appendRowsCommitRetrying(s, runDir, rows.join(
             s.read.schema(admitVerdictSchema).parquet(verdictDir)
               .where(col("admitted")).select(col("doc_id")),
             Seq("doc_id")))
@@ -1410,11 +1410,12 @@ object Dedup {
 
     // RETENTION DELETE — the erasure pass that completes the index
     // lifecycle: a slice of the resident corpus (doc_id % 7 = 0) is
-    // deleted from the persisted index by rewriting ONLY the
-    // partitions holding its band rows (dynamic partition overwrite;
-    // emptied partitions removed), then the standard probe serve runs
-    // against what remains. Oracle = q99's CTE chain with the deleted
-    // slice excluded from the corpus side — the driver gate proves the
+    // tombstoned ([[graft.plans.MinHashIndex.deleteCommit]]) and then
+    // purged ([[graft.plans.MinHashIndex.purgeCommit]]), which
+    // rewrites ONLY the partitions holding its band rows as new files
+    // of the next version; the standard probe serve then runs against
+    // what remains. Oracle = q99's CTE chain with the deleted slice
+    // excluded from the corpus side — the driver gate proves the
     // partition-local delete leaves exactly the fresh index over the
     // surviving residents.
     "q107_index_delete" -> { (s, d) =>
@@ -1426,9 +1427,10 @@ object Dedup {
       val staging = takeClone(s, d)
       try {
         val runDir = s"$staging/idx"
-        MinHashIndex.delete(s, runDir,
+        MinHashIndex.deleteCommit(s, runDir,
           residents.where(pmod(col("doc_id"), lit(7)) === 0)
             .select(col("doc_id")))
+        MinHashIndex.purgeCommit(s, runDir)
         val h = MinHashIndex.load(s, runDir)
         // materialized before the finally reclaims the cloned index
         Materialize.cut(MinHashIndex.serve(s, h,
@@ -1443,16 +1445,15 @@ object Dedup {
     // version is an immutable manifest of the band files, so a reader
     // pinned to version 1 is untouched by the version-2 append and an
     // "as-of" serve needs no index copy at all. The query builds the
-    // index over an initial resident population (doc_id % 10 ∈ 1..8),
-    // commits v1, appends the % 10 = 9 slice, commits v2, and serves
+    // index over an initial resident population (doc_id % 10 ∈ 1..8)
+    // as v1, appends the % 10 = 9 slice as v2, and serves
     // the SAME probe set (% 10 = 0) against both versions from ONE
     // probe sketch — the v1 leg must be blind to the appended slice.
     // Oracle = q99's CTE chain with the two corpus populations
     // unioned under a version tag. Scale: an as-of read is a file
     // LISTING choice, not a data operation — both legs keep the
     // (band_id, kbucket) partition pruning through the manifest read
-    // (basePath), and the append itself stays a dynamic-partition
-    // file addition.
+    // (basePath), and the append itself only adds files.
     "q109_index_timetravel" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
       val docs = Tables.documents(s, d)
@@ -1464,10 +1465,9 @@ object Dedup {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, s"$idxDir/bands").get
-        MinHashIndex.append(s, idxDir,
+        val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9)
             .select(col("doc_id"), col("text")))
-        val v2 = Snapshots.commit(s, s"$idxDir/bands")
         val probe = MinHashIndex.localize(s,
           docs.where(pmod(col("doc_id"), lit(10)) === 0)
             .select(col("doc_id"), col("text")))
@@ -1483,11 +1483,10 @@ object Dedup {
         s.sparkContext.hadoopConfiguration)
     },
 
-    // SNAPSHOT-PRESERVING COMPACTION — q109's missing maintenance leg
-    // ([[graft.plans.Snapshots.compactCommit]]): the in-place compact
-    // invalidates older manifests, so a snapshotted index previously
-    // had to choose between time travel and small-file maintenance.
-    // Here the append (which fragments the touched partitions) commits
+    // SNAPSHOT-PRESERVING COMPACTION — q109's maintenance leg
+    // ([[graft.plans.MinHashIndex.purgeCommit]], which with no
+    // tombstones merges fragmented partitions copy-on-write), so time
+    // travel and small-file maintenance coexist. Here the append (which fragments the touched partitions) commits
     // v2, then compaction merges v2's fragmented (band_id, kbucket)
     // partitions into NEW sibling files and commits the merged layout
     // as v3 — old files stay on disk and v1/v2 keep reading their own
@@ -1505,13 +1504,12 @@ object Dedup {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, s"$idxDir/bands").get
-        MinHashIndex.append(s, idxDir,
+        val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9)
             .select(col("doc_id"), col("text")))
-        val v2 = Snapshots.commit(s, s"$idxDir/bands")
         // the appended batch fragmented its touched partitions to 2
         // files; merge them copy-on-write and commit the result
-        val (v3, _) = MinHashIndex.compactCommitSnapshot(s, idxDir)
+        val v3 = MinHashIndex.purgeCommit(s, idxDir)
         val probe = MinHashIndex.localize(s,
           docs.where(pmod(col("doc_id"), lit(10)) === 0)
             .select(col("doc_id"), col("text")))
@@ -1550,10 +1548,9 @@ object Dedup {
         val bands = s"$idxDir/bands"
         val v1 = Snapshots.current(s, bands).get
         Snapshots.tag(s, bands, "train-baseline", v1)
-        MinHashIndex.append(s, idxDir,
+        val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9)
             .select(col("doc_id"), col("text")))
-        val v2 = Snapshots.commit(s, bands)
         // retention advances past v1 — only the tag keeps it alive
         Snapshots.expire(s, bands, keepFrom = v2)
         require(Snapshots.versions(s, bands).contains(v1),
@@ -1677,10 +1674,8 @@ object Dedup {
     },
 
     // ROW-LEVEL DELETE UNDER SNAPSHOT ISOLATION — the committed
-    // index's erasure path (q107's retention semantics reproduced
-    // through the tombstone + purge shape, closing the r14 gap: the
-    // in-place delete is REFUSED on a committed dataset, so a
-    // committed index previously had no erasure path at all). The
+    // index's erasure path (q107's retention semantics, with every
+    // version kept readable for time travel). The
     // clone's v1 population (%10 ∈ 1..8) loses its %7 = 0 slice as a
     // TOMBSTONE commit (v2 — one appended file inside the manifested
     // tree, one manifest swap; nothing rewritten), then a COW PURGE
@@ -1743,10 +1738,9 @@ object Dedup {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, s"$idxDir/bands").get
-        MinHashIndex.append(s, idxDir,
+        val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9)
             .select(col("doc_id"), col("text")))
-        val v2 = Snapshots.commit(s, s"$idxDir/bands")
         // materialized before the finally reclaims the staging dir
         Materialize.cut(
           Snapshots.readIncremental(s, s"$idxDir/bands", v1, v2)
@@ -1787,9 +1781,8 @@ object Dedup {
         graft.streaming.Replay.runBatchedForeach(s, feed, "batch",
           batches = 3, stageKey = Some(s"q134s:$d")) { batch =>
           // producer half: land the arrivals, commit the next version
-          MinHashIndex.append(s, idxDir,
+          val (cur, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
             batch.select(col("doc_id"), col("text")))
-          val cur = Snapshots.commit(s, bands)
           // consumer half: tail the manifest diff since lastSeen into
           // the mirror — new files only, one integer of state
           Snapshots.readIncremental(s, bands, lastSeen, cur)
@@ -1936,7 +1929,7 @@ object Dedup {
       val staging = graft.Fs.createStagingDir(s, "graft-q117")
       try {
         val mirDir = s"$staging/mirror"
-        IndexMaintenance.copyDir(s, stageResidentState(s, d), mirDir)
+        graft.Fs.copyDir(s, stageResidentState(s, d), mirDir)
         val buckets = labelBuckets(s, mirDir)
         IndexMaintenance.upsertPartitioned(s, mirDir,
           Seq("dbucket"), "doc_id",
@@ -2281,7 +2274,7 @@ object Dedup {
         // state (the stream mutates it; the shared artifact stays
         // immutable across invocations)
         val labDir = s"$staging/labels"
-        IndexMaintenance.copyDir(s, stageResidentState(s, d), labDir)
+        graft.Fs.copyDir(s, stageResidentState(s, d), labDir)
         val buckets = labelBuckets(s, labDir)
         val feed = docs.where(pmod(col("doc_id"), lit(10)) === 0)
           .select(col("doc_id"), col("text"))
@@ -2316,7 +2309,7 @@ object Dedup {
           // ALL batch docs enter the index — clustering maintains
           // state for the full corpus (unlike q103's dedup admission,
           // which appends only survivors)
-          MinHashIndex.appendRows(s, runDir, rows)
+          MinHashIndex.appendRowsCommitRetrying(s, runDir, rows)
         }
         // materialized before the finally reclaims the staging dir
         Materialize.cut(
@@ -2354,7 +2347,7 @@ object Dedup {
       val staging = graft.Fs.createStagingDir(s, "graft-q135")
       try {
         val labDir = s"$staging/labels"
-        IndexMaintenance.copyDir(s, stageResidentState(s, d), labDir)
+        graft.Fs.copyDir(s, stageResidentState(s, d), labDir)
         val buckets = labelBuckets(s, labDir)
         val v1 = Snapshots.commit(s, labDir)
         val rows = MinHashIndex.localize(s,
@@ -2408,7 +2401,7 @@ object Dedup {
       val staging = graft.Fs.createStagingDir(s, "graft-q111")
       try {
         val labDir = s"$staging/labels"
-        IndexMaintenance.copyDir(s, src, labDir)
+        graft.Fs.copyDir(s, src, labDir)
         val buckets = labelBuckets(s, labDir)
         val resLab = graft.plans.ManifestIO.readDir(s, labDir)
           .select(col("doc_id"), col("label"))
@@ -2465,7 +2458,7 @@ object Dedup {
       val staging = graft.Fs.createStagingDir(s, "graft-q111s")
       try {
         val labDir = s"$staging/labels"
-        IndexMaintenance.copyDir(s, src, labDir)
+        graft.Fs.copyDir(s, src, labDir)
         val buckets = labelBuckets(s, labDir)
         // the retention feed: the same %17 policy slice as q111,
         // arriving in 3 ordered micro-batches
@@ -2510,12 +2503,11 @@ object Dedup {
 
   /** The three-batch incremental ingest loop behind q103/q103b/q112:
     * clone the resident index, then per batch — admit, materialize the
-    * verdict (the cut is eager, so the verdict is computed BEFORE the
-    * append mutates the index its lazy plan reads), append the
-    * admitted docs, optionally compact (`compactAfter` = one full
-    * rewrite into a fresh dir after batch k; `autoCompactMaxFiles` =
-    * the threshold-triggered partition-local policy after EVERY
-    * append). */
+    * verdict (it feeds both the admitted-id join and the result),
+    * commit the admitted docs' band rows, optionally compact
+    * (`compactAfter` = merge every fragmented partition after batch k;
+    * `autoCompactMaxFiles` = merge only partitions over that many
+    * files after EVERY append). */
   private def ingestLoop(s: SparkSession, d: String,
       compactAfter: Option[Int],
       autoCompactMaxFiles: Option[Int] = None): DataFrame = {
@@ -2534,26 +2526,20 @@ object Dedup {
         .select(col("doc_id"), col("text")))
     val staging = takeClone(s, d)
     try {
-      var runDir = s"$staging/idx"
-      // the handle is two immutable paths — load it when the dir is
-      // minted (or switched by the mid-loop compact), not per batch
-      var h = MinHashIndex.load(s, runDir)
+      val runDir = s"$staging/idx"
+      // the handle is two immutable paths — load it once, not per batch
+      val h = MinHashIndex.load(s, runDir)
       val verdicts = (0 until 3).map { k =>
         val batchRows = probeRows.where(
           pmod(col("doc_id"), lit(30)) === k * 10)
         val v = Materialize.cut(
           MinHashIndex.admitRows(s, h, batchRows)
             .withColumn("batch", lit(k).cast("int")))
-        MinHashIndex.appendRows(s, runDir, batchRows.join(
+        MinHashIndex.appendRowsCommitRetrying(s, runDir, batchRows.join(
           v.where(col("admitted")).select(col("doc_id")), Seq("doc_id")))
         for (mf <- autoCompactMaxFiles)
-          MinHashIndex.compactInPlaceIfFragmented(s, runDir, mf)
-        if (compactAfter.contains(k)) {
-          val dest = s"$staging/idx_c$k"
-          MinHashIndex.compact(s, runDir, dest)
-          runDir = dest
-          h = MinHashIndex.load(s, runDir)
-        }
+          MinHashIndex.purgeCommit(s, runDir, mf)
+        if (compactAfter.contains(k)) MinHashIndex.purgeCommit(s, runDir)
         v
       }
       verdicts.reduce(_ unionByName _)
@@ -2584,10 +2570,11 @@ object Dedup {
   /** Pre-stage `n` clones of the saved LSH index UNTIMED (the bench's
     * per-sweep stage hook, the `clone` row of [[graft.Bench.staging]]):
     * the lifecycle queries
-    * (q103/q103b/q103s/q107) each MUTATE a private clone so the shared
-    * q99 artifact stays immutable across re-runs — but the clone is
-    * harness setup, not lifecycle work (a production pipeline appends/
-    * deletes in place), so benching it inside the timed query charged
+    * (q103/q103b/q103s/q107) each COMMIT into a private clone so the
+    * shared q99 artifact stays as saved across re-runs — but the clone
+    * is harness setup, not lifecycle work (a production pipeline
+    * commits into its one index), so benching it inside the timed
+    * query charged
     * ~4-5 s of byte copy to each lifecycle median in r12. Clones are
     * consumed by [[takeClone]]; un-consumed ones are reclaimed with
     * the staging root at JVM exit. */
@@ -2607,7 +2594,7 @@ object Dedup {
 
   /** Pop a pre-staged clone if the bench staged one, else clone inline
     * (Verify / standalone invocations). Returns the staging root; the
-    * caller mutates `$root/idx` and reclaims the root when done. The
+    * caller commits into `$root/idx` and reclaims the root when done. The
     * caller must have [[graft.plans.MinHashIndex.ensureSaved]] the
     * shared artifact first (the inline path copies from it). */
   private def takeClone(s: SparkSession, d: String): String = {
@@ -2794,7 +2781,7 @@ object Dedup {
 
   private def snapIndexDir(s: SparkSession, d: String): String =
     snapIndexMemo.computeIfAbsent((s, d), _ => {
-      import graft.plans.{MinHashIndex, Snapshots}
+      import graft.plans.MinHashIndex
       val dir = graft.Fs.createStagingDir(s, "graft-lsh-snapsrc")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         graft.Fs.deleteRecursively(dir)))
@@ -2804,7 +2791,6 @@ object Dedup {
             pmod(col("doc_id"), lit(10)) =!= 9)
           .select(col("doc_id"), col("text")),
         s"$d/documents.parquet", s"$dir/idx")
-      Snapshots.commit(s, s"$dir/idx/bands")
       dir
     })
 

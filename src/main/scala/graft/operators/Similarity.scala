@@ -1268,7 +1268,7 @@ object Similarity {
       val staging = graft.Fs.createStagingDir(s, "graft-q122")
       try {
         val assignPath = s"$staging/assignment"
-        graft.plans.IndexMaintenance.copyDir(s, s"$dir/assignment",
+        graft.Fs.copyDir(s, s"$dir/assignment",
           assignPath)
         refreshAssignment(s, assignPath, s"$staging/centroids")
           .orderBy(col("vec_id"))
@@ -1672,7 +1672,7 @@ object Similarity {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-ivf-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1686,7 +1686,7 @@ object Similarity {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-ivf-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${ivfSnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${ivfSnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }
@@ -1706,7 +1706,7 @@ object Similarity {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-pq-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1718,7 +1718,7 @@ object Similarity {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-pq-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${pqSnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${pqSnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }

@@ -527,7 +527,7 @@ object TextAnalysis {
       val staging = graft.Fs.createStagingDir(s, "graft-q116")
       try {
         val tbl = s"$staging/vocab"
-        IndexMaintenance.copyDir(s, src, tbl)
+        graft.Fs.copyDir(s, src, tbl)
         val batchAgg = Tables.documents(s, d)
           .where(pmod(col("doc_id"), lit(10)) === 0)
           .withColumn("toks", expr(toksExpr))
@@ -988,7 +988,7 @@ object TextAnalysis {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-bm25-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1002,7 +1002,7 @@ object TextAnalysis {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-bm25-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${bm25SnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${bm25SnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }

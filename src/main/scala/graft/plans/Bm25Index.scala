@@ -348,7 +348,7 @@ object Bm25Index {
           s"$src/postings", s"$dest/postings", Seq("tbucket"))
     }
     for (piece <- Seq("terms", "stats", "meta"))
-      IndexMaintenance.copyDir(s, s"$src/$piece", s"$dest/$piece")
+      graft.Fs.copyDir(s, s"$src/$piece", s"$dest/$piece")
     n
   }
 

@@ -3,8 +3,10 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Shared maintenance passes for the persisted-index family
-  * ([[MinHashIndex]], [[Bm25Index]], [[IvfTopK]], [[PqIndex]]): every
+/** Shared IN-PLACE maintenance passes for the persisted indexes and
+  * state tables that still have an uncommitted lifecycle
+  * ([[Bm25Index]], [[IvfTopK]], [[ZOrderLayout]], the label tables;
+  * [[MinHashIndex]] is snapshot-committed only): every
   * append lifecycle accumulates one small file per touched partition
   * per ingest batch, so after N batches the serve scan pays N× the
   * per-file open/footer cost — the lakehouse small-file problem,
@@ -219,50 +221,6 @@ object IndexMaintenance {
     } finally graft.Materialize.release(ups)
   }
 
-  /** Threshold-triggered PARTITION-LOCAL compaction — the maintenance
-    * policy a continuously-ingesting index needs. Every append adds a
-    * file per touched partition, so file counts grow linearly with
-    * arrival batches; but a full-table rewrite per batch
-    * ([[compactPartitioned]]) is quadratic total writing. This
-    * rewrites ONLY partitions whose data-file count exceeds
-    * `maxFiles` (one file per directory afterwards) and leaves every
-    * other partition byte-identical — write amplification is bounded
-    * by where the arriving data actually landed, never the table
-    * size. File counts come from the directory listing (the local-FS
-    * nio fast path), no data scan. Integral partition keys only (the
-    * values are parsed back out of the `c=v` path segments, same
-    * contract as the emptied-dir cleanup). Returns the number of
-    * partitions rewritten. */
-  def compactIfFragmented(s: SparkSession, dataDir: String,
-      partitionCols: Seq[String], maxFiles: Int,
-      sortCols: Seq[String] = Nil): Int = {
-    require(partitionCols.nonEmpty && maxFiles >= 1)
-    requireUncommitted(s, dataDir, "compactIfFragmented")
-    val data = ManifestIO.readDir(s, dataDir)
-    requireIntegralPartitions(data, partitionCols, "compactIfFragmented")
-    val conf = s.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(dataDir).toUri.getPath
-    val byPart = graft.Fs.listDataFiles(dataDir, conf).groupBy { f =>
-      val segs = f.getPath.toUri.getPath.stripPrefix(base)
-        .stripPrefix("/").split('/').dropRight(1)
-      partitionCols.map { c =>
-        segs.find(_.startsWith(c + "="))
-          .map(_.substring(c.length + 1).toLong)
-          .getOrElse(throw new IllegalStateException(
-            s"compactIfFragmented: no $c= segment under $dataDir for " +
-              f.getPath))
-      }
-    }
-    val frag: Seq[Seq[Any]] = byPart.collect {
-      case (vs, files) if files.size > maxFiles => vs: Seq[Any]
-    }.toSeq
-    if (frag.isEmpty) return 0
-    swapTouchedPartitions(s,
-      data.where(partitionPredicate(frag, partitionCols)),
-      dataDir, partitionCols, sortCols, frag)
-    frag.size
-  }
-
   /** An IN-PLACE rewrite on a manifest-committed dataset deletes files
     * every committed version still references — the reader holding
     * version N would fail (or silently mis-read) through no fault of
@@ -405,16 +363,5 @@ object IndexMaintenance {
         case other => sys.error(s"unexpected observe metric: $other")
       }
     } finally if (!preserveTmp) graft.Fs.deleteRecursively(tmp, conf)
-  }
-
-  /** Byte-copy a small side artifact (meta / stats / terms /
-    * centroids) into the compacted index's directory tree. */
-  def copyDir(s: SparkSession, srcDir: String, destDir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val (srcFs, srcPath) = graft.Fs.resolve(srcDir, conf)
-    val (dstFs, dstPath) = graft.Fs.resolve(destDir, conf)
-    require(org.apache.hadoop.fs.FileUtil.copy(
-      srcFs, srcPath, dstFs, dstPath, false, conf),
-      s"artifact copy $srcDir -> $destDir failed")
   }
 }

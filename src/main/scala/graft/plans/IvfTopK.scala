@@ -348,7 +348,7 @@ object IvfTopK {
     val n = IndexMaintenance.compactPartitioned(s,
       s"$src/assignment", s"$dest/assignment", Seq("cid"))
     for (piece <- Seq("centroids", "meta"))
-      IndexMaintenance.copyDir(s, s"$src/$piece", s"$dest/$piece")
+      graft.Fs.copyDir(s, s"$src/$piece", s"$dest/$piece")
     n
   }
 

@@ -27,21 +27,29 @@ import graft.operators.Dedup
   *     distinct shuffle). ~2×(8+8+8+K×8) bytes per document: orders
   *     of magnitude under the text it indexes.
   *   - `meta/`  — one row naming the resident documents path.
-  *   - `bands/deletes/` — MANIFEST-COMMITTED indexes only: the
-  *     tombstone list [[deleteCommit]] appends (inside the manifested
-  *     tree, so one version pins rows + applicable deletes together);
-  *     version-aware readers anti-join it, [[purgeCommit]] folds it
-  *     into a partition-local physical purge.
+  *   - `bands/deletes/` — the tombstone list [[deleteCommit]] appends
+  *     (inside the manifested tree, so one version pins rows +
+  *     applicable deletes together); version-aware readers anti-join
+  *     it, [[purgeCommit]] folds it into a partition-local physical
+  *     purge.
+  *
+  * ONE lifecycle, the snapshot-committed one ([[Snapshots]] over
+  * `bands/`): [[save]] publishes v1, and every later change —
+  * [[appendCommitRetrying]] / [[appendRowsCommitRetrying]],
+  * [[deleteCommit]], [[purgeCommit]] — lands its files through
+  * [[Snapshots.landStaged]] and publishes exactly those files on top
+  * of the version it read ([[Snapshots.commitSelectingExpecting]]).
+  * No file an index references is ever rewritten, and no commit
+  * claims a file another writer left on disk.
   *
   * `serve` probes a batch: the batch is sketched map-side with the
   * exact q31 kernel, BROADCAST (the incremental contract is
   * batch ≪ corpus), and hash-joined against the pruned scan — no
   * shuffle of index rows at all. The pruning set — the batch's
   * (band_id, kbucket) pairs — is read on the driver off the localized
-  * sketch. A committed index then reads exactly the current (or
-  * pinned) version's manifested files under those
-  * `band_id=b/kbucket=k/` directories; an uncommitted one reads its
-  * directory with the pairs as a partition predicate. Hot band keys
+  * sketch, and the scan reads exactly the current (or pinned)
+  * version's manifested files under those `band_id=b/kbucket=k/`
+  * directories. A bands dir with no snapshot is refused. Hot band keys
   * (boilerplate / empty documents sharing one signature) cost
   * candidate VOLUME here, not a single-reducer stall: the broadcast
   * join fans the hot bucket out across the scan's file partitions,
@@ -98,28 +106,31 @@ object MinHashIndex {
     (seg("band_id"), seg("kbucket"))
   }
 
-  /** The OCC append's LANDING step, writer-exact: sketch `docs`' band
-    * rows into a private staging subdir and move them into the live
+  /** The OCC append's LANDING step, writer-exact: write `bandRows` into
+    * a private staging subdir and move them into the live
     * (band_id, kbucket) layout ([[Snapshots.landStaged]]), returning
     * the bands-relative paths this writer — and only this writer —
     * landed. Test-visible so the interleaved-landing race (writer B
     * landing between writer A's landing and A's commit) can be staged
     * deterministically. */
   private[graft] def landBands(s: SparkSession, bands: String,
-      docs: DataFrame): Seq[String] =
+      bandRows: DataFrame): Seq[String] =
     Snapshots.landStaged(s, bands) { stage =>
       graft.Jobs.labeled(s, "lsh: land band rows")(
-        writeBands(withBucket(Dedup.indexBandRows(docs)), stage, "append"))
+        writeBands(withBucket(bandRows), stage, "append"))
     }
 
-  /** Sketch `residentDocs` ((doc_id, text)) and persist the banded
-    * index under `indexDir` — the one-off indexing job. `docsPath`
-    * names the source for [[load]]'s meta. */
+  /** Sketch `residentDocs` ((doc_id, text)), persist the banded index
+    * under `indexDir` — the one-off indexing job — and commit it as
+    * snapshot v1: an index is born committed. `docsPath` names the
+    * source for [[load]]'s meta. */
   def save(s: SparkSession, residentDocs: DataFrame, docsPath: String,
       indexDir: String): Handle = {
     val base = IvfTopK.qualify(s, indexDir)
+    // the overwrite replaces the whole bands tree, manifests included
     writeBands(withBucket(Dedup.indexBandRows(residentDocs)),
       s"$base/bands", "overwrite")
+    Snapshots.commit(s, s"$base/bands")
     import s.implicits._
     Seq(docsPath).toDF("docs_path")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
@@ -138,145 +149,6 @@ object MinHashIndex {
     savedDirs.computeIfAbsent((s, IvfTopK.qualify(s, indexDir)),
       _ => save(s, residentDocs, docsPath, indexDir))
 
-  /** Incremental maintenance: a batch that passed the dup-check is
-    * admitted to the corpus by appending its band rows — a
-    * dynamic-partition append touching only the (band_id, kbucket)
-    * partitions the batch's keys land in; the resident index is never
-    * rewritten. Fresh doc_ids are the caller's contract. Returns the
-    * appended document count. */
-  def append(s: SparkSession, indexDir: String, newDocs: DataFrame): Long = {
-    val base = IvfTopK.qualify(s, indexDir)
-    val bands = s"$base/bands"
-    // the batch feeds a second consumer (the tombstone clash check)
-    // only when the committed index actually carries tombstones —
-    // materialize it for that rare dual consumption, otherwise the
-    // sketch+write is the batch's ONE execution and the doc count
-    // rides it as an observe metric (previously: an unconditional
-    // eager checkpoint plus a count job whose result every lifecycle
-    // caller discards — three jobs per append instead of one)
-    val tombF = Snapshots.current(s, bands)
-      .map(v => manifestPieces(s, bands, v)._2).getOrElse(Seq.empty)
-    val staged =
-      if (tombF.isEmpty) newDocs
-      else graft.Jobs.labeled(s, "lsh: materialize append batch")(
-        graft.Materialize.cut(newDocs))
-    if (tombF.nonEmpty) {
-      val clash = staged.select(col("doc_id")).distinct()
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("doc_id"),
-          "left_semi").count()
-      require(clash == 0L,
-        s"append: $clash doc_id(s) are tombstoned under $bands " +
-          "— re-ingest of a deleted id requires a purgeCommit first")
-    }
-    val obs = new org.apache.spark.sql.Observation()
-    graft.Jobs.labeled(s, "lsh: append band rows")(writeBands(
-      withBucket(Dedup.indexBandRows(
-        staged.observe(obs, count(lit(1)).as("n")))), bands, "append"))
-    val n = obs.get("n") match {
-      case v: java.lang.Long => v.longValue()
-      case other => sys.error(s"unexpected observe metric: $other")
-    }
-    if (tombF.nonEmpty) graft.Materialize.release(staged)
-    n
-  }
-
-  /** RE-INGEST RULE for a committed, tombstoned index (the
-    * [[Bm25Index.append]] contract's band-index twin): a tombstoned
-    * id's PHYSICAL band rows are still on disk — appending it again
-    * would leave duplicate rows that RESURRECT the moment
-    * [[purgeCommit]] drops the tombstone list. Tombstone-×-batch-sized
-    * broadcast check; no-op for uncommitted or tombstone-free indexes
-    * (one manifest-dir stat). */
-  private def requireNotTombstoned(s: SparkSession, bands: String,
-      ids: DataFrame, op: String): Unit =
-    for (v <- Snapshots.current(s, bands)) {
-      val tombF = manifestPieces(s, bands, v)._2
-      if (tombF.nonEmpty) {
-        val clash = ids.join(broadcast(s.read.parquet(tombF: _*)),
-          Seq("doc_id"), "left_semi").count()
-        require(clash == 0L,
-          s"$op: $clash doc_id(s) are tombstoned as of v$v under $bands " +
-            "— re-ingest of a deleted id requires a purgeCommit first")
-      }
-    }
-
-  /** DELETION — the retention/right-to-erasure pass that completes
-    * the lifecycle (save → append → compact → DELETE): remove the
-    * given doc_ids' band rows by rewriting ONLY the (band_id, kbucket)
-    * partitions that hold them. The touched-partition set is derived
-    * from a semi-join (bounded: ≤ Bands × [[KBuckets]] values
-    * regardless of delete size), the pruned scan anti-joins the id
-    * set, and the rewrite goes through DYNAMIC partition overwrite so
-    * untouched partitions' files are never rewritten — at 100 TB a
-    * deletion batch costs the partitions it lands in, not an index
-    * rewrite. Partitions emptied entirely are removed explicitly
-    * (dynamic overwrite only replaces partitions it writes). The
-    * remaining rows are materialized before the in-place overwrite
-    * (Spark cannot overwrite a path it is still reading); a warehouse
-    * deployment writes to a fresh dir + pointer-flips instead, as with
-    * compact(). Returns the number of index rows removed. */
-  def delete(s: SparkSession, indexDir: String, deleteIds: DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${IvfTopK.qualify(s, indexDir)}/bands",
-      Seq("band_id", "kbucket"), "doc_id", deleteIds)
-
-  /** COMPACTION — the maintenance pass the append lifecycle needs at
-    * scale: every [[append]] adds one small file per touched
-    * (band_id, kbucket) partition, so after N ingest batches a
-    * partition holds N+1 files and the serve scan's per-file
-    * open/footer cost grows linearly with ingest history. Rewrite the
-    * bands into `destDir` with ONE file per partition — a single
-    * shuffle by the partition key (each key hashes to exactly one
-    * task, so each partition directory gets exactly one writer) —
-    * preserving the (band_id, kbucket) layout the serve path's
-    * file-level pruning depends on ([[Compact.compactParquet]]'s flat
-    * rewrite would destroy it). Rows are identical, so serve/admit
-    * results are unchanged by construction — and q103b proves it
-    * end-to-end under the oracle gate. Writes to a NEW directory; the
-    * atomic swap is the caller's pointer flip, as with the flat
-    * compactor. Returns the output file count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = IvfTopK.qualify(s, srcDir)
-    val dest = IvfTopK.qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/bands", s"$dest/bands", Seq("band_id", "kbucket"))
-    IndexMaintenance.copyDir(s, s"$src/meta", s"$dest/meta")
-    n
-  }
-
-  /** Threshold-triggered partition-local compaction IN PLACE — the
-    * auto-maintenance policy under continuous ingest (q112): only
-    * (band_id, kbucket) directories whose data-file count exceeds
-    * `maxFiles` are rewritten (one file each afterwards), everything
-    * else stays byte-identical, so write amplification tracks where
-    * arrivals actually landed instead of the index size. Rows are
-    * unchanged, so serve/admit results are unaffected by
-    * construction. Returns the number of partitions rewritten. */
-  def compactInPlaceIfFragmented(s: SparkSession, indexDir: String,
-      maxFiles: Int): Int =
-    IndexMaintenance.compactIfFragmented(s,
-      s"${IvfTopK.qualify(s, indexDir)}/bands",
-      Seq("band_id", "kbucket"), maxFiles)
-
-  /** Snapshot-PRESERVING compaction for a manifest-committed index
-    * ([[Snapshots.compactCommit]] over the bands dir): fragmented
-    * (band_id, kbucket) partitions of the CURRENT version merge into
-    * new sibling files and the merged layout commits as the next
-    * version, while every older version keeps serving its own file
-    * set — time travel and compaction coexist (q113). Tombstoned
-    * indexes compact through [[purgeCommit]] (which also merges
-    * fragmented partitions) — the generic pass cannot carry the
-    * tombstone list. Returns (newVersion, partitionsRewritten). */
-  def compactCommitSnapshot(s: SparkSession, indexDir: String,
-      maxFiles: Int = 1): (Int, Int) = {
-    val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
-    for (v <- Snapshots.current(s, bands))
-      require(manifestPieces(s, bands, v)._2.isEmpty,
-        "compactCommitSnapshot: tombstones present — use purgeCommit " +
-          "(it merges fragmented partitions AND purges tombstoned rows)")
-    Snapshots.compactCommit(s, bands, Seq("band_id", "kbucket"), maxFiles)
-  }
-
   /** Version `v`'s manifested files split into (band files, tombstone
     * files) — the tombstone list lives under `bands/deletes/` INSIDE
     * the manifested tree, so one version number pins the index rows
@@ -285,6 +157,12 @@ object MinHashIndex {
       v: Int): (Seq[String], Seq[String]) =
     Snapshots.files(s, bands, v)
       .partition(f => !f.startsWith(s"$bands/deletes/"))
+
+  /** The tombstone rows of `tombF` (a version's `deletes/` files), read
+    * off the manifest with the footer on the driver — no schema job. */
+  private def tombstones(s: SparkSession, bands: String,
+      tombF: Seq[String]): DataFrame =
+    ManifestIO.read(s, s"$bands/deletes", tombF)
 
   /** Version `v`'s effective bands RELATION over the `touched`
     * (band_id, kbucket) partitions: exactly the manifested band files
@@ -307,62 +185,79 @@ object MinHashIndex {
       case files => ManifestIO.read(s, bands, files)
     }
     if (tombF.isEmpty) rel
-    else rel.join(broadcast(s.read.parquet(tombF: _*)),
+    else rel.join(broadcast(tombstones(s, bands, tombF)),
       Seq("doc_id"), "left_anti")
+  }
+
+  /** Refuse `ids` that version `w` already tombstones: a
+    * tombstone-×-batch-sized broadcast semi-join, and no job at all
+    * when `w` carries no tombstone list. */
+  private def refuseTombstoned(s: SparkSession, bands: String, w: Int,
+      ids: DataFrame, op: String, why: String): Unit = {
+    val tombF = manifestPieces(s, bands, w)._2
+    if (tombF.nonEmpty) {
+      val clash = ids.join(broadcast(tombstones(s, bands, tombF)),
+        Seq("doc_id"), "left_semi").count()
+      require(clash == 0L,
+        s"$op: $clash doc_id(s) are tombstoned as of v$w — $why")
+    }
   }
 
   /** Row-level DELETE under snapshot isolation — the tombstone +
     * purge-compaction shape ([[Bm25Index.deleteCommit]]'s lexical
-    * form) generalized to the band index, closing the committed
-    * index's erasure gap (the in-place [[delete]] is refused on a
-    * committed dataset because its dynamic-partition overwrite would
-    * dangle every older manifest): the doc_ids APPEND as a tombstone
-    * file under the manifested tree and ONE commit pins them, so
-    * readers of version v-and-later anti-join them out (broadcast)
-    * while readers pinned to older versions never see them —
-    * byte-identical time travel through the delete. [[purgeCommit]]
-    * later rewrites exactly the partitions holding tombstoned rows and
-    * drops the list. Ids already tombstoned as of the current version
-    * are refused loudly (a double delete is a caller bug; silently
-    * re-appending the tombstone would bloat every later anti-join).
-    * Returns the committed version. */
+    * form) applied to the band index: the doc_ids land as ONE
+    * tombstone file under the manifested tree and ONE commit pins
+    * them, so readers of version v-and-later anti-join them out
+    * (broadcast) while readers pinned to older versions never see
+    * them — byte-identical time travel through the delete.
+    * [[purgeCommit]] later rewrites exactly the partitions holding
+    * tombstoned rows and drops the list. The commit selects v's files
+    * plus the tombstone file this call landed, nothing else: band rows
+    * another writer left unreferenced (a refused append) stay out.
+    * Ids already tombstoned as of the current version are refused
+    * loudly (a double delete is a caller bug; silently re-appending
+    * the tombstone would bloat every later anti-join). Returns the
+    * committed version. */
   def deleteCommit(s: SparkSession, indexDir: String,
       deleteIds: DataFrame): Int = {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
     val v = Snapshots.current(s, bands).getOrElse(
       throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $bands — the " +
-          "in-place lifecycle deletes via delete()"))
-    val staged = graft.Materialize.cut(
-      deleteIds.select(col("doc_id")).distinct())
-    val tombF = manifestPieces(s, bands, v)._2
-    if (tombF.nonEmpty) {
-      val clash = staged
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("doc_id"), "left_semi")
-        .count()
-      require(clash == 0L,
-        s"deleteCommit: $clash doc_id(s) are already tombstoned as of " +
-          s"v$v — a repeated delete is a caller bug")
-    }
-    staged.coalesce(1).write.mode("append").parquet(s"$bands/deletes")
-    graft.Materialize.release(staged)
-    Snapshots.commitReplacing(s, bands, v, Nil)
+        s"deleteCommit: no committed snapshot under $bands — an index " +
+          "is committed by save()"))
+    val ids = deleteIds.select(col("doc_id")).distinct()
+    // the ids feed a second consumer (the double-delete check) only
+    // when v already carries tombstones: materialize them just then
+    val tombed = manifestPieces(s, bands, v)._2.nonEmpty
+    val staged = if (tombed) graft.Materialize.cut(ids) else ids
+    try {
+      refuseTombstoned(s, bands, v, staged, "deleteCommit",
+        "a repeated delete is a caller bug")
+      val mine = Snapshots.landStaged(s, bands)(stage =>
+        staged.coalesce(1).write.mode("append").parquet(s"$stage/deletes"))
+      Snapshots.commitSelectingExpecting(s, bands, v, _ => false, mine)
+    } finally if (tombed) graft.Materialize.release(staged)
   }
 
-  /** COPY-ON-WRITE tombstone-purge compaction for a committed index,
-    * PARTITION-LOCAL: only (band_id, kbucket) partitions that hold a
-    * tombstoned row (derived from a bounded probe of the (doc_id,
-    * band_id, kbucket) columns against the broadcast tombstone list)
-    * or exceed `maxFiles` data files rewrite their surviving rows as
-    * NEW sibling files; every other partition's files carry VERBATIM
-    * into the next manifest, which also drops the tombstone list.
-    * Write amplification tracks where the deleted docs' band rows sit
-    * (≤ Bands × [[KBuckets]] partitions by construction — a deleted
-    * doc has exactly [[Dedup.Bands]] rows, so unlike BM25's
-    * term-scattered postings the purge here is naturally narrow) plus
-    * where appends fragmented. Older versions keep time-traveling over
-    * their own files until [[Snapshots.expire]]. Returns the committed
-    * version (unchanged when there is nothing to purge or merge). */
+  /** COPY-ON-WRITE tombstone-purge compaction, PARTITION-LOCAL: only
+    * (band_id, kbucket) partitions that hold a tombstoned row (derived
+    * from a bounded probe of the (doc_id, band_id, kbucket) columns
+    * against the broadcast tombstone list) or exceed `maxFiles` data
+    * files rewrite their surviving rows as NEW sibling files, one per
+    * partition; every other partition's files carry VERBATIM into the
+    * next manifest, which also drops the tombstone list. With no
+    * tombstones this is plain small-file compaction — the maintenance
+    * pass an appending index needs, since every append adds one file
+    * per touched partition. Write amplification tracks where the
+    * deleted docs' band rows sit (≤ Bands × [[KBuckets]] partitions by
+    * construction — a deleted doc has exactly [[Dedup.Bands]] rows, so
+    * unlike BM25's term-scattered postings the purge here is naturally
+    * narrow) plus where appends fragmented. The rewrite lands through
+    * [[Snapshots.landStaged]] and the commit selects exactly it, so
+    * files another writer left unreferenced stay out. Older versions
+    * keep time-traveling over their own files until
+    * [[Snapshots.expire]]. Returns the committed version (unchanged
+    * when there is nothing to purge or merge). */
   def purgeCommit(s: SparkSession, indexDir: String,
       maxFiles: Int = 1): Int = {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
@@ -370,47 +265,52 @@ object MinHashIndex {
       throw new IllegalStateException(
         s"purgeCommit: no committed snapshot under $bands"))
     val (bandF, tombF) = manifestPieces(s, bands, v)
+    // keySet, not `collect { ... => p }`: collecting pairs out of a Map
+    // builds another Map, which keeps one partition per band_id
     val fragged: Set[(Int, Int)] = bandF.groupBy(partitionOf)
-      .collect { case (p, fl) if fl.size > maxFiles => p }.toSet
+      .filter { case (_, fl) => fl.size > maxFiles }.keySet
     val tombed: Set[(Int, Int)] =
       if (tombF.isEmpty) Set.empty
       else ManifestIO.read(s, bands, bandF)
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("doc_id"), "left_semi")
+        .join(broadcast(tombstones(s, bands, tombF)), Seq("doc_id"), "left_semi")
         .select(col("band_id"), col("kbucket")).distinct()
         .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     val touched = fragged ++ tombed
     if (touched.isEmpty && tombF.isEmpty) return v
-    if (touched.nonEmpty) {
-      val files = bandF.filter(f => touched(partitionOf(f)))
-      val cur = ManifestIO.read(s, bands, files)
-      val purged =
-        if (tombF.isEmpty) cur
-        else cur.join(broadcast(s.read.parquet(tombF: _*)),
-          Seq("doc_id"), "left_anti")
-      val merged = graft.Materialize.cut(purged)
-      writeBands(merged, bands, "append")
-      graft.Materialize.release(merged)
-    }
-    Snapshots.commitReplacing(s, bands, v,
-      touched.toSeq.sorted.map { case (b, k) => s"band_id=$b/kbucket=$k" }
-        :+ "deletes")
+    // the rewrite reads v's manifested files and writes into a private
+    // staging dir, so nothing it reads is overwritten under it
+    val mine =
+      if (touched.isEmpty) Nil
+      else {
+        val cur = ManifestIO.read(s, bands,
+          bandF.filter(f => touched(partitionOf(f))))
+        val purged =
+          if (tombF.isEmpty) cur
+          else cur.join(broadcast(tombstones(s, bands, tombF)),
+            Seq("doc_id"), "left_anti")
+        Snapshots.landStaged(s, bands)(stage =>
+          graft.Jobs.labeled(s, "lsh: purge rewrite")(
+            writeBands(purged, stage, "append")))
+      }
+    Snapshots.commitSelectingExpecting(s, bands, v,
+      f => f.startsWith("deletes/") || touched(partitionOf(f)), mine)
   }
 
-  /** OPTIMISTIC-CONCURRENCY append for a COMMITTED index — the q141
-    * re-derive protocol ([[Bm25Index.appendCommitRetrying]]) applied
-    * to the band family, where the df-free shape makes every landed
-    * artifact ADDITIVE: a doc's band rows are self-contained (there is
-    * no corpus-level stats sibling to re-derive), so the landing
-    * happens exactly once and only the COMMIT retries. Each attempt
-    * SELECTS this writer's tracked files on top of the version it
-    * validated against ([[Snapshots.commitSelectingExpecting]] — a
-    * concurrent writer's half-landed batch is never swept in), and a
-    * lost race re-VALIDATES the one base-dependent rule — the
-    * re-ingest guard — against the new current before retrying: a
-    * concurrent [[deleteCommit]] may have tombstoned one of this
-    * batch's ids mid-flight, and a blind retry would land physical
-    * rows that resurrect on the next [[purgeCommit]]. A retry that
-    * fails re-validation leaves the landed band files unreferenced —
+  /** OPTIMISTIC-CONCURRENCY append — the q141 re-derive protocol
+    * ([[Bm25Index.appendCommitRetrying]]) applied to the band family,
+    * where the df-free shape makes every landed artifact ADDITIVE: a
+    * doc's band rows are self-contained (there is no corpus-level
+    * stats sibling to re-derive), so the landing happens exactly once
+    * and only the COMMIT retries. Each attempt SELECTS this writer's
+    * tracked files on top of the version it validated against
+    * ([[Snapshots.commitSelectingExpecting]] — a concurrent writer's
+    * half-landed batch is never swept in), and a lost race
+    * re-VALIDATES the one base-dependent rule — the re-ingest guard —
+    * against the new current before retrying: a concurrent
+    * [[deleteCommit]] may have tombstoned one of this batch's ids
+    * mid-flight, and a blind retry would land physical rows that
+    * resurrect on the next [[purgeCommit]]. A retry that fails
+    * re-validation leaves the landed band files unreferenced —
     * [[Snapshots.expire]] reclaims them, the standard orphan sweep.
     * File tracking is WRITER-EXACT: the batch lands in a private
     * staging subdir and its files move into place
@@ -428,26 +328,37 @@ object MinHashIndex {
     * conflictsObserved). */
   def appendCommitRetrying(s: SparkSession, indexDir: String,
       newDocs: DataFrame, expected: Option[Int] = None,
-      maxRetries: Int = 5): (Int, Int) = {
+      maxRetries: Int = 5): (Int, Int) =
+    appendCommitting(s, indexDir, newDocs, Dedup.indexBandRows,
+      expected, maxRetries)
+
+  /** [[appendCommitRetrying]] from ALREADY-SKETCHED band rows (doc_id,
+    * sig, bk0, band_id, band_key) — a slice of one [[localize]]d
+    * sketch, as the ingest loops pass: the landing writes the rows as
+    * they are, with no re-sketch and no corpus scan. Same protocol,
+    * same return. */
+  def appendRowsCommitRetrying(s: SparkSession, indexDir: String,
+      bandRows: DataFrame, expected: Option[Int] = None,
+      maxRetries: Int = 5): (Int, Int) =
+    appendCommitting(s, indexDir, bandRows, identity, expected, maxRetries)
+
+  /** The body of both append forms; `bandRowsOf` turns the batch into
+    * the band rows the landing writes. */
+  private def appendCommitting(s: SparkSession, indexDir: String,
+      batch: DataFrame, bandRowsOf: DataFrame => DataFrame,
+      expected: Option[Int], maxRetries: Int): (Int, Int) = {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
     var v = expected.orElse(Snapshots.current(s, bands)).getOrElse(
       throw new IllegalStateException(
         s"appendCommitRetrying: no committed snapshot under $bands"))
-    val local = newDocs.queryExecution.optimizedPlan
+    val local = batch.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val staged = if (local) newDocs else graft.Materialize.cut(newDocs)
+    val staged = if (local) batch else graft.Materialize.cut(batch)
     val ids = staged.select(col("doc_id")).distinct()
-    def checkTombstones(w: Int): Unit = {
-      val tombF = manifestPieces(s, bands, w)._2
-      if (tombF.nonEmpty) {
-        val clash = ids.join(broadcast(s.read.parquet(tombF: _*)),
-          Seq("doc_id"), "left_semi").count()
-        require(clash == 0L,
-          s"appendCommitRetrying: $clash doc_id(s) are tombstoned as " +
-            s"of v$w — a purgeCommit must land first (landed band rows " +
-            "are unreferenced; expire() reclaims them)")
-      }
-    }
+    def checkTombstones(w: Int): Unit =
+      refuseTombstoned(s, bands, w, ids, "appendCommitRetrying",
+        "a purgeCommit must land first (landed band rows are " +
+          "unreferenced; expire() reclaims them)")
     // a materialized `staged` must stay so through the retry loop —
     // every re-validation's `ids` derives from it (releasing it after
     // the landing would make a retry recompute a truncated-lineage
@@ -457,7 +368,7 @@ object MinHashIndex {
       // the additive landing, exactly once — order-independent between
       // concurrent writers (parquet append never mutates existing
       // files), claimed writer-exactly via the private staging move
-      val mine = landBands(s, bands, staged)
+      val mine = landBands(s, bands, bandRowsOf(staged))
       var conflicts = 0
       while (true) {
         try return (Snapshots.commitSelectingExpecting(s, bands, v,
@@ -478,14 +389,14 @@ object MinHashIndex {
     } finally if (!local) graft.Materialize.release(staged)
   }
 
-  /** File-level copy of a saved index (bands + meta). Mutation-testing
-    * convenience: a re-runnable query that APPENDS (the ingest-loop
-    * forms q103/q103b) clones the resident index per invocation so
-    * the shared saved artifact is never mutated — a production
-    * pipeline appends in place and doesn't need this. */
+  /** File-level copy of a saved index (bands with their manifests +
+    * meta). Harness convenience: a re-runnable query that commits into
+    * an index (the ingest-loop and snapshot lifecycle queries) clones
+    * the shared saved artifact per invocation, so that artifact is
+    * identical on every run — a production pipeline commits into its
+    * one index and doesn't need this. */
   def copyTo(s: SparkSession, srcDir: String, destDir: String): Unit =
-    IndexMaintenance.copyDir(s, IvfTopK.qualify(s, srcDir),
-      IvfTopK.qualify(s, destDir))
+    graft.Fs.copyDir(s, IvfTopK.qualify(s, srcDir), IvfTopK.qualify(s, destDir))
 
   /** Reconstruct a handle from saved artifacts — one meta row read on
     * the driver, the index stays on disk for the probe scan. */
@@ -530,31 +441,6 @@ object MinHashIndex {
   def localize(s: SparkSession, probeDocs: DataFrame): DataFrame =
     localizeProbe(s, probeDocs)
 
-  /** [[append]] from ALREADY-SKETCHED band rows (doc_id, sig, bk0,
-    * band_id, band_key) — no re-sketch, no corpus scan; a local
-    * probe-batch relation writes one file per touched partition.
-    * Returns the appended document count. */
-  def appendRows(s: SparkSession, indexDir: String,
-      bandRows: DataFrame): Long = {
-    val base = IvfTopK.qualify(s, indexDir)
-    requireNotTombstoned(s, s"$base/bands",
-      bandRows.select(col("doc_id")).distinct(), "appendRows")
-    // the doc count RIDES the write as an observe metric (a separate
-    // distinct().count() was a whole extra job whose result every
-    // lifecycle caller discards): band rows are one row per
-    // (doc, band) with band_id 0..Bands-1 dense per doc, so the
-    // band-0 row count IS the distinct doc count
-    val obs = new org.apache.spark.sql.Observation()
-    graft.Jobs.labeled(s, "lsh: append band rows")(writeBands(
-      withBucket(bandRows)
-        .observe(obs, count(when(col("band_id") === 0, 1)).as("docs")),
-      s"$base/bands", "append"))
-    obs.get("docs") match {
-      case n: java.lang.Long => n.longValue()
-      case other => sys.error(s"unexpected observe metric: $other")
-    }
-  }
-
   /** est-Jaccard over two melted sig columns — the shared verification
     * expression of the serve and admission joins. The match count runs
     * through the [[graft.functions.SigMatches]] kernel: the 16-term
@@ -586,8 +472,7 @@ object MinHashIndex {
     * one committed after does not. */
   def serveRowsAsOf(s: SparkSession, indexDir: String, version: Int,
       probeRows: DataFrame): DataFrame =
-    serveOn(s, s"${IvfTopK.qualify(s, indexDir)}/bands", Some(version),
-      probeRows)
+    serveOn(s, s"${IvfTopK.qualify(s, indexDir)}/bands", version, probeRows)
 
   /** [[serve]] over ALREADY-SKETCHED probe band rows (callers that
     * reuse one probe sketch across several legs — q110 feeds the same
@@ -597,17 +482,19 @@ object MinHashIndex {
 
   /** [[serve]] body over pre-materialized probe band rows, so the
     * admission verdict can reuse one probe sketch for both its legs.
-    * The LIVE bands relation: for an uncommitted index a plain
-    * directory read; for a MANIFEST-COMMITTED index ([[Snapshots]])
-    * the CURRENT version's exact file set — a direct directory read
-    * would silently DOUBLE-COUNT rows after a copy-on-write compaction
-    * ([[compactCommitSnapshot]]), because the merged files land as
-    * siblings of the files older versions still reference and both
-    * stay on disk until [[Snapshots.expire]]. One manifest-dir
-    * existence check on the happy path. */
+    * The LIVE bands relation is the CURRENT version's exact file set —
+    * a directory read would DOUBLE-COUNT rows after a copy-on-write
+    * [[purgeCommit]], because the merged files land as siblings of the
+    * files older versions still reference and both stay on disk until
+    * [[Snapshots.expire]]. A bands dir with no snapshot was not written
+    * by [[save]] and is refused. One manifest-dir listing. */
   private def serveFrom(s: SparkSession, h: Handle,
       probeRows: DataFrame): DataFrame =
-    serveOn(s, h.bandsPath, Snapshots.current(s, h.bandsPath), probeRows)
+    serveOn(s, h.bandsPath, Snapshots.current(s, h.bandsPath).getOrElse(
+      throw new IllegalStateException(
+        s"MinHashIndex: no committed snapshot under ${h.bandsPath} — an " +
+          "index is committed by save(); this bands dir was not")),
+      probeRows)
 
   /** Driver-side twin of the serve's touched-bucket collection for
     * probes whose optimized plan is a [[LocalRelation]] (every
@@ -635,11 +522,10 @@ object MinHashIndex {
       case _ => None
     }
 
-  /** The serve join against the bands under `bands` — the live
-    * directory (`version` None) or a committed version's file set —
-    * with bucket-set pruning, broadcast probe and first-collision-band
-    * gate. */
-  private def serveOn(s: SparkSession, bands: String, version: Option[Int],
+  /** The serve join against version `version` of the bands under
+    * `bands`, with bucket-set pruning, broadcast probe and
+    * first-collision-band gate. */
+  private def serveOn(s: SparkSession, bands: String, version: Int,
       probeRows: DataFrame): DataFrame = {
     val probe = probeRows.select(
       col("doc_id").as("probe_doc"), col("sig").as("sig_a"),
@@ -655,15 +541,7 @@ object MinHashIndex {
       .select(col("band_id"), kbucket(col("band_key")).as("kbucket"))
       .distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSeq)
-    // a committed version prunes by FILE LIST (versionRelation); the
-    // uncommitted directory read prunes by partition predicate
-    val idxRel = version match {
-      case Some(v) => versionRelation(s, bands, v, touched.toSet)
-      case None => ManifestIO.readDir(s, bands).where(touched
-        .map { case (b, kb) => col("band_id") === b && col("kbucket") === kb }
-        .reduceOption(_ || _).getOrElse(lit(false)))
-    }
-    val idx = idxRel
+    val idx = versionRelation(s, bands, version, touched.toSet)
       .select(col("doc_id").as("corpus_doc"), col("sig").as("sig_b"),
         col("bk0").as("corpus_bk0"), col("band_id"), col("band_key"))
     idx.join(broadcast(probe), Seq("band_id", "band_key"))

@@ -412,7 +412,7 @@ object ZOrderLayout {
     val dest = IvfTopK.qualify(s, destDir)
     val n = IndexMaintenance.compactPartitioned(s,
       s"$src/data", s"$dest/data", Seq("zbucket"), sortCols = Seq("z"))
-    IndexMaintenance.copyDir(s, s"$src/meta", s"$dest/meta")
+    graft.Fs.copyDir(s, s"$src/meta", s"$dest/meta")
     n
   }
 

@@ -875,6 +875,34 @@ class ScaleShapeSpec extends SparkSpec {
     }
   }
 
+  /** A committed MinHash serve of `probeRows` (a localized sketch)
+    * scans exactly the current version's manifested files under the
+    * (band_id, kbucket) partitions the probe's band keys land in — a
+    * strict subset of that version's files. */
+  private def assertServeReadsTouchedFiles(idx: String,
+      probeRows: org.apache.spark.sql.DataFrame): Unit = {
+    import graft.plans.{MinHashIndex, Snapshots}
+    val s = spark
+    val bands = s"$idx/bands"
+    val touched = probeRows.where(col("band_key").isNotNull)
+      .select(col("band_id"),
+        pmod(col("band_key"), lit(MinHashIndex.KBuckets)).cast("int"))
+      .distinct().collect()
+      .map(r => s"band_id=${r.getInt(0)}/kbucket=${r.getInt(1)}/").toSet
+    val path = (f: String) => new java.net.URI(f).getPath
+    val all = Snapshots.files(s, bands, Snapshots.current(s, bands).get)
+      .map(path)
+    val want = all.filter(f => touched.exists(f.contains)).toSet
+    assert(want.nonEmpty && want.size < all.size,
+      s"fixture rot: ${want.size} of ${all.size} files touched")
+    val read = MinHashIndex.serveRows(s, MinHashIndex.load(s, idx),
+      probeRows).inputFiles.map(path).toSet
+    assert(read === want,
+      "the serve must scan exactly the touched partitions' manifested " +
+        s"files: ${(read -- want).take(3)} extra, " +
+        s"${(want -- read).take(3)} missing")
+  }
+
   test("MinHash LSH index lifecycle: serve equals q31 restricted to probe×resident, scan prunes to probe buckets") {
     // the persisted-index serve must answer exactly what the fresh
     // all-pairs computation (q31, itself oracle-gated) says about the
@@ -907,12 +935,11 @@ class ScaleShapeSpec extends SparkSpec {
           s"${(expected -- served).take(3)} missing")
       // the probe scan must be pruned at the FILE level by the
       // (band_id, kbucket) partitions the batch's keys land in
+      assertServeReadsTouchedFiles(dir,
+        graft.plans.MinHashIndex.localize(s, probe))
       val plan = graft.plans.MinHashIndex.serve(s,
           graft.plans.MinHashIndex.load(s, dir), probe)
         .queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters: [") && plan.contains("kbucket"),
-        s"probe-bucket filter did not reach the bands scan as a " +
-          s"partition filter:\n${plan.take(1200)}")
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("SortMergeJoin"),
         s"serve should be a broadcast probe over the pruned scan:\n${plan.take(1200)}")
@@ -1294,8 +1321,10 @@ class ScaleShapeSpec extends SparkSpec {
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       graft.plans.MinHashIndex.save(s,
         resident.where(col("doc_id") % 2 === 0), s"$sf/documents.parquet", dirA)
-      val n = graft.plans.MinHashIndex.append(s, dirA,
+      val (v2, _) = graft.plans.MinHashIndex.appendCommitRetrying(s, dirA,
         resident.where(col("doc_id") % 2 === 1))
+      val n = graft.plans.Snapshots.readIncremental(s, s"$dirA/bands",
+        v2 - 1, v2).select(col("doc_id")).distinct().count()
       assert(n === resident.where(col("doc_id") % 2 === 1).count())
       graft.plans.MinHashIndex.save(s, resident, s"$sf/documents.parquet", dirB)
       def servedFrom(dir: String) = graft.plans.MinHashIndex.serve(s,
@@ -1319,22 +1348,22 @@ class ScaleShapeSpec extends SparkSpec {
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val src = s"$staging/idx"
       graft.plans.MinHashIndex.save(s, resident, s"$sf/documents.parquet", src)
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/bands", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      val n = graft.plans.MinHashIndex.delete(s, src,
+      val bands = s"$src/bands"
+      val v1 = graft.plans.Snapshots.current(s, bands).get
+      graft.plans.MinHashIndex.deleteCommit(s, src,
         resident.where(pmod(col("doc_id"), lit(7)) === 0)
           .select(col("doc_id")))
+      val v3 = graft.plans.MinHashIndex.purgeCommit(s, src)
+      val n = graft.plans.Snapshots.read(s, bands, v1).count() -
+        graft.plans.Snapshots.read(s, bands, v3).count()
       assert(n > 0, "delete removed no index rows — fixture rot?")
-      val after = files()
-      // delete locality: some partitions' files survive byte-identical
-      // (same path, length, mtime) — an index-wide rewrite would
-      // replace every file
-      val untouched = after.count { case (p, meta) =>
-        before.get(p).contains(meta) }
-      assert(untouched > 0,
+      val before = graft.plans.Snapshots.files(s, bands, v1).toSet
+      val after = graft.plans.Snapshots.files(s, bands, v3)
+      // delete locality: some partitions' files carry into the purged
+      // version unchanged — an index-wide rewrite would replace every
+      // file
+      val untouched = after.count(before)
+      assert(untouched > 0 && untouched < before.size,
         s"every partition was rewritten (${before.size} -> ${after.size}) — no delete locality")
       // the surviving index must serve exactly what a fresh index over
       // the surviving residents serves
@@ -1566,14 +1595,11 @@ class ScaleShapeSpec extends SparkSpec {
         docs.where(pmod(col("doc_id"), lit(10)).between(1, 8))
           .select(col("doc_id"), col("text")),
         s"$sf/documents.parquet", idx)
-      graft.plans.Snapshots.commit(s, s"$idx/bands")
-      graft.plans.MinHashIndex.append(s, idx,
+      val (v2, _) = graft.plans.MinHashIndex.appendCommitRetrying(s, idx,
         docs.where(pmod(col("doc_id"), lit(10)) === 9)
           .select(col("doc_id"), col("text")))
-      val v2 = graft.plans.Snapshots.commit(s, s"$idx/bands")
-      val (v3, rewritten) =
-        graft.plans.MinHashIndex.compactCommitSnapshot(s, idx)
-      assert(rewritten > 0, "compaction rewrote nothing — fixture rot?")
+      val v3 = graft.plans.MinHashIndex.purgeCommit(s, idx)
+      assert(v3 == v2 + 1, "compaction rewrote nothing — fixture rot?")
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
         .select(col("doc_id"), col("text"))
       def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1592,7 +1618,8 @@ class ScaleShapeSpec extends SparkSpec {
       // an IN-PLACE rewrite on the committed index must refuse loudly —
       // it would delete files versions v2/v3 still reference
       val e = intercept[IllegalArgumentException] {
-        graft.plans.MinHashIndex.delete(s, idx,
+        graft.plans.IndexMaintenance.deletePartitioned(s, s"$idx/bands",
+          Seq("band_id", "kbucket"), "doc_id",
           docs.limit(1).select(col("doc_id")))
       }
       assert(e.getMessage.contains("manifest-committed"),
@@ -1701,8 +1728,9 @@ class ScaleShapeSpec extends SparkSpec {
       val v1 = graft.plans.Snapshots.commit(s, bands)
       val appended = docs.where(pmod(col("doc_id"), lit(10)) === 9)
         .select(col("doc_id"), col("text"))
-      val nApp = graft.plans.MinHashIndex.append(s, idx, appended)
-      val v2 = graft.plans.Snapshots.commit(s, bands)
+      val nApp = appended.count()
+      val (v2, _) = graft.plans.MinHashIndex.appendCommitRetrying(s, idx,
+        appended)
       // incremental read (v1 -> v2] = exactly the appended docs' rows
       val inc = graft.plans.Snapshots.readIncremental(s, bands, v1, v2)
       assert(inc.select(col("doc_id")).distinct().count() == nApp,
@@ -1976,10 +2004,9 @@ class ScaleShapeSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val r1 = served(v1)
       // v2: append a fresh slice, commit
-      MinHashIndex.append(s, idxDir,
+      val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
         docs.where(pmod(col("doc_id"), lit(10)) === 9)
           .select(col("doc_id"), col("text")))
-      val v2 = Snapshots.commit(s, bands)
       // every v1 file survives the append byte-identical (append only
       // ADDS files), and the pinned v1 read is oblivious to v2
       val after = fileMap()
@@ -2087,7 +2114,8 @@ class ScaleShapeSpec extends SparkSpec {
       val batchB = docs.where(pmod(col("doc_id"), lit(10)) === 9)
       // writer A LANDS first — its claim is fixed at land time,
       // writer-exactly, by the staging move...
-      val mineA = MinHashIndex.landBands(s, bands, batchA)
+      val mineA = MinHashIndex.landBands(s, bands,
+        operators.Dedup.indexBandRows(batchA))
       assert(mineA.nonEmpty)
       // ...then writer B lands AND commits entirely inside A's
       // land-to-commit window. Under the old listing-diff claim this
@@ -2182,7 +2210,7 @@ class ScaleShapeSpec extends SparkSpec {
         MinHashIndex.deleteCommit(s, idxDir, delIds.limit(1)))
         .getMessage.contains("tombstoned"))
       assert(intercept[IllegalArgumentException](
-        MinHashIndex.append(s, idxDir,
+        MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.join(delIds.limit(1), Seq("doc_id"))
             .select(col("doc_id"), col("text"))))
         .getMessage.contains("tombstoned"))
@@ -2215,11 +2243,12 @@ class ScaleShapeSpec extends SparkSpec {
         .join(delIds, Seq("doc_id"), "left_semi").count() == 0,
         "a tombstoned doc's rows survived the purge")
       // purged ⇒ the id is appendable again
-      MinHashIndex.append(s, idxDir,
+      val (v4, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
         docs.join(delIds.limit(1), Seq("doc_id"))
           .select(col("doc_id"), col("text")))
       // retention: older versions drop, v3 serve unaffected
-      Snapshots.expireKeeping(s, bands, keepLast = 1)
+      Snapshots.expireKeeping(s, bands, keepLast = 2)
+      assert(Snapshots.versions(s, bands) == Seq(v3, v4))
       assert(served(v3) == r2, "v3 serve changed after expire")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(staging))
@@ -2451,11 +2480,10 @@ class ScaleShapeSpec extends SparkSpec {
           .select(col("doc_id"), col("text")),
         s"$sf/documents.parquet", idxDir)
       val bands = s"$idxDir/bands"
-      val v1 = Snapshots.commit(s, bands)
-      MinHashIndex.append(s, idxDir,
+      val v1 = Snapshots.current(s, bands).get
+      val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
         docs.where(pmod(col("doc_id"), lit(10)) === 9)
           .select(col("doc_id"), col("text")))
-      val v2 = Snapshots.commit(s, bands)
       val conf = s.sparkContext.hadoopConfiguration
       def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
       def fileMap() = graft.Fs.listDataFiles(bands, conf)
@@ -2472,7 +2500,9 @@ class ScaleShapeSpec extends SparkSpec {
       val r2 = served(v2)
       // the append fragmented its touched partitions to 2 files — the
       // COW compaction must find work (guard against vacuity)
-      val (v3, nRewritten) = MinHashIndex.compactCommitSnapshot(s, idxDir)
+      val v3 = MinHashIndex.purgeCommit(s, idxDir)
+      val nRewritten = (Snapshots.files(s, bands, v3).toSet --
+        Snapshots.files(s, bands, v2)).size
       assert(v3 == v2 + 1 && nRewritten >= 1,
         s"expected a fresh version with rewritten partitions, got " +
           s"(v$v3, $nRewritten)")
@@ -2495,7 +2525,7 @@ class ScaleShapeSpec extends SparkSpec {
         s"v3 partitions still fragmented: " +
           s"${v3ByDir.filter(_._2.size > 1).keys.take(3)}")
       // idempotent: nothing fragmented in v3 — no new commit
-      assert(MinHashIndex.compactCommitSnapshot(s, idxDir) == (v3, 0))
+      assert(MinHashIndex.purgeCommit(s, idxDir) == v3)
       // expire up to v3: the superseded pre-compact files are
       // reclaimed, everything v3 references survives, serve unchanged
       val removed = Snapshots.expire(s, bands, keepFrom = v3)
@@ -2592,23 +2622,30 @@ class ScaleShapeSpec extends SparkSpec {
       val before = files()
       assert(before.keys.count(_.contains("b=0")) == 3 &&
         before.keys.count(_.contains("b=1")) == 2, s"fixture rot: $before")
-      val n = graft.plans.IndexMaintenance.compactIfFragmented(
-        s, dir, Seq("b"), maxFiles = 2)
+      import graft.plans.Snapshots
+      Snapshots.commit(s, dir)
+      val (v2, n) = Snapshots.compactCommit(s, dir, Seq("b"), maxFiles = 2)
       assert(n == 1, s"expected 1 partition rewritten, got $n")
       val after = files()
+      val live = Snapshots.files(s, dir, v2)
+        .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
       // the fragmented partition collapsed to one file...
-      assert(after.keys.count(_.contains("b=0")) == 1,
-        s"b=0 not compacted: ${after.keys.filter(_.contains("b=0"))}")
-      // ...the under-threshold partition survives byte-identical
+      assert(live.count(_.contains("b=0")) == 1,
+        s"b=0 not compacted: ${live.filter(_.contains("b=0"))}")
+      // ...the under-threshold partition carries over byte-identical
       val b1 = after.keys.filter(_.contains("b=1"))
-      assert(b1.size == 2 && b1.forall(p => before.get(p) == after.get(p)),
+      assert(b1.size == 2 && b1.forall(p => before.get(p) == after.get(p)) &&
+        live.count(_.contains("b=1")) == 2 &&
+        b1.forall(p => live.contains(
+          new org.apache.hadoop.fs.Path(p).toUri.getPath)),
         "under-threshold partition was rewritten")
-      val got = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
+      val got = Snapshots.read(s, dir, v2).as[(Long, Long, Int)]
+        .collect().toSet
       assert(got === Set((1L, 10L, 0), (2L, 20L, 0), (3L, 30L, 0),
         (101L, 11L, 1), (102L, 21L, 1)), s"rows changed: $got")
       // idempotent: nothing left over threshold
-      assert(graft.plans.IndexMaintenance.compactIfFragmented(
-        s, dir, Seq("b"), maxFiles = 2) == 0)
+      assert(Snapshots.compactCommit(s, dir, Seq("b"), maxFiles = 2) ==
+        (v2, 0))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -2720,33 +2757,29 @@ class ScaleShapeSpec extends SparkSpec {
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val src = s"$staging/idx"
       // base + two appends: each append adds one small file per
-      // touched partition — the accumulation compact() exists to undo
-      graft.plans.MinHashIndex.save(s,
+      // touched partition — the accumulation compaction exists to undo
+      import graft.plans.{MinHashIndex, Snapshots}
+      MinHashIndex.save(s,
         resident.where(col("doc_id") % 3 === 1), s"$sf/documents.parquet", src)
-      graft.plans.MinHashIndex.append(s, src,
+      MinHashIndex.appendCommitRetrying(s, src,
         resident.where(col("doc_id") % 3 === 2))
-      graft.plans.MinHashIndex.append(s, src,
+      val (v3, _) = MinHashIndex.appendCommitRetrying(s, src,
         resident.where(col("doc_id") % 3 === 0))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/bands", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.MinHashIndex.compact(s, src, dest)
-      assert(nOut < nIn,
-        s"compaction did not shrink the file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.MinHashIndex.serve(s,
-          graft.plans.MinHashIndex.load(s, dir), probe)
+      val bands = s"$src/bands"
+      val nIn = Snapshots.files(s, bands, v3).size
+      def served() = MinHashIndex.serve(s, MinHashIndex.load(s, src), probe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = served()
+      val v4 = MinHashIndex.purgeCommit(s, src)
+      val nOut = Snapshots.files(s, bands, v4).size
+      assert(nOut < nIn,
+        s"compaction did not shrink the file count ($nIn -> $nOut)")
+      assert(before.nonEmpty && served() == before,
         "compacted index diverges from the pre-compaction serve")
       // the rewrite must keep the (band_id, kbucket) layout the serve
-      // path's file-level pruning reads as partition filters
-      val plan = graft.plans.MinHashIndex.serve(s,
-          graft.plans.MinHashIndex.load(s, dest), probe)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters: [") && plan.contains("kbucket"),
-        s"pruning lost after compaction:\n${plan.take(1200)}")
+      // path's file-level pruning reads
+      assertServeReadsTouchedFiles(src, MinHashIndex.localize(s, probe))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
