@@ -1486,11 +1486,12 @@ object Dedup {
     // SNAPSHOT-PRESERVING COMPACTION — q109's maintenance leg
     // ([[graft.plans.MinHashIndex.purgeCommit]], which with no
     // tombstones merges fragmented partitions copy-on-write), so time
-    // travel and small-file maintenance coexist. Here the append (which fragments the touched partitions) commits
-    // v2, then compaction merges v2's fragmented (band_id, kbucket)
-    // partitions into NEW sibling files and commits the merged layout
-    // as v3 — old files stay on disk and v1/v2 keep reading their own
-    // sets (the Iceberg/Delta OPTIMIZE shape). ONE probe sketch then
+    // travel and small-file maintenance coexist. Here the append (which
+    // fragments the touched partitions) commits v2, then compaction
+    // merges v2's fragmented (band_id, kbucket) partitions into NEW
+    // sibling files and commits the merged layout as v3 — old files
+    // stay on disk and v1/v2 keep reading their own sets (the
+    // Iceberg/Delta OPTIMIZE shape). ONE probe sketch then
     // serves as-of ALL THREE versions: v1 must be blind to the append,
     // and v3 must be row-identical to v2 — compaction is purely
     // physical. Oracle = q109's CTE with the v2 population repeated

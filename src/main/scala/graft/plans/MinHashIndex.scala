@@ -328,9 +328,12 @@ object MinHashIndex {
     * conflictsObserved). */
   def appendCommitRetrying(s: SparkSession, indexDir: String,
       newDocs: DataFrame, expected: Option[Int] = None,
-      maxRetries: Int = 5): (Int, Int) =
+      maxRetries: Int = CommitRetries): (Int, Int) =
     appendCommitting(s, indexDir, newDocs, Dedup.indexBandRows,
       expected, maxRetries)
+
+  /** How many lost commit races an append tolerates before failing. */
+  private final val CommitRetries = 5
 
   /** [[appendCommitRetrying]] from ALREADY-SKETCHED band rows (doc_id,
     * sig, bk0, band_id, band_key) — a slice of one [[localize]]d
@@ -338,9 +341,8 @@ object MinHashIndex {
     * they are, with no re-sketch and no corpus scan. Same protocol,
     * same return. */
   def appendRowsCommitRetrying(s: SparkSession, indexDir: String,
-      bandRows: DataFrame, expected: Option[Int] = None,
-      maxRetries: Int = 5): (Int, Int) =
-    appendCommitting(s, indexDir, bandRows, identity, expected, maxRetries)
+      bandRows: DataFrame): (Int, Int) =
+    appendCommitting(s, indexDir, bandRows, identity, None, CommitRetries)
 
   /** The body of both append forms; `bandRowsOf` turns the batch into
     * the band rows the landing writes. */

@@ -121,10 +121,13 @@ class MinHashIngestSpec extends SparkSpec {
           rs.exists(_.getBoolean(3)) && rs.exists(!_.getBoolean(3)),
           s"$what: fixture rot — ${r.mkString("; ")}")
       }
-      check("uncommitted")
-      val bands = s"$idx/bands"
-      Snapshots.commit(s, bands)
-      check("committed")
+      // An index is born committed, so there is no uncommitted case any
+      // more (the name is kept as the test's id): the first case is
+      // save's own v1, the second a v2 whose append added new files.
+      check("save's v1")
+      MinHashIndex.appendCommitRetrying(s, idx,
+        frame(s, (42L to 45L).map(i => i -> text(i))))
+      check("appended v2")
       MinHashIndex.deleteCommit(s, idx, Seq(1L, 4L).toDF("doc_id"))
       check("tombstoned")
       val h = MinHashIndex.load(s, idx)
