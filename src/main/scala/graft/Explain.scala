@@ -47,7 +47,7 @@ object Explain {
     "q98_chunk_neardup" -> "chunk-grain near-dup: map-side chunk explode + sketch; band equi-joins carry only ids + packed keys; cross-band dedup is the first-collision-band filter, not a distinct",
     "q39c_ivf_serve" -> "IVF serve from saved artifacts: driver-side probe over the reloaded k-row centroid table, then a static `cid IN (...)` PartitionFilters scan of the persisted assignment — the unprobed cells' files are never opened",
     "q89c_pq_serve" -> "PQ serve from saved artifacts: packed codes unpacked by a map-side shift/mask projection at the scan, then the q89b broadcast-ADC join — one row per vector on disk, floats never load",
-    "q97b_hybrid_served" -> "hybrid retrieval with the lexical leg from the persisted BM25 index: tbucket PartitionFilters + pushed term predicate on the postings scan; scorer and fusion identical to q97",
+    "q97b_hybrid_served" -> "hybrid retrieval with the lexical leg served from the committed BM25 index's current manifest: the postings scan is the manifest-fed file set with tbucket PartitionFilters + pushed term predicate, df is summed over the version's terms segments below the query-term filter; scorer and fusion identical to q97",
     "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan reads only the current version's manifested files in the (band_id, kbucket) partitions the batch's collected bucket set touches — the resident corpus is never rescanned",
     "q100_ann_recall" -> "ANN recall@10 self-evaluation: exact leg is a broadcast probe cross join with SALTED two-stage per-probe top-k (no single task sorts a probe's full candidate stream); IVF leg is cell-bounded under the broadcast centroid/cell relations",
     "q101_zorder_range" -> "2-D range over the Z-order clustered layout: the query box maps driver-side to its coarse Morton cells, which reach the scan as a static zbucket PartitionFilters — unmatched cells' files are never opened, for boxes and single-dimension ranges alike",
@@ -114,7 +114,7 @@ object Explain {
     "q128_epoch_pack" -> "epoch pack manifest: GlobalOrder.globalRunningSum — per-bucket token totals prefix-summed driver-side, within-bucket running sum as a partitioned window, pack assignment map-side — the global concat order with no SinglePartition exchange",
     "q13_rollup" -> "ROLLUP = one Expand (3 grouping combos) feeding a single two-phase aggregate — one shuffle total, same Expand family as q13b/q13c; grouping() indicators are plain projections over the spread id",
     "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → from_json parse → dictionary-NER/NEL under broadcast KB joins → result-event assembly — one tweet scan, every model relation broadcast, the only shuffle is the per-tweet entity regroup",
-    "q129_bm25_timetravel" -> "BM25 snapshot time travel: four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms/stats manifest-selected; pinned plan is the four-leg union",
+    "q129_bm25_timetravel" -> "BM25 snapshot time travel: save's v1, then append/delete/purge commits that each publish only the files they landed; four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms segments summed per query term, stats manifest-selected; pinned plan is the four-leg union",
     "q130_ivf_timetravel" -> "IVF snapshot time travel: append assigned map-side under broadcast centroids (only its cid partitions gain files), then q39's probed top-10 as-of v1 AND v2 — each leg a static cid IN (...) scan of its version's manifested assignment files; pinned plan is the two-leg union",
     "q131_pq_timetravel" -> "PQ snapshot time travel: append encoded map-side under the broadcast codebooks and packed to the 8-byte layout, then the ADC top-10 as-of v1 AND v2 — each leg unpacks exactly its version's manifested code files map-side and rides the broadcast-ADC join; pinned plan is the two-leg union",
     "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps (band_id, kbucket) pruning through the explicit listing",
@@ -126,7 +126,7 @@ object Explain {
     "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's (band_id, kbucket)-pruned manifested scan (merge-on-read), the purge rewrites only partitions holding tombstoned rows (a doc has exactly Bands band rows, so the touched set is naturally narrow); pinned plan is the three-leg as-of serve union",
     "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans with (band_id, kbucket) pruning, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
     "q140_cluster_representative" -> "quality-aware dup representative: row_number window PARTITIONED by cluster_id (no SinglePartition exchange) over the memoized cluster relation joined to doc lengths — the keep-longest keep-list costs one shuffle of skinny rows, per-task work bounded by the largest cluster",
-    "q141_bm25_occ_append" -> "OCC for derived-artifact commits: additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); pinned plan is the three-leg as-of serve union with tbucket pruning + query-term pushdown",
+    "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); pinned plan is the three-leg as-of serve union with tbucket pruning + query-term pushdown",
     "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save/append/delete/purge as manifest commits, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; pinned plan is the four-leg as-of serve union",
     "q143_ivf_snapshot_delete" -> "committed IVF row-level delete: tombstones append under the manifested tree, version-aware serves anti-join their own version's broadcast list under the cid-pruned probe scan, the COW purge rewrites only cid cells holding tombstoned vectors (a vector lives in exactly ONE cell); pinned plan is the three-leg as-of top-k union",
     "q144_pq_snapshot_delete" -> "committed PQ row-level delete: tombstones under codes/deletes/, ADC serves anti-join the pinned list under the broadcast lookup-table join, the COW purge rewrites only code FILES holding tombstoned rows (flat table — file granularity, commitReplacingWhere); pinned plan is the three-leg as-of ADC union",

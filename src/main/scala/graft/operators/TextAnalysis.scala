@@ -671,18 +671,18 @@ object TextAnalysis {
     // (q109's shape extended per the round-13 advice): the committed-v1
     // index (residents, doc_id % 10 ∈ 1..8 — a pre-staged clone, the
     // takeSnapClone accounting) absorbs an APPEND (% 10 = 9 → v2), a
-    // TOMBSTONE DELETE (% 7 = 0 of the v2 population → v3: tombstones
-    // land as new files, vocabulary/stats decrements land as manifest-
-    // selected sibling replacements, ONE commit pins all three), and a
-    // COPY-ON-WRITE PURGE COMPACTION (→ v4, row-identical to v3 by
-    // construction). The SAME query then serves as-of all four
-    // versions: v1 must be blind to everything, v3 must equal a fresh
-    // survivors-only computation, v4 must equal v3. Oracle = q48's
-    // BM25 CTE chain instantiated per version population. Scale: an
-    // as-of read is a manifest listing choice — every leg keeps the
-    // tbucket file pruning (basePath) and tombstones ride a broadcast
-    // anti-join; the compaction rewrites only postings files, never
-    // re-tokenizes a document.
+    // TOMBSTONE DELETE (% 7 = 0 of the v2 population → v3: the
+    // tombstones, the negative df-delta segment and the replacement
+    // stats row land as new files, ONE commit pins all three), and a
+    // COPY-ON-WRITE PURGE (→ v4, row-identical to v3 by construction).
+    // Every commit selects exactly the files it landed. The SAME query
+    // then serves as-of all four versions: v1 must be blind to
+    // everything, v3 must equal a fresh survivors-only computation, v4
+    // must equal v3. Oracle = q48's BM25 CTE chain instantiated per
+    // version population. Scale: an as-of read is a manifest listing
+    // choice — every leg keeps the tbucket file pruning (basePath) and
+    // tombstones ride a broadcast anti-join; the purge rewrites only
+    // postings files, never re-tokenizes a document.
     "q129_bm25_timetravel" -> { (s, d) =>
       import graft.plans.{Bm25Index, Snapshots}
       val docs = Tables.documents(s, d)
@@ -690,12 +690,12 @@ object TextAnalysis {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, idxDir).get
-        val v2 = Bm25Index.appendCommit(s, idxDir,
+        val (v2, _) = Bm25Index.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9))
         val v3 = Bm25Index.deleteCommit(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) =!= 0 &&
             pmod(col("doc_id"), lit(7)) === 0))
-        val v4 = Bm25Index.compactCommitSnapshot(s, idxDir)
+        val v4 = Bm25Index.purgeCommit(s, idxDir)
         def leg(v: Int, tag: Int) =
           Bm25Index.serveAsOf(s, idxDir, v, Bm25QueryTerms)
             .withColumn("version", lit(tag))
@@ -737,7 +737,7 @@ object TextAnalysis {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, idxDir).get
         // writer A wins the race
-        val v2 = Bm25Index.appendCommit(s, idxDir,
+        val (v2, _) = Bm25Index.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9))
         // writer B publishes against the base it read BEFORE A's
         // commit — the stale-base re-derive path, forced
@@ -969,7 +969,6 @@ object TextAnalysis {
         .where(pmod(col("doc_id"), lit(10)).between(1, 8))
         .write.parquet(s"$dir/corpus/documents.parquet")
       graft.plans.Bm25Index.save(s, s"$dir/corpus", s"$dir/idx")
-      graft.plans.Bm25Index.commitSnapshot(s, s"$dir/idx")
       dir
     })
 
@@ -979,9 +978,9 @@ object TextAnalysis {
 
   /** Pre-stage `n` byte-copies of the committed-v1 BM25 snapshot index
     * UNTIMED ([[graft.Bench.staging]], `bm25-snap` row): the initial
-    * save + v1 commit is
-    * a shared immutable artifact; what q129 demonstrates (and times)
-    * is the append/delete/compact commits and the four as-of serves. */
+    * save, which commits v1, is a shared immutable artifact; what q129
+    * demonstrates (and times) is the append/delete/purge commits and
+    * the four as-of serves. */
   def stageBm25SnapClones(s: SparkSession, d: String, n: Int): Unit = {
     val src = bm25SnapDir(s, d)
     val q = stagedBm25SnapClones.computeIfAbsent((s, d),

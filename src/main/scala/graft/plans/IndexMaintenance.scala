@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.col
 
 /** Shared IN-PLACE maintenance passes for the persisted indexes and
   * state tables that still have an uncommitted lifecycle
-  * ([[Bm25Index]], [[IvfTopK]], [[ZOrderLayout]], the label tables;
-  * [[MinHashIndex]] is snapshot-committed only): every
+  * ([[IvfTopK]], [[ZOrderLayout]], the label tables; [[MinHashIndex]]
+  * and [[Bm25Index]] are snapshot-committed only): every
   * append lifecycle accumulates one small file per touched partition
   * per ingest batch, so after N batches the serve scan pays N× the
   * per-file open/footer cost — the lakehouse small-file problem,

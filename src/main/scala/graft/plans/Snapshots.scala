@@ -377,8 +377,12 @@ object Snapshots {
     * the manifest swaps the SELECTION, while older versions keep
     * reading their own files until [[expire]] reclaims them.
     * [[compactCommit]] is the same shape specialized to partition
-    * merging; [[graft.plans.Bm25Index.appendCommit]] uses this form
-    * for its vocabulary/stats rewrites. SINGLE WRITER (`v` must be the
+    * merging; the IVF, PQ and Z-order maintenance commits,
+    * [[SnapshotTable]] and the label tables' upsert use this form.
+    * Because it sweeps, any unreferenced file on disk goes live —
+    * including a refused append's landed files; writers that know
+    * their file set use [[commitSelectingExpecting]] instead (the
+    * MinHash and BM25 index families). SINGLE WRITER (`v` must be the
     * current version — a stale base is a lost update and is rejected);
     * unreferenced leftovers from a CRASHED past writer would be swept
     * into the new version, so after a crash run [[expire]] before
@@ -414,8 +418,9 @@ object Snapshots {
     * sweep of every unreferenced on-disk file, nothing is swept here —
     * so two uncoordinated writers may land data files CONCURRENTLY
     * without writer A's commit absorbing writer B's half-landed batch;
-    * each commit selects exactly its own tracked additions
-    * ([[graft.plans.Bm25Index.appendCommitRetrying]] is the consumer).
+    * each commit selects exactly its own tracked additions. Every
+    * commit the MinHash and BM25 index families make after `save` —
+    * append, delete, purge — goes through here.
     * Same CAS + readback discipline as [[commitExpecting]]. */
   def commitSelectingExpecting(s: SparkSession, dataDir: String,
       expected: Int, drop: String => Boolean,

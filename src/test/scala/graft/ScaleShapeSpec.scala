@@ -1385,79 +1385,95 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("BM25 tombstone delete: serve equals fresh survivors index; compact purges the list") {
     val s = spark
+    import graft.plans.{Bm25Index, Snapshots}
     val staging = java.nio.file.Files.createTempDirectory("bm25_del").toString
     try {
       val docs = Tables.documents(s, sf)
       docs.write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      val n = graft.plans.Bm25Index.delete(s, src,
-        docs.where(pmod(col("doc_id"), lit(7)) === 0))
-      assert(n > 0, "delete tombstoned no docs — fixture rot?")
+      Bm25Index.save(s, s"$staging/corpus", src)
+      val deleted = docs.where(pmod(col("doc_id"), lit(7)) === 0)
+      assert(deleted.count() > 0, "no docs to delete — fixture rot?")
+      val v2 = Bm25Index.deleteCommit(s, src, deleted)
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      assert(Snapshots.files(s, base, v2).exists(_.contains("/deletes/")),
+        "the delete committed no tombstone list")
       // a fresh index over the survivors is the ground truth: df,
       // avgdl and the tombstone filter must all line up
       docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
         .write.parquet(s"$staging/surv/documents.parquet")
       val freshDir = s"$staging/fresh"
-      graft.plans.Bm25Index.save(s, s"$staging/surv", freshDir)
-      def servedFrom(dir: String) = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dir),
+      Bm25Index.save(s, s"$staging/surv", freshDir)
+      def servedFrom(dir: String) = Bm25Index.serve(s,
+          Bm25Index.load(s, dir),
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
       val got = servedFrom(src)
       assert(got.nonEmpty && got == servedFrom(freshDir),
         "tombstoned serve diverges from the fresh survivors-only index")
-      // compaction purges: the compacted index has no deletes list and
-      // serves identically
-      val dest = s"$staging/idx_c"
-      graft.plans.Bm25Index.compact(s, src, dest)
-      val (fs, p) = graft.Fs.resolve(s"$dest/deletes",
-        s.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(p), "compaction left the tombstone list behind")
-      assert(servedFrom(dest) == got,
+      // the purge compaction drops the tombstone list and serves
+      // identically
+      val v3 = Bm25Index.purgeCommit(s, src)
+      assert(v3 == v2 + 1 &&
+        Snapshots.files(s, base, v3).forall(!_.contains("/deletes/")),
+        "compaction left the tombstone list behind")
+      assert(servedFrom(src) == got,
         "post-purge serve diverges from the tombstoned serve")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
   }
 
-  test("BM25 swap crash recovery: a .old-only artifact is restored, not destroyed") {
-    // simulate a crash between swapIn's two publish renames: the live
-    // artifact is gone and only the `.old` sibling holds the good copy.
-    // Pre-r14 the next swap DELETED `.old` upfront (destroying the only
-    // copy) and readers failed on the missing path before any reclaim;
-    // now every entry point restores it first (r13 advice, medium).
+  test("BM25 commit crash window: uncommitted files stay dark, expire reclaims them") {
+    // a mutation whose files land but whose commit never does: the
+    // writer below read v1, lands its postings and df-delta segment,
+    // loses the publish race to v2 and gives up (maxRetries = 0). The
+    // current version must serve unchanged, and expire() must reclaim
+    // exactly the files that writer left behind.
     val s = spark
+    import graft.plans.{Bm25Index, Snapshots}
     val staging = java.nio.file.Files.createTempDirectory("bm25_crash").toString
     try {
       val docs = Tables.documents(s, sf)
-      docs.write.parquet(s"$staging/corpus/documents.parquet")
-      val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      def served() = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, src),
+      docs.where(pmod(col("doc_id"), lit(10)).between(1, 8))
+        .write.parquet(s"$staging/corpus/documents.parquet")
+      val idx = s"$staging/idx"
+      Bm25Index.save(s, s"$staging/corpus", idx)
+      val base = graft.plans.IvfTopK.qualify(s, idx)
+      val v1 = Snapshots.current(s, base).get
+      val v2 = Bm25Index.deleteCommit(s, idx,
+        docs.where(pmod(col("doc_id"), lit(10)) === 1 &&
+          pmod(col("doc_id"), lit(7)) === 0))
+      def served() = Bm25Index.serve(s, Bm25Index.load(s, idx),
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
       val before = served()
       assert(before.nonEmpty, "fixture served nothing — rot?")
-      val (fs, terms) = graft.Fs.resolve(s"$src/terms",
-        s.sparkContext.hadoopConfiguration)
-      val old = new org.apache.hadoop.fs.Path(s"$src/terms.old")
-      // the crash window: terms -> terms.old done, .swap -> terms not
-      assert(fs.rename(terms, old), "test setup rename failed")
-      assert(!fs.exists(terms) && fs.exists(old))
-      // read-side recovery: serve restores the artifact and answers
-      assert(served() == before,
-        "post-crash serve diverges from the pre-crash index")
-      assert(fs.exists(terms) && !fs.exists(old),
-        "recovery did not restore terms from the .old sibling")
-      // write-side recovery at swapIn entry: crash again, then run a
-      // delete (whose terms swap would have deleted .old upfront)
-      assert(fs.rename(terms, old), "test setup rename failed")
-      val n = graft.plans.Bm25Index.delete(s, src,
-        docs.where(pmod(col("doc_id"), lit(7)) === 0))
-      assert(n > 0 && fs.exists(terms),
-        "delete after a simulated swap crash lost the terms artifact")
+      val conf = s.sparkContext.hadoopConfiguration
+      def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      def onDisk(): Set[String] = graft.Fs.listDataFiles(base, conf)
+        .map(st => norm(st.getPath.toString)).toSet
+      def referenced(): Set[String] = Snapshots.versions(s, base)
+        .flatMap(Snapshots.files(s, base, _)).map(norm).toSet
+      assert(onDisk() == referenced(), "fixture rot: orphans before the crash")
+      intercept[Snapshots.SnapshotConflictException](
+        Bm25Index.appendCommitRetrying(s, idx,
+          docs.where(pmod(col("doc_id"), lit(10)) === 9),
+          expected = Some(v1), maxRetries = 0))
+      val landed = onDisk() -- referenced()
+      assert(landed.exists(_.contains("/postings/")) &&
+        landed.exists(_.contains("/terms/")),
+        s"the uncommitted writer left no postings/terms files: $landed")
+      assert(landed.forall(f => f.contains("/postings/") || f.contains("/terms/")),
+        s"the uncommitted writer left a stats sibling behind: $landed")
+      assert(Snapshots.current(s, base).contains(v2),
+        "the uncommitted writer published a version")
+      assert(served() == before, "the current version's serve changed")
+      // retention that keeps every version reclaims only the orphans
+      val n = Snapshots.expire(s, base, v1)
+      assert(n == landed.size && onDisk() == referenced(),
+        s"expire reclaimed $n files, the writer left ${landed.size}")
+      assert(served() == before, "serve changed after expire")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -1473,7 +1489,8 @@ class ScaleShapeSpec extends SparkSpec {
         .write.parquet(s"$staging/corpus/documents.parquet")
       val idx = s"$staging/idx"
       graft.plans.Bm25Index.save(s, s"$staging/corpus", idx)
-      val v1 = graft.plans.Bm25Index.commitSnapshot(s, idx)
+      val v1 = graft.plans.Snapshots.current(s, idx).get
+      assert(v1 == 1, s"save committed v$v1, not v1")
       def served(v: Int) = graft.plans.Bm25Index.serveAsOf(s, idx, v,
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
@@ -1489,7 +1506,7 @@ class ScaleShapeSpec extends SparkSpec {
           }.toMap
       }
       val v1Meta = fileMeta(v1)
-      val v2 = graft.plans.Bm25Index.appendCommit(s, idx,
+      val (v2, _) = graft.plans.Bm25Index.appendCommitRetrying(s, idx,
         docs.where(pmod(col("doc_id"), lit(10)) === 9))
       val v3 = graft.plans.Bm25Index.deleteCommit(s, idx,
         docs.where(pmod(col("doc_id"), lit(10)) =!= 0 &&
@@ -1497,7 +1514,7 @@ class ScaleShapeSpec extends SparkSpec {
       val v2Rows = served(v2)
       val v3Rows = served(v3)
       val v3Meta = fileMeta(v3)
-      val v4 = graft.plans.Bm25Index.compactCommitSnapshot(s, idx)
+      val v4 = graft.plans.Bm25Index.purgeCommit(s, idx)
       // purge compaction is purely physical: v4 rows == v3 rows
       assert(served(v4) == v3Rows,
         "purge compaction changed served rows")
@@ -1534,9 +1551,9 @@ class ScaleShapeSpec extends SparkSpec {
       // delete visibility: v3 lost exactly the tombstoned docs vs v2
       assert(v3Rows.size < v2Rows.size,
         "tombstone delete removed nothing from the served set")
-      // the LIVE Handle serve of a committed index routes through the
-      // CURRENT manifest — a directory read would double-count the
-      // terms/stats replacement siblings landed by append/deleteCommit
+      // the LIVE Handle serve routes through the CURRENT manifest — a
+      // directory read would double-count the terms/stats replacement
+      // siblings landed by the append and delete commits
       assert(graft.plans.Bm25Index.serve(s,
           graft.plans.Bm25Index.load(s, idx),
           operators.TextAnalysis.Bm25QueryTerms)
@@ -1701,7 +1718,7 @@ class ScaleShapeSpec extends SparkSpec {
         .write.parquet(s"$staging/corpus/documents.parquet")
       val bm = s"$staging/bm25"
       graft.plans.Bm25Index.save(s, s"$staging/corpus", bm)
-      val b1 = graft.plans.Bm25Index.commitSnapshot(s, bm)
+      val b1 = graft.plans.Snapshots.current(s, bm).get
       val bmPlan = graft.plans.Bm25Index.serveAsOf(s, bm, b1,
           operators.TextAnalysis.Bm25QueryTerms)
         .queryExecution.executedPlan.toString
@@ -1828,43 +1845,44 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("BM25 re-ingest rule: tombstoned id un-appendable until compact purges it") {
     val s = spark
+    import graft.plans.{Bm25Index, Snapshots}
     val staging = java.nio.file.Files.createTempDirectory("bm25_reingest").toString
     try {
       val docs = Tables.documents(s, sf)
       docs.write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
+      Bm25Index.save(s, s"$staging/corpus", src)
       val deleted = docs.where(pmod(col("doc_id"), lit(7)) === 0)
-      assert(graft.plans.Bm25Index.delete(s, src, deleted) > 0)
+      Bm25Index.deleteCommit(s, src, deleted)
       // a tombstoned id's physical postings are still resident
       // (merge-on-read) — re-appending it would either resurrect the
       // old postings or inflate df/avgdl while staying anti-joined
-      // out of serve, so append must REFUSE the id loudly
+      // out of serve, so the append must REFUSE the id loudly
       val clash = intercept[IllegalArgumentException] {
-        graft.plans.Bm25Index.append(s, src, deleted.limit(1))
+        Bm25Index.appendCommitRetrying(s, src, deleted.limit(1))
       }
       assert(clash.getMessage.contains("tombstoned"))
       // and a REPEATED delete refuses too (it would decrement df/stats
-      // a second time — the deleteCommit guard's in-place twin)
+      // a second time)
       val dd = intercept[IllegalArgumentException] {
-        graft.plans.Bm25Index.delete(s, src, deleted.limit(1))
+        Bm25Index.deleteCommit(s, src, deleted.limit(1))
       }
       assert(dd.getMessage.contains("already tombstoned"))
-      // compact purges the physical postings and clears the list;
-      // the id becomes appendable again and scores like a fresh doc
-      val dest = s"$staging/idx_c"
-      graft.plans.Bm25Index.compact(s, src, dest)
+      // the purge removes the physical postings and clears the list;
+      // the id becomes appendable again
+      Bm25Index.purgeCommit(s, src)
       val one = deleted.limit(1)
-      graft.plans.Bm25Index.append(s, dest, one)
+      val (v, _) = Bm25Index.appendCommitRetrying(s, src, one)
       val backId = one.head().getLong(0)
-      val served = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dest),
+      val served = Bm25Index.serve(s, Bm25Index.load(s, src),
           operators.TextAnalysis.Bm25QueryTerms)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
       // the re-ingested doc is servable again iff it matches the
-      // query terms; at minimum serve must not throw and the index
-      // must contain its postings — assert via the terms relation
-      val hasPostings = s.read.parquet(s"$dest/postings")
+      // query terms; at minimum serve must not throw and the committed
+      // version must hold its postings
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      val hasPostings = s.read.parquet(Snapshots.files(s, base, v)
+          .filter(_.contains("/postings/")): _*)
         .where(col("doc_id") === backId).count() > 0
       assert(hasPostings, s"re-ingested doc $backId has no postings")
       assert(served.nonEmpty)
@@ -1892,7 +1910,7 @@ class ScaleShapeSpec extends SparkSpec {
       val idx = s"$staging/idx"
       Bm25Index.save(s, s"$staging/corpus", idx)
       val base = graft.plans.IvfTopK.qualify(s, idx)
-      val v1 = Bm25Index.commitSnapshot(s, idx)
+      val v1 = Snapshots.current(s, base).get
       def termFiles(v: Int) = Snapshots.files(s, base, v)
         .filter(_.startsWith(s"$base/terms/"))
       val vocabRows = s.read.parquet(termFiles(v1): _*).count()
@@ -1910,7 +1928,7 @@ class ScaleShapeSpec extends SparkSpec {
       for (r <- Seq(101 to 105, 106 to 110)) {
         val batch = mk(r)
         val vPrev = Snapshots.current(s, base).get
-        val v = Bm25Index.appendCommit(s, idx, batch)
+        val (v, _) = Bm25Index.appendCommitRetrying(s, idx, batch)
         val fresh = termFiles(v).filterNot(termFiles(vPrev).toSet)
         val rows = s.read.parquet(fresh: _*).count()
         assert(rows == distinctTerms(batch) && rows == 6,
@@ -1957,7 +1975,7 @@ class ScaleShapeSpec extends SparkSpec {
       // and older versions keep their own segment sets
       assert(termFiles(v4).size >= 4, s"expected >=4 segments, got " +
         s"${termFiles(v4).size}")
-      val v5 = Bm25Index.compactCommitSnapshot(s, idx)
+      val v5 = Bm25Index.purgeCommit(s, idx)
       assert(termFiles(v5).intersect(termFiles(v4)).isEmpty,
         "fold kept old segment files in the new manifest")
       // the netted fold dropped the fully-deleted terms (df summed to 0)
@@ -2787,6 +2805,7 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("BM25 index compaction: fewer files, identical serve, pruning preserved") {
     val s = spark
+    import graft.plans.{Bm25Index, Snapshots}
     val staging = java.nio.file.Files.createTempDirectory("bm25_compact").toString
     try {
       val docs = Tables.documents(s, sf)
@@ -2794,24 +2813,24 @@ class ScaleShapeSpec extends SparkSpec {
       docs.where(col("doc_id") % 3 === 0)
         .write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      graft.plans.Bm25Index.append(s, src, docs.where(col("doc_id") % 3 === 1))
-      graft.plans.Bm25Index.append(s, src, docs.where(col("doc_id") % 3 === 2))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/postings", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.Bm25Index.compact(s, src, dest)
+      Bm25Index.save(s, s"$staging/corpus", src)
+      Bm25Index.appendCommitRetrying(s, src, docs.where(col("doc_id") % 3 === 1))
+      val (vIn, _) = Bm25Index.appendCommitRetrying(s, src,
+        docs.where(col("doc_id") % 3 === 2))
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      def postings(v: Int) = Snapshots.files(s, base, v)
+        .filter(_.contains("/postings/"))
+      val vOut = Bm25Index.purgeCommit(s, src)
+      val (nIn, nOut) = (postings(vIn).size, postings(vOut).size)
       assert(nOut < nIn,
         s"compaction did not shrink the postings file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dir),
+      def servedAsOf(v: Int) = Bm25Index.serveAsOf(s, src, v,
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = servedAsOf(vIn)
+      assert(before.nonEmpty && servedAsOf(vOut) == before,
         "compacted BM25 index diverges from the pre-compaction serve")
-      val plan = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dest),
+      val plan = Bm25Index.serve(s, Bm25Index.load(s, src),
           operators.TextAnalysis.Bm25QueryTerms)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"),
@@ -2869,9 +2888,9 @@ class ScaleShapeSpec extends SparkSpec {
       docs.where(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       graft.plans.Bm25Index.save(s, tmp, dir)
-      val n = graft.plans.Bm25Index.append(s, dir,
+      val committed = graft.plans.Bm25Index.appendCommitRetrying(s, dir,
         docs.where(col("doc_id") % 2 === 1))
-      assert(n === docs.where(col("doc_id") % 2 === 1).count())
+      assert(committed === (2, 0))
       val served = graft.plans.Bm25Index.serve(s,
         graft.plans.Bm25Index.load(s, dir),
         operators.TextAnalysis.Bm25QueryTerms)
