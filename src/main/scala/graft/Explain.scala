@@ -113,8 +113,8 @@ object Explain {
     "q127_fuzzy_decontaminate" -> "fuzzy decontamination: benchmark band rows BROADCAST (eval-suite sized), train side map-side from the memoized signature relation, est verification joins sigs on the candidate-sized pairs only — the corpus never shuffles by band key",
     "q128_epoch_pack" -> "epoch pack manifest: GlobalOrder.globalRunningSum — per-bucket token totals prefix-summed driver-side, within-bucket running sum as a partitioned window, pack assignment map-side — the global concat order with no SinglePartition exchange",
     "q13_rollup" -> "ROLLUP = one Expand (3 grouping combos) feeding a single two-phase aggregate — one shuffle total, same Expand family as q13b/q13c; grouping() indicators are plain projections over the spread id",
-    "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → from_json parse → dictionary-NER/NEL under broadcast KB joins → result-event assembly — one tweet scan, every model relation broadcast, the only shuffle is the per-tweet entity regroup",
-    "q129_bm25_timetravel" -> "BM25 snapshot time travel: save's v1, then append/delete/purge commits that each publish only the files they landed; four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms segments summed per query term, stats manifest-selected; pinned plan is the four-leg union",
+    "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → from_json parse → each tweet's event assembled inside its own row (dictionary array literal filtered by instr, transformed to entity structs, array_sort, to_json) — one tweet scan, no join, no aggregate; the only shuffle is the presentation sort, so the same plan on a stream keeps no state",
+    "q129_bm25_timetravel" -> "BM25 snapshot time travel: save's v1, then append/delete/purge commits that each publish only the files they landed; four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms segments summed per query term, stats manifest-selected; the pinned plan is only the presentation sort over the four-leg union's Materialize.cut scan, so the serve legs' plans are not pinned here",
     "q130_ivf_timetravel" -> "IVF snapshot time travel: append assigned map-side under broadcast centroids (only its cid partitions gain files), then q39's probed top-10 as-of v1 AND v2 — each leg a static cid IN (...) scan of its version's manifested assignment files; pinned plan is the two-leg union",
     "q131_pq_timetravel" -> "PQ snapshot time travel: append encoded map-side under the broadcast codebooks and packed to the 8-byte layout, then the ADC top-10 as-of v1 AND v2 — each leg unpacks exactly its version's manifested code files map-side and rides the broadcast-ADC join; pinned plan is the two-leg union",
     "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps (band_id, kbucket) pruning through the explicit listing",
@@ -126,8 +126,8 @@ object Explain {
     "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's (band_id, kbucket)-pruned manifested scan (merge-on-read), the purge rewrites only partitions holding tombstoned rows (a doc has exactly Bands band rows, so the touched set is naturally narrow); pinned plan is the three-leg as-of serve union",
     "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans with (band_id, kbucket) pruning, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
     "q140_cluster_representative" -> "quality-aware dup representative: row_number window PARTITIONED by cluster_id (no SinglePartition exchange) over the memoized cluster relation joined to doc lengths — the keep-longest keep-list costs one shuffle of skinny rows, per-task work bounded by the largest cluster",
-    "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); pinned plan is the three-leg as-of serve union with tbucket pruning + query-term pushdown",
-    "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save/append/delete/purge as manifest commits, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; pinned plan is the four-leg as-of serve union",
+    "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); each serve leg keeps tbucket pruning + query-term pushdown, but the pinned plan is only the presentation sort over the three-leg union's Materialize.cut scan",
+    "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save/append/delete/purge as manifest commits, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; the pinned plan is only the presentation sort over the four-leg as-of serve union's Materialize.cut scan",
     "q143_ivf_snapshot_delete" -> "committed IVF row-level delete: tombstones append under the manifested tree, version-aware serves anti-join their own version's broadcast list under the cid-pruned probe scan, the COW purge rewrites only cid cells holding tombstoned vectors (a vector lives in exactly ONE cell); pinned plan is the three-leg as-of top-k union",
     "q144_pq_snapshot_delete" -> "committed PQ row-level delete: tombstones under codes/deletes/, ADC serves anti-join the pinned list under the broadcast lookup-table join, the COW purge rewrites only code FILES holding tombstoned rows (flat table — file granularity, commitReplacingWhere); pinned plan is the three-leg as-of ADC union",
     "q145_stats_skipping" -> "manifest-level file statistics: the 3-day range plans over only the intersecting files of the version (driver-side bounds check against the appended stats segments — non-matching footers never open), then the exact predicate + one partial-aggregated groupBy; pinned plan is the pruned scan's file count vs the version's",
@@ -137,7 +137,7 @@ object Explain {
     "q149_lsh_occ_append" -> "OCC append for the band family (df-free, so every landed artifact is additive): both writers' band files land exactly once as dynamic-partition appends, the loser's retry re-validates only the re-ingest guard and re-publishes an explicit file selection (commitSelectingExpecting — no sweep); pinned plan is the three-leg as-of serve union with (band_id, kbucket) pruning",
     "q150_schema_evolution" -> "schema evolution on the committed corpus: a widening batch flips the one-stat evolved marker, serves of evolved versions schema-merge (distributed footer pass — pre-evolution files null-fill the added column) while v1 time travel keeps its own schema; pinned plan is the merged-schema serve scan",
     "q151_table_compact" -> "flat-table small-file compaction (OPTIMIZE): the COW rewrite is one repartition shuffle of the current selection into maxFiles sibling files, the commit swaps the selection, tombstones stay pinned; pinned plan is the three-leg as-of union where the compacted leg reads exactly maxFiles files",
-    "q152_partitioned_compact" -> "partitioned-table compaction: each fragmented day merges to ONE file inside its own dir via one shuffle hash-keyed by the partition column (task count = fragmented-partition count), untouched days carry byte-identical, tombstones stay pinned; pinned plan is the four-leg as-of union where the compacted leg reads one file per day",
+    "q152_partitioned_compact" -> "partitioned-table compaction: each fragmented day merges to ONE file inside its own dir via one shuffle hash-keyed by the partition column (task count = fragmented-partition count), untouched days carry byte-identical, tombstones stay pinned; the compacted leg reads one file per day, but the pinned plan is only the presentation sort over the four-leg as-of union's Materialize.cut scan",
     "q153_pruned_serve_multi" -> "conjunctive multi-column pruned serve: the (source, doc_id)-clustered corpus prunes on BOTH recorded lanes — the survivor file set is the intersection of the string-lane and long-lane prunes, strictly smaller than either alone — then the exact predicate + pinned-tombstone anti-join run on what remains; pinned plan is the doubly-pruned scan",
     "q154_partition_drop" -> "partition-level retention: dropPartitionsCommit is a pure manifest selection swap — no file read, written, or deleted; one manifest delta however many terabytes the dropped days hold — and v1 time travel keeps serving the dropped days until expire; pinned plan is the two-leg as-of union where the post-drop leg lists only surviving day dirs",
   )

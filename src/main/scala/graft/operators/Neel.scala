@@ -33,9 +33,11 @@ import graft.Tables
   *
   * Scale notes: the dictionary and KB-resource relations are O(dict)
   * rows and always broadcast; every stage is a narrow transform or a
-  * broadcast join — the only shuffle in the whole pipeline is the
-  * final per-tweet grouping where explicitly requested. All stages
-  * stay inside whole-stage codegen (pure column expressions, no UDFs).
+  * broadcast join. The per-tweet result events
+  * (`NeelPipeline.resultEvents`) are assembled inside each tweet's own
+  * row from the dictionary as an array literal, so the end-to-end
+  * pipeline has no shuffle and, on a stream, no state store. All
+  * stages are pure column expressions (no UDFs).
   */
 object Neel {
 
@@ -46,9 +48,47 @@ object Neel {
     "vector" -> "MATH", "merge" -> "ACTION", "filter" -> "ACTION",
     "join" -> "ACTION", "hash" -> "MATH")
 
+  /** [[dictionary]] as an `array<struct<term, category>>` literal, for
+    * per-row NER inside a higher-order function. */
+  val dictionaryArray: Column = array(dictionary.map { case (t, c) =>
+    struct(lit(t).as("term"), lit(c).as("category")) }: _*)
+
   /** SQL VALUES literal mirroring [[dictionary]] for the oracle. */
   private val dictValues: String =
     dictionary.map { case (t, c) => s"('$t','$c')" }.mkString(", ")
+
+  // ---------------------------------------------------------------------
+  // NER/NEL rules, one definition each: the per-entity-row stages below
+  // and the per-tweet entity array of `NeelPipeline.resultEvents` both
+  // build from these
+  // ---------------------------------------------------------------------
+
+  /** NER hit: the dictionary term occurs in the text. */
+  def recognized(text: Column, term: Column): Column = instr(text, term) > 0
+
+  /** 0-based [start, end) span of the term's first occurrence, like
+    * the reference (`J/TwitterNeelResultRow.java:7-8`). */
+  def spanStart(text: Column, term: Column): Column = instr(text, term) - 1
+  def spanEnd(start: Column, term: Column): Column = start + length(term)
+
+  /** KB url prefix: a linked term's `link` and its resource's `url`. */
+  private val KbLink = "http://kb/r/"
+
+  /** NEL: terms shorter than 5 chars are NIL entities with a nil
+    * cluster; the others link to the synthetic KB. */
+  def isNil(term: Column): Column = length(term) < 5
+  def link(term: Column, nil: Column): Column =
+    when(!nil, concat(lit(KbLink), term))
+  def nilCluster(term: Column, nil: Column): Column =
+    when(nil, concat(lit("nil-"), term))
+
+  /** The entity's resource uri: its nil cluster when NIL, else its link. */
+  def uri(nil: Column, nilCluster: Column, link: Column): Column =
+    when(nil, nilCluster).otherwise(link)
+
+  /** Deterministic NEL score in [0, 0.89]. */
+  def confidence(tweetId: Column, start: Column): Column =
+    ((tweetId * 7 + start) % 90).cast("double") / lit(100.0)
 
   // ---------------------------------------------------------------------
   // Pipeline stages
@@ -76,29 +116,23 @@ object Neel {
   }
 
   /** #24/#29: NER stage — dictionary-term recognition with positions.
-    * 0-based [start, end) spans like the reference
-    * (`J/TwitterNeelResultRow.java:7-8`). Dict is broadcast; the scan
-    * stays narrow. */
+    * Dict is broadcast; the scan stays narrow. */
   def nerEntities(s: SparkSession, valid: DataFrame): DataFrame = {
     import s.implicits._
     val dict = dictionary.toDF("term", "category")
-    valid.join(broadcast(dict),
-        instr($"text", $"term") > 0, "inner")
-      .withColumn("pos_start", instr($"text", $"term") - 1)
-      .withColumn("pos_end", col("pos_start") + length($"term"))
+    valid.join(broadcast(dict), recognized($"text", $"term"), "inner")
+      .withColumn("pos_start", spanStart($"text", $"term"))
+      .withColumn("pos_end", spanEnd(col("pos_start"), $"term"))
   }
 
   /** #25: NEL stage — link terms (length >= 5) to the synthetic KB,
     * mark short terms NIL with a nil-cluster, score deterministically. */
   def nelLinked(entities: DataFrame): DataFrame =
     entities
-      .withColumn("is_nil", length(col("term")) < 5)
-      .withColumn("link",
-        when(!col("is_nil"), concat(lit("http://kb/r/"), col("term"))))
-      .withColumn("nil_cluster",
-        when(col("is_nil"), concat(lit("nil-"), col("term"))))
-      .withColumn("confidence",
-        ((col("tweet_id") * 7 + col("pos_start")) % 90).cast("double") / lit(100.0))
+      .withColumn("is_nil", isNil(col("term")))
+      .withColumn("link", link(col("term"), col("is_nil")))
+      .withColumn("nil_cluster", nilCluster(col("term"), col("is_nil")))
+      .withColumn("confidence", confidence(col("tweet_id"), col("pos_start")))
 
   /** #26: the KB resource relation (link resolver backend). */
   def kbResources(s: SparkSession): DataFrame = {
@@ -106,7 +140,7 @@ object Neel {
     dictionary.filter(_._1.length >= 5).map(_._1)
       .toDF("res_term")
       .select(
-        concat(lit("http://kb/r/"), col("res_term")).as("url"),
+        concat(lit(KbLink), col("res_term")).as("url"),
         concat(lit("res-"), col("res_term")).as("name"),
         concat(lit("http://kb/thumb/"), col("res_term")).as("thumb"))
   }
@@ -209,8 +243,7 @@ object Neel {
     "q23_neel_challenge" -> { (s, d) =>
       resolved(s, ingest(syntheticTweets(s, d)))
         .select(col("tweet_id"), col("pos_start"), col("pos_end"),
-          when(col("is_nil"), col("nil_cluster")).otherwise(col("link"))
-            .as("resource_uri"),
+          uri(col("is_nil"), col("nil_cluster"), col("link")).as("resource_uri"),
           col("confidence"), col("category"))
         .orderBy(col("tweet_id"), col("pos_start"), col("resource_uri"))
     },

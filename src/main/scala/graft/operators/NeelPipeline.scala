@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   *
   * Works identically on a batch DataFrame and a streaming DataFrame
   * (Kafka `value` column or file stream): every stage is a pure
-  * column-expression transform.
+  * per-row column-expression transform, so a stream runs it in any
+  * output mode with no state.
   */
 object NeelPipeline {
 
@@ -65,32 +66,47 @@ object NeelPipeline {
     if (skipRetweets) parsed.where(!col("is_retweet")) else parsed
   }
 
-  /** #30: wrap assembled per-tweet results as
-    * `AnalysisResultProducedEvent` JSON (processDate is a parameter,
-    * not `now()`, so outputs are replayable/idempotent — documented
-    * divergence from the reference's wall-clock stamp). */
-  def resultEvents(processed: DataFrame, analysisId: String,
-      processDate: String): DataFrame =
-    processed
-      .groupBy(col("tweet_id"))
-      .agg(sort_array(collect_list(struct(
-        col("pos_start").as("start"), col("pos_end").as("end"),
-        when(col("is_nil"), col("nil_cluster")).otherwise(col("link")).as("uri"),
-        col("confidence").as("confidence"),
-        col("category").as("category")))).as("entities"))
+  /** #30: one `AnalysisResultProducedEvent` JSON per tweet row, the
+    * entities assembled inside the row itself: [[Neel.dictionaryArray]]
+    * is filtered to the terms the text holds, each hit becomes its
+    * (start, end, uri, confidence, category) struct by the [[Neel]]
+    * rules, and the array is sorted. Rows with no hit emit nothing.
+    * Reads only `tweet_id` and `text`. With no aggregate there is no
+    * shuffle and, on a stream, no state store; a re-delivered tweet
+    * yields one event per delivery, as in the reference. processDate
+    * is a parameter, not `now()`, so outputs are replayable/idempotent
+    * (documented divergence from the reference's wall-clock stamp). */
+  def resultEvents(tweets: DataFrame, analysisId: String,
+      processDate: String): DataFrame = {
+    val text = col("text")
+    val hit = (d: Column) => Neel.recognized(text, d("term"))
+    val entity = (d: Column) => {
+      val term = d("term")
+      val start = Neel.spanStart(text, term)
+      val nil = Neel.isNil(term)
+      struct(start.as("start"), Neel.spanEnd(start, term).as("end"),
+        Neel.uri(nil, Neel.nilCluster(term, nil), Neel.link(term, nil)).as("uri"),
+        Neel.confidence(col("tweet_id"), start).as("confidence"),
+        d("category").as("category"))
+    }
+    tweets
+      // `exists` over the literal, not `size(entities) > 0`: the
+      // optimizer would push that filter below the projection and
+      // build and sort every array twice
+      .where(exists(Neel.dictionaryArray, hit))
       .select(col("tweet_id"), to_json(struct(
         lit(analysisId).as("analysisId"),
         lit(processDate).as("processDate"),
-        struct(col("tweet_id").as("statusId"), col("entities")).as("payload")))
+        struct(col("tweet_id").as("statusId"),
+          array_sort(transform(filter(Neel.dictionaryArray, hit), entity))
+            .as("entities")).as("payload")))
         .as("event_json"))
-
-  /** Raw tweet JSON -> assembled result events, batch or streaming. */
-  def run(s: SparkSession, rawTweets: DataFrame, analysisId: String,
-      processDate: String): DataFrame = {
-    val valid = parseTweets(rawTweets)
-    val enriched = Neel.resolved(s, valid)
-    resultEvents(enriched, analysisId, processDate)
   }
+
+  /** Raw tweet JSON -> result events, batch or streaming. */
+  def run(s: SparkSession, rawTweets: DataFrame, analysisId: String,
+      processDate: String): DataFrame =
+    resultEvents(parseTweets(rawTweets), analysisId, processDate)
 
   /** The complement of [[parseTweets]]'s silent drop — QUARANTINE with
     * reasons (dead-letter routing): the reference's flatMap

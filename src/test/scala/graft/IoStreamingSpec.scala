@@ -292,7 +292,7 @@ class IoStreamingSpec extends SparkSpec {
     val q = operators.NeelPipeline.run(s, mem.toDS().toDF("value"),
         "a1", "2026-01-01T00:00:00Z")
       .writeStream.format("memory").queryName("pipeline_stream")
-      .outputMode("complete").start()
+      .outputMode("append").start()
     try {
       raw.grouped(200).foreach(g => mem.addData(g.toSeq))
       q.processAllAvailable()
