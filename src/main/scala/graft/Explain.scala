@@ -48,10 +48,10 @@ object Explain {
     "q39c_ivf_serve" -> "IVF serve from saved artifacts: driver-side probe over the reloaded k-row centroid table, then a static `cid IN (...)` PartitionFilters scan of the persisted assignment — the unprobed cells' files are never opened",
     "q89c_pq_serve" -> "PQ serve from saved artifacts: packed codes unpacked by a map-side shift/mask projection at the scan, then the q89b broadcast-ADC join — one row per vector on disk, floats never load",
     "q97b_hybrid_served" -> "hybrid retrieval with the lexical leg served from the committed BM25 index's current manifest: the postings scan is the manifest-fed file set with tbucket PartitionFilters + pushed term predicate, df is summed over the version's terms segments below the query-term filter; scorer and fusion identical to q97",
-    "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan reads only the current version's manifested files in the (band_id, kbucket) partitions the batch's collected bucket set touches — the resident corpus is never rescanned",
+    "q99_lsh_index_dedup" -> "incremental dedup against the persisted LSH index: the incoming batch is sketched map-side and broadcast; the bands scan reads the current version's manifested band files (one per band_id directory per write) — the resident corpus is never re-sketched",
     "q100_ann_recall" -> "ANN recall@10 self-evaluation: exact leg is a broadcast probe cross join with SALTED two-stage per-probe top-k (no single task sorts a probe's full candidate stream); IVF leg is cell-bounded under the broadcast centroid/cell relations",
     "q101_zorder_range" -> "2-D range over the Z-order clustered layout: the query box maps driver-side to its coarse Morton cells, which reach the scan as a static zbucket PartitionFilters — unmatched cells' files are never opened, for boxes and single-dimension ranges alike",
-    "q99b_lsh_admission" -> "batch admission verdict: ONE probe sketch (materialized) feeds both legs — the file-pruned broadcast corpus join and the within-batch band self-join; verdict assembly unions the spine, corpus-hit and batch-hit (doc_id, c, b) rows into ONE grouping on the batch-sized id set",
+    "q99b_lsh_admission" -> "batch admission verdict: ONE probe sketch (materialized) feeds both legs — the broadcast corpus join over the version's band files and the within-batch band self-join; verdict assembly unions the spine, corpus-hit and batch-hit (doc_id, c, b) rows into ONE grouping on the batch-sized id set",
     // ---- every remaining >=1 s query (BENCH_r12 medians), so plan
     // drift on the whole expensive set is pinned here and guarded by
     // PlanDocsSpec. For replay/lifecycle queries the pinned plan is
@@ -84,19 +84,19 @@ object Explain {
     "q101b_zorder_lifecycle" -> "Z-order maintenance chain save → append (saved-grid quantization) → compact (per-zbucket z-sorted rewrite) → serve; pinned plan is the serve scan over the compacted layout with zbucket PartitionFilters",
     "q102_stream_stream_join" -> "watermarked stream-stream interval join (clicks x purchases within 30 min), both sides streaming: inner join emits eagerly, watermark + time bound evict both state sides; pinned plan is the post-replay assembly",
     "q102b_stream_stream_left" -> "left-outer interval join: unmatched clicks emit on watermark timeout, dual far-future sentinels (Replay.sentinelAfterStage) flush the global watermark at replay end; pinned plan is the post-replay assembly",
-    "q103_ingest_loop" -> "3 sequential admit -> append rounds against a pre-staged clone of the persisted LSH index: each batch broadcast-probes the file-pruned bands scan AS IT STANDS; pinned plan is the verdict assembly over the staged per-batch results",
-    "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.purgeCommit (maxFiles = 1): each partition fragmented by the appends is merged copy-on-write into one file and committed as the next version — identical verdict oracle proves the rewrite result-neutral",
+    "q103_ingest_loop" -> "3 sequential admit -> append rounds against a pre-staged clone of the persisted LSH index: each batch broadcast-probes the bands scan AS IT STANDS (each append adds one file per band); pinned plan is the verdict assembly over the staged per-batch results",
+    "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.purgeCommit (maxFiles = 1): each band fragmented by the appends is merged copy-on-write into one file and committed as the next version — identical verdict oracle proves the rewrite result-neutral",
     "q103s_stream_ingest" -> "q103 driven through the engine's micro-batch cycle: foreachBatch admits each arriving batch (verdicts staged to parquet, admitted ids JOINED — no In-literal) and appends before the next trigger; pinned plan is the final verdict read",
     "q104_stream_budget" -> "transformWithState on RocksDB state v2: per-source Long counter seeded from the initial-state budget relation, arrival-ordered cap; pinned plan is the post-replay ordering over the sink cut",
-    "q107_index_delete" -> "retention delete from the persisted LSH index: a tombstone commit, then a partition-local purge commit that rewrites ONLY the partitions holding the deleted docs' band rows as new files; pinned plan is the serve scan over the purged version's manifested files",
-    "q109_index_timetravel" -> "snapshot-isolated index with time travel (manifest commits): append adds files + commits v2, then ONE probe sketch serves as-of v1 AND v2 — the v1 leg reads the v1 manifest's file set (basePath keeps (band_id, kbucket) pruning), blind to the append by construction",
+    "q107_index_delete" -> "retention delete from the persisted LSH index: a tombstone commit, then a band-local purge commit that rewrites ONLY the bands holding the deleted docs' band rows, one new file each; pinned plan is the serve scan over the purged version's manifested files",
+    "q109_index_timetravel" -> "snapshot-isolated index with time travel (manifest commits): append adds files + commits v2, then ONE probe sketch serves as-of v1 AND v2 — the v1 leg reads the v1 manifest's band files, blind to the append by construction",
     "q110_incremental_clusters" -> "incremental cluster maintenance: batch edges from the persisted-index serve + within-batch band join (one shared probe sketch), label propagation on the QUOTIENT graph (batch docs + touched cluster labels only), broadcast label remap back onto the resident state — never a corpus re-cluster",
-    "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented (band_id, kbucket) partitions lands NEW sibling files and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
+    "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented bands lands ONE new sibling file per band and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
     "q114_cluster_changefeed" -> "change data feed from the incremental cluster step: inserts straight from the quotient propagation, updates from the label table joined against the BROADCAST changed-remap — O(batch + touched members), never a corpus diff of two label snapshots; pinned plan is the feed union",
     "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, upserts the bucket-partitioned label table partition-locally (partitionFromKey — no resident scan), and appends to the index before the next trigger; pinned plan is the final label-table read",
     "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and mutates the table partition-locally before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the final label-table read",
     "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; retired rows leave via partition-local delete, relabels land via partition-local upsert; pinned plan is the final label-table read",
-    "q112_ingest_autocompact" -> "q103's ingest loop under threshold-triggered PARTITION-LOCAL compaction (purgeCommit, maxFiles = 2) after each append: only (band_id, kbucket) partitions whose current-version file count crossed the threshold are rewritten — write amplification bounded by where arrivals landed, never the index size; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
+    "q112_ingest_autocompact" -> "q103's ingest loop under threshold-triggered BAND-LOCAL compaction (purgeCommit, maxFiles = 2) after each append: only bands whose current-version file count crossed the threshold are rewritten, one file each — per-band file growth stays capped; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
     "q108_cluster_split" -> "leakage-proof split from the near-dup CLUSTER label: stateless column expression over the memoized cluster relation (pinned plan reads the label cut) — the timed cost in a sweep is the shared minhash-pairs + cluster memo it happens to pay first",
     "q115_cms_freq" -> "count-min sketch build: map-side partials collapse the token stream to the fixed D×W geometry before the one exchange (≤ D×W cells per task); estimates are min-over-rows lookups against the BROADCAST sketch — no shuffled join on term anywhere",
     "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + partition-local upsert — the corpus aggregate never re-runs; pinned plan is the post-increment stats read",
@@ -113,18 +113,18 @@ object Explain {
     "q127_fuzzy_decontaminate" -> "fuzzy decontamination: benchmark band rows BROADCAST (eval-suite sized), train side map-side from the memoized signature relation, est verification joins sigs on the candidate-sized pairs only — the corpus never shuffles by band key",
     "q128_epoch_pack" -> "epoch pack manifest: GlobalOrder.globalRunningSum — per-bucket token totals prefix-summed driver-side, within-bucket running sum as a partitioned window, pack assignment map-side — the global concat order with no SinglePartition exchange",
     "q13_rollup" -> "ROLLUP = one Expand (3 grouping combos) feeding a single two-phase aggregate — one shuffle total, same Expand family as q13b/q13c; grouping() indicators are plain projections over the spread id",
-    "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → from_json parse → each tweet's event assembled inside its own row (dictionary array literal filtered by instr, transformed to entity structs, array_sort, to_json) — one tweet scan, no join, no aggregate; the only shuffle is the presentation sort, so the same plan on a stream keeps no state",
+    "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → ONE from_json parse per tweet (the validity rules filter the one-element array(from_json(…)) and the Generate explodes the survivor, so no conjunct re-parses) → each tweet's event assembled inside its own row (dictionary array literal filtered by instr, transformed to entity structs, array_sort, to_json) — one tweet scan, no join, no aggregate; the only shuffle is the presentation sort, so the same plan on a stream keeps no state",
     "q129_bm25_timetravel" -> "BM25 snapshot time travel: save's v1, then append/delete/purge commits that each publish only the files they landed; four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms segments summed per query term, stats manifest-selected; the pinned plan is only the presentation sort over the four-leg union's Materialize.cut scan, so the serve legs' plans are not pinned here",
     "q130_ivf_timetravel" -> "IVF snapshot time travel: append assigned map-side under broadcast centroids (only its cid partitions gain files), then q39's probed top-10 as-of v1 AND v2 — each leg a static cid IN (...) scan of its version's manifested assignment files; pinned plan is the two-leg union",
     "q131_pq_timetravel" -> "PQ snapshot time travel: append encoded map-side under the broadcast codebooks and packed to the 8-byte layout, then the ADC top-10 as-of v1 AND v2 — each leg unpacks exactly its version's manifested code files map-side and rides the broadcast-ADC join; pinned plan is the two-leg union",
-    "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps (band_id, kbucket) pruning through the explicit listing",
+    "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps the band_id partition column through the explicit listing",
     "q133_refresh_timetravel" -> "snapshot-preserving IVF centroid refresh: one map-side-combined Lloyd round + reassignment under the broadcast refreshed centroids; LOSING cells rewrite survivors as new sibling files, movers append into their new cells, the next manifest swaps the selection — v1 stays byte-identical, write amplification = touched cells; pinned plan is the committed-delta join",
     "q134s_manifest_tail" -> "streaming manifest tailing (the Delta-source shape): per micro-batch the producer appends + commits and the consumer reads the manifest DIFF since its last-seen version into a mirror — new files only per trigger, one integer of consumer state; pinned plan is the final mirror read",
     "q135_state_timetravel" -> "cluster-state time travel: the q110 quotient increment lands through the COW MERGE-INTO (touched dbuckets rewrite as sibling files, manifest swaps the selection), then one query reads the label table as-of v1 AND v2 — the reproducibility record of a run's own dedup decisions; pinned plan is the two-leg as-of union",
     "q136_parse_quarantine" -> "dead-letter quarantine: pure column expressions over ONE scan of the raw feed (no second pass) — reasons keyed off the parser's own corrupt-record column so the parse/quarantine split is independent of the partial-results conf; the only shuffle is the presentation sort",
     "q137_occ_commit_retry" -> "optimistic-concurrency commit loop: both writers' data land as ordinary parquet appends; conflict detection is one manifest stat + an atomic-rename CAS and the retry re-LISTS file names, never re-writes — pinned plan is the committed-version read (a plain pruned scan of the manifested files)",
-    "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's (band_id, kbucket)-pruned manifested scan (merge-on-read), the purge rewrites only partitions holding tombstoned rows (a doc has exactly Bands band rows, so the touched set is naturally narrow); pinned plan is the three-leg as-of serve union",
-    "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans with (band_id, kbucket) pruning, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
+    "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's manifested band scan (merge-on-read), the purge rewrites only bands holding tombstoned rows into one new file each (a doc has exactly Bands band rows, so a purge writes at most Bands files); pinned plan is the three-leg as-of serve union",
+    "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans of the version's band files, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
     "q140_cluster_representative" -> "quality-aware dup representative: row_number window PARTITIONED by cluster_id (no SinglePartition exchange) over the memoized cluster relation joined to doc lengths — the keep-longest keep-list costs one shuffle of skinny rows, per-task work bounded by the largest cluster",
     "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); each serve leg keeps tbucket pruning + query-term pushdown, but the pinned plan is only the presentation sort over the three-leg union's Materialize.cut scan",
     "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save/append/delete/purge as manifest commits, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; the pinned plan is only the presentation sort over the four-leg as-of serve union's Materialize.cut scan",
@@ -134,7 +134,7 @@ object Explain {
     "q146_table_delete" -> "corpus-table row-level delete: tombstones land as one file inside the manifested tree (merge-on-read — broadcast anti-join under each version's scan), the COW purge rewrites only files holding tombstoned rows via a skinny (id, input_file_name) probe under the broadcast list; pinned plan is the three-leg as-of union",
     "q147_pruned_serve" -> "generic pruned serve: the DEFAULT committed-table read path consults the FileStats sidecar — string-lane (16-char truncated, Iceberg-style) bounds drop the non-intersecting files of the source-clustered corpus from the plan before any footer opens, the pinned tombstone list still broadcast-anti-joins merge-on-read; pinned plan is the pruned scan + anti-join + exact predicate",
     "q148_partitioned_delete" -> "partitioned-table row-level DML: day-sprayed committed events, tombstones merge-on-read (broadcast anti-join under each version's basePath scan — partition pruning survives the manifested listing), the COW purge re-sprays only files holding tombstoned rows back into their own day dirs via partitionBy (touched set confined to the tombstoned days by the clustering); pinned plan is the three-leg as-of union",
-    "q149_lsh_occ_append" -> "OCC append for the band family (df-free, so every landed artifact is additive): both writers' band files land exactly once as dynamic-partition appends, the loser's retry re-validates only the re-ingest guard and re-publishes an explicit file selection (commitSelectingExpecting — no sweep); pinned plan is the three-leg as-of serve union with (band_id, kbucket) pruning",
+    "q149_lsh_occ_append" -> "OCC append for the band family (df-free, so every landed artifact is additive): both writers' band files land exactly once, one file per band each, the loser's retry re-validates only the re-ingest guard and re-publishes an explicit file selection (commitSelectingExpecting — no sweep); pinned plan is the three-leg as-of serve union over each version's band files",
     "q150_schema_evolution" -> "schema evolution on the committed corpus: a widening batch flips the one-stat evolved marker, serves of evolved versions schema-merge (distributed footer pass — pre-evolution files null-fill the added column) while v1 time travel keeps its own schema; pinned plan is the merged-schema serve scan",
     "q151_table_compact" -> "flat-table small-file compaction (OPTIMIZE): the COW rewrite is one repartition shuffle of the current selection into maxFiles sibling files, the commit swaps the selection, tombstones stay pinned; pinned plan is the three-leg as-of union where the compacted leg reads exactly maxFiles files",
     "q152_partitioned_compact" -> "partitioned-table compaction: each fragmented day merges to ONE file inside its own dir via one shuffle hash-keyed by the partition column (task count = fragmented-partition count), untouched days carry byte-identical, tombstones stay pinned; the compacted leg reads one file per day, but the pinned plan is only the presentation sort over the four-leg as-of union's Materialize.cut scan",

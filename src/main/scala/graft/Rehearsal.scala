@@ -50,8 +50,8 @@ object Rehearsal {
     // round-15: the committed band index's erasure path — the claims
     // under pressure are that the tombstone commit rewrites NOTHING
     // (one appended file + a manifest) and the purge rewrites only
-    // tombstone-holding (band_id, kbucket) partitions, ≤ Bands ×
-    // KBuckets by construction however large the delete; q129 above
+    // tombstone-holding bands into one file each, ≤ Bands files by
+    // construction however large the delete; q129 above
     // now also exercises the segmented vocabulary (per-commit df
     // deltas, sum-on-read) under the 10x corpus
     "q138_snapshot_delete",

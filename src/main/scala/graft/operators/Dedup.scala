@@ -1259,10 +1259,10 @@ object Dedup {
     // ARRIVING batch afterwards is a probe against the standing LSH
     // index ([[graft.plans.MinHashIndex]]). Here the corpus split
     // models it: residents (doc_id % 10 != 0) are indexed once per
-    // session (save → parquet artifacts, partitioned by
-    // (band_id, band_key mod 64)); the incoming batch (doc_id % 10
-    // == 0) is sketched map-side, broadcast, and joined against the
-    // FILE-PRUNED index scan. Oracle = the q31 CTE chain with the
+    // session (save → parquet artifacts, one file per band_id
+    // directory); the incoming batch (doc_id % 10 == 0) is sketched
+    // map-side, broadcast, and joined against the current version's
+    // band files. Oracle = the q31 CTE chain with the
     // probe/resident split — driver-gated proof the persisted path
     // answers what the fresh all-pairs computation would.
     "q99_lsh_index_dedup" -> { (s, d) =>
@@ -1286,7 +1286,7 @@ object Dedup {
     // lower-id batch-mate (the id-minimal representative of a new dup
     // cluster is admitted, its copies rejected). One probe sketch
     // feeds both legs ([[graft.plans.MinHashIndex.admit]]); the
-    // corpus leg rides the same file-pruned broadcast join as q99,
+    // corpus leg rides the same broadcast join as q99,
     // the within-batch leg is the q31 band self-join at batch size.
     "q99b_lsh_admission" -> { (s, d) =>
       val docs = Tables.documents(s, d)
@@ -1316,23 +1316,20 @@ object Dedup {
 
     // The same loop with a COMPACTION between batches 1 and 2
     // ([[graft.plans.MinHashIndex.purgeCommit]] with maxFiles = 1):
-    // appends accumulate one small file per touched partition per
-    // batch, and the copy-on-write rewrite collapses each fragmented
-    // (band_id, kbucket) partition back to one file, committed as the
-    // next version, without moving the layout the serve path prunes
-    // on. Identical oracle SQL to q103 — the driver gate is the proof
+    // appends accumulate one small file per band per batch, and the
+    // copy-on-write rewrite collapses each band back to one file,
+    // committed as the next version. Identical oracle SQL to q103 — the driver gate is the proof
     // that compaction is result-neutral mid-loop (batch 2 admits
     // against, and appends into, the compacted version).
     "q103b_ingest_compacted" ->
       { (s, d) => ingestLoop(s, d, compactAfter = Some(1)) },
 
     // AUTO-COMPACTION POLICY — the same loop with a threshold-
-    // triggered PARTITION-LOCAL compaction after every append
+    // triggered BAND-LOCAL compaction after every append
     // ([[graft.plans.MinHashIndex.purgeCommit]] with maxFiles = 2):
-    // only (band_id, kbucket) partitions whose current-version file
-    // count crossed the threshold are rewritten, bounding write
-    // amplification by where the arrivals actually landed while still
-    // capping per-partition file growth under continuous ingest — the
+    // only bands whose current-version file count crossed the
+    // threshold are rewritten, capping per-band file growth under
+    // continuous ingest — the
     // lakehouse OPTIMIZE scheduler shape. Identical oracle SQL to
     // q103: the gate proves the policy result-neutral at every point
     // in the loop.
@@ -1412,11 +1409,11 @@ object Dedup {
     // lifecycle: a slice of the resident corpus (doc_id % 7 = 0) is
     // tombstoned ([[graft.plans.MinHashIndex.deleteCommit]]) and then
     // purged ([[graft.plans.MinHashIndex.purgeCommit]]), which
-    // rewrites ONLY the partitions holding its band rows as new files
-    // of the next version; the standard probe serve then runs against
+    // rewrites ONLY the bands holding its band rows, one new file each,
+    // in the next version; the standard probe serve then runs against
     // what remains. Oracle = q99's CTE chain with the deleted slice
     // excluded from the corpus side — the driver gate proves the
-    // partition-local delete leaves exactly the fresh index over the
+    // band-local delete leaves exactly the fresh index over the
     // surviving residents.
     "q107_index_delete" -> { (s, d) =>
       import graft.plans.MinHashIndex
@@ -1451,9 +1448,9 @@ object Dedup {
     // probe sketch — the v1 leg must be blind to the appended slice.
     // Oracle = q99's CTE chain with the two corpus populations
     // unioned under a version tag. Scale: an as-of read is a file
-    // LISTING choice, not a data operation — both legs keep the
-    // (band_id, kbucket) partition pruning through the manifest read
-    // (basePath), and the append itself only adds files.
+    // LISTING choice, not a data operation — each leg reads exactly
+    // its version's manifested band files, and the append itself only
+    // adds files (one per band).
     "q109_index_timetravel" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
       val docs = Tables.documents(s, d)
@@ -1485,18 +1482,17 @@ object Dedup {
 
     // SNAPSHOT-PRESERVING COMPACTION — q109's maintenance leg
     // ([[graft.plans.MinHashIndex.purgeCommit]], which with no
-    // tombstones merges fragmented partitions copy-on-write), so time
+    // tombstones merges fragmented bands copy-on-write), so time
     // travel and small-file maintenance coexist. Here the append (which
-    // fragments the touched partitions) commits v2, then compaction
-    // merges v2's fragmented (band_id, kbucket) partitions into NEW
-    // sibling files and commits the merged layout as v3 — old files
+    // adds a second file to every band) commits v2, then compaction
+    // merges each of v2's bands into ONE new sibling file and commits the merged layout as v3 — old files
     // stay on disk and v1/v2 keep reading their own sets (the
     // Iceberg/Delta OPTIMIZE shape). ONE probe sketch then
     // serves as-of ALL THREE versions: v1 must be blind to the append,
     // and v3 must be row-identical to v2 — compaction is purely
     // physical. Oracle = q109's CTE with the v2 population repeated
-    // under tag 3. Scale: the rewrite touches only partitions the
-    // append actually fragmented, old versions cost storage (not
+    // under tag 3. Scale: the rewrite touches only bands the append
+    // actually fragmented, old versions cost storage (not
     // write amplification) until expire reclaims them.
     "q113_snapshot_compact" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
@@ -1508,8 +1504,8 @@ object Dedup {
         val (v2, _) = MinHashIndex.appendCommitRetrying(s, idxDir,
           docs.where(pmod(col("doc_id"), lit(10)) === 9)
             .select(col("doc_id"), col("text")))
-        // the appended batch fragmented its touched partitions to 2
-        // files; merge them copy-on-write and commit the result
+        // the appended batch left every band with 2 files; merge each
+        // into one copy-on-write and commit the result
         val v3 = MinHashIndex.purgeCommit(s, idxDir)
         val probe = MinHashIndex.localize(s,
           docs.where(pmod(col("doc_id"), lit(10)) === 0)
@@ -1539,7 +1535,7 @@ object Dedup {
     // months of retention later. Oracle = q109's two-leg CTE (same
     // populations — what tagging must preserve). Scale: a tag is one
     // tiny ref file and an expire-time exemption; serves stay
-    // manifest-listing choices with (band_id, kbucket) pruning.
+    // manifest-listing choices.
     "q139_tagged_snapshot" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
       val docs = Tables.documents(s, d)
@@ -1680,16 +1676,15 @@ object Dedup {
     // clone's v1 population (%10 ∈ 1..8) loses its %7 = 0 slice as a
     // TOMBSTONE commit (v2 — one appended file inside the manifested
     // tree, one manifest swap; nothing rewritten), then a COW PURGE
-    // commit (v3) rewrites ONLY the partitions holding tombstoned rows
-    // and drops the list. ONE probe sketch serves as-of all three
+    // commit (v3) rewrites ONLY the bands holding tombstoned rows (one
+    // new file each) and drops the list. ONE probe sketch serves as-of all three
     // versions: v1 must still see the deleted docs (time travel
     // through the delete), v2 must equal a fresh survivors-only index
     // (merge-on-read), v3 must equal v2 (the purge is purely
     // physical). Oracle = q109's CTE shape with the survivor predicate
     // on tags 2/3. Scale: a deleted doc holds exactly Bands band rows,
-    // so the purge touches ≤ Bands × KBuckets partitions regardless of
-    // delete size, and every as-of read stays a manifest listing
-    // choice with (band_id, kbucket) pruning.
+    // so the purge writes ≤ Bands files regardless of delete size, and
+    // every as-of read stays a manifest listing choice.
     "q138_snapshot_delete" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
       val docs = Tables.documents(s, d)
@@ -1730,8 +1725,8 @@ object Dedup {
     // read of (v1 → v2] must equal the slice's band rows precisely —
     // no resident row re-surfaces, none of the arrivals is missed.
     // Scale: the read cost is the NEW files only (never a diff of two
-    // corpus-sized row sets), and partition pruning survives the
-    // explicit listing via basePath.
+    // corpus-sized row sets), and the band_id partition column
+    // survives the explicit listing via basePath.
     "q132_snapshot_increment" -> { (s, d) =>
       import graft.plans.{MinHashIndex, Snapshots}
       val docs = Tables.documents(s, d)
@@ -2506,8 +2501,8 @@ object Dedup {
     * clone the resident index, then per batch — admit, materialize the
     * verdict (it feeds both the admitted-id join and the result),
     * commit the admitted docs' band rows, optionally compact
-    * (`compactAfter` = merge every fragmented partition after batch k;
-    * `autoCompactMaxFiles` = merge only partitions over that many
+    * (`compactAfter` = merge every fragmented band after batch k;
+    * `autoCompactMaxFiles` = merge only bands over that many
     * files after EVERY append). */
   private def ingestLoop(s: SparkSession, d: String,
       compactAfter: Option[Int],

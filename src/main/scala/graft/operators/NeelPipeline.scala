@@ -48,13 +48,21 @@ object NeelPipeline {
     * JSON the parser cannot fully decode (corrupt-record column set)
     * -> silently dropped, exactly like the reference's catch-and-skip
     * flatMap (twitter4j throws on any truncated/invalid payload, so a
-    * partially-recoverable record is a skip there too). */
+    * partially-recoverable record is a skip there too). Each tweet is
+    * parsed ONCE: the validity rules are a `filter` lambda over the
+    * one-element `array(from_json(…))` and the survivor is
+    * `explode`d. A `where` over a parsed column would be pushed below
+    * its projection with `from_json(…)` substituted into every
+    * conjunct; a generator is a barrier the optimizer does not push
+    * filters through. */
   def parseTweets(raw: DataFrame, jsonCol: String = "value",
       skipRetweets: Boolean = true): DataFrame = {
+    val valid = (t: Column) => t.isNotNull && t("_corrupt").isNull &&
+      t("id") > 0 && length(t("text")) > 0
     val parsed = raw
-      .withColumn("t", from_json(col(jsonCol), tweetSchemaCorrupt, corruptOpts))
-      .where(col("t").isNotNull && col("t._corrupt").isNull &&
-        col("t.id") > 0 && length(col("t.text")) > 0)
+      .select(explode(filter(
+        array(from_json(col(jsonCol), tweetSchemaCorrupt, corruptOpts)),
+        valid)).as("t"))
       .select(
         col("t.id").as("tweet_id"),
         col("t.text").as("text"),

@@ -238,7 +238,7 @@ object IndexMaintenance {
 
   /** The emptied-partition cleanup reconstructs directory names as
     * "$c=$v" verbatim — correct for the integral partition keys every
-    * current index layout uses (band_id/kbucket/cid/zbucket/dbucket),
+    * current index layout uses (cid/zbucket/dbucket),
     * WRONG for string/date/null values, which Hive path-escapes
     * (%-encoding, __HIVE_DEFAULT_PARTITION__). Refuse non-integral
     * layouts loudly instead of silently leaving emptied dirs behind to

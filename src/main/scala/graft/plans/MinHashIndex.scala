@@ -15,12 +15,15 @@ import graft.operators.Dedup
   *
   * Artifact layout under `indexDir`:
   *   - `bands/` — the melted index rows (doc_id, sig, bk0, band_key),
-  *     one row per (doc, band), PARTITIONED by (band_id, kbucket =
-  *     band_key mod [[KBuckets]]): a probe batch's collected
-  *     (band_id, kbucket) set — bounded by Bands × KBuckets values,
-  *     never data-sized — prunes the scan at the FILE level, so a
-  *     small batch opens a sliver of the index instead of all of it.
-  *     Each row carries the full K-long signature (est-Jaccard
+  *     one row per (doc, band), PARTITIONED by band_id — the column the
+  *     probe joins on — and nothing finer: every write ([[save]], an
+  *     append's landing, a [[purgeCommit]] rewrite) lands exactly ONE
+  *     file per band, its rows sorted by band_key, so a version holds
+  *     Bands files per write it kept and a probe opens exactly those.
+  *     A finer hash fan-out by band_key would prune little (a 100-doc
+  *     probe reaches ≈ 79% of 64 key buckets per band) while each
+  *     append would land one file per bucket for every later read
+  *     to open. Each row carries the full K-long signature (est-Jaccard
   *     verification happens inside the same join — no second
   *     corpus-sized lookup) and the band-0 key (the
   *     first-collision-band gate for the band-1 leg — a filter, not a
@@ -30,8 +33,7 @@ import graft.operators.Dedup
   *   - `bands/deletes/` — the tombstone list [[deleteCommit]] appends
   *     (inside the manifested tree, so one version pins rows +
   *     applicable deletes together); version-aware readers anti-join
-  *     it, [[purgeCommit]] folds it into a partition-local physical
-  *     purge.
+  *     it, [[purgeCommit]] folds it into a band-local physical purge.
   *
   * ONE lifecycle, the snapshot-committed one ([[Snapshots]] over
   * `bands/`): [[save]] publishes v1, and every later change —
@@ -44,17 +46,14 @@ import graft.operators.Dedup
   *
   * `serve` probes a batch: the batch is sketched map-side with the
   * exact q31 kernel, BROADCAST (the incremental contract is
-  * batch ≪ corpus), and hash-joined against the pruned scan — no
-  * shuffle of index rows at all. The pruning set — the batch's
-  * (band_id, kbucket) pairs — is read on the driver off the localized
-  * sketch, and the scan reads exactly the current (or pinned)
-  * version's manifested files under those `band_id=b/kbucket=k/`
-  * directories. A bands dir with no snapshot is refused. Hot band keys
-  * (boilerplate / empty documents sharing one signature) cost
-  * candidate VOLUME here, not a single-reducer stall: the broadcast
-  * join fans the hot bucket out across the scan's file partitions,
-  * unlike the self-join case that needs [[Dedup]]'s salted-triangle
-  * guard.
+  * batch ≪ corpus), and hash-joined against the index scan — no
+  * shuffle of index rows at all. The scan reads exactly the current
+  * (or pinned) version's manifested band files. A bands dir with no
+  * snapshot is refused. Hot band keys (boilerplate / empty documents
+  * sharing one signature) cost candidate VOLUME here, not a
+  * single-reducer stall: the broadcast join matches them where the
+  * scan reads them, unlike the self-join case that needs [[Dedup]]'s
+  * salted-triangle guard.
   */
 object MinHashIndex {
 
@@ -68,47 +67,39 @@ object MinHashIndex {
     s"MinHashIndex's first-collision-band gate assumes Dedup.Bands == 2 " +
       s"(got ${Dedup.Bands}) — generalize the gate before raising Bands")
 
-  /** Band-key hash-partition count for the persisted index. */
-  val KBuckets = 64
-
   final case class Handle(docsPath: String, bandsPath: String)
 
-  private def kbucket(c: Column) = pmod(c, lit(KBuckets)).cast("int")
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
-  private def withBucket(rows: DataFrame): DataFrame =
-    rows.withColumn("kbucket", kbucket(col("band_key")))
+  /** `df`'s rows collected into a driver-local relation (one job, as
+    * wide as `df` already is; none when `df` is local). */
+  private def collectLocal(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** The one band writer: write-sized-for-read, one shuffle by the
-    * partition key so each (band_id, kbucket) directory gets ONE file
-    * (each key hashes to exactly one task) — without it every sketch
-    * task writes a sliver into every directory (32 tasks × 128 dirs ≈
-    * 4k files) and the serve path's pruned scan pays the per-file open
-    * cost the partitioning was meant to save. The partition count is
-    * explicit (`spark.sql.shuffle.partitions`): a count-less
-    * repartition lets AQE coalesce a batch-sized shuffle into ONE
-    * write task that creates every touched directory's file one after
-    * another; an explicit count is never coalesced, so the files land
-    * n-wide. */
+  /** The one band writer: exactly one file per `band_id=` directory,
+    * its rows sorted by band_key, all written by ONE task. A
+    * driver-local relation reaches it with no shuffle; anything else
+    * is shuffled into it, so upstream work — the sketch — keeps its
+    * own width. (A band_id hash exchange would not spread the write:
+    * Murmur3 sends band ids 0 and 1 to the same of two partitions.) */
   private def writeBands(rows: DataFrame, path: String, mode: String): Unit = {
-    val n = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    rows.repartition(n, col("band_id"), col("kbucket"))
-      .write.mode(mode).partitionBy("band_id", "kbucket").parquet(path)
+    val one = if (isLocal(rows)) rows.coalesce(1) else rows.repartition(1)
+    one.sortWithinPartitions(col("band_id"), col("band_key"))
+      .write.mode(mode).partitionBy("band_id").parquet(path)
   }
 
-  /** The (band_id, kbucket) partition a bands-tree file sits in, read
-    * off its `band_id=b/kbucket=k/` path segments. */
-  private def partitionOf(f: String): (Int, Int) = {
-    val segs = f.split('/')
-    def seg(c: String) = segs.find(_.startsWith(c + "="))
-      .map(_.drop(c.length + 1).toInt)
+  /** The band a bands-tree file sits in, read off its `band_id=b/`
+    * path segment. */
+  private def bandOf(f: String): Int =
+    f.split('/').find(_.startsWith("band_id=")).map(_.drop(8).toInt)
       .getOrElse(throw new IllegalStateException(
-        s"MinHashIndex: no $c= segment in $f"))
-    (seg("band_id"), seg("kbucket"))
-  }
+        s"MinHashIndex: no band_id= segment in $f"))
 
   /** The OCC append's LANDING step, writer-exact: write `bandRows` into
     * a private staging subdir and move them into the live
-    * (band_id, kbucket) layout ([[Snapshots.landStaged]]), returning
+    * `band_id=` layout ([[Snapshots.landStaged]]), returning
     * the bands-relative paths this writer — and only this writer —
     * landed. Test-visible so the interleaved-landing race (writer B
     * landing between writer A's landing and A's commit) can be staged
@@ -117,7 +108,7 @@ object MinHashIndex {
       bandRows: DataFrame): Seq[String] =
     Snapshots.landStaged(s, bands) { stage =>
       graft.Jobs.labeled(s, "lsh: land band rows")(
-        writeBands(withBucket(bandRows), stage, "append"))
+        writeBands(bandRows, stage, "append"))
     }
 
   /** Sketch `residentDocs` ((doc_id, text)), persist the banded index
@@ -128,8 +119,7 @@ object MinHashIndex {
       indexDir: String): Handle = {
     val base = IvfTopK.qualify(s, indexDir)
     // the overwrite replaces the whole bands tree, manifests included
-    writeBands(withBucket(Dedup.indexBandRows(residentDocs)),
-      s"$base/bands", "overwrite")
+    writeBands(Dedup.indexBandRows(residentDocs), s"$base/bands", "overwrite")
     Snapshots.commit(s, s"$base/bands")
     import s.implicits._
     Seq(docsPath).toDF("docs_path")
@@ -164,26 +154,17 @@ object MinHashIndex {
       tombF: Seq[String]): DataFrame =
     ManifestIO.read(s, s"$bands/deletes", tombF)
 
-  /** Version `v`'s effective bands RELATION over the `touched`
-    * (band_id, kbucket) partitions: exactly the manifested band files
-    * under those `band_id=b/kbucket=k/` directories (basePath keeps the
-    * partition columns), with that version's tombstones anti-joined
-    * out (broadcast — tombstones are delete-sized, never corpus-sized).
-    * Pruning is a file-list choice made on the driver, so the read
-    * stats and plans only the files the probe can reach instead of
-    * planning every manifested file under a 2×[[KBuckets]]-term OR
-    * predicate. No touched partition holding a file leaves an empty
-    * relation of the same schema. */
+  /** Version `v`'s effective bands RELATION: exactly its manifested
+    * band files (basePath keeps the band_id partition column), with
+    * that version's tombstones anti-joined out (broadcast — tombstones
+    * are delete-sized, never corpus-sized). */
   private def versionRelation(s: SparkSession, bands: String,
-      v: Int, touched: Set[(Int, Int)]): DataFrame = {
+      v: Int): DataFrame = {
     val (bandF, tombF) = manifestPieces(s, bands, v)
     if (bandF.isEmpty)
       throw new IllegalStateException(
         s"snapshot v$v under $bands references no band files")
-    val rel = bandF.filter(f => touched(partitionOf(f))) match {
-      case Seq() => ManifestIO.read(s, bands, bandF.take(1)).where(lit(false))
-      case files => ManifestIO.read(s, bands, files)
-    }
+    val rel = ManifestIO.read(s, bands, bandF)
     if (tombF.isEmpty) rel
     else rel.join(broadcast(tombstones(s, bands, tombF)),
       Seq("doc_id"), "left_anti")
@@ -210,7 +191,7 @@ object MinHashIndex {
     * them, so readers of version v-and-later anti-join them out
     * (broadcast) while readers pinned to older versions never see
     * them — byte-identical time travel through the delete.
-    * [[purgeCommit]] later rewrites exactly the partitions holding
+    * [[purgeCommit]] later rewrites exactly the bands holding
     * tombstoned rows and drops the list. The commit selects v's files
     * plus the tombstone file this call landed, nothing else: band rows
     * another writer left unreferenced (a refused append) stay out.
@@ -239,20 +220,17 @@ object MinHashIndex {
     } finally if (tombed) graft.Materialize.release(staged)
   }
 
-  /** COPY-ON-WRITE tombstone-purge compaction, PARTITION-LOCAL: only
-    * (band_id, kbucket) partitions that hold a tombstoned row (derived
-    * from a bounded probe of the (doc_id, band_id, kbucket) columns
-    * against the broadcast tombstone list) or exceed `maxFiles` data
-    * files rewrite their surviving rows as NEW sibling files, one per
-    * partition; every other partition's files carry VERBATIM into the
-    * next manifest, which also drops the tombstone list. With no
-    * tombstones this is plain small-file compaction — the maintenance
-    * pass an appending index needs, since every append adds one file
-    * per touched partition. Write amplification tracks where the
-    * deleted docs' band rows sit (≤ Bands × [[KBuckets]] partitions by
-    * construction — a deleted doc has exactly [[Dedup.Bands]] rows, so
-    * unlike BM25's term-scattered postings the purge here is naturally
-    * narrow) plus where appends fragmented. The rewrite lands through
+  /** COPY-ON-WRITE tombstone-purge compaction, BAND-LOCAL: only bands
+    * that hold a tombstoned row (derived from a probe of the
+    * (doc_id, band_id) columns against the broadcast tombstone list)
+    * or more than `maxFiles` data files rewrite their surviving rows
+    * as ONE new sibling file each; every other band's files carry
+    * VERBATIM into the next manifest, which also drops the tombstone
+    * list. With no tombstones this is plain small-file compaction —
+    * the maintenance pass an appending index needs, since every append
+    * adds one file per band. A deleted doc has exactly [[Dedup.Bands]]
+    * rows, one per band, so a purge of a delete rewrites every band
+    * that still holds one of them. The rewrite lands through
     * [[Snapshots.landStaged]] and the commit selects exactly it, so
     * files another writer left unreferenced stay out. Older versions
     * keep time-traveling over their own files until
@@ -265,16 +243,14 @@ object MinHashIndex {
       throw new IllegalStateException(
         s"purgeCommit: no committed snapshot under $bands"))
     val (bandF, tombF) = manifestPieces(s, bands, v)
-    // keySet, not `collect { ... => p }`: collecting pairs out of a Map
-    // builds another Map, which keeps one partition per band_id
-    val fragged: Set[(Int, Int)] = bandF.groupBy(partitionOf)
+    val fragged: Set[Int] = bandF.groupBy(bandOf)
       .filter { case (_, fl) => fl.size > maxFiles }.keySet
-    val tombed: Set[(Int, Int)] =
+    val tombed: Set[Int] =
       if (tombF.isEmpty) Set.empty
       else ManifestIO.read(s, bands, bandF)
         .join(broadcast(tombstones(s, bands, tombF)), Seq("doc_id"), "left_semi")
-        .select(col("band_id"), col("kbucket")).distinct()
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+        .select(col("band_id")).distinct()
+        .collect().map(_.getInt(0)).toSet
     val touched = fragged ++ tombed
     if (touched.isEmpty && tombF.isEmpty) return v
     // the rewrite reads v's manifested files and writes into a private
@@ -283,7 +259,7 @@ object MinHashIndex {
       if (touched.isEmpty) Nil
       else {
         val cur = ManifestIO.read(s, bands,
-          bandF.filter(f => touched(partitionOf(f))))
+          bandF.filter(f => touched(bandOf(f))))
         val purged =
           if (tombF.isEmpty) cur
           else cur.join(broadcast(tombstones(s, bands, tombF)),
@@ -293,7 +269,7 @@ object MinHashIndex {
             writeBands(purged, stage, "append")))
       }
     Snapshots.commitSelectingExpecting(s, bands, v,
-      f => f.startsWith("deletes/") || touched(partitionOf(f)), mine)
+      f => f.startsWith("deletes/") || touched(bandOf(f)), mine)
   }
 
   /** OPTIMISTIC-CONCURRENCY append — the q141 re-derive protocol
@@ -324,7 +300,9 @@ object MinHashIndex {
     * its rows are inline in the plan, so a retry's re-validation
     * recomputes them exactly) is used as is; any other batch is
     * materialized once ([[graft.Materialize.cut]]) so the landing and
-    * every re-validation see the same rows. Returns (committedVersion,
+    * every re-validation see the same rows; a local batch's band rows
+    * are collected to the driver after the sketch, so the landing
+    * writes them with no shuffle. Returns (committedVersion,
     * conflictsObserved). */
   def appendCommitRetrying(s: SparkSession, indexDir: String,
       newDocs: DataFrame, expected: Option[Int] = None,
@@ -353,8 +331,7 @@ object MinHashIndex {
     var v = expected.orElse(Snapshots.current(s, bands)).getOrElse(
       throw new IllegalStateException(
         s"appendCommitRetrying: no committed snapshot under $bands"))
-    val local = batch.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val local = isLocal(batch)
     val staged = if (local) batch else graft.Materialize.cut(batch)
     val ids = staged.select(col("doc_id")).distinct()
     def checkTombstones(w: Int): Unit =
@@ -370,7 +347,10 @@ object MinHashIndex {
       // the additive landing, exactly once — order-independent between
       // concurrent writers (parquet append never mutates existing
       // files), claimed writer-exactly via the private staging move
-      val mine = landBands(s, bands, bandRowsOf(staged))
+      val rows = bandRowsOf(staged)
+      val mine = landBands(s, bands,
+        if (local) graft.Jobs.labeled(s, "lsh: sketch batch")(collectLocal(s, rows))
+        else rows)
       var conflicts = 0
       while (true) {
         try return (Snapshots.commitSelectingExpecting(s, bands, v,
@@ -411,10 +391,8 @@ object MinHashIndex {
   /** Near-dup pairs of `probeDocs` ((doc_id, text)) against the SAVED
     * index: (probe_doc, corpus_doc, est_jaccard) at est ≥ the q31
     * threshold, unordered. The probe is sketched with the exact
-    * resident kernel, its (band_id, kbucket) set is collected (≤
-    * Bands × [[KBuckets]] values) into a static partition predicate —
-    * file-level pruning — and the batch rides a broadcast hash join
-    * against the pruned scan. doc_id disjointness between batch and
+    * resident kernel and the batch rides a broadcast hash join against
+    * the version's band files. doc_id disjointness between batch and
     * corpus is the caller's contract (an admitted batch has fresh
     * ids); a probe doc already in the index would match itself at
     * est = 1. */
@@ -425,16 +403,13 @@ object MinHashIndex {
     * band rows as a driver-local relation. The batch is ≪ corpus by
     * contract and rides a `broadcast()` join either way — broadcast
     * collects to the driver regardless — so localizing adds no driver
-    * cost, lets the touched-bucket set be computed without a second
-    * job, and leaves NOTHING cached: the previous `Materialize.cut`
+    * cost and leaves NOTHING cached: the previous `Materialize.cut`
     * here leaked one localCheckpoint per serve/admit call in any
     * long-lived session (the bench's between-sweep blanket unpersist
     * was hiding it). */
-  private def localizeProbe(s: SparkSession, probeDocs: DataFrame): DataFrame = {
-    val bandRows = Dedup.indexBandRows(probeDocs)
-    val rows = graft.Jobs.labeled(s, "lsh: sketch probe")(bandRows.collect())
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), bandRows.schema)
-  }
+  private def localizeProbe(s: SparkSession, probeDocs: DataFrame): DataFrame =
+    graft.Jobs.labeled(s, "lsh: sketch probe")(
+      collectLocal(s, Dedup.indexBandRows(probeDocs)))
 
   /** Public sketch-and-localize for callers that reuse ONE probe
     * sketch across several lifecycle steps (the q103 ingest loop
@@ -458,10 +433,9 @@ object MinHashIndex {
 
   /** [[serve]] AS OF a committed snapshot version
     * ([[Snapshots.commit]] over the bands dir): the index relation is
-    * exactly the manifested file set, read with `basePath` so the
-    * (band_id, kbucket) partition pruning survives the explicit
-    * listing — a reader pinned to version N sees byte-identical
-    * results no matter how many appends commit after it. */
+    * exactly the manifested file set — a reader pinned to version N
+    * sees byte-identical results no matter how many appends commit
+    * after it. */
   def serveAsOf(s: SparkSession, indexDir: String, version: Int,
       probeDocs: DataFrame): DataFrame =
     serveRowsAsOf(s, indexDir, version, localizeProbe(s, probeDocs))
@@ -498,52 +472,14 @@ object MinHashIndex {
           "index is committed by save(); this bands dir was not")),
       probeRows)
 
-  /** Driver-side twin of the serve's touched-bucket collection for
-    * probes whose optimized plan is a [[LocalRelation]] (every
-    * localized sketch — Catalyst's ConvertToLocalRelation also folds
-    * slices of one). Returns the distinct (band_id, kbucket) pairs in
-    * first-appearance order; NULL band keys are skipped — a NULL key
-    * equi-matches nothing, so its bucket can never contribute a row
-    * (the collected form's pruning predicate was merely a superset).
-    * None when the probe is not local (the caller runs the job). */
-  private def localTouched(probeRows: DataFrame): Option[Seq[(Int, Int)]] =
-    probeRows.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val bi = lr.output.indexWhere(_.name == "band_id")
-        val bk = lr.output.indexWhere(_.name == "band_key")
-        if (bi < 0 || bk < 0) None
-        else {
-          val seen = scala.collection.mutable.LinkedHashSet[(Int, Int)]()
-          lr.data.foreach { r =>
-            if (!r.isNullAt(bi) && !r.isNullAt(bk))
-              seen += ((r.getInt(bi),
-                (((r.getLong(bk) % KBuckets) + KBuckets) % KBuckets).toInt))
-          }
-          Some(seen.toSeq)
-        }
-      case _ => None
-    }
-
   /** The serve join against version `version` of the bands under
-    * `bands`, with bucket-set pruning, broadcast probe and
-    * first-collision-band gate. */
+    * `bands`: broadcast probe and first-collision-band gate. */
   private def serveOn(s: SparkSession, bands: String, version: Int,
       probeRows: DataFrame): DataFrame = {
     val probe = probeRows.select(
       col("doc_id").as("probe_doc"), col("sig").as("sig_a"),
       col("bk0").as("probe_bk0"), col("band_id"), col("band_key"))
-    // bounded driver read: the distinct (band_id, kbucket) pairs the
-    // batch can touch — at most Bands × KBuckets rows by construction.
-    // Every lifecycle caller passes a LOCALIZED probe (a driver-local
-    // relation via localizeProbe), so the set is computed directly
-    // from the local rows — the previous distinct().collect() paid a
-    // full Spark job (shuffle + collect) per serve leg for rows the
-    // driver already held. Non-local probes keep the job.
-    val touched = localTouched(probeRows).getOrElse(probe
-      .select(col("band_id"), kbucket(col("band_key")).as("kbucket"))
-      .distinct().collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSeq)
-    val idx = versionRelation(s, bands, version, touched.toSet)
+    val idx = versionRelation(s, bands, version)
       .select(col("doc_id").as("corpus_doc"), col("sig").as("sig_b"),
         col("bk0").as("corpus_bk0"), col("band_id"), col("band_key"))
     idx.join(broadcast(probe), Seq("band_id", "band_key"))

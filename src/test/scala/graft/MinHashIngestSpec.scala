@@ -141,11 +141,11 @@ class MinHashIngestSpec extends SparkSpec {
   }
 
   test("ingest batch job budget: a driver-local batch is not " +
-      "checkpointed, the landing writes n-wide with one file per touched " +
-      "partition, the admission runs at most 3 jobs") {
+      "checkpointed, the landing writes one file per band with no " +
+      "shuffle, the admission runs at most 3 jobs") {
     val s = spark
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(n > 1, "the n-wide landing assertion needs n > 1")
+    assert(n > 1, "the n-wide sketch assertion needs n > 1")
     val resident = (1L to 300L).map(i => i -> text(i))
     withIndex("mh_budget", resident) { (idx, _) =>
       val bands = s"$idx/bands"
@@ -168,17 +168,24 @@ class MinHashIngestSpec extends SparkSpec {
         MinHashIndex.appendCommitRetrying(s, idx, frame(s, admitted)))
       val ckpt = commitJobs.filter(_.stages.exists(_.startsWith("localCheckpoint")))
       assert(ckpt.isEmpty, s"driver-local batch was checkpointed: $ckpt")
+      // the sketch runs n-wide and is collected to the driver; the
+      // landing is one write task with no shuffle stage
+      val sketch = commitJobs.filter(_.desc == "lsh: sketch batch")
+      assert(sketch.nonEmpty && sketch.forall(_.resultTasks == n),
+        s"sketch jobs ran ${sketch.map(_.resultTasks)} tasks, want $n each")
       val landing = commitJobs.filter(_.desc == "lsh: land band rows")
-      assert(landing.nonEmpty, s"no landing job seen: $commitJobs")
-      // the sketch's map stage and the write stage after the shuffle
-      assert(landing.size >= 2 && landing.forall(_.resultTasks == n),
-        s"landing jobs ran ${landing.map(_.resultTasks)} tasks, want $n each")
+      assert(landing.size == 1 && landing.head.resultTasks == 1 &&
+        landing.head.stages.size == 1,
+        s"landing ran ${landing.map(j => (j.stages, j.resultTasks))}, " +
+          "want one single-task stage")
       val added = Snapshots.files(s, bands, v2).toSet --
         Snapshots.files(s, bands, v1)
       val perDir = added.toSeq.groupBy(f => f.substring(0, f.lastIndexOf('/')))
-      assert(perDir.size > n && perDir.values.forall(_.size == 1),
-        s"touched partitions must get exactly one file each: " +
-          perDir.filter(_._2.size != 1).keys.take(3))
+      assert(perDir.size == operators.Dedup.Bands &&
+        perDir.keys.forall(_.contains("/band_id=")) &&
+        perDir.values.forall(_.size == 1),
+        s"an append must add exactly one file under each band_id= " +
+          s"directory: $perDir")
       // a parquet-read batch is still materialized before landing, so
       // a retry re-validates against the rows that landed
       val more = s"$idx-batch2"
@@ -188,6 +195,45 @@ class MinHashIngestSpec extends SparkSpec {
         MinHashIndex.appendCommitRetrying(s, idx, s.read.parquet(more)))
       assert(parquetJobs.exists(_.stages.exists(_.startsWith("localCheckpoint"))),
         s"parquet-read batch was not materialized: $parquetJobs")
+    }
+  }
+
+  test("the file count per append does not grow with the index: each " +
+      "append adds one file per band, admission reads them all, a purge " +
+      "folds them back to one per band") {
+    val s = spark
+    val nBands = operators.Dedup.Bands
+    val resident = (1L to 200L).map(i => i -> text(i))
+    withIndex("mh_growth", resident) { (idx, _) =>
+      val bands = s"$idx/bands"
+      def files(v: Int) = Snapshots.files(s, bands, v).toSet
+      val k = 3
+      val v1 = Snapshots.current(s, bands).get
+      assert(files(v1).size == nBands, s"save wrote ${files(v1)}")
+      val last = (1 to k).foldLeft(v1) { (prev, j) =>
+        val (v, _) = MinHashIndex.appendCommitRetrying(s, idx,
+          frame(s, (1L to 30L).map(i => (j * 10000L + i) -> text(j * 10000L + i))))
+        val added = files(v) -- files(prev)
+        assert(files(prev).subsetOf(files(v)) && added.size == nBands,
+          s"append $j added ${added.size} files, want $nBands: $added")
+        v
+      }
+      val probe = MinHashIndex.localize(s, frame(s,
+        Seq(50001L -> text(5), 50002L -> oneWordEdit(text(20001)),
+          50003L -> text(50003))))
+      val h = MinHashIndex.load(s, idx)
+      val read = MinHashIndex.admitRows(s, h, probe).inputFiles
+      assert(read.length == nBands * (k + 1),
+        s"admission scanned ${read.length} files, want ${nBands * (k + 1)}")
+      def served() = sortedRows(MinHashIndex.serveRows(s, h, probe))
+      val before = served()
+      assert(before.nonEmpty, "fixture rot: the probe matched nothing")
+      val purged = MinHashIndex.purgeCommit(s, idx, 1)
+      assert(purged == last + 1 && files(purged).size == nBands,
+        s"purgeCommit(1) left v$purged with ${files(purged).size} files")
+      assert(served() == before, "the purge changed the served rows")
+      assert(MinHashIndex.purgeCommit(s, idx, 1) == purged,
+        "a second purgeCommit(1) committed again")
     }
   }
 }

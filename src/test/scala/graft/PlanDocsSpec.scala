@@ -47,6 +47,17 @@ class PlanDocsSpec extends AnyFunSuite {
       s"Explain.headline names not in the registry: ${unknown.mkString(", ")}")
   }
 
+  test("q28's pinned plan parses each tweet's JSON once") {
+    val explains = Files.readString(Paths.get("EXPLAINS.md"))
+    val from = explains.indexOf("\n## q28_pipeline_e2e\n")
+    assert(from >= 0, "EXPLAINS.md has no q28_pipeline_e2e section")
+    val open = explains.indexOf("```", from)
+    val plan = explains.substring(open, explains.indexOf("```", open + 3))
+    val parses = "from_json\\(".r.findAllMatchIn(plan).size
+    assert(parses == 1,
+      s"q28's plan holds $parses from_json( calls, want one on the parse path")
+  }
+
   test("every oracle key has a registered query and vice versa") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet

@@ -876,34 +876,28 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   /** A committed MinHash serve of `probeRows` (a localized sketch)
-    * scans exactly the current version's manifested files under the
-    * (band_id, kbucket) partitions the probe's band keys land in — a
-    * strict subset of that version's files. */
-  private def assertServeReadsTouchedFiles(idx: String,
+    * scans exactly the current version's manifested files: its band
+    * files, and its tombstone list (if any) as the anti-join's side —
+    * no file of another version and no landed file no version
+    * references. */
+  private def assertServeReadsVersionFiles(idx: String,
       probeRows: org.apache.spark.sql.DataFrame): Unit = {
     import graft.plans.{MinHashIndex, Snapshots}
     val s = spark
     val bands = s"$idx/bands"
-    val touched = probeRows.where(col("band_key").isNotNull)
-      .select(col("band_id"),
-        pmod(col("band_key"), lit(MinHashIndex.KBuckets)).cast("int"))
-      .distinct().collect()
-      .map(r => s"band_id=${r.getInt(0)}/kbucket=${r.getInt(1)}/").toSet
     val path = (f: String) => new java.net.URI(f).getPath
-    val all = Snapshots.files(s, bands, Snapshots.current(s, bands).get)
-      .map(path)
-    val want = all.filter(f => touched.exists(f.contains)).toSet
-    assert(want.nonEmpty && want.size < all.size,
-      s"fixture rot: ${want.size} of ${all.size} files touched")
+    val want = Snapshots.files(s, bands, Snapshots.current(s, bands).get)
+      .map(path).toSet
+    assert(want.exists(_.contains("/band_id=")),
+      s"fixture rot: no band file manifested: ${want.take(3)}")
     val read = MinHashIndex.serveRows(s, MinHashIndex.load(s, idx),
       probeRows).inputFiles.map(path).toSet
     assert(read === want,
-      "the serve must scan exactly the touched partitions' manifested " +
-        s"files: ${(read -- want).take(3)} extra, " +
-        s"${(want -- read).take(3)} missing")
+      "the serve must scan exactly the version's manifested files: " +
+        s"${(read -- want).take(3)} extra, ${(want -- read).take(3)} missing")
   }
 
-  test("MinHash LSH index lifecycle: serve equals q31 restricted to probe×resident, scan prunes to probe buckets") {
+  test("MinHash LSH index lifecycle: serve equals q31 restricted to probe×resident, scan reads the version's band files") {
     // the persisted-index serve must answer exactly what the fresh
     // all-pairs computation (q31, itself oracle-gated) says about the
     // mixed pairs: restrict q31's full-corpus pairs to (probe,
@@ -933,16 +927,15 @@ class ScaleShapeSpec extends SparkSpec {
         s"served dup-check diverges from q31's mixed pairs: " +
           s"${(served -- expected).take(3)} extra, " +
           s"${(expected -- served).take(3)} missing")
-      // the probe scan must be pruned at the FILE level by the
-      // (band_id, kbucket) partitions the batch's keys land in
-      assertServeReadsTouchedFiles(dir,
+      // the probe scan reads exactly the version's band files
+      assertServeReadsVersionFiles(dir,
         graft.plans.MinHashIndex.localize(s, probe))
       val plan = graft.plans.MinHashIndex.serve(s,
           graft.plans.MinHashIndex.load(s, dir), probe)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("SortMergeJoin"),
-        s"serve should be a broadcast probe over the pruned scan:\n${plan.take(1200)}")
+        s"serve should be a broadcast probe over the index scan:\n${plan.take(1200)}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -1359,12 +1352,13 @@ class ScaleShapeSpec extends SparkSpec {
       assert(n > 0, "delete removed no index rows — fixture rot?")
       val before = graft.plans.Snapshots.files(s, bands, v1).toSet
       val after = graft.plans.Snapshots.files(s, bands, v3)
-      // delete locality: some partitions' files carry into the purged
-      // version unchanged — an index-wide rewrite would replace every
-      // file
-      val untouched = after.count(before)
-      assert(untouched > 0 && untouched < before.size,
-        s"every partition was rewritten (${before.size} -> ${after.size}) — no delete locality")
+      // a deleted doc has a row in every band, so the purge rewrites
+      // each band_id directory's files into exactly one new file
+      val perBand = after.groupBy(f => f.take(f.lastIndexOf('/')))
+      assert(perBand.size == operators.Dedup.Bands &&
+        perBand.values.forall(_.size == 1) && !after.exists(before),
+        s"the purge did not rewrite each band into one new file " +
+          s"(${before.size} -> ${after.size}: ${after.take(3)})")
       // the surviving index must serve exactly what a fresh index over
       // the surviving residents serves
       val freshDir = s"$staging/fresh"
@@ -1636,7 +1630,7 @@ class ScaleShapeSpec extends SparkSpec {
       // it would delete files versions v2/v3 still reference
       val e = intercept[IllegalArgumentException] {
         graft.plans.IndexMaintenance.deletePartitioned(s, s"$idx/bands",
-          Seq("band_id", "kbucket"), "doc_id",
+          Seq("band_id"), "doc_id",
           docs.limit(1).select(col("doc_id")))
       }
       assert(e.getMessage.contains("manifest-committed"),
@@ -1646,8 +1640,8 @@ class ScaleShapeSpec extends SparkSpec {
     }
   }
 
-  test("MinHash committed serve reads exactly the touched partitions' " +
-      "manifested files; rows equal serveAsOf and a fresh uncommitted index") {
+  test("MinHash committed serve reads exactly the version's manifested " +
+      "band files; rows equal serveAsOf and a fresh uncommitted index") {
     val s = spark
     import graft.plans.{MinHashIndex, Snapshots}
     val staging = java.nio.file.Files.createTempDirectory("mh_touched").toString
@@ -1662,19 +1656,9 @@ class ScaleShapeSpec extends SparkSpec {
         docs.where(pmod(col("doc_id"), lit(10)) === 9))
       val probe = MinHashIndex.localize(s,
         docs.where(pmod(col("doc_id"), lit(10)) === 0))
-      val touched = probe.select(col("band_id"),
-          pmod(col("band_key"), lit(MinHashIndex.KBuckets)).cast("int"))
-        .distinct().collect().map(r => s"band_id=${r.getInt(0)}/kbucket=${r.getInt(1)}/")
-        .toSet
       val path = (f: String) => new java.net.URI(f).getPath
-      val all = Snapshots.files(s, bands, v2).map(path)
-      val want = all.filter(f => touched.exists(f.contains)).toSet
-      assert(want.nonEmpty && want.size < all.size,
-        s"fixture rot: ${want.size} of ${all.size} files touched")
+      assertServeReadsVersionFiles(idx, probe)
       val served = MinHashIndex.serveRows(s, MinHashIndex.load(s, idx), probe)
-      assert(served.inputFiles.map(path).toSet === want,
-        "the committed serve must scan exactly the touched partitions' " +
-          "manifested files")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).sorted.toSeq
       val got = rows(served)
@@ -1687,6 +1671,22 @@ class ScaleShapeSpec extends SparkSpec {
       assert(got == rows(MinHashIndex.serveRows(s,
           MinHashIndex.load(s, fresh), probe)),
         "committed serve diverges from an uncommitted index of the same docs")
+      // the bands dir now also holds files the version must not read:
+      // a landing no commit references, the pre-purge files of older
+      // versions, and (after the delete) a tombstone list the serve
+      // reads only as its anti-join side
+      val orphan = MinHashIndex.landBands(s, bands,
+        MinHashIndex.localize(s, docs.where(pmod(col("doc_id"), lit(10)) === 0)))
+      val v3 = MinHashIndex.purgeCommit(s, idx)
+      val v4 = MinHashIndex.deleteCommit(s, idx,
+        docs.where(col("doc_id") === 1L).select(col("doc_id")))
+      val v4Files = Snapshots.files(s, bands, v4).map(path)
+      val older = Snapshots.files(s, bands, v2).map(path).toSet -- v4Files
+      assert(v3 == v2 + 1 && orphan.nonEmpty && older.nonEmpty &&
+        v4Files.exists(_.contains("/deletes/")),
+        s"fixture rot: v3=$v3 v2=$v2, ${orphan.size} orphans, " +
+          s"${older.size} older files, v4 = ${v4Files.take(3)}")
+      assertServeReadsVersionFiles(idx, probe)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -2041,7 +2041,7 @@ class ScaleShapeSpec extends SparkSpec {
       // expire: drop v1, vacuum unreferenced files — an orphan from a
       // "crashed writer" goes away, every v2-referenced file stays
       val orphan = new org.apache.hadoop.fs.Path(
-        s"$bands/band_id=0/kbucket=0/orphan-crashed-writer.parquet")
+        s"$bands/band_id=0/orphan-crashed-writer.parquet")
       val (hfs, _) = graft.Fs.resolve(bands, conf)
       val out = hfs.create(orphan, true)
       out.write(Array[Byte](1, 2, 3)); out.close()
@@ -2232,14 +2232,14 @@ class ScaleShapeSpec extends SparkSpec {
           docs.join(delIds.limit(1), Seq("doc_id"))
             .select(col("doc_id"), col("text"))))
         .getMessage.contains("tombstoned"))
-      // the purge rewrites ONLY partitions holding tombstoned rows:
-      // every other v2 band file carries into v3 byte-identical
+      // the purge rewrites ONLY bands holding tombstoned rows: every
+      // other v2 band file carries into v3 byte-identical
       val tombed = s.read.option("basePath", bands).parquet(
           Snapshots.files(s, bands, v2)
             .filter(!_.startsWith(s"$bands/deletes/")): _*)
         .join(delIds, Seq("doc_id"), "left_semi")
-        .select(col("band_id"), col("kbucket")).distinct()
-        .collect().map(r => s"band_id=${r.getInt(0)}/kbucket=${r.getInt(1)}")
+        .select(col("band_id")).distinct()
+        .collect().map(r => s"band_id=${r.getInt(0)}/")
       val v3 = MinHashIndex.purgeCommit(s, idxDir)
       val v3Files = Snapshots.files(s, bands, v3).map(norm)
       assert(!v3Files.exists(_.contains("/deletes/")),
@@ -2247,14 +2247,20 @@ class ScaleShapeSpec extends SparkSpec {
       val v2Bands = Snapshots.files(s, bands, v2).map(norm)
         .filterNot(_.contains("/deletes/"))
       val untouched = v2Bands.filterNot(p => tombed.exists(p.contains))
-      assert(untouched.nonEmpty && untouched.forall(v3Files.contains),
-        "an untombstoned partition's file did not carry into v3")
+      assert(untouched.forall(v3Files.contains),
+        "an untombstoned band's file did not carry into v3")
+      // a deleted doc has a row in every band: each band is tombstoned
+      // and rewritten into exactly one fresh file
+      assert(tombed.length == operators.Dedup.Bands &&
+        tombed.forall(b => v3Files.count(_.contains(b)) == 1) &&
+        !v3Files.exists(v2Bands.contains),
+        s"v3 is not one fresh file per tombstoned band: ${v3Files.take(4)}")
       val afterPurge = fileMap()
       assert(untouched.forall(p => afterPurge.get(p) == before.get(p)),
         "a carried file changed bytes through the purge")
       assert(v3Files.forall(p =>
         untouched.contains(p) || tombed.exists(p.contains)),
-        "v3 references a fresh file outside the tombstoned partitions")
+        "v3 references a fresh file outside the tombstoned bands")
       assert(served(v3) == r2, "purge changed the served rows")
       assert(s.read.option("basePath", bands).parquet(
           Snapshots.files(s, bands, v3): _*)
@@ -2766,7 +2772,7 @@ class ScaleShapeSpec extends SparkSpec {
     }
   }
 
-  test("MinHash index compaction: fewer files, identical serve, pruning preserved") {
+  test("MinHash index compaction: fewer files, identical serve, one file per band") {
     val s = spark
     val staging = java.nio.file.Files.createTempDirectory("lsh_compact").toString
     try {
@@ -2774,8 +2780,8 @@ class ScaleShapeSpec extends SparkSpec {
       val resident = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val src = s"$staging/idx"
-      // base + two appends: each append adds one small file per
-      // touched partition — the accumulation compaction exists to undo
+      // base + two appends: each append adds one small file per band —
+      // the accumulation compaction exists to undo
       import graft.plans.{MinHashIndex, Snapshots}
       MinHashIndex.save(s,
         resident.where(col("doc_id") % 3 === 1), s"$sf/documents.parquet", src)
@@ -2795,9 +2801,11 @@ class ScaleShapeSpec extends SparkSpec {
         s"compaction did not shrink the file count ($nIn -> $nOut)")
       assert(before.nonEmpty && served() == before,
         "compacted index diverges from the pre-compaction serve")
-      // the rewrite must keep the (band_id, kbucket) layout the serve
-      // path's file-level pruning reads
-      assertServeReadsTouchedFiles(src, MinHashIndex.localize(s, probe))
+      // the rewrite leaves one file per band_id directory, and the
+      // serve reads exactly those
+      assert(nOut == operators.Dedup.Bands,
+        s"compaction left $nOut files, want one per band")
+      assertServeReadsVersionFiles(src, MinHashIndex.localize(s, probe))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
