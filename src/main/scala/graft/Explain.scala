@@ -81,7 +81,7 @@ object Explain {
     "q84b_stream_curation_ttl" -> "bounded-TTL streaming curation (fixed 300 s dedup state, at-least-once redelivery modeled in batch 4); pinned plan is the post-replay multiplicity aggregate over the sink cut",
     "q86b_knn_join_capped" -> "q86's k-NN join kernel with the chunk cap forced small — the skew path (rank-chunked candidate join) is what executes and is oracle-checked",
     "q92b_scene_groups" -> "scene grouping: frame-signature contraction + shared min-label propagation; a static shot contracts to 1 representative and 0 pairs before any join",
-    "q101b_zorder_lifecycle" -> "Z-order maintenance chain save → append (saved-grid quantization) → compact (per-zbucket z-sorted rewrite) → serve; pinned plan is the serve scan over the compacted layout with zbucket PartitionFilters",
+    "q101b_zorder_lifecycle" -> "Z-order maintenance chain save (commits v1) → appendCommit (saved-grid quantization, v2) → purgeCommit(1) (copy-on-write per-zbucket z-sorted rewrite of the fragmented buckets, v3) → serve as of the current version; the pinned plan is only the presentation sort over the materialized serve (Materialize.cut)",
     "q102_stream_stream_join" -> "watermarked stream-stream interval join (clicks x purchases within 30 min), both sides streaming: inner join emits eagerly, watermark + time bound evict both state sides; pinned plan is the post-replay assembly",
     "q102b_stream_stream_left" -> "left-outer interval join: unmatched clicks emit on watermark timeout, dual far-future sentinels (Replay.sentinelAfterStage) flush the global watermark at replay end; pinned plan is the post-replay assembly",
     "q103_ingest_loop" -> "3 sequential admit -> append rounds against a pre-staged clone of the persisted LSH index: each batch broadcast-probes the bands scan AS IT STANDS (each append adds one file per band); pinned plan is the verdict assembly over the staged per-batch results",
@@ -105,7 +105,7 @@ object Explain {
     "q119_nb_quality" -> "Naive Bayes quality gate: training is map-side-combined term counts + three scalar aggs; the (term → two class counts) model is broadcast, so scoring is scan → explode → BroadcastHashJoin → doc_id-partitioned agg — the q118 shape with a learned decision",
     "q120_kmv_source_overlap" -> "KMV cross-source overlap: corpus contributes one distinct (source, digest-hash) aggregation; bottom-k sketches + all pairwise union/intersection estimates run on sketch rows (sources × k); the exact_inter self-eval leg is the digest join a production run drops",
     "q121s_stream_ann_ingest" -> "streaming online ANN (search-then-index): each foreachBatch serves its own top-k against the cid-partitioned assignment AS IT STANDS (per-probe NProbe cells under broadcast centroids) then appends itself cid-shuffled; pinned plan is the final staged-results read",
-    "q122_ivf_refresh" -> "IVF centroid refresh: one Lloyd round as a map-side-combined groupBy(cid) over k×64 partial means, map-side reassignment under the broadcast refreshed centroids, and only DRIFTED vectors move on disk (partition-local delete + cid append); pinned plan is the post-refresh assignment read",
+    "q122_ivf_refresh" -> "IVF centroid refresh on a committed clone: one Lloyd round as a map-side-combined groupBy(cid) over k×64 partial means, map-side reassignment under the broadcast refreshed centroids, and only cells that lose a mover are rewritten, copy-on-write (landStaged + commitSelectingExpecting; no-mover cells carry their v1 files into v2); the pinned plan is only the presentation sort over the committed delta (Materialize.cut)",
     "q123_editdist_verify" -> "edit-distance verification of LSH candidates: prefix projections ride broadcast joins onto the memoized pair relation, the BANDED thresholded Levenshtein (equality short-circuit, -1 beyond LevBand) runs map-side on the pair stream's partitioning — no full O(n²) DP, no extra shuffle",
     "q124_curriculum_rank" -> "global curriculum rank via GlobalOrder: bounded difficulty-value histogram prefix-summed driver-side, broadcast offset join, within-bucket rank as a PARTITIONED window — no SinglePartition exchange anywhere",
     "q125_containment" -> "asymmetric containment scoring: distinct doc pairs from the chunk-grain candidate join, distinct-token sets ride only the two candidate-sized doc_id joins, array_intersect arithmetic map-side",
@@ -115,21 +115,21 @@ object Explain {
     "q13_rollup" -> "ROLLUP = one Expand (3 grouping combos) feeding a single two-phase aggregate — one shuffle total, same Expand family as q13b/q13c; grouping() indicators are plain projections over the spread id",
     "q28_pipeline_e2e" -> "NEEL pipeline end-to-end: to_json → ONE from_json parse per tweet (the validity rules filter the one-element array(from_json(…)) and the Generate explodes the survivor, so no conjunct re-parses) → each tweet's event assembled inside its own row (dictionary array literal filtered by instr, transformed to entity structs, array_sort, to_json) — one tweet scan, no join, no aggregate; the only shuffle is the presentation sort, so the same plan on a stream keeps no state",
     "q129_bm25_timetravel" -> "BM25 snapshot time travel: save's v1, then append/delete/purge commits that each publish only the files they landed; four as-of serves from one query — each leg's postings scan is the version's manifested file set with tbucket pruning (basePath) + pushed term predicate, tombstones broadcast-anti-joined, terms segments summed per query term, stats manifest-selected; the pinned plan is only the presentation sort over the four-leg union's Materialize.cut scan, so the serve legs' plans are not pinned here",
-    "q130_ivf_timetravel" -> "IVF snapshot time travel: append assigned map-side under broadcast centroids (only its cid partitions gain files), then q39's probed top-10 as-of v1 AND v2 — each leg a static cid IN (...) scan of its version's manifested assignment files; pinned plan is the two-leg union",
-    "q131_pq_timetravel" -> "PQ snapshot time travel: append encoded map-side under the broadcast codebooks and packed to the 8-byte layout, then the ADC top-10 as-of v1 AND v2 — each leg unpacks exactly its version's manifested code files map-side and rides the broadcast-ADC join; pinned plan is the two-leg union",
+    "q130_ivf_timetravel" -> "IVF snapshot time travel: appendCommit assigns map-side under broadcast centroids (only its cid partitions gain files, landed through landStaged), then q39's probed top-10 as-of v1 AND v2 — each leg a static cid IN (...) scan of its version's manifested assignment files; the pinned plan is only the presentation sort over the two-leg union's Materialize.cut scan",
+    "q131_pq_timetravel" -> "PQ snapshot time travel: appendCommit encodes map-side under the broadcast codebooks and packs to the 8-byte layout (new files landed through landStaged), then the ADC top-10 as-of v1 AND v2 — each leg unpacks exactly its version's manifested code files map-side and rides the broadcast-ADC join; the pinned plan is only the presentation sort over the two-leg union's Materialize.cut scan",
     "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps the band_id partition column through the explicit listing",
-    "q133_refresh_timetravel" -> "snapshot-preserving IVF centroid refresh: one map-side-combined Lloyd round + reassignment under the broadcast refreshed centroids; LOSING cells rewrite survivors as new sibling files, movers append into their new cells, the next manifest swaps the selection — v1 stays byte-identical, write amplification = touched cells; pinned plan is the committed-delta join",
+    "q133_refresh_timetravel" -> "snapshot-preserving IVF centroid refresh: one map-side-combined Lloyd round + reassignment under the broadcast refreshed centroids; LOSING cells rewrite survivors as new sibling files, movers append into their new cells, and the next manifest selects exactly those files plus the unlosing cells' v1 files — v1 stays byte-identical, write amplification = touched cells; the pinned plan is only the presentation sort over the committed delta (Materialize.cut)",
     "q134s_manifest_tail" -> "streaming manifest tailing (the Delta-source shape): per micro-batch the producer appends + commits and the consumer reads the manifest DIFF since its last-seen version into a mirror — new files only per trigger, one integer of consumer state; pinned plan is the final mirror read",
     "q135_state_timetravel" -> "cluster-state time travel: the q110 quotient increment lands through the COW MERGE-INTO (touched dbuckets rewrite as sibling files, manifest swaps the selection), then one query reads the label table as-of v1 AND v2 — the reproducibility record of a run's own dedup decisions; pinned plan is the two-leg as-of union",
-    "q136_parse_quarantine" -> "dead-letter quarantine: pure column expressions over ONE scan of the raw feed (no second pass) — reasons keyed off the parser's own corrupt-record column so the parse/quarantine split is independent of the partial-results conf; the only shuffle is the presentation sort",
+    "q136_parse_quarantine" -> "dead-letter quarantine: pure column expressions over ONE scan of the raw feed (no second pass), each record parsed ONCE behind an explode(array(from_json(…))) generator barrier (one row per raw record, null structs included) — reasons keyed off the parser's own corrupt-record column so the parse/quarantine split is independent of the partial-results conf; the only shuffle is the presentation sort",
     "q137_occ_commit_retry" -> "optimistic-concurrency commit loop: both writers' data land as ordinary parquet appends; conflict detection is one manifest stat + an atomic-rename CAS and the retry re-LISTS file names, never re-writes — pinned plan is the committed-version read (a plain pruned scan of the manifested files)",
     "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's manifested band scan (merge-on-read), the purge rewrites only bands holding tombstoned rows into one new file each (a doc has exactly Bands band rows, so a purge writes at most Bands files); pinned plan is the three-leg as-of serve union",
     "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans of the version's band files, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
     "q140_cluster_representative" -> "quality-aware dup representative: row_number window PARTITIONED by cluster_id (no SinglePartition exchange) over the memoized cluster relation joined to doc lengths — the keep-longest keep-list costs one shuffle of skinny rows, per-task work bounded by the largest cluster",
     "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); each serve leg keeps tbucket pruning + query-term pushdown, but the pinned plan is only the presentation sort over the three-leg union's Materialize.cut scan",
-    "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save/append/delete/purge as manifest commits, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; the pinned plan is only the presentation sort over the four-leg as-of serve union's Materialize.cut scan",
-    "q143_ivf_snapshot_delete" -> "committed IVF row-level delete: tombstones append under the manifested tree, version-aware serves anti-join their own version's broadcast list under the cid-pruned probe scan, the COW purge rewrites only cid cells holding tombstoned vectors (a vector lives in exactly ONE cell); pinned plan is the three-leg as-of top-k union",
-    "q144_pq_snapshot_delete" -> "committed PQ row-level delete: tombstones under codes/deletes/, ADC serves anti-join the pinned list under the broadcast lookup-table join, the COW purge rewrites only code FILES holding tombstoned rows (flat table — file granularity, commitReplacingWhere); pinned plan is the three-leg as-of ADC union",
+    "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save commits v1, appendCommit/deleteCommit/purgeCommit each commit only the files they land, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; the pinned plan is only the presentation sort over the four-leg as-of serve union's Materialize.cut scan",
+    "q143_ivf_snapshot_delete" -> "committed IVF row-level delete: tombstones land under the manifested tree, version-aware serves anti-join their own version's broadcast list under the cid-pruned probe scan, the COW purge rewrites only cid cells holding tombstoned vectors (a vector lives in exactly ONE cell) and commits only its own files; the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
+    "q144_pq_snapshot_delete" -> "committed PQ row-level delete: tombstones under codes/deletes/, ADC serves anti-join the pinned list under the broadcast lookup-table join, the COW purge rewrites only code FILES holding tombstoned rows (flat table — file granularity) and commits only its own files; the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
     "q145_stats_skipping" -> "manifest-level file statistics: the 3-day range plans over only the intersecting files of the version (driver-side bounds check against the appended stats segments — non-matching footers never open), then the exact predicate + one partial-aggregated groupBy; pinned plan is the pruned scan's file count vs the version's",
     "q146_table_delete" -> "corpus-table row-level delete: tombstones land as one file inside the manifested tree (merge-on-read — broadcast anti-join under each version's scan), the COW purge rewrites only files holding tombstoned rows via a skinny (id, input_file_name) probe under the broadcast list; pinned plan is the three-leg as-of union",
     "q147_pruned_serve" -> "generic pruned serve: the DEFAULT committed-table read path consults the FileStats sidecar — string-lane (16-char truncated, Iceberg-style) bounds drop the non-intersecting files of the source-clustered corpus from the plan before any footer opens, the pinned tombstone list still broadcast-anti-joins merge-on-read; pinned plan is the pruned scan + anti-join + exact predicate",

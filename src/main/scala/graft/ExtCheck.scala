@@ -75,7 +75,7 @@ object ExtCheck {
         s"IvfTopKRewrite did not fire under the flag:\n${pplan.take(1500)}")
       val annIds = probed.collect().map(_.getLong(0)).toSet
       spark.conf.set("spark.graft.ivfTopK", "false")
-      val cellsHit = spark.read.parquet(idx.assignPath)
+      val cellsHit = graft.plans.Snapshots.read(spark, idx.assignPath, 1)
         .where(col("vec_id").isin(annIds.toSeq.map(Long.box): _*))
         .select(col("cid")).distinct().count()
       assert(cellsHit <= graft.operators.Similarity.NProbe,
@@ -91,9 +91,12 @@ object ExtCheck {
       val twins = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .where(col("vec_id").isin(exactIds.toSeq.take(3).map(Long.box): _*))
         .withColumn("vec_id", col("vec_id") + IdOff)
-      val nApp = graft.plans.IvfTopK.append(spark, sfDir, twins)
-      assert(nApp == 3, s"append reported $nApp rows, want 3")
-      val assign = spark.read.parquet(idx.assignPath)
+      val indexDir = new org.apache.hadoop.fs.Path(idx.assignPath).getParent.toString
+      val v = graft.plans.IvfTopK.appendCommit(spark, indexDir, twins)
+      assert(v == 2, s"append committed v$v, want v2")
+      val assign = graft.plans.Snapshots.read(spark, idx.assignPath, v)
+      assert(assign.where(col("vec_id") >= IdOff).count() == 3,
+        "append did not commit exactly the three twins")
       for (origId <- exactIds.toSeq.take(3)) {
         val cids = assign
           .where(col("vec_id").isin(Long.box(origId), Long.box(origId + IdOff)))

@@ -125,10 +125,16 @@ object NeelPipeline {
     * own check order (malformed JSON → non-positive id → empty text →
     * retweet skip), so quarantine ∪ parsed = the raw feed exactly.
     * Pure column expressions over the same single scan as the parse —
-    * no second pass at 100 TB. */
-  def quarantine(raw: DataFrame, jsonCol: String = "value"): DataFrame = {
-    val t = from_json(col(jsonCol), tweetSchemaCorrupt, corruptOpts)
-    raw.withColumn("t", t)
+    * no second pass at 100 TB — and each record is parsed ONCE, behind
+    * the generator barrier [[parseTweets]] uses: `explode` of the
+    * one-element `array(from_json(…))` yields exactly one row per raw
+    * record, a null struct included, so no malformed record drops
+    * out, and the `reason` filter cannot be pushed below it with
+    * `from_json(…)` substituted into every branch. */
+  def quarantine(raw: DataFrame, jsonCol: String = "value"): DataFrame =
+    raw
+      .select(explode(array(
+        from_json(col(jsonCol), tweetSchemaCorrupt, corruptOpts))).as("t"))
       .withColumn("reason",
         // "malformed" keys off the parser's OWN corrupt-record column
         // (null input string -> null struct rides along), so the
@@ -151,7 +157,6 @@ object NeelPipeline {
         when(col("reason") === "malformed", lit(-1L))
           .otherwise(coalesce(col("t.id"), lit(-1L))).as("tweet_id"),
         col("reason"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // DEAD-LETTER QUARANTINE over a deterministically corrupted feed:

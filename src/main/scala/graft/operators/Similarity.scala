@@ -421,80 +421,30 @@ object Similarity {
       .select(col("doc_id"), col("bm25_rank"), col("cos_rank"), col("rrf"))
   }
 
-  private val indexDirMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
-
-  /** Session-scoped artifact directory for the persisted-index serve
-    * queries (q39c/q89c), one per (session, sfDir, kind): minted under
-    * the staging root, written once ([[graft.plans.PqIndex
-    * .ensureSaved]] / [[graft.plans.IvfTopK.ensureSaved]]), reclaimed
-    * at JVM exit. Bounded hooks: at most #kinds × #sfDirs per JVM. */
-  /** ONE IVF refresh step over a cid-partitioned assignment table
-    * (q122's body, package-visible so ScaleShapeSpec can assert the
-    * move locality on its own clone): refreshed centroids = per-cell
-    * dimension means (ivfModel's update arithmetic), map-side
-    * reassignment under the broadcast refreshed centroid array, and a
-    * partition-local MOVE of exactly the reassigned rows (delete from
-    * old cells + cid append) — cells without movers keep their files
-    * byte-identical. The refreshed centroid artifact is written to
-    * `centsOut` BEFORE the assignment mutation (a plan executed after
-    * the rewrite would resolve against a stale file listing). Returns
-    * (vec_id, old_cid, new_cid, moved) with new_cid read back from
-    * the MUTATED table, so an oracle gate on the result proves the
-    * disk state, not just the arithmetic. */
-  private[graft] def refreshAssignment(s: SparkSession, assignPath: String,
-      centsOut: String): DataFrame = {
-    import graft.plans.IndexMaintenance
-    val cur = graft.plans.ManifestIO.readDir(s, assignPath)
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-    val embCols = cur.schema.fieldNames.filter(c => c != "cid" && c != "v").toSeq
-    val newCents = cur.groupBy(col("cid")).agg(
-      array((0 until 64).map(i =>
-        round(avg(expr(s"v[$i]")), 6)): _*).as("cv"))
-    val carr = newCents.agg(collect_list(struct(
-      col("cid").cast("long").as("cid"), col("cv"))).as("carr"))
-    val delta = graft.Materialize.cut(cur
-      .crossJoin(broadcast(carr))
-      .withColumn("new_cid", element_at(
-        VectorFunctions.topCells(col("v"), col("carr"), 1), 1)
-        .getField("cid").cast("int"))
-      .select((embCols.map(col) :+ col("cid").as("old_cid")
-        :+ col("new_cid")): _*))
-    val moved = delta.where(col("old_cid") =!= col("new_cid"))
-    newCents.write.mode("overwrite").parquet(centsOut)
-    IndexMaintenance.deletePartitioned(s, assignPath,
-      Seq("cid"), "vec_id", moved.select(col("vec_id")))
-    moved.select(embCols.map(col) :+ col("new_cid").as("cid"): _*)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(assignPath)
-    val after = graft.plans.ManifestIO.readDir(s, assignPath)
-      .select(col("vec_id"), col("cid").as("new_cid"))
-    graft.Materialize.cut(
-      delta.select(col("vec_id"), col("old_cid")).join(after, Seq("vec_id")))
-      .withColumn("moved", col("old_cid") =!= col("new_cid"))
-  }
-
-  /** [[refreshAssignment]] under SNAPSHOT ISOLATION (q133) — the last
-    * in-place maintenance pass gains a manifest-committed form: the
-    * same Lloyd round + map-side reassignment, but the disk mutation
-    * is COPY-ON-WRITE. Cells that LOSE movers rewrite their surviving
-    * membership as NEW sibling files; movers append into their new
-    * cells as new files; the next manifest selects [unlosing cells'
-    * version-v files + every newly-landed file]
-    * ([[graft.plans.Snapshots.commitReplacing]] with the losing cid
-    * dirs as drop prefixes) — so a reader pinned to version v stays
-    * byte-identical while the refreshed layout commits as v+1, and
-    * write amplification is the TOUCHED cells, never the corpus.
-    * Returns (newVersion, delta (vec_id, old_cid, new_cid, moved));
-    * the refreshed centroids land at `centsOut` (the caller versions
-    * them alongside if it serves across the refresh). */
+  /** ONE IVF refresh step over a committed cid-partitioned assignment
+    * table (q122 and q133) — the drift maintenance of the vector
+    * index: refreshed centroids = per-cell dimension means (ivfModel's
+    * update arithmetic) over the current version's rows, then a
+    * map-side reassignment under the broadcast refreshed centroid
+    * array. The disk mutation is COPY-ON-WRITE: cells that LOSE movers
+    * rewrite their surviving membership as new files, movers land in
+    * their new cells as new files, and the next manifest selects
+    * [unlosing cells' version-v files + exactly those files]
+    * ([[graft.plans.Snapshots.landStaged]] +
+    * [[graft.plans.Snapshots.commitSelectingExpecting]]) — so a reader
+    * pinned to version v stays byte-identical while the refreshed
+    * layout commits as v+1, and write amplification is the TOUCHED
+    * cells, never the corpus. The refreshed centroids land at
+    * `centsOut` (the caller versions them alongside if it serves
+    * across the refresh). Returns (newVersion, delta (vec_id,
+    * old_cid, new_cid, moved)) with new_cid read back from the
+    * COMMITTED version, so an oracle gate on the result proves the
+    * manifest mutation, not just the arithmetic. */
   private[graft] def refreshAssignmentCommit(s: SparkSession,
       assignDir: String, centsOut: String): (Int, DataFrame) = {
-    import graft.plans.Snapshots
-    val v = Snapshots.current(s, assignDir).getOrElse(
-      throw new IllegalStateException(
-        s"refreshAssignmentCommit: no committed version under $assignDir"))
-    val cur = Snapshots.read(s, assignDir, v)
+    import graft.plans.{Snapshots, Tombstoned}
+    val v = Tombstoned.current(s, assignDir, "refreshAssignmentCommit")
+    val cur = Tombstoned.relation(s, assignDir, v, "vec_id")
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
     val embCols = cur.schema.fieldNames.filter(c => c != "cid" && c != "v").toSeq
     val newCents = cur.groupBy(col("cid")).agg(
@@ -511,24 +461,24 @@ object Similarity {
         :+ col("new_cid")): _*))
     newCents.write.mode("overwrite").parquet(centsOut)
     // cells losing movers: bounded by k — a driver list is the right
-    // size for both the rewrite filter and the manifest drop prefixes
-    val losers = delta.where(col("old_cid") =!= col("new_cid"))
-      .select(col("old_cid")).distinct().collect().map(_.getInt(0))
-    if (losers.nonEmpty)
-      delta.where(col("old_cid").isin(losers.map(Int.box): _*) &&
-          col("old_cid") === col("new_cid"))
-        .select(embCols.map(col) :+ col("old_cid").as("cid"): _*)
+    // size for both the rewrite filter and the manifest drop set
+    val movers = delta.where(col("old_cid") =!= col("new_cid"))
+    val losers = movers.select(col("old_cid")).distinct()
+      .collect().map(_.getInt(0)).toSet
+    def cells(rows: DataFrame, cid: String, path: String): Unit =
+      rows.select(embCols.map(col) :+ col(cid).as("cid"): _*)
         .repartition(col("cid"))
-        .write.mode("append").partitionBy("cid").parquet(assignDir)
-    delta.where(col("old_cid") =!= col("new_cid"))
-      .select(embCols.map(col) :+ col("new_cid").as("cid"): _*)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(assignDir)
-    val v2 = Snapshots.commitReplacing(s, assignDir, v,
-      losers.map(c => s"cid=$c").toSeq)
-    // new_cid re-read from the COMMITTED layout, so the gate proves
-    // the manifest mutation, not just the reassignment arithmetic
-    val after = Snapshots.read(s, assignDir, v2)
+        .write.mode("append").partitionBy("cid").parquet(path)
+    val mine = Snapshots.landStaged(s, assignDir) { stage =>
+      if (losers.nonEmpty)
+        cells(delta.where(col("old_cid").isin(losers.toSeq.map(Int.box): _*) &&
+          col("old_cid") === col("new_cid")), "old_cid", stage)
+      cells(movers, "new_cid", stage)
+    }
+    val loserDirs = losers.map(c => s"cid=$c/")
+    val v2 = Snapshots.commitSelectingExpecting(s, assignDir, v,
+      f => loserDirs.exists(f.startsWith), mine)
+    val after = Tombstoned.relation(s, assignDir, v2, "vec_id")
       .select(col("vec_id"), col("cid").as("new_cid"))
     val out = graft.Materialize.cut(
       delta.select(col("vec_id"), col("old_cid")).join(after, Seq("vec_id"))
@@ -537,6 +487,14 @@ object Similarity {
     (v2, out)
   }
 
+  private val indexDirMemo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), String]()
+
+  /** Session-scoped artifact directory for the persisted-index serve
+    * queries (q39c/q89c), one per (session, sfDir, kind): minted under
+    * the staging root, written once ([[graft.plans.PqIndex
+    * .ensureSaved]] / [[graft.plans.IvfTopK.ensureSaved]]), reclaimed
+    * at JVM exit. Bounded hooks: at most #kinds × #sfDirs per JVM. */
   private def indexDir(s: SparkSession, d: String, kind: String): String =
     indexDirMemo.computeIfAbsent((s, d, kind), _ => {
       val dir = graft.Fs.createStagingDir(s, s"graft-$kind-index")
@@ -1151,8 +1109,8 @@ object Similarity {
     // assignment table AS IT STANDS for its own top-k neighbors
     // (per-probe NProbe cells under the broadcast centroid table, the
     // q100 pruning), then (b) assigns itself to the FIXED quantizer
-    // (the exact IvfTopK.append arithmetic) and appends into the cid
-    // partitions before the next trigger. So batch 2's probes can hit
+    // (the exact IvfTopK.appendCommit arithmetic) and appends into the
+    // cid partitions before the next trigger. So batch 2's probes can hit
     // batch 1's vectors but never their own batch — the online
     // "search then index" shape of an embedding landing pipeline
     // (retrieval dedup, streaming RAG corpora). The quantizer is
@@ -1245,18 +1203,19 @@ object Similarity {
     },
 
     // IVF CENTROID REFRESH — the drift-maintenance leg that completes
-    // the vector-index lifecycle {save, append, delete, compact,
-    // serve, REFRESH}: after enough appends the trained centroids no
-    // longer sit at their cells' means, so recall decays. One Lloyd
-    // round against the CURRENT membership: new centroids = per-cell
-    // dimension means (the exact ivfModel update arithmetic), then a
-    // map-side reassignment under the broadcast refreshed centroids —
-    // and ONLY the vectors whose nearest cell changed move on disk
-    // (partition-local delete from the old cells + cid append into
-    // the new; cells with no movers stay byte-identical, asserted in
-    // ScaleShapeSpec). The output reads new_cid from the REFRESHED
-    // TABLE, so the oracle gate proves the disk mutation equals the
-    // reassignment — not just that the arithmetic matches. Oracle =
+    // the vector-index lifecycle {save, append, delete, purge, serve,
+    // REFRESH}: after enough appends the trained centroids no longer
+    // sit at their cells' means, so recall decays. One Lloyd round
+    // against the CURRENT membership of a committed clone of the
+    // saved index: new centroids = per-cell dimension means (the
+    // exact ivfModel update arithmetic), then a map-side reassignment
+    // under the broadcast refreshed centroids — and ONLY the cells
+    // that lose a mover are rewritten, as new files the v2 manifest
+    // selects (copy-on-write; cells with no movers carry their v1
+    // files into v2, asserted in ScaleShapeSpec). The output reads
+    // new_cid from the COMMITTED v2, so the oracle gate proves the
+    // disk mutation equals the reassignment — not just that the
+    // arithmetic matches. Oracle =
     // the kmeans CTE chain extended by exactly one update+assign
     // round. Scale: the update is one map-side-combined groupBy(cid)
     // over (k × 64) partial means; the move volume is the DRIFT, not
@@ -1267,10 +1226,10 @@ object Similarity {
       graft.plans.IvfTopK.ensureSaved(s, d, dir)
       val staging = graft.Fs.createStagingDir(s, "graft-q122")
       try {
+        // a committed clone: the saved assignment carries its manifests
         val assignPath = s"$staging/assignment"
-        graft.Fs.copyDir(s, s"$dir/assignment",
-          assignPath)
-        refreshAssignment(s, assignPath, s"$staging/centroids")
+        graft.Fs.copyDir(s, s"$dir/assignment", assignPath)
+        refreshAssignmentCommit(s, assignPath, s"$staging/centroids")._2
           .orderBy(col("vec_id"))
       } finally graft.Fs.deleteRecursively(staging,
         s.sparkContext.hadoopConfiguration)
@@ -1463,10 +1422,9 @@ object Similarity {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, s"$idxDir/assignment").get
-        IvfTopK.appendTo(s, idxDir,
+        val v2 = IvfTopK.appendCommit(s, idxDir,
           Tables.embeddings(s, d)
             .where(pmod(col("vec_id"), lit(10)) === 9))
-        val v2 = Snapshots.commit(s, s"$idxDir/assignment")
         def leg(v: Int, tag: Int) =
           IvfTopK.serveTopKAsOf(s, idxDir, v)
             .withColumn("version", lit(tag))
@@ -1479,9 +1437,9 @@ object Similarity {
     },
 
     // SNAPSHOT-PRESERVING CENTROID REFRESH — q122's drift maintenance
-    // under manifest commits, removing the vector family's last
-    // in-place caveat: the Lloyd round and map-side reassignment are
-    // q122's exactly, but losing cells REWRITE their survivors as new
+    // over the resident-slice index of the snapshot queries: the Lloyd
+    // round, the map-side reassignment and the copy-on-write commit
+    // are q122's exactly — losing cells REWRITE their survivors as new
     // sibling files and movers append into their new cells, with the
     // next manifest selecting [unlosing cells' v1 files + the new
     // files] — version 1 stays byte-identical (tested) while the
@@ -1520,11 +1478,10 @@ object Similarity {
       try {
         val idxDir = s"$staging/idx"
         val v1 = Snapshots.current(s, s"$idxDir/codes").get
-        PqIndex.append(s, idxDir,
+        val v2 = PqIndex.appendCommit(s, idxDir,
           Tables.embeddings(s, d)
             .where(pmod(col("vec_id"), lit(10)) === 9)
             .select(col("vec_id"), col("embedding")))
-        val v2 = Snapshots.commit(s, s"$idxDir/codes")
         def leg(v: Int, tag: Int) =
           PqIndex.serveAsOf(s, idxDir, v).withColumn("version", lit(tag))
         // materialized before the finally reclaims the staging dir
@@ -1636,7 +1593,6 @@ object Similarity {
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         graft.Fs.deleteRecursively(dir)))
       graft.plans.IvfTopK.ensureSaved(s, residentEmbDir(s, d), s"$dir/idx")
-      graft.plans.Snapshots.commit(s, s"$dir/idx/assignment")
       dir
     })
 
@@ -1653,7 +1609,6 @@ object Similarity {
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         graft.Fs.deleteRecursively(dir)))
       graft.plans.PqIndex.ensureSaved(s, residentEmbDir(s, d), s"$dir/idx")
-      graft.plans.Snapshots.commit(s, s"$dir/idx/codes")
       dir
     })
 
@@ -2358,7 +2313,7 @@ object Similarity {
     // (vec_id % 10 <> 9 — `n` is redefined to it, so kmeansCtes
     // applies verbatim and seeds/k/centroids mirror the staged table
     // ivfModel trains on); the appended slice is assigned to the FINAL
-    // centroids with the same argmin (appendTo's map-side assignment),
+    // centroids with the same argmin (appendCommit's map-side assignment),
     // and each version leg is q39's probed top-10 over its own
     // population — the probe cells are version-independent because an
     // append never retrains.
@@ -2403,7 +2358,7 @@ object Similarity {
     // redefined, pqCtes verbatim — seeds/codebooks mirror the staged
     // table pqModel trains on), the appended slice's subvectors
     // assigned to the FINAL codebooks with the same (dist, cid) argmin
-    // (PqIndex.append's encoding), one ADC top-10 per version.
+    // (PqIndex.appendCommit's encoding), one ADC top-10 per version.
     val pqTimetravelSql =
       s"""WITH e AS (
          |  SELECT vec_id, label, $vecSql AS v FROM embeddings),

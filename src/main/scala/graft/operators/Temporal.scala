@@ -403,30 +403,27 @@ object Temporal {
     },
 
     // The FULL Z-order maintenance lifecycle under the oracle gate:
-    // cluster half the table, APPEND the other half (quantized under
-    // the saved grid — an append must not shift the residents'
-    // layout), COMPACT the fragmented zbuckets back to one z-sorted
-    // file each, and serve the box from the compacted layout. Same
-    // oracle as q101 — the driver gate proves save → append → compact
+    // cluster half the table (v1), APPEND the other half (quantized
+    // under the saved grid — an append must not shift the residents'
+    // layout; v2), PURGE the fragmented zbuckets back to one z-sorted
+    // file each (a copy-on-write purgeCommit(1) with no tombstones;
+    // v3), and serve the box from the current version. Same oracle as
+    // q101 — the oracle gate proves save → appendCommit → purgeCommit
     // → serve loses and invents nothing. Each invocation builds its
     // own layout (the mutation IS the operator); q101 stays the
     // serve-only path over the shared artifact.
     "q101b_zorder_lifecycle" -> { (s, d) =>
+      import graft.plans.ZOrderLayout
       val rows = Tables.events(s, d).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val staging = graft.Fs.createStagingDir(s, "graft-zorder-life")
       try {
-        val src = s"$staging/layout"
-        graft.plans.ZOrderLayout.save(s,
-          rows.where(col("event_id") % 2 === 0), src)
-        graft.plans.ZOrderLayout.append(s, src,
-          rows.where(col("event_id") % 2 === 1))
-        val dest = s"$staging/layout_c"
-        graft.plans.ZOrderLayout.compact(s, src, dest)
-        val h = graft.plans.ZOrderLayout.load(s, dest)
+        val dir = s"$staging/layout"
+        val h = ZOrderLayout.save(s, rows.where(col("event_id") % 2 === 0), dir)
+        ZOrderLayout.appendCommit(s, dir, rows.where(col("event_id") % 2 === 1))
+        ZOrderLayout.purgeCommit(s, dir)
         // materialized before the finally reclaims the layout files
-        graft.Materialize.cut(
-            graft.plans.ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0))
+        graft.Materialize.cut(ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0))
           .orderBy(col("event_id"))
       } finally graft.Fs.deleteRecursively(staging,
         s.sparkContext.hadoopConfiguration)
@@ -453,8 +450,8 @@ object Temporal {
       val staging = graft.Fs.createStagingDir(s, "graft-zorder-snap")
       try {
         val dir = s"$staging/layout"
-        val (_, v1) = ZOrderLayout.saveCommit(s,
-          rows.where(col("event_id") % 2 === 0), dir)
+        val h = ZOrderLayout.save(s, rows.where(col("event_id") % 2 === 0), dir)
+        val v1 = graft.plans.Snapshots.current(s, h.dataPath).get
         val v2 = ZOrderLayout.appendCommit(s, dir,
           rows.where(col("event_id") % 2 === 1))
         val v3 = ZOrderLayout.deleteCommit(s, dir,

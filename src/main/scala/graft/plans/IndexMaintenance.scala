@@ -3,39 +3,16 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Shared IN-PLACE maintenance passes for the persisted indexes and
-  * state tables that still have an uncommitted lifecycle
-  * ([[IvfTopK]], [[ZOrderLayout]], the label tables; [[MinHashIndex]]
-  * and [[Bm25Index]] are snapshot-committed only): every
-  * append lifecycle accumulates one small file per touched partition
-  * per ingest batch, so after N batches the serve scan pays N× the
-  * per-file open/footer cost — the lakehouse small-file problem,
-  * applied to index artifacts. Each index exposes a `compact` built
-  * from these helpers; the layout-preserving rewrite here is the
-  * shared core.
+/** Shared IN-PLACE maintenance passes for the label tables that still
+  * have an uncommitted lifecycle (the cluster-label tables of
+  * [[graft.operators.Dedup]] and [[graft.operators.TextAnalysis]]).
+  * Every index family — [[MinHashIndex]], [[Bm25Index]], [[IvfTopK]],
+  * [[PqIndex]] and [[ZOrderLayout]] — is snapshot-committed only and
+  * never reaches these passes. The partition-local rewrite core here
+  * ([[swapTouchedPartitions]]) renames directories in place, so a
+  * committed dataset is refused.
   */
 object IndexMaintenance {
-
-  /** Rewrite a parquet dataset partitioned by `partitionCols` into
-    * `destDir` with ONE file per partition directory: a single shuffle
-    * by the partition key — each key hashes to exactly one task, so
-    * each partition directory gets exactly one writer — preserving the
-    * directory layout that file-level pruning reads as partition
-    * filters (a flat [[graft.sinks.Compact]] rewrite would destroy
-    * it). Rows are untouched. Returns the output data-file count. */
-  def compactPartitioned(s: SparkSession, srcDir: String, destDir: String,
-      partitionCols: Seq[String], sortCols: Seq[String] = Nil): Int = {
-    require(partitionCols.nonEmpty, "use sinks.Compact for flat datasets")
-    ManifestIO.readDir(s, srcDir)
-      .repartition(partitionCols.map(col): _*)
-      // layouts that keep rows sorted inside each partition for
-      // row-group min/max tightness (Z-order's `z`) re-sort here;
-      // plain bucketed indexes pass Nil
-      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(destDir)
-    graft.Fs.listDataFiles(destDir, s.sparkContext.hadoopConfiguration).size
-  }
 
   /** Partition-local PHYSICAL delete from a partitioned parquet
     * dataset: rows whose `matchCol` is in `ids` are removed by

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Descending, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -44,6 +44,13 @@ import graft.operators.Similarity
   * (filters, projections, the cosine itself) resolves unchanged. The
   * rewritten scan is not a registered table, so the fixed-point
   * optimizer batch cannot re-fire on its own output.
+  *
+  * The persisted index has one maintenance lifecycle, [[Tombstoned]]'s:
+  * the assignment is committed as v1 when it is saved, every later
+  * change ([[IvfTopK.appendCommit]], [[IvfTopK.deleteCommit]],
+  * [[IvfTopK.purgeCommit]]) commits only the files it landed, and
+  * every serve — the rewrite's pruned scan included — reads the
+  * current manifest.
   */
 object IvfTopK {
 
@@ -97,9 +104,16 @@ object IvfTopK {
     })
   }
 
+  /** The one assignment writer: one shuffle by cid, so each cell dir
+    * gets one file per write (the probe scan opens nprobe files, not
+    * nprobe × the writing job's task count). */
+  private def writeCells(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("cid")).write.mode(mode).partitionBy("cid").parquet(path)
+
   /** The save half of the lifecycle, unconditionally: train-or-reuse
-    * the quantizer and write assignment/centroids/meta under `base`.
-    * Shared by [[registerIndex]] (via the registry) and
+    * the quantizer, write assignment/centroids/meta under `base` and
+    * commit the assignment as snapshot v1 — an index is born
+    * committed. Shared by [[registerIndex]] (via the registry) and
     * [[ensureSaved]] (via the per-dir memo). */
   private def writeArtifacts(s: SparkSession, sfDir: String,
       base: String): IvfIndex = {
@@ -107,13 +121,10 @@ object IvfTopK {
     val (cents, assigned) = Similarity.ivfModel(s, sfDir)
     val cols = s.read.parquet(embPath).schema.fieldNames.toSeq
     val assignPath = s"$base/assignment"
-    // write-sized-for-read: one shuffle by cid so each cell dir gets
-    // one file (the probe scan opens nprobe files, not nprobe × the
-    // assignment job's task count); at warehouse scale a big cell
-    // sizes into several files via compact()'s target instead
-    assigned.select(cols.map(col) :+ col("cid"): _*)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(assignPath)
+    // the overwrite replaces the whole assignment tree, manifests included
+    writeCells(assigned.select(cols.map(col) :+ col("cid"): _*), assignPath,
+      "overwrite")
+    Snapshots.commit(s, assignPath)
     val cArr = cents.collect().map { r =>
       (r.getAs[Number]("cid").intValue(),
         r.getSeq[Double](r.fieldIndex("cv")).toArray)
@@ -139,164 +150,68 @@ object IvfTopK {
     savedDirs.computeIfAbsent((s, qualify(s, indexDir)),
       k => { writeArtifacts(s, sfDir, k._2); () })
 
-  /** Exact top-k served from the SAVED artifacts alone — q39's probed
-    * query with every model input disk-sourced: the k-row centroid
-    * table and one-row meta are read on the driver, the probe runs
-    * q39's arithmetic ([[IvfIndex.probe]]), and the scan is the
-    * cid-partitioned assignment table with a static `cid IN (...)`
+  /** Exact top-k served from the SAVED artifacts alone, as of the
+    * current snapshot — q39's probed query with every model input
+    * disk-sourced: the k-row centroid table and one-row meta are read
+    * on the driver, the probe runs q39's arithmetic
+    * ([[IvfIndex.probe]]), and the scan is the current version's
+    * cid-partitioned assignment files with a static `cid IN (...)`
     * partition filter — at 100 TB the unprobed cells' files are never
-    * opened. The embeddings table is touched only for the query row. */
-  def serveTopK(s: SparkSession, indexDir: String): org.apache.spark.sql.DataFrame = {
+    * opened. The embeddings table is touched only for the query row.
+    * An assignment dir with no snapshot is refused. */
+  def serveTopK(s: SparkSession, indexDir: String): DataFrame = {
     val base = qualify(s, indexDir)
-    serveTopKOn(s, base, assignmentRelation(s, base))
+    serveTopKOn(s, base, Tombstoned.live(s, s"$base/assignment", "vec_id"))
   }
 
-  /** [[serveTopK]] AS OF a committed snapshot version
-    * ([[Snapshots.commit]] over `indexDir/assignment`): the scan is
-    * exactly the manifested file set, `basePath`-read so the cid
-    * partition column (and the probe's file-level pruning) survives
-    * the explicit listing, with that VERSION's tombstones anti-joined
-    * (broadcast — delete-sized). Centroids/meta are train-time
-    * artifacts no append or delete touches, so one version number
-    * pins the whole serve (q130, q143). */
+  /** [[serveTopK]] AS OF a committed snapshot version of
+    * `indexDir/assignment`: the scan is exactly the manifested file
+    * set, `basePath`-read so the cid partition column (and the probe's
+    * file-level pruning) survives the explicit listing, with that
+    * VERSION's tombstones anti-joined (broadcast — delete-sized).
+    * Centroids/meta are train-time artifacts no append or delete
+    * touches, so one version number pins the whole serve (q130,
+    * q143). */
   def serveTopKAsOf(s: SparkSession, indexDir: String,
-      version: Int): org.apache.spark.sql.DataFrame = {
+      version: Int): DataFrame = {
     val base = qualify(s, indexDir)
     serveTopKOn(s, base,
-      versionRelation(s, s"$base/assignment", version))
+      Tombstoned.relation(s, s"$base/assignment", version, "vec_id"))
   }
 
-  /** Version `v`'s manifested files split into (assignment files,
-    * tombstone files) — the tombstone list lives under
-    * `assignment/deletes/` INSIDE the manifested tree, q138's shape. */
-  private def manifestPieces(s: SparkSession, assign: String,
-      v: Int): (Seq[String], Seq[String]) =
-    Snapshots.files(s, assign, v)
-      .partition(f => !f.startsWith(s"$assign/deletes/"))
-
-  /** Version `v`'s effective assignment relation: manifested cid
-    * files (basePath keeps the partition pruning) minus that
-    * version's tombstones (broadcast anti-join). */
-  private def versionRelation(s: SparkSession, assign: String,
-      v: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val (dataF, tombF) = manifestPieces(s, assign, v)
-    require(dataF.nonEmpty,
-      s"snapshot v$v under $assign references no assignment files")
-    val rel = ManifestIO.read(s, assign, dataF)
-    if (tombF.isEmpty) rel
-    else rel.join(broadcast(s.read.parquet(tombF: _*)),
-      Seq("vec_id"), "left_anti")
-  }
-
-  /** The LIVE assignment relation: a plain directory read for an
-    * uncommitted index; the CURRENT manifest's file set for a
-    * committed one (a direct read would double-count rows once a
-    * copy-on-write compaction lands merged siblings — the same guard
-    * as MinHashIndex's bands read). */
-  private def assignmentRelation(s: SparkSession,
-      base: String): org.apache.spark.sql.DataFrame =
-    Snapshots.current(s, s"$base/assignment") match {
-      case Some(v) => versionRelation(s, s"$base/assignment", v)
-      case None => ManifestIO.readDir(s, s"$base/assignment")
-    }
-
-  /** Row-level DELETE under snapshot isolation — the committed IVF
-    * index's erasure path (q138's tombstone + purge shape; the
-    * in-place [[delete]] is refused on committed datasets): the
-    * vec_ids APPEND as a tombstone file inside the manifested tree
-    * and ONE commit pins them; version-aware serves anti-join them
-    * while readers pinned to older versions still see the deleted
-    * vectors — byte-identical time travel through the delete.
-    * Deletion never retrains (centroids untouched). Double deletes
-    * refuse loudly. Returns the committed version. */
+  /** Row-level DELETE under snapshot isolation: the vec_ids land as a
+    * tombstone file inside the manifested tree and ONE commit pins
+    * them; version-aware serves anti-join them while readers pinned to
+    * older versions still see the deleted vectors — byte-identical
+    * time travel through the delete. Deletion never retrains
+    * (centroids untouched). Double deletes refuse loudly. Returns the
+    * committed version. */
   def deleteCommit(s: SparkSession, indexDir: String,
-      deleteIds: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.functions.broadcast
-    val assign = s"${qualify(s, indexDir)}/assignment"
-    val v = Snapshots.current(s, assign).getOrElse(
-      throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $assign — the " +
-          "in-place lifecycle deletes via delete()"))
-    val staged = graft.Materialize.cut(
-      deleteIds.select(col("vec_id")).distinct())
-    val tombF = manifestPieces(s, assign, v)._2
-    if (tombF.nonEmpty) {
-      val clash = staged
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("vec_id"),
-          "left_semi").count()
-      require(clash == 0L,
-        s"deleteCommit: $clash vec_id(s) are already tombstoned as of " +
-          s"v$v — a repeated delete is a caller bug")
-    }
-    staged.coalesce(1).write.mode("append").parquet(s"$assign/deletes")
-    graft.Materialize.release(staged)
-    Snapshots.commitReplacing(s, assign, v, Nil)
-  }
+      deleteIds: DataFrame): Int =
+    Tombstoned.deleteCommit(s, s"${qualify(s, indexDir)}/assignment",
+      deleteIds, "vec_id")
 
-  /** COPY-ON-WRITE tombstone-purge compaction for a committed IVF
-    * index, PARTITION-LOCAL on cid — locality here is even better
-    * than the band index's (each vector lives in exactly ONE cid
-    * partition, so the purge touches at most |deleted distinct
-    * cells| partitions): cells holding a tombstoned row or more than
-    * `maxFiles` files rewrite their survivors as new sibling files;
-    * everything else carries verbatim into the next manifest, which
-    * drops the tombstone list. Returns the committed version
-    * (unchanged when there is nothing to purge or merge). */
+  /** COPY-ON-WRITE tombstone-purge compaction, PARTITION-LOCAL on cid
+    * (each vector lives in exactly ONE cid partition, so a purge
+    * touches at most |deleted distinct cells| partitions): cells
+    * holding a tombstoned row or more than `maxFiles` files rewrite
+    * their survivors as one new file each; everything else carries
+    * verbatim into the next manifest, which drops the tombstone list.
+    * Returns the committed version (unchanged when there is nothing
+    * to purge or merge). */
   def purgeCommit(s: SparkSession, indexDir: String,
-      maxFiles: Int = 1): Int = {
-    import org.apache.spark.sql.functions.broadcast
-    val assign = s"${qualify(s, indexDir)}/assignment"
-    val v = Snapshots.current(s, assign).getOrElse(
-      throw new IllegalStateException(
-        s"purgeCommit: no committed snapshot under $assign"))
-    val (dataF, tombF) = manifestPieces(s, assign, v)
-    def cellOf(f: String): Int = f.split('/')
-      .find(_.startsWith("cid="))
-      .map(_.stripPrefix("cid=").toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"purgeCommit: no cid= segment in $f"))
-    val fragged: Set[Int] = dataF.groupBy(cellOf)
-      .collect { case (c, fl) if fl.size > maxFiles => c }.toSet
-    val tombed: Set[Int] =
-      if (tombF.isEmpty) Set.empty
-      else ManifestIO.read(s, assign, dataF)
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("vec_id"),
-          "left_semi")
-        .select(col("cid")).distinct()
-        .collect().map(_.getInt(0)).toSet
-    val touched = fragged ++ tombed
-    if (touched.isEmpty && tombF.isEmpty) return v
-    if (touched.nonEmpty) {
-      val files = dataF.filter(f => touched(cellOf(f)))
-      val cur = ManifestIO.read(s, assign, files)
-      val purged =
-        if (tombF.isEmpty) cur
-        else cur.join(broadcast(s.read.parquet(tombF: _*)),
-          Seq("vec_id"), "left_anti")
-      val merged = graft.Materialize.cut(purged)
-      merged.repartition(col("cid"))
-        .write.mode("append").partitionBy("cid").parquet(assign)
-      graft.Materialize.release(merged)
-    }
-    Snapshots.commitReplacing(s, assign, v,
-      touched.toSeq.sorted.map(c => s"cid=$c") :+ "deletes")
-  }
+      maxFiles: Int = 1): Int =
+    Tombstoned.purgeCommit(s, s"${qualify(s, indexDir)}/assignment",
+      "vec_id", maxFiles, Tombstoned.segment("cid"))(writeCells(_, _, "append"))
 
-  /** The serve body over an arbitrary assignment RELATION (live dir or
-    * a snapshot file set): q39's probe arithmetic from the saved
-    * centroids, static `cid IN (...)` pruning, broadcast query row. */
+  /** The serve body over an assignment RELATION (a snapshot file
+    * set): q39's probe arithmetic from the saved centroids, static
+    * `cid IN (...)` pruning, broadcast query row. */
   private def serveTopKOn(s: SparkSession, base: String,
-      assignRel: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      assignRel: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, expr}
-    val embPath = s.read.parquet(s"$base/meta").head().getString(0)
-    val cArr = s.read.parquet(s"$base/centroids").collect().map { r =>
-      (r.getAs[Number]("cid").intValue(),
-        r.getSeq[Double](r.fieldIndex("cv")).toArray)
-    }.sortBy(_._1)
-    val idx = IvfIndex(embPath, s"$base/assignment", cArr)
-    val q = s.read.parquet(embPath).where(col("vec_id") === 0)
+    val idx = readIndex(s, base)
+    val q = s.read.parquet(idx.embPath).where(col("vec_id") === 0)
     val qvec = q.select(expr("transform(embedding, x -> CAST(x AS DOUBLE))")
       .as("qv")).head().getSeq[Double](0).toArray
     val probed = idx.probe(qvec)
@@ -310,128 +225,59 @@ object IvfTopK {
       .limit(10)
   }
 
-  /** Re-register a saved index from disk — no retraining, no scan of
-    * the corpus; the driver reads back only the k-row centroid table
-    * and the one-row meta. */
-  def load(s: SparkSession, indexDir: String): IvfIndex = {
-    val base = qualify(s, indexDir)
-    val embPath = s.read.parquet(s"$base/meta").head().getString(0)
-    registry.computeIfAbsent(embPath, _ => {
-      val cArr = s.read.parquet(s"$base/centroids").collect().map { r =>
-        (r.getAs[Number]("cid").intValue(),
-          r.getSeq[Double](r.fieldIndex("cv")).toArray)
-      }.sortBy(_._1)
-      IvfIndex(embPath, s"$base/assignment", cArr)
-    })
-  }
-
-  /** Retention DELETE — remove vec_ids from the assignment relation by
-    * rewriting only the cid partitions that hold them (the generic
-    * partition-local erasure; centroids/meta untouched — deletion
-    * never retrains). Returns the rows removed. */
-  def delete(s: SparkSession, indexDir: String, deleteIds:
-      org.apache.spark.sql.DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${qualify(s, indexDir)}/assignment",
-      Seq("cid"), "vec_id", deleteIds)
-
-  /** COMPACTION — collapse the assignment relation back to one file
-    * per cid partition after append accumulation, preserving the
-    * partition layout the probe path prunes on; centroids and meta are
-    * copied verbatim. Writes to a NEW directory (the swap is the
-    * caller's pointer flip); the compacted dir serves via [[load]] /
-    * [[serveTopK]] like any saved index. Returns the assignment file
-    * count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = qualify(s, srcDir)
-    val dest = qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/assignment", s"$dest/assignment", Seq("cid"))
-    for (piece <- Seq("centroids", "meta"))
-      graft.Fs.copyDir(s, s"$src/$piece", s"$dest/$piece")
-    n
-  }
-
-  /** Incremental index maintenance — production corpora APPEND. New
-    * vectors are assigned to the EXISTING trained centroids (the exact
-    * q39/ivfModel arithmetic: l2² in left-to-right double order,
-    * (dist, cid) tiebreak) and written with dynamic-partition append,
-    * so only the cid partitions the new rows land in gain files — no
-    * retrain, no rescan of the resident corpus, and the registered
-    * [[IvfIndex]] (paths + centroids) is unchanged. `newRows` must
-    * carry the embeddings table's columns with fresh vec_ids (id
-    * collisions are the caller's contract, as with any append-only
-    * table). Returns the number of appended rows. */
-  def append(s: SparkSession, sfDir: String, newRows:
-      org.apache.spark.sql.DataFrame): Long = {
-    val embPath = qualify(s, s"$sfDir/embeddings.parquet")
-    val idx = Option(registry.get(embPath)).getOrElse(throw
-      new IllegalStateException(s"no IVF index registered for $embPath — " +
-        "registerIndex or load first"))
-    appendAssigned(s, idx, newRows)
-  }
-
-  /** [[append]] addressed by index DIRECTORY instead of the session
-    * registry: the trained centroids are read back from the saved
-    * artifacts and the batch lands on `indexDir/assignment` — the form
-    * a cloned or snapshot-committed index mutates (q130), where the
-    * registry's embPath-keyed entry would point at the WRONG
-    * assignment dir. Returns the appended row count. */
-  def appendTo(s: SparkSession, indexDir: String, newRows:
-      org.apache.spark.sql.DataFrame): Long = {
-    val base = qualify(s, indexDir)
+  /** The saved index under `base` — the driver reads back only the
+    * k-row centroid table and the one-row meta. */
+  private def readIndex(s: SparkSession, base: String): IvfIndex = {
     val embPath = s.read.parquet(s"$base/meta").head().getString(0)
     val cArr = s.read.parquet(s"$base/centroids").collect().map { r =>
       (r.getAs[Number]("cid").intValue(),
         r.getSeq[Double](r.fieldIndex("cv")).toArray)
     }.sortBy(_._1)
-    appendAssigned(s, IvfIndex(embPath, s"$base/assignment", cArr), newRows)
+    IvfIndex(embPath, s"$base/assignment", cArr)
   }
 
-  private def appendAssigned(s: SparkSession, idx: IvfIndex, newRows:
-      org.apache.spark.sql.DataFrame): Long = {
+  /** Re-register a saved index from disk — no retraining, no scan of
+    * the corpus. */
+  def load(s: SparkSession, indexDir: String): IvfIndex = {
+    val idx = readIndex(s, qualify(s, indexDir))
+    registry.computeIfAbsent(idx.embPath, _ => idx)
+  }
+
+  /** Incremental index maintenance — production corpora APPEND. New
+    * vectors are assigned to the EXISTING trained centroids (the exact
+    * q39/ivfModel arithmetic: l2² in left-to-right double order,
+    * (dist, cid) tiebreak), so only the cid partitions the new rows
+    * land in gain files — no retrain, no rescan of the resident
+    * corpus, and a registered [[IvfIndex]] (paths + centroids) is
+    * unchanged. `newRows` must carry the embeddings table's columns;
+    * every input row gets its own assignment, so duplicate vec_ids in
+    * a batch are appended as-is (id uniqueness is the caller's
+    * contract). Ids the base version tombstones are refused (see
+    * [[Tombstoned.appendCommit]]). The batch lands through
+    * [[Snapshots.landStaged]] and commits on top of the version read
+    * at entry; a lost race fails loudly. Returns the committed
+    * version. */
+  def appendCommit(s: SparkSession, indexDir: String,
+      newRows: DataFrame): Int = {
     import org.apache.spark.sql.functions.{broadcast, collect_list, element_at, expr, struct}
     import s.implicits._
+    val idx = readIndex(s, qualify(s, indexDir))
     val carr = idx.centroids.toSeq.toDF("cid", "cv")
       .agg(collect_list(
         struct(col("cid").cast("long").as("cid"), col("cv"))).as("carr"))
     val cols = s.read.parquet(idx.embPath).schema.fieldNames.toSeq
-    // materialize the batch ONCE: the returned count and the written
-    // rows come from the same evaluation, so a non-deterministic
-    // source can't make them diverge
-    val staged = graft.Materialize.cut(newRows)
-    // RE-INGEST RULE for a committed, tombstoned index (the
-    // MinHash/BM25 contract's vector twin): a tombstoned vec_id's
-    // physical assignment row is still on disk — re-appending it would
-    // resurrect both rows the moment purgeCommit drops the list.
-    // Tombstone-×-batch-sized broadcast check; no-op otherwise.
-    for (v <- Snapshots.current(s, idx.assignPath)) {
-      val tombF = manifestPieces(s, idx.assignPath, v)._2
-      if (tombF.nonEmpty) {
-        val clash = staged.select(col("vec_id")).distinct()
-          .join(broadcast(s.read.parquet(tombF: _*)), Seq("vec_id"),
-            "left_semi").count()
-        require(clash == 0L,
-          s"append: $clash vec_id(s) are tombstoned as of v$v under " +
-            s"${idx.assignPath} — a purgeCommit must land first")
-      }
+    Tombstoned.appendCommit(s, idx.assignPath, newRows, "vec_id") {
+      (staged, stage) =>
+        // MAP-SIDE assignment under the centroid broadcast (the
+        // TopCells kernel — exact ivfModel arithmetic and tie-breaks)
+        writeCells(staged
+          .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+          .crossJoin(broadcast(carr))
+          .withColumn("cid", element_at(
+            graft.functions.VectorFunctions.topCells(col("v"), col("carr"), 1), 1)
+            .getField("cid").cast("int"))
+          .select(cols.map(col) :+ col("cid"): _*), stage, "append")
     }
-    // MAP-SIDE assignment under the centroid broadcast (the TopCells
-    // kernel — exact ivfModel arithmetic and tie-breaks); every input
-    // row gets its own assignment, so duplicate vec_ids in a batch
-    // are appended as-is rather than silently collapsed (id
-    // uniqueness is the caller's contract, as with any append-only
-    // table)
-    val assigned = staged
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .crossJoin(broadcast(carr))
-      .withColumn("cid", element_at(
-        graft.functions.VectorFunctions.topCells(col("v"), col("carr"), 1), 1)
-        .getField("cid").cast("int"))
-      .select(cols.map(col) :+ col("cid"): _*)
-    assigned.repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(idx.assignPath)
-    staged.count()
   }
 
   def lookup(path: String): Option[IvfIndex] = Option(registry.get(path))
@@ -528,15 +374,16 @@ object IvfTopKRewrite extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** Scan of the assignment table pruned to the probed cells, its
-    * columns re-aliased to the replaced relation's attribute ids so
-    * the plan above resolves unchanged. `cid IN (...)` lands on the
-    * partition column, so downstream file pruning reads only the
-    * probed cells' files. */
+  /** Scan of the assignment table's current version (manifested files,
+    * tombstones anti-joined) pruned to the probed cells, its columns
+    * re-aliased to the replaced relation's attribute ids so the plan
+    * above resolves unchanged. `cid IN (...)` lands on the partition
+    * column, so downstream file pruning reads only the probed cells'
+    * files. */
   private def prunedScan(lr: LogicalRelation, idx: IvfTopK.IvfIndex,
       cids: Seq[Int]): LogicalPlan = {
     val s = SparkSession.active
-    val rep = s.read.parquet(idx.assignPath)
+    val rep = Tombstoned.live(s, idx.assignPath, "vec_id")
       .where(col("cid").isin(cids.map(Int.box): _*))
       .select(lr.output.map(a => col(a.name)): _*)
       .queryExecution.analyzed

@@ -19,6 +19,8 @@ import graft.operators.Similarity
   *     (vec_id, j, cid) form this replaces was 8× the rows — the one
   *     corpus-sized artifact must not pay that at 100 TB; `serve`
   *     unpacks codes back to join layout with a map-side shift/mask.
+  *     Snapshot-committed with its `deletes/` tombstone list: one
+  *     lifecycle, [[Tombstoned]]'s.
   *   - `meta/`      — the source embeddings path, so `load` can
   *     sanity-name what the artifacts were built from.
   *
@@ -32,22 +34,28 @@ object PqIndex {
   final case class Handle(embPath: String, codebookPath: String,
       codesPath: String)
 
+  /** Pack (vec_id, j, cid) code rows to one row per vector — q89's
+    * two-halves expressions verbatim, so the persisted bytes are the
+    * same code layout the oracle hash-checks. */
+  private def packed(encoded: DataFrame): DataFrame =
+    encoded.groupBy(col("vec_id")).agg(
+      expr("sum(CASE WHEN j < 4 THEN " +
+        "shiftleft(CAST(cid AS BIGINT), 8 * j) ELSE 0 END)").as("pq_code_lo"),
+      expr("sum(CASE WHEN j >= 4 THEN " +
+        "shiftleft(CAST(cid AS BIGINT), 8 * (j - 4)) ELSE 0 END)").as("pq_code_hi"))
+
   /** Train (or reuse the session-memoized) PQ model for `sfDir`'s
-    * embeddings table and persist its artifacts under `indexDir`.
+    * embeddings table, persist its artifacts under `indexDir` and
+    * commit `codes/` as snapshot v1 — an index is born committed.
     * Returns the handle `serve` consumes. */
   def save(s: SparkSession, sfDir: String, indexDir: String): Handle = {
     val base = IvfTopK.qualify(s, indexDir)
     val embPath = IvfTopK.qualify(s, s"$sfDir/embeddings.parquet")
     val (cents, encoded) = Similarity.pqModel(s, sfDir)
     cents.write.mode("overwrite").parquet(s"$base/codebooks")
-    // pack per vector — q89's two-halves expressions verbatim, so the
-    // persisted bytes are the same code layout the oracle hash-checks
-    encoded.groupBy(col("vec_id")).agg(
-      expr("sum(CASE WHEN j < 4 THEN " +
-        "shiftleft(CAST(cid AS BIGINT), 8 * j) ELSE 0 END)").as("pq_code_lo"),
-      expr("sum(CASE WHEN j >= 4 THEN " +
-        "shiftleft(CAST(cid AS BIGINT), 8 * (j - 4)) ELSE 0 END)").as("pq_code_hi"))
-      .write.mode("overwrite").parquet(s"$base/codes")
+    // the overwrite replaces the whole codes tree, manifests included
+    packed(encoded).write.mode("overwrite").parquet(s"$base/codes")
+    Snapshots.commit(s, s"$base/codes")
     import s.implicits._
     Seq(embPath).toDF("emb_path")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
@@ -66,56 +74,36 @@ object PqIndex {
       _ => save(s, sfDir, indexDir))
 
   /** Incremental index maintenance — the PQ twin of
-    * [[IvfTopK.append]]: new vectors are encoded under the EXISTING
-    * trained codebooks (the exact pqTrain assignment arithmetic — the
-    * TopCells kernel under a broadcast j equi-join, (dist, cid)
-    * tie-break), packed to q89's two-halves layout, and APPENDED to
-    * the codes table — no retrain, no rescan of the resident corpus.
-    * `newRows` must carry (vec_id, embedding) with fresh vec_ids (id
-    * collisions are the caller's contract, as with any append-only
-    * table). Returns the number of appended rows. */
-  def append(s: SparkSession, indexDir: String,
-      newRows: DataFrame): Long = {
+    * [[IvfTopK.appendCommit]]: new vectors are encoded under the
+    * EXISTING trained codebooks (the exact pqTrain assignment
+    * arithmetic — the TopCells kernel under a broadcast j equi-join,
+    * (dist, cid) tie-break), packed to q89's two-halves layout and
+    * landed as new code files — no retrain, no rescan of the resident
+    * corpus. `newRows` must carry (vec_id, embedding) with fresh
+    * vec_ids; ids the base version tombstones are refused. The batch
+    * lands through [[Snapshots.landStaged]] and commits on top of the
+    * version read at entry. Returns the committed version. */
+  def appendCommit(s: SparkSession, indexDir: String,
+      newRows: DataFrame): Int = {
     val base = IvfTopK.qualify(s, indexDir)
     val byJ = s.read.parquet(s"$base/codebooks")
       .groupBy(col("j")).agg(collect_list(
         struct(col("cid").cast("long").as("cid"), col("cv"))).as("carr"))
-    // materialize the batch ONCE: the returned count and the written
-    // rows come from the same evaluation
-    val staged = graft.Materialize.cut(newRows)
-    // RE-INGEST RULE for a committed, tombstoned index (the
-    // MinHash/BM25/IVF contract): a tombstoned vec_id's physical code
-    // row is still on disk — re-appending would resurrect both rows
-    // once purgeCommit drops the list. Broadcast, tombstone-sized.
-    for (v <- Snapshots.current(s, s"$base/codes")) {
-      val tombF = pieces(s, s"$base/codes", v)._2
-      if (tombF.nonEmpty) {
-        val clash = staged.select(col("vec_id")).distinct()
-          .join(broadcast(s.read.parquet(tombF: _*)), Seq("vec_id"),
-            "left_semi").count()
-        require(clash == 0L,
-          s"append: $clash vec_id(s) are tombstoned as of v$v under " +
-            s"$base/codes — a purgeCommit must land first")
-      }
+    Tombstoned.appendCommit(s, s"$base/codes", newRows, "vec_id") {
+      (staged, stage) =>
+        val sv = staged
+          .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+          .select(col("vec_id"),
+            posexplode(expr(s"transform(sequence(0, ${Similarity.PqM - 1}), " +
+              s"j -> slice(v, j * ${Similarity.PqSubDim} + 1, " +
+              s"${Similarity.PqSubDim}))")))
+          .select(col("vec_id"), col("pos").as("j"), col("col").as("sv"))
+        packed(sv.join(broadcast(byJ), Seq("j"))
+          .withColumn("cid", element_at(
+            graft.functions.VectorFunctions.topCells(col("sv"), col("carr"), 1), 1)
+            .getField("cid").cast("int")))
+          .write.mode("append").parquet(stage)
     }
-    val sv = staged
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .select(col("vec_id"),
-        posexplode(expr(s"transform(sequence(0, ${Similarity.PqM - 1}), " +
-          s"j -> slice(v, j * ${Similarity.PqSubDim} + 1, " +
-          s"${Similarity.PqSubDim}))")))
-      .select(col("vec_id"), col("pos").as("j"), col("col").as("sv"))
-    sv.join(broadcast(byJ), Seq("j"))
-      .withColumn("cid", element_at(
-        graft.functions.VectorFunctions.topCells(col("sv"), col("carr"), 1), 1)
-        .getField("cid").cast("int"))
-      .groupBy(col("vec_id")).agg(
-        expr("sum(CASE WHEN j < 4 THEN " +
-          "shiftleft(CAST(cid AS BIGINT), 8 * j) ELSE 0 END)").as("pq_code_lo"),
-        expr("sum(CASE WHEN j >= 4 THEN " +
-          "shiftleft(CAST(cid AS BIGINT), 8 * (j - 4)) ELSE 0 END)").as("pq_code_hi"))
-      .write.mode("append").parquet(s"$base/codes")
-    staged.count()
   }
 
   /** Reconstruct a handle from saved artifacts — no retraining, no
@@ -126,137 +114,57 @@ object PqIndex {
     Handle(embPath, s"$base/codebooks", s"$base/codes")
   }
 
-  /** ADC top-k against the SAVED artifacts (the q89b query path with
-    * disk-sourced model frames): broadcast lookup table from the
-    * reloaded codebooks, distance sum over the persisted codes —
-    * unpacked from the two 32-bit halves to (vec_id, j, cid) join
-    * layout by a map-side shift/mask projection (8 skinny rows per
-    * vector exist only inside the scan stage, never on disk). The
-    * embeddings table is touched only for the one query row. */
+  /** ADC top-k against the SAVED artifacts as of the current snapshot
+    * (the q89b query path with disk-sourced model frames): broadcast
+    * lookup table from the reloaded codebooks, distance sum over the
+    * current version's code files — unpacked from the two 32-bit
+    * halves to (vec_id, j, cid) join layout by a map-side shift/mask
+    * projection (8 skinny rows per vector exist only inside the scan
+    * stage, never on disk). The embeddings table is touched only for
+    * the one query row. A codes dir with no snapshot is refused. */
   def serve(s: SparkSession, h: Handle): DataFrame =
-    serveOn(s, h, codesRelation(s, h.codesPath))
+    serveOn(s, h, Tombstoned.live(s, h.codesPath, "vec_id"))
 
-  /** [[serve]] AS OF a committed snapshot version ([[Snapshots.commit]]
-    * over `indexDir/codes`): the codes scan is exactly the manifested
-    * file set with that VERSION's tombstones anti-joined (broadcast —
-    * delete-sized), so a reader pinned to version N is unaffected by
-    * later appends or deletes (q131, q144). Codebooks/meta are
-    * train-time artifacts no append or delete touches. */
+  /** [[serve]] AS OF a committed snapshot version of `indexDir/codes`:
+    * the codes scan is exactly the manifested file set with that
+    * VERSION's tombstones anti-joined (broadcast — delete-sized), so a
+    * reader pinned to version N is unaffected by later appends or
+    * deletes (q131, q144). Codebooks/meta are train-time artifacts no
+    * append or delete touches. */
   def serveAsOf(s: SparkSession, indexDir: String, version: Int): DataFrame = {
-    val base = IvfTopK.qualify(s, indexDir)
     val h = load(s, indexDir)
-    serveOn(s, h, versionRelation(s, s"$base/codes", version))
+    serveOn(s, h, Tombstoned.relation(s, h.codesPath, version, "vec_id"))
   }
 
-  /** Version `v`'s manifested files split into (code files, tombstone
-    * files) — tombstones live under `codes/deletes/` inside the
-    * manifested tree, q138's shape for the flat codes table. */
-  private def pieces(s: SparkSession, codes: String,
-      v: Int): (Seq[String], Seq[String]) =
-    Snapshots.files(s, codes, v)
-      .partition(f => !f.startsWith(s"$codes/deletes/"))
-
-  /** Version `v`'s effective codes relation: the manifested code
-    * files minus that version's tombstones (broadcast anti-join). */
-  private def versionRelation(s: SparkSession, codes: String,
-      v: Int): DataFrame = {
-    val (dataF, tombF) = pieces(s, codes, v)
-    require(dataF.nonEmpty,
-      s"snapshot v$v under $codes references no code files")
-    val rel = ManifestIO.read(s, codes, dataF)
-    if (tombF.isEmpty) rel
-    else rel.join(broadcast(s.read.parquet(tombF: _*)),
-      Seq("vec_id"), "left_anti")
-  }
-
-  /** Row-level DELETE under snapshot isolation — the committed PQ
-    * index's erasure path (the last index family without one): the
-    * vec_ids APPEND as a tombstone file under `codes/deletes/` and ONE
-    * commit pins them; version-aware serves anti-join them while
-    * readers pinned to older versions still see the deleted codes.
-    * Deletion never retrains (codebooks untouched — ADC distances of
-    * the survivors are bit-identical). Double deletes refuse loudly.
-    * Returns the committed version. */
+  /** Row-level DELETE under snapshot isolation: the vec_ids land as a
+    * tombstone file under `codes/deletes/` and ONE commit pins them;
+    * version-aware serves anti-join them while readers pinned to older
+    * versions still see the deleted codes. Deletion never retrains
+    * (codebooks untouched — ADC distances of the survivors are
+    * bit-identical). Double deletes refuse loudly. Returns the
+    * committed version. */
   def deleteCommit(s: SparkSession, indexDir: String,
-      deleteIds: DataFrame): Int = {
-    val codes = s"${IvfTopK.qualify(s, indexDir)}/codes"
-    val v = Snapshots.current(s, codes).getOrElse(
-      throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $codes"))
-    val staged = graft.Materialize.cut(
-      deleteIds.select(col("vec_id")).distinct())
-    val tombF = pieces(s, codes, v)._2
-    if (tombF.nonEmpty) {
-      val clash = staged
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("vec_id"),
-          "left_semi").count()
-      require(clash == 0L,
-        s"deleteCommit: $clash vec_id(s) are already tombstoned as of " +
-          s"v$v — a repeated delete is a caller bug")
-    }
-    staged.coalesce(1).write.mode("append").parquet(s"$codes/deletes")
-    graft.Materialize.release(staged)
-    Snapshots.commitReplacing(s, codes, v, Nil)
-  }
+      deleteIds: DataFrame): Int =
+    Tombstoned.deleteCommit(s, s"${IvfTopK.qualify(s, indexDir)}/codes",
+      deleteIds, "vec_id")
 
-  /** COPY-ON-WRITE tombstone-purge compaction for a committed PQ
-    * index. The codes table is FLAT (8 bytes per vector, no partition
-    * key carries the deletion locality the cid/band layouts have), so
-    * a purge rewrites the files that HOLD tombstoned rows — with the
-    * one-file-per-append layout that is still bounded by where the
-    * deleted vectors' batches landed, never by the append history of
-    * unaffected batches; file granularity is the locality unit here,
-    * the Delta/Iceberg MoR-purge trade for unpartitioned tables.
-    * Survivors land as new sibling files; the next manifest selects
-    * [untouched files + rewrites] and drops the tombstone list
-    * ([[Snapshots.commitReplacingWhere]] with the rewritten files as
-    * the drop set). Returns the committed version (unchanged with
+  /** COPY-ON-WRITE tombstone-purge compaction. The codes table is FLAT
+    * (8 bytes per vector, no partition key carries the deletion
+    * locality the cid/band layouts have), so a purge rewrites the
+    * FILES that hold tombstoned rows — with the one-file-per-append
+    * layout that is still bounded by where the deleted vectors'
+    * batches landed, never by the append history of unaffected
+    * batches; file granularity is the locality unit here, the
+    * Delta/Iceberg MoR-purge trade for unpartitioned tables. The next
+    * manifest selects [untouched files + the rewrite] and drops the
+    * tombstone list. Returns the committed version (unchanged with
     * nothing to purge). */
-  def purgeCommit(s: SparkSession, indexDir: String): Int = {
-    val codes = s"${IvfTopK.qualify(s, indexDir)}/codes"
-    val v = Snapshots.current(s, codes).getOrElse(
-      throw new IllegalStateException(
-        s"purgeCommit: no committed snapshot under $codes"))
-    val (dataF, tombF) = pieces(s, codes, v)
-    if (tombF.isEmpty) return v
-    val tomb = broadcast(s.read.parquet(tombF: _*))
-    val baseUri = new org.apache.hadoop.fs.Path(codes).toUri.getPath
-    def relOf(abs: String) =
-      new org.apache.hadoop.fs.Path(abs).toUri.getPath
-        .drop(baseUri.length + 1)
-    // which code FILES hold a tombstoned row — ONE skinny scan with
-    // input_file_name(), bounded by the tombstone count, never a
-    // per-file driver loop
-    val touched: Set[String] = ManifestIO.read(s, codes, dataF)
-      .select(col("vec_id"), input_file_name().as("f"))
-      .join(tomb, Seq("vec_id"), "left_semi")
-      .select(col("f")).distinct()
-      .collect().map(r => relOf(r.getString(0))).toSet
-    if (touched.nonEmpty) {
-      val files = dataF.filter(f => touched(relOf(f)))
-      val merged = graft.Materialize.cut(
-        ManifestIO.read(s, codes, files)
-          .join(tomb, Seq("vec_id"), "left_anti"))
-      merged.write.mode("append").parquet(codes)
-      graft.Materialize.release(merged)
-    }
-    Snapshots.commitReplacingWhere(s, codes, v,
-      f => touched.contains(f) || f.startsWith("deletes/"))
-  }
+  def purgeCommit(s: SparkSession, indexDir: String): Int =
+    Tombstoned.purgeCommit(s, s"${IvfTopK.qualify(s, indexDir)}/codes",
+      "vec_id", 1, identity)(_.write.mode("append").parquet(_))
 
-  /** The LIVE codes relation: a plain directory read for an
-    * uncommitted index; the CURRENT manifest's file set for a
-    * committed one (the same double-count guard as the MinHash/IVF
-    * families). */
-  private def codesRelation(s: SparkSession, codesPath: String): DataFrame =
-    Snapshots.current(s, codesPath) match {
-      case Some(v) => versionRelation(s, codesPath, v)
-      case None => s.read.parquet(codesPath)
-    }
-
-  /** The ADC body over an arbitrary codes RELATION (live dir or a
-    * snapshot file set): map-side shift/mask unpack, then the q89b
-    * broadcast-ADC join. */
+  /** The ADC body over a codes RELATION (a snapshot file set):
+    * map-side shift/mask unpack, then the q89b broadcast-ADC join. */
   private def serveOn(s: SparkSession, h: Handle,
       codesRel: DataFrame): DataFrame = {
     val unpacked = codesRel

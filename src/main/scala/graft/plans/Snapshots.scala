@@ -44,13 +44,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    compare-and-swap on filesystems that refuse to rename over an
   *    existing path (HDFS, object-store committers) and detects
   *    lost updates best-effort elsewhere.
-  *  - The IN-PLACE rewriting passes (compactPartitioned /
-  *    deletePartitioned) REPLACE files, so manifests older than the
-  *    rewrite dangle — run [[expire]] up to the rewrite's commit
-  *    first. [[compactCommit]] is the snapshot-PRESERVING compaction
-  *    (merged files land as new siblings; old versions keep reading
-  *    their old files until expired). The append lifecycle (the hot
-  *    path) never rewrites.
+  *  - The label tables' IN-PLACE passes ([[IndexMaintenance]]'s
+  *    upsert/delete) rename directories, so they refuse a committed
+  *    dataset. Every index family is committed only and never
+  *    rewrites a file a manifest references: its compaction is a
+  *    copy-on-write purge whose merged files land as new siblings,
+  *    and old versions keep reading their old files until expired.
   *
   * Versions are defined by the manifest files themselves
   * (`_manifests/v{N}.manifest`); there is no mutable CURRENT pointer
@@ -377,12 +376,12 @@ object Snapshots {
     * the manifest swaps the SELECTION, while older versions keep
     * reading their own files until [[expire]] reclaims them.
     * [[compactCommit]] is the same shape specialized to partition
-    * merging; the IVF, PQ and Z-order maintenance commits,
-    * [[SnapshotTable]] and the label tables' upsert use this form.
-    * Because it sweeps, any unreferenced file on disk goes live —
-    * including a refused append's landed files; writers that know
-    * their file set use [[commitSelectingExpecting]] instead (the
-    * MinHash and BM25 index families). SINGLE WRITER (`v` must be the
+    * merging; [[SnapshotTable]] and the label tables'
+    * `upsertPartitionedCommit` use this form. Because it sweeps, any
+    * unreferenced file on disk goes live — including a refused
+    * append's landed files; writers that know their file set use
+    * [[commitSelectingExpecting]] instead (every index family).
+    * SINGLE WRITER (`v` must be the
     * current version — a stale base is a lost update and is rejected);
     * unreferenced leftovers from a CRASHED past writer would be swept
     * into the new version, so after a crash run [[expire]] before
@@ -395,8 +394,9 @@ object Snapshots {
   /** [[commitReplacing]] with an arbitrary drop PREDICATE over
     * dataDir-relative paths — for flat (un-partitioned) artifacts
     * whose replaced files sit at the dataset root rather than under a
-    * directory prefix (the PQ codes purge drops individual part
-    * files). Same single-writer/orphan-sweep contract. */
+    * directory prefix ([[SnapshotTable]]'s flat purge drops
+    * individual part files). Same single-writer/orphan-sweep
+    * contract. */
   def commitReplacingWhere(s: SparkSession, dataDir: String, v: Int,
       drop: String => Boolean): Int = {
     require(current(s, dataDir).contains(v),
@@ -419,8 +419,9 @@ object Snapshots {
     * so two uncoordinated writers may land data files CONCURRENTLY
     * without writer A's commit absorbing writer B's half-landed batch;
     * each commit selects exactly its own tracked additions. Every
-    * commit the MinHash and BM25 index families make after `save` —
-    * append, delete, purge — goes through here.
+    * commit an index family makes after `save` — append, delete,
+    * purge, in the MinHash, BM25, IVF, PQ and Z-order families, and
+    * the IVF centroid refresh — goes through here.
     * Same CAS + readback discipline as [[commitExpecting]]. */
   def commitSelectingExpecting(s: SparkSession, dataDir: String,
       expected: Int, drop: String => Boolean,

@@ -147,14 +147,41 @@ object ZOrderLayout {
     math.min((1 << QBits) - 1, math.max(0, q))
   }
 
+  /** `rows` with the grid's Morton code `z` and coarse `zbucket`
+    * columns: a map-side quantize + interleave under (uMin, uMax,
+    * vMin, vMax). */
+  private def clustered(rows: DataFrame, uMin: Long, uMax: Long,
+      vMin: Double, vMax: Double): DataFrame = {
+    val qu = quantU(col("user_id"), uMin, uMax)
+    val qv = quantV(col("value"), vMin, vMax)
+    val hi = QBits - HiBits
+    rows
+      .withColumn("z", interleave(qu, qv, QBits))
+      .withColumn("zbucket",
+        interleave(shiftright(qu, hi), shiftright(qv, hi), HiBits))
+  }
+
+  /** The one layout writer: one shuffle by zbucket and a sorted write,
+    * so each write lands one z-sorted file per bucket it touches. */
+  private def writeBuckets(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("zbucket"))
+      .sortWithinPartitions(col("zbucket"), col("z"))
+      .write.mode(mode).partitionBy("zbucket").parquet(path)
+
   /** Rewrite `rows` — (event_id, user_id, event_type, value) — into
-    * the Z-clustered layout under `layoutDir`: one stats pass for the
-    * dimension ranges, then a map-side quantize + interleave, one
-    * shuffle by zbucket, and a sorted write. The one-off clustering
-    * job a table pays per version to make every later range query
-    * prune. */
+    * the Z-clustered layout under `layoutDir` and commit `data/` as
+    * snapshot v1: one stats pass for the dimension ranges, then a
+    * map-side quantize + interleave, one shuffle by zbucket, and a
+    * sorted write. The one-off clustering job a table pays per version
+    * to make every later range query prune. Refuses a layout that is
+    * already committed (the overwrite would destroy files every
+    * manifest references — recluster into a fresh dir instead). */
   def save(s: SparkSession, rows: DataFrame, layoutDir: String): Handle = {
     val base = IvfTopK.qualify(s, layoutDir)
+    require(Snapshots.current(s, s"$base/data").isEmpty,
+      s"ZOrderLayout.save: $layoutDir is already manifest-committed — the " +
+        "overwrite would destroy committed files; recluster into a fresh " +
+        "dir and retarget readers instead")
     val st = rows.agg(
       min(col("user_id")).as("u_min"), max(col("user_id")).as("u_max"),
       min(col("value")).as("v_min"), max(col("value")).as("v_max")).head()
@@ -164,17 +191,9 @@ object ZOrderLayout {
       s"ZOrderLayout.save: input has no rows — nothing to cluster under $layoutDir")
     val (uMin, uMax) = (st.getLong(0), st.getLong(1))
     val (vMin, vMax) = (st.getDouble(2), st.getDouble(3))
-    val qu = quantU(col("user_id"), uMin, uMax)
-    val qv = quantV(col("value"), vMin, vMax)
-    val hi = QBits - HiBits
-    rows
-      .withColumn("z", interleave(qu, qv, QBits))
-      .withColumn("zbucket",
-        interleave(shiftright(qu, hi), shiftright(qv, hi), HiBits))
-      .repartition(col("zbucket"))
-      .sortWithinPartitions(col("zbucket"), col("z"))
-      .write.mode("overwrite").partitionBy("zbucket")
-      .parquet(s"$base/data")
+    writeBuckets(clustered(rows, uMin, uMax, vMin, vMax), s"$base/data",
+      "overwrite")
+    Snapshots.commit(s, s"$base/data")
     import s.implicits._
     Seq((uMin, uMax, vMin, vMax)).toDF("u_min", "u_max", "v_min", "v_max")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
@@ -192,192 +211,68 @@ object ZOrderLayout {
     savedDirs.computeIfAbsent((s, IvfTopK.qualify(s, layoutDir)),
       _ => save(s, rows, layoutDir))
 
-  /** Incremental maintenance — the layout twin of the index appends:
-    * new rows are quantized under the SAVED dimension stats (an append
-    * must not shift the grid the resident files were clustered by) and
-    * appended into their zbucket partitions; out-of-range values clamp
-    * into the edge cells, which stays CORRECT (serve's exact residual
-    * predicate decides membership, and its widened box covers the edge
-    * cells whenever the query range reaches past the saved min/max) —
-    * only pruning efficiency for outliers degrades until the next
-    * re-cluster. Returns the appended row count. */
-  def append(s: SparkSession, layoutDir: String, newRows: DataFrame): Long = {
-    val base = IvfTopK.qualify(s, layoutDir)
-    val h = load(s, layoutDir)
-    val staged = graft.Materialize.cut(newRows)
-    val qu = quantU(col("user_id"), h.uMin, h.uMax)
-    val qv = quantV(col("value"), h.vMin, h.vMax)
-    val hi = QBits - HiBits
-    staged
-      .withColumn("z", interleave(qu, qv, QBits))
-      .withColumn("zbucket",
-        interleave(shiftright(qu, hi), shiftright(qv, hi), HiBits))
-      .repartition(col("zbucket"))
-      .sortWithinPartitions(col("zbucket"), col("z"))
-      .write.mode("append").partitionBy("zbucket")
-      .parquet(s"$base/data")
-    staged.count()
-  }
-
-  /** Retention DELETE — remove event_ids from the clustered layout by
-    * rewriting only the zbucket partitions that hold them; the saved
-    * grid (meta) is untouched, so serve's quantization is unchanged.
-    * Returns the rows removed. */
-  def delete(s: SparkSession, layoutDir: String,
-      deleteIds: DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${IvfTopK.qualify(s, layoutDir)}/data",
-      Seq("zbucket"), "event_id", deleteIds, sortCols = Seq("z"))
-
   // --------------------------------------------------------------------
-  // SNAPSHOT LIFECYCLE (manifest-committed form, q142) — the TABLE
-  // layout was the one lifecycle family with no [[Snapshots]]
-  // integration (its compact even wrote to a destDir with a manual
-  // pointer flip — exactly the hazard the manifest rename removes),
-  // which meant the biggest artifact of all had no time travel while
-  // every index derived FROM it did. One manifest spans `data/` —
-  // the zbucket partitions plus the tombstone list the committed
-  // delete appends under `data/deletes/` — so a single version number
-  // pins rows + applicable deletes together; `meta/` (the quantizer
-  // grid) is a save-time artifact no mutation touches, like IVF's
-  // centroids. Same crash protocol as the other committed families:
-  // a mutation that dies pre-commit leaves the current version intact
+  // ONE LIFECYCLE ([[Tombstoned]]'s): one manifest spans `data/` — the
+  // zbucket partitions plus the tombstone list [[deleteCommit]] lands
+  // under `data/deletes/` — so a single version number pins rows +
+  // applicable deletes together; `meta/` (the quantizer grid) is a
+  // save-time artifact no mutation touches, like IVF's centroids. A
+  // mutation that dies pre-commit leaves the current version intact
   // and only expire()-reclaimable orphans behind.
   // --------------------------------------------------------------------
 
-  /** [[save]] + manifest commit: the clustered layout becomes version
-    * 1 of a time-travelable table. Refuses to overwrite an
-    * already-committed layout (the overwrite would destroy files
-    * every manifest references — recluster into a fresh dir instead). */
-  def saveCommit(s: SparkSession, rows: DataFrame,
-      layoutDir: String): (Handle, Int) = {
-    val data = s"${IvfTopK.qualify(s, layoutDir)}/data"
-    require(Snapshots.current(s, data).isEmpty,
-      s"saveCommit: $layoutDir is already manifest-committed — save's " +
-        "overwrite would destroy committed files; recluster into a " +
-        "fresh dir and retarget readers instead")
-    val h = save(s, rows, layoutDir)
-    (h, Snapshots.commit(s, data))
-  }
-
-  /** [[append]] + manifest commit: new rows quantize under the SAVED
-    * grid and land in their zbucket partitions as new files; the next
-    * manifest selects them while readers pinned to older versions stay
-    * byte-identical. Returns the committed version. */
+  /** Incremental maintenance: new rows are quantized under the SAVED
+    * grid (an append must not shift the grid the resident files were
+    * clustered by) and land in their zbucket partitions as new files;
+    * out-of-range values clamp into the edge cells, which stays
+    * CORRECT (serve's exact residual predicate decides membership, and
+    * its widened box covers the edge cells whenever the query range
+    * reaches past the saved min/max) — only pruning efficiency for
+    * outliers degrades until the next re-cluster. Event ids the base
+    * version tombstones are refused, naming them: their old rows are
+    * still on disk, so the new row would be anti-joined away and then
+    * dropped with the old one by [[purgeCommit]]. Readers pinned to
+    * older versions stay byte-identical. Returns the committed
+    * version. */
   def appendCommit(s: SparkSession, layoutDir: String,
       newRows: DataFrame): Int = {
-    append(s, layoutDir, newRows)
-    Snapshots.commit(s, s"${IvfTopK.qualify(s, layoutDir)}/data")
+    val h = load(s, layoutDir)
+    Tombstoned.appendCommit(s, h.dataPath, newRows, "event_id") {
+      (staged, stage) =>
+        writeBuckets(clustered(staged, h.uMin, h.uMax, h.vMin, h.vMax),
+          stage, "append")
+    }
   }
 
   /** Row-level DELETE under snapshot isolation — the tombstone shape
-    * of the committed index families ([[MinHashIndex.deleteCommit]])
-    * applied to the table layout: the event_ids APPEND as a tombstone
-    * file inside the manifested tree and ONE commit pins them;
-    * version-aware reads anti-join them (broadcast — delete-sized)
-    * while readers pinned to older versions never see them.
-    * [[purgeCommit]] later rewrites exactly the zbucket partitions
-    * holding tombstoned rows and drops the list. Ids already
-    * tombstoned as of the current version are refused (a double
-    * delete is a caller bug). Returns the committed version. */
+    * of the committed index families: the event_ids land as a
+    * tombstone file inside the manifested tree and ONE commit pins
+    * them; version-aware reads anti-join them (broadcast —
+    * delete-sized) while readers pinned to older versions never see
+    * them. [[purgeCommit]] later rewrites exactly the zbucket
+    * partitions holding tombstoned rows and drops the list. Ids
+    * already tombstoned as of the current version are refused (a
+    * double delete is a caller bug). Returns the committed version. */
   def deleteCommit(s: SparkSession, layoutDir: String,
-      deleteIds: DataFrame): Int = {
-    val data = s"${IvfTopK.qualify(s, layoutDir)}/data"
-    val v = Snapshots.current(s, data).getOrElse(
-      throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $data — the " +
-          "in-place lifecycle deletes via delete()"))
-    val staged = graft.Materialize.cut(
-      deleteIds.select(col("event_id")).distinct())
-    val tombF = pieces(s, data, v)._2
-    if (tombF.nonEmpty) {
-      val clash = staged
-        .join(org.apache.spark.sql.functions.broadcast(
-          s.read.parquet(tombF: _*)), Seq("event_id"), "left_semi")
-        .count()
-      require(clash == 0L,
-        s"deleteCommit: $clash event_id(s) are already tombstoned as " +
-          s"of v$v — a repeated delete is a caller bug")
-    }
-    staged.coalesce(1).write.mode("append").parquet(s"$data/deletes")
-    graft.Materialize.release(staged)
-    Snapshots.commitReplacing(s, data, v, Nil)
-  }
+      deleteIds: DataFrame): Int =
+    Tombstoned.deleteCommit(s, s"${IvfTopK.qualify(s, layoutDir)}/data",
+      deleteIds, "event_id")
 
-  /** COPY-ON-WRITE tombstone-purge compaction for a committed layout,
-    * PARTITION-LOCAL ([[MinHashIndex.purgeCommit]]'s shape with the
-    * Z-order twist that rewritten partitions re-sort by the full
+  /** COPY-ON-WRITE tombstone-purge compaction, PARTITION-LOCAL, with
+    * the Z-order twist that rewritten partitions re-sort by the full
     * Morton code — appends interleave their own z-sorted files with
     * the residents', so the merge is also where row-group min/max
-    * tightness is restored): only zbuckets holding a tombstoned row
-    * or more than `maxFiles` files rewrite their surviving rows as
-    * new sibling files; every other partition's files carry VERBATIM
-    * into the next manifest, which drops the tombstone list. Older
-    * versions keep time-traveling over their own files until
-    * [[Snapshots.expire]]. Returns the committed version (unchanged
-    * when there is nothing to purge or merge). */
+    * tightness is restored: only zbuckets holding a tombstoned row or
+    * more than `maxFiles` files rewrite their surviving rows as one
+    * new file each; every other partition's files carry VERBATIM into
+    * the next manifest, which drops the tombstone list. Returns the
+    * committed version (unchanged when there is nothing to purge or
+    * merge). */
   def purgeCommit(s: SparkSession, layoutDir: String,
-      maxFiles: Int = 1): Int = {
-    import org.apache.spark.sql.functions.broadcast
-    val data = s"${IvfTopK.qualify(s, layoutDir)}/data"
-    val v = Snapshots.current(s, data).getOrElse(
-      throw new IllegalStateException(
-        s"purgeCommit: no committed snapshot under $data"))
-    val (dataF, tombF) = pieces(s, data, v)
-    def bucketOf(f: String): Int = f.split('/')
-      .find(_.startsWith("zbucket="))
-      .map(_.stripPrefix("zbucket=").toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"purgeCommit: no zbucket= segment in $f"))
-    val fragged: Set[Int] = dataF.groupBy(bucketOf)
-      .collect { case (b, fl) if fl.size > maxFiles => b }.toSet
-    val tombed: Set[Int] =
-      if (tombF.isEmpty) Set.empty
-      else ManifestIO.read(s, data, dataF)
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq("event_id"),
-          "left_semi")
-        .select(col("zbucket")).distinct()
-        .collect().map(_.getInt(0)).toSet
-    val touched = fragged ++ tombed
-    if (touched.isEmpty && tombF.isEmpty) return v
-    if (touched.nonEmpty) {
-      val files = dataF.filter(f => touched(bucketOf(f)))
-      val cur = ManifestIO.read(s, data, files)
-      val purged =
-        if (tombF.isEmpty) cur
-        else cur.join(broadcast(s.read.parquet(tombF: _*)),
-          Seq("event_id"), "left_anti")
-      val merged = graft.Materialize.cut(purged)
-      merged.repartition(col("zbucket"))
-        .sortWithinPartitions(col("zbucket"), col("z"))
-        .write.mode("append").partitionBy("zbucket").parquet(data)
-      graft.Materialize.release(merged)
-    }
-    Snapshots.commitReplacing(s, data, v,
-      touched.toSeq.sorted.map(b => s"zbucket=$b") :+ "deletes")
-  }
-
-  /** Version `v`'s manifested files split into (zbucket data files,
-    * tombstone files). */
-  private def pieces(s: SparkSession, data: String,
-      v: Int): (Seq[String], Seq[String]) =
-    Snapshots.files(s, data, v)
-      .partition(f => !f.startsWith(s"$data/deletes/"))
-
-  /** Version `v`'s effective rows: the manifested zbucket files
-    * (basePath keeps the partition column and its pruning) with that
-    * version's tombstones anti-joined out (broadcast). */
-  private def versionRelation(s: SparkSession, data: String,
-      v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val (dataF, tombF) = pieces(s, data, v)
-    require(dataF.nonEmpty,
-      s"snapshot v$v under $data references no data files")
-    val rel = ManifestIO.read(s, data, dataF)
-    if (tombF.isEmpty) rel
-    else rel.join(broadcast(s.read.parquet(tombF: _*)),
-      Seq("event_id"), "left_anti")
-  }
+      maxFiles: Int = 1): Int =
+    Tombstoned.purgeCommit(s, s"${IvfTopK.qualify(s, layoutDir)}/data",
+      "event_id", maxFiles, Tombstoned.segment("zbucket"))(
+      writeBuckets(_, _, "append"))
 
   /** [[serve]] AS OF a committed snapshot version: the scan is the
     * version's manifested file set with its tombstones anti-joined —
@@ -387,33 +282,9 @@ object ZOrderLayout {
     * version-independent). */
   def serveAsOf(s: SparkSession, layoutDir: String, version: Int,
       uLo: Long, uHi: Long, vLo: Double, vHi: Double): DataFrame = {
-    val base = IvfTopK.qualify(s, layoutDir)
     val h = load(s, layoutDir)
-    serveOn(h, versionRelation(s, s"$base/data", version),
+    serveOn(h, Tombstoned.relation(s, h.dataPath, version, "event_id"),
       uLo, uHi, vLo, vHi)
-  }
-
-  /** COMPACTION — collapse each zbucket partition back to one file
-    * after append accumulation, re-sorting rows by the full Morton
-    * code `z` inside each partition (appends interleave their own
-    * z-sorted files with the residents', so a straight rewrite would
-    * lose the row-group min/max tightness the clustering exists for);
-    * the one-row stats meta is copied verbatim. Writes to a NEW
-    * directory — the swap is the caller's pointer flip. Returns the
-    * data file count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = IvfTopK.qualify(s, srcDir)
-    // a committed layout's sibling files (post-COW) would double-count
-    // through this directory read — committed layouts compact via
-    // purgeCommit
-    require(Snapshots.current(s, s"$src/data").isEmpty,
-      s"ZOrderLayout.compact: $srcDir is manifest-committed — use " +
-        "purgeCommit (it merges fragmented partitions snapshot-safely)")
-    val dest = IvfTopK.qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/data", s"$dest/data", Seq("zbucket"), sortCols = Seq("z"))
-    graft.Fs.copyDir(s, s"$src/meta", s"$dest/meta")
-    n
   }
 
   /** Reconstruct a handle from the one-row stats meta. */
@@ -424,25 +295,19 @@ object ZOrderLayout {
       m.getDouble(2), m.getDouble(3))
   }
 
-  /** The 2-D box query: enumerate the coarse cells intersecting
-    * [uLo, uHi] × [vLo, vHi] driver-side (two ranges of ≤ 2^HiBits
-    * values each — no data touched), prune the scan to their buckets,
-    * and apply the exact predicate on what remains. A
-    * manifest-COMMITTED layout serves the CURRENT version's exact file
-    * set (a directory read would double-count merged siblings after a
-    * COW purge — the same routing guard as the index families). */
+  /** The 2-D box query as of the current snapshot: enumerate the
+    * coarse cells intersecting [uLo, uHi] × [vLo, vHi] driver-side
+    * (two ranges of ≤ 2^HiBits values each — no data touched), prune
+    * the scan of the current version's files to their buckets, and
+    * apply the exact predicate on what remains. A data dir with no
+    * snapshot is refused. */
   def serve(s: SparkSession, h: Handle,
-      uLo: Long, uHi: Long, vLo: Double, vHi: Double): DataFrame = {
-    val rel = Snapshots.current(s, h.dataPath) match {
-      case Some(v) => versionRelation(s, h.dataPath, v)
-      case None => s.read.parquet(h.dataPath)
-    }
-    serveOn(h, rel, uLo, uHi, vLo, vHi)
-  }
+      uLo: Long, uHi: Long, vLo: Double, vHi: Double): DataFrame =
+    serveOn(h, Tombstoned.live(s, h.dataPath, "event_id"), uLo, uHi, vLo, vHi)
 
-  /** The serve body over an arbitrary rows RELATION (live dir or a
-    * snapshot file set): driver-side cell enumeration, static bucket
-    * predicate, exact residual filter. */
+  /** The serve body over a rows RELATION (a snapshot file set):
+    * driver-side cell enumeration, static bucket predicate, exact
+    * residual filter. */
   private def serveOn(h: Handle, rel: DataFrame,
       uLo: Long, uHi: Long, vLo: Double, vHi: Double): DataFrame = {
     val hi = QBits - HiBits

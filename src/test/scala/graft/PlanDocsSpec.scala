@@ -47,15 +47,26 @@ class PlanDocsSpec extends AnyFunSuite {
       s"Explain.headline names not in the registry: ${unknown.mkString(", ")}")
   }
 
-  test("q28's pinned plan parses each tweet's JSON once") {
+  /** The `from_json(` calls in query `name`'s pinned EXPLAINS plan. */
+  private def parsesIn(name: String): Int = {
     val explains = Files.readString(Paths.get("EXPLAINS.md"))
-    val from = explains.indexOf("\n## q28_pipeline_e2e\n")
-    assert(from >= 0, "EXPLAINS.md has no q28_pipeline_e2e section")
+    val from = explains.indexOf(s"\n## $name\n")
+    assert(from >= 0, s"EXPLAINS.md has no $name section")
     val open = explains.indexOf("```", from)
     val plan = explains.substring(open, explains.indexOf("```", open + 3))
-    val parses = "from_json\\(".r.findAllMatchIn(plan).size
+    "from_json\\(".r.findAllMatchIn(plan).size
+  }
+
+  test("q28's pinned plan parses each tweet's JSON once") {
+    val parses = parsesIn("q28_pipeline_e2e")
     assert(parses == 1,
       s"q28's plan holds $parses from_json( calls, want one on the parse path")
+  }
+
+  test("q136's pinned plan parses each record's JSON once") {
+    val parses = parsesIn("q136_parse_quarantine")
+    assert(parses == 1,
+      s"q136's plan holds $parses from_json( calls, want one")
   }
 
   test("every oracle key has a registered query and vice versa") {

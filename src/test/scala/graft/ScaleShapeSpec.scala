@@ -399,27 +399,35 @@ class ScaleShapeSpec extends SparkSpec {
         .toDF("vec_id", "label", "embedding", "cid")
         .repartition(col("cid"))
         .write.partitionBy("cid").parquet(dir)
+      val v1 = graft.plans.Snapshots.commit(s, dir)
       val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(dir, conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      val out = operators.Similarity.refreshAssignment(s, dir, s"$staging/cents")
-        .collect()
+      val (hfs, _) = graft.Fs.resolve(dir, conf)
+      def files(v: Int) = graft.plans.Snapshots.files(s, dir, v).map { p =>
+        val st = hfs.getFileStatus(new org.apache.hadoop.fs.Path(p))
+        p -> (st.getLen, st.getModificationTime)
+      }.toMap
+      val before = files(v1)
+      val (v2, delta) = operators.Similarity.refreshAssignmentCommit(s, dir,
+        s"$staging/cents")
+      val out = delta.collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2),
           r.getBoolean(3)))).toMap
       assert(out(9L) === ((0, 1, true)), s"stray row did not move: $out")
       assert(out.filterKeys(_ != 9L).values.forall(v => !v._3),
         s"non-drifted rows moved: $out")
-      val after = files()
-      // cell 2 had no movers in or out — its files survive the refresh
-      // byte-identical (a full-table rewrite would replace them)
-      val untouched = after.keys.filter(_.contains("cid=2"))
+      val after = files(v2)
+      // cell 2 had no movers in or out — its v1 files carry into v2
+      // with the same path, size and mtime (a full-table rewrite would
+      // replace them)
+      val untouched = before.keys.filter(_.contains("cid=2"))
       assert(untouched.nonEmpty &&
         untouched.forall(p => before.get(p) == after.get(p)),
         "refresh rewrote a cell with no movers")
-      // the mutated table agrees with the reported delta
-      val cidOf = s.read.parquet(dir).select($"vec_id", $"cid")
+      assert(after.keys.count(_.contains("cid=2")) == untouched.size,
+        "refresh added a file to a cell with no movers")
+      // the committed table agrees with the reported delta
+      val cidOf = graft.plans.Snapshots.read(s, dir, v2)
+        .select($"vec_id", $"cid")
         .as[(Long, Int)].collect().toMap
       assert(cidOf(9L) === 1 && cidOf(1L) === 0 && cidOf(21L) === 2,
         s"on-disk assignment wrong after refresh: $cidOf")
@@ -1042,10 +1050,12 @@ class ScaleShapeSpec extends SparkSpec {
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       graft.plans.ZOrderLayout.save(s, rows.where(col("event_id") % 2 === 0), dir)
-      val n = graft.plans.ZOrderLayout.append(s, dir,
+      val v = graft.plans.ZOrderLayout.appendCommit(s, dir,
         rows.where(col("event_id") % 2 === 1))
-      assert(n === rows.where(col("event_id") % 2 === 1).count())
+      assert(v === 2)
       val h = graft.plans.ZOrderLayout.load(s, dir)
+      assert(graft.plans.Snapshots.readIncremental(s, h.dataPath, 1, v).count() ===
+        rows.where(col("event_id") % 2 === 1).count())
       def key(df: org.apache.spark.sql.DataFrame) =
         df.select("event_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
           .collect().sorted.toSeq
@@ -1073,8 +1083,8 @@ class ScaleShapeSpec extends SparkSpec {
       val dir = s"$staging/layout"
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
-      val (_, v1) = ZOrderLayout.saveCommit(s,
-        rows.where(col("event_id") % 2 === 0), dir)
+      ZOrderLayout.save(s, rows.where(col("event_id") % 2 === 0), dir)
+      val v1 = Snapshots.current(s, s"$dir/data").get
       val conf = s.sparkContext.hadoopConfiguration
       val (hfs, _) = graft.Fs.resolve(dir, conf)
       def v1Meta() = Snapshots.files(s, s"$dir/data", v1).map { p =>
@@ -1246,30 +1256,29 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("Z-order compaction: fewer files, identical serve, box pruning preserved") {
     val s = spark
+    import graft.plans.{Snapshots, ZOrderLayout}
     val staging = java.nio.file.Files.createTempDirectory("zorder_compact").toString
     try {
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val src = s"$staging/layout"
-      graft.plans.ZOrderLayout.save(s, rows.where(col("event_id") % 3 === 0), src)
-      graft.plans.ZOrderLayout.append(s, src, rows.where(col("event_id") % 3 === 1))
-      graft.plans.ZOrderLayout.append(s, src, rows.where(col("event_id") % 3 === 2))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/data", conf).size
-      val dest = s"$staging/layout_c"
-      val nOut = graft.plans.ZOrderLayout.compact(s, src, dest)
-      assert(nOut < nIn,
-        s"compaction did not shrink the data file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.ZOrderLayout.serve(s,
-          graft.plans.ZOrderLayout.load(s, dir), 3L, 7L, 50.0, 150.0)
+      val h = ZOrderLayout.save(s, rows.where(col("event_id") % 3 === 0), src)
+      ZOrderLayout.appendCommit(s, src, rows.where(col("event_id") % 3 === 1))
+      val v3 = ZOrderLayout.appendCommit(s, src,
+        rows.where(col("event_id") % 3 === 2))
+      val nIn = Snapshots.files(s, h.dataPath, v3).size
+      def served() = ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0)
         .select("event_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
         .collect().sorted.toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = served()
+      val v4 = ZOrderLayout.purgeCommit(s, src, maxFiles = 1)
+      val nOut = Snapshots.files(s, h.dataPath, v4).size
+      assert(v4 == v3 + 1 && nOut < nIn,
+        s"compaction did not shrink the data file count ($nIn -> $nOut)")
+      assert(before.nonEmpty && served() == before,
         "compacted layout diverges from the pre-compaction serve")
       // box pruning still opens strictly fewer files than the layout holds
-      val box = graft.plans.ZOrderLayout.serve(s,
-        graft.plans.ZOrderLayout.load(s, dest), 3L, 7L, 50.0, 150.0)
+      val box = ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0)
       box.collect()
       import org.apache.spark.sql.execution.FileSourceScanExec
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -1574,15 +1583,15 @@ class ScaleShapeSpec extends SparkSpec {
         .write.parquet(s"$staging/emb/embeddings.parquet")
       val idx = s"$staging/idx"
       graft.plans.IvfTopK.ensureSaved(s, s"$staging/emb", idx)
-      val v1 = graft.plans.Snapshots.commit(s, s"$idx/assignment")
+      val v1 = graft.plans.Snapshots.current(s, s"$idx/assignment").get
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).toSeq
       val v1Live = rows(graft.plans.IvfTopK.serveTopK(s, idx))
       assert(v1Live.nonEmpty, "v1 served nothing — fixture rot?")
-      val n = graft.plans.IvfTopK.appendTo(s, idx,
+      val v2 = graft.plans.IvfTopK.appendCommit(s, idx,
         Tables.embeddings(s, sf).where(pmod(col("vec_id"), lit(10)) === 9))
-      assert(n > 0, "append added nothing — fixture rot?")
-      val v2 = graft.plans.Snapshots.commit(s, s"$idx/assignment")
+      assert(graft.plans.Snapshots.readIncremental(s, s"$idx/assignment",
+        v1, v2).count() > 0, "append added nothing — fixture rot?")
       // as-of v1 is blind to the appended files sharing its cid dirs
       assert(rows(graft.plans.IvfTopK.serveTopKAsOf(s, idx, v1)) == v1Live,
         "v1 as-of serve sees appended vectors")
@@ -1707,7 +1716,7 @@ class ScaleShapeSpec extends SparkSpec {
         .write.parquet(s"$staging/emb/embeddings.parquet")
       val ivf = s"$staging/ivf"
       graft.plans.IvfTopK.ensureSaved(s, s"$staging/emb", ivf)
-      val v1 = graft.plans.Snapshots.commit(s, s"$ivf/assignment")
+      val v1 = graft.plans.Snapshots.current(s, s"$ivf/assignment").get
       val ivfPlan = graft.plans.IvfTopK.serveTopKAsOf(s, ivf, v1)
         .queryExecution.executedPlan.toString
       assert(ivfPlan.contains("PartitionFilters: [") &&
@@ -1791,7 +1800,7 @@ class ScaleShapeSpec extends SparkSpec {
       val idx = s"$staging/idx"
       graft.plans.IvfTopK.ensureSaved(s, s"$staging/emb", idx)
       val assign = s"$idx/assignment"
-      val v1 = graft.plans.Snapshots.commit(s, assign)
+      val v1 = graft.plans.Snapshots.current(s, assign).get
       val conf = s.sparkContext.hadoopConfiguration
       def meta(v: Int): Map[String, (Long, Long)] = {
         val (fs, _) = graft.Fs.resolve(assign, conf)
@@ -2700,18 +2709,21 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("IVF index delete: only touched cid partitions rewritten, serve equals fresh survivors") {
     val s = spark
+    import graft.plans.Snapshots
     val staging = java.nio.file.Files.createTempDirectory("ivf_del").toString
     try {
       s.read.parquet(s"$sf/embeddings.parquet")
         .write.parquet(s"$staging/embeddings.parquet")
       val src = s"$staging/idx"
-      graft.plans.IvfTopK.registerIndex(s, staging, Some(src))
+      val idx = graft.plans.IvfTopK.registerIndex(s, staging, Some(src))
       val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/assignment", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      val assign = s.read.parquet(s"$src/assignment")
+      val (hfs, _) = graft.Fs.resolve(idx.assignPath, conf)
+      def files(v: Int) = Snapshots.files(s, idx.assignPath, v)
+        .filterNot(_.contains("/deletes/")).map { p =>
+          val st = hfs.getFileStatus(new org.apache.hadoop.fs.Path(p))
+          p -> (st.getLen, st.getModificationTime)
+        }.toMap
+      val assign = Snapshots.read(s, idx.assignPath, 1)
       assume(assign.select(col("cid")).distinct().count() >= 2,
         "locality needs >= 2 cells")
       // delete a handful of vectors from ONE cell (not query vec 0),
@@ -2723,12 +2735,17 @@ class ScaleShapeSpec extends SparkSpec {
         .select(col("vec_id")).limit(3)
         .collect().map(_.getLong(0))
       import s.implicits._
-      val n = graft.plans.IvfTopK.delete(s, src,
+      val v2 = graft.plans.IvfTopK.deleteCommit(s, src,
         delIds.toSeq.toDF("vec_id"))
-      assert(n === delIds.length && n > 0)
-      val after = files()
+      val before = files(v2)
+      val v3 = graft.plans.IvfTopK.purgeCommit(s, src)
+      assert(delIds.nonEmpty && v3 == v2 + 1)
+      val after = files(v3)
       assert(after.count { case (p, m) => before.get(p).contains(m) } > 0,
         "every cid partition was rewritten — no delete locality")
+      assert(Snapshots.read(s, idx.assignPath, v3)
+        .where(col("vec_id").isin(delIds.map(Long.box): _*)).count() == 0,
+        "the purge kept a deleted vector's row")
       val served = graft.plans.IvfTopK.serveTopK(s, src)
         .collect().map(r => r.getLong(0)).toSet
       assert(served.nonEmpty && (served & delIds.toSet).isEmpty,
@@ -2745,19 +2762,23 @@ class ScaleShapeSpec extends SparkSpec {
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val src = s"$staging/layout"
-      graft.plans.ZOrderLayout.save(s, rows, src)
+      val h = graft.plans.ZOrderLayout.save(s, rows, src)
       val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/data", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
+      val (hfs, _) = graft.Fs.resolve(h.dataPath, conf)
+      def files(v: Int) = graft.plans.Snapshots.files(s, h.dataPath, v)
+        .filterNot(_.contains("/deletes/")).map { p =>
+          val st = hfs.getFileStatus(new org.apache.hadoop.fs.Path(p))
+          p -> (st.getLen, st.getModificationTime)
+        }.toMap
       val delIds = rows.where(col("user_id") === 3).select(col("event_id"))
-      val n = graft.plans.ZOrderLayout.delete(s, src, delIds)
-      assert(n === delIds.count() && n > 0)
-      val after = files()
+      assert(delIds.count() > 0, "fixture rot: nothing to delete")
+      val v2 = graft.plans.ZOrderLayout.deleteCommit(s, src, delIds)
+      val before = files(v2)
+      val v3 = graft.plans.ZOrderLayout.purgeCommit(s, src)
+      assert(v3 == v2 + 1)
+      val after = files(v3)
       assert(after.count { case (p, m) => before.get(p).contains(m) } > 0,
         "every zbucket was rewritten — no delete locality")
-      val h = graft.plans.ZOrderLayout.load(s, src)
       val served = graft.plans.ZOrderLayout.serve(s, h, 0L, Long.MaxValue,
           Double.MinValue, Double.MaxValue)
         .select("event_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
@@ -2858,24 +2879,23 @@ class ScaleShapeSpec extends SparkSpec {
       s.read.parquet(s"$sf/embeddings.parquet")
         .write.parquet(s"$staging/embeddings.parquet")
       val src = s"$staging/idx"
-      graft.plans.IvfTopK.registerIndex(s, staging, Some(src))
+      val idx = graft.plans.IvfTopK.registerIndex(s, staging, Some(src))
       def twin(off: Long) = s.read.parquet(s"$staging/embeddings.parquet")
         .where(col("vec_id").between(1, 8))
         .withColumn("vec_id", col("vec_id") + off)
-      graft.plans.IvfTopK.append(s, staging, twin(1000000L))
-      graft.plans.IvfTopK.append(s, staging, twin(2000000L))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/assignment", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.IvfTopK.compact(s, src, dest)
-      assert(nOut < nIn,
-        s"compaction did not shrink the assignment file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.IvfTopK.serveTopK(s, dir)
+      graft.plans.IvfTopK.appendCommit(s, src, twin(1000000L))
+      val v3 = graft.plans.IvfTopK.appendCommit(s, src, twin(2000000L))
+      val nIn = graft.plans.Snapshots.files(s, idx.assignPath, v3).size
+      def served() = graft.plans.IvfTopK.serveTopK(s, src)
         .collect().map(_.toString).toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = served()
+      val v4 = graft.plans.IvfTopK.purgeCommit(s, src, maxFiles = 1)
+      val nOut = graft.plans.Snapshots.files(s, idx.assignPath, v4).size
+      assert(v4 == v3 + 1 && nOut < nIn,
+        s"compaction did not shrink the assignment file count ($nIn -> $nOut)")
+      assert(before.nonEmpty && served() == before,
         "compacted IVF index diverges from the pre-compaction serve")
-      val plan = graft.plans.IvfTopK.serveTopK(s, dest)
+      val plan = graft.plans.IvfTopK.serveTopK(s, src)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("cid"),
         s"pruning lost after compaction:\n${plan.take(1200)}")
@@ -2924,9 +2944,12 @@ class ScaleShapeSpec extends SparkSpec {
       val twins = Tables.embeddings(s, sf)
         .where(col("vec_id").between(1, 5))
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-      val n = graft.plans.PqIndex.append(s, dir, twins)
-      assert(n === 5L)
-      val codes = s.read.parquet(s"$dir/codes")
+      val h = graft.plans.PqIndex.load(s, dir)
+      val v = graft.plans.PqIndex.appendCommit(s, dir, twins)
+      assert(v === 2)
+      assert(graft.plans.Snapshots.readIncremental(s, h.codesPath, 1, v)
+        .count() === 5L)
+      val codes = graft.plans.Snapshots.read(s, h.codesPath, v)
       val orig = codes.where(col("vec_id").between(1, 5))
         .select(col("vec_id"), col("pq_code_lo"), col("pq_code_hi"))
       val appended = codes.where(col("vec_id") > 100000L)
@@ -2986,9 +3009,12 @@ class ScaleShapeSpec extends SparkSpec {
     // a batch with the same vec_id twice: both rows are appended (id
     // uniqueness is the caller's contract) and the returned count is
     // the rows actually written — not a silently-collapsed estimate
-    val n = graft.plans.IvfTopK.append(s, tmp, twin.unionByName(twin))
-    assert(n === 2, s"append reported $n rows, want 2")
-    val appended = s.read.parquet(idx.assignPath)
+    val v = graft.plans.IvfTopK.appendCommit(s,
+      new org.apache.hadoop.fs.Path(idx.assignPath).getParent.toString,
+      twin.unionByName(twin))
+    val landed = graft.plans.Snapshots.readIncremental(s, idx.assignPath, 1, v)
+    assert(landed.count() === 2, s"append landed ${landed.count()} rows, want 2")
+    val appended = graft.plans.Snapshots.read(s, idx.assignPath, v)
       .where(col("vec_id") === 1000001L)
     assert(appended.count() === 2, "duplicate-id rows were collapsed")
     assert(appended.select(col("cid")).distinct().count() === 1,
