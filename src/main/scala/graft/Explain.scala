@@ -93,14 +93,14 @@ object Explain {
     "q110_incremental_clusters" -> "incremental cluster maintenance: batch edges from the persisted-index serve + within-batch band join (one shared probe sketch), label propagation on the QUOTIENT graph (batch docs + touched cluster labels only), broadcast label remap back onto the resident state — never a corpus re-cluster",
     "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented bands lands ONE new sibling file per band and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
     "q114_cluster_changefeed" -> "change data feed from the incremental cluster step: inserts straight from the quotient propagation, updates from the label table joined against the BROADCAST changed-remap — O(batch + touched members), never a corpus diff of two label snapshots; pinned plan is the feed union",
-    "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, upserts the bucket-partitioned label table partition-locally (partitionFromKey — no resident scan), and appends to the index before the next trigger; pinned plan is the final label-table read",
-    "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and mutates the table partition-locally before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the final label-table read",
-    "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; retired rows leave via partition-local delete, relabels land via partition-local upsert; pinned plan is the final label-table read",
+    "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, commits one copy-on-write mergeCommit into the bucket-partitioned label table (touched buckets from the change rows — no resident scan; untouched buckets keep their files), and appends to the index before the next trigger; pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
+    "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and commits its delete and relabels as ONE copy-on-write mergeCommit before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
+    "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; the retired rows' delete and the relabels land as ONE copy-on-write mergeCommit (one version; untouched buckets keep their files); pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
     "q112_ingest_autocompact" -> "q103's ingest loop under threshold-triggered BAND-LOCAL compaction (purgeCommit, maxFiles = 2) after each append: only bands whose current-version file count crossed the threshold are rewritten, one file each — per-band file growth stays capped; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
     "q108_cluster_split" -> "leakage-proof split from the near-dup CLUSTER label: stateless column expression over the memoized cluster relation (pinned plan reads the label cut) — the timed cost in a sweep is the shared minhash-pairs + cluster memo it happens to pay first",
     "q115_cms_freq" -> "count-min sketch build: map-side partials collapse the token stream to the fixed D×W geometry before the one exchange (≤ D×W cells per task); estimates are min-over-rows lookups against the BROADCAST sketch — no shuffled join on term anywhere",
-    "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + partition-local upsert — the corpus aggregate never re-runs; pinned plan is the post-increment stats read",
-    "q117_changefeed_apply" -> "CDC consumer: feed rows MERGE into the bucket-partitioned label mirror partition-locally (touched buckets derive from the feed), keep-list view recomputes only the feed's touched clusters, untouched clusters pass through from pre-batch state; pinned plan is the keep-list union",
+    "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + a copy-on-write mergeCommit rewriting only the touched tbuckets — the corpus aggregate never re-runs; pinned plan is the presentation sort over the Materialize.cut of the post-increment as-of stats read",
+    "q117_changefeed_apply" -> "CDC consumer: feed rows land in the bucket-partitioned label mirror as one copy-on-write mergeCommit (touched buckets derive from the feed, untouched buckets keep their files), keep-list view recomputes only the feed's touched clusters, untouched clusters pass through from pre-batch state; pinned plan is the presentation sort over the Materialize.cut of the keep-list union",
     "q118_lm_perplexity" -> "bigram-LM perplexity: the model is three broadcast relations (bigram counts, context counts, vocab); scoring is one corpus scan → shingle explode → four BroadcastHashJoins → per-doc agg on the pre-repartitioned doc_id key — the only corpus-volume shuffle is that one repartition",
     "q119_nb_quality" -> "Naive Bayes quality gate: training is map-side-combined term counts + three scalar aggs; the (term → two class counts) model is broadcast, so scoring is scan → explode → BroadcastHashJoin → doc_id-partitioned agg — the q118 shape with a learned decision",
     "q120_kmv_source_overlap" -> "KMV cross-source overlap: corpus contributes one distinct (source, digest-hash) aggregation; bottom-k sketches + all pairwise union/intersection estimates run on sketch rows (sources × k); the exact_inter self-eval leg is the digest join a production run drops",
@@ -120,7 +120,7 @@ object Explain {
     "q132_snapshot_increment" -> "incremental consumption between snapshots: the manifest DIFF (files v2 references that v1 does not) is the scan — read cost is the new files only, never a diff of two corpus-sized row sets; basePath keeps the band_id partition column through the explicit listing",
     "q133_refresh_timetravel" -> "snapshot-preserving IVF centroid refresh: one map-side-combined Lloyd round + reassignment under the broadcast refreshed centroids; LOSING cells rewrite survivors as new sibling files, movers append into their new cells, and the next manifest selects exactly those files plus the unlosing cells' v1 files — v1 stays byte-identical, write amplification = touched cells; the pinned plan is only the presentation sort over the committed delta (Materialize.cut)",
     "q134s_manifest_tail" -> "streaming manifest tailing (the Delta-source shape): per micro-batch the producer appends + commits and the consumer reads the manifest DIFF since its last-seen version into a mirror — new files only per trigger, one integer of consumer state; pinned plan is the final mirror read",
-    "q135_state_timetravel" -> "cluster-state time travel: the q110 quotient increment lands through the COW MERGE-INTO (touched dbuckets rewrite as sibling files, manifest swaps the selection), then one query reads the label table as-of v1 AND v2 — the reproducibility record of a run's own dedup decisions; pinned plan is the two-leg as-of union",
+    "q135_state_timetravel" -> "cluster-state time travel: the q110 quotient increment lands through SnapshotTable.mergeCommit on the born-committed v1 (touched dbuckets rewrite as sibling files the commit selects by name), then one query reads the label table as-of v1 AND v2 — the reproducibility record of a run's own dedup decisions; pinned plan is the presentation sort over the Materialize.cut of the two-leg as-of union",
     "q136_parse_quarantine" -> "dead-letter quarantine: pure column expressions over ONE scan of the raw feed (no second pass), each record parsed ONCE behind an explode(array(from_json(…))) generator barrier (one row per raw record, null structs included) — reasons keyed off the parser's own corrupt-record column so the parse/quarantine split is independent of the partial-results conf; the only shuffle is the presentation sort",
     "q137_occ_commit_retry" -> "optimistic-concurrency commit loop: both writers' data land as ordinary parquet appends; conflict detection is one manifest stat + an atomic-rename CAS and the retry re-LISTS file names, never re-writes — pinned plan is the committed-version read (a plain pruned scan of the manifested files)",
     "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's manifested band scan (merge-on-read), the purge rewrites only bands holding tombstoned rows into one new file each (a doc has exactly Bands band rows, so a purge writes at most Bands files); pinned plan is the three-leg as-of serve union",

@@ -1133,8 +1133,9 @@ object Similarity {
         org.apache.hadoop.fs.FileSystem.get(new java.net.URI(resultsDir),
             s.sparkContext.hadoopConfiguration)
           .mkdirs(new org.apache.hadoop.fs.Path(resultsDir))
-        // resident-only assignment start, write-sized-for-read
-        s.read.parquet(s"$dir/assignment")
+        // resident-only assignment start, write-sized-for-read, read
+        // through the committed index's manifest (no directory listing)
+        graft.plans.Tombstoned.live(s, s"$dir/assignment", "vec_id")
           .where(pmod(col("vec_id"), lit(10)) =!= 0)
           .repartition(col("cid"))
           .write.partitionBy("cid").parquet(assignPath)

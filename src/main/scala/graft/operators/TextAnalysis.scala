@@ -58,8 +58,8 @@ object TextAnalysis {
   val VocabBuckets = 16
 
   /** tbucket — a uniform md5 bucket of the term, a PURE FUNCTION of
-    * the merge key, so upserts derive touched partitions from the
-    * update rows alone (partitionFromKey). */
+    * the merge key, so a merge derives its touched partitions from the
+    * update rows alone ([[graft.plans.SnapshotTable.mergeCommit]]). */
   private def vocabBucket =
     (expr(Tokens.mdByteExpr("term")) % VocabBuckets).cast("int")
 
@@ -69,15 +69,16 @@ object TextAnalysis {
   /** The persisted vocabulary-statistics table behind q116 — q46's
     * aggregate over the RESIDENT corpus (doc_id % 10 != 0),
     * tbucket-partitioned, derived once per (session, dir) and kept as
-    * FILES (the stageResidentState pattern: in production this table
-    * is maintained batch over batch, never re-derived per job). q116
-    * invocations mutate byte-copies of it. */
+    * FILES born committed as snapshot v1 (the stageResidentState
+    * pattern: in production this table is maintained batch over batch,
+    * never re-derived per job). q116 invocations commit on top of
+    * byte-copies of it. */
   def stageVocabStats(s: SparkSession, d: String): String =
     vocabStatsDirs.computeIfAbsent((s, d), _ => {
       val dir = graft.Fs.createStagingDir(s, "graft-vocab-stats")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         graft.Fs.deleteRecursively(dir)))
-      Tables.documents(s, d)
+      graft.plans.SnapshotTable.saveCommit(s, Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) =!= 0)
         .withColumn("toks", expr(toksExpr))
         .select(col("doc_id"), explode(col("toks")).as("term"))
@@ -85,9 +86,8 @@ object TextAnalysis {
         .agg(count(lit(1)).as("collection_freq"),
           countDistinct(col("doc_id")).as("doc_freq"))
         .withColumn("tbucket", vocabBucket)
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(s"$dir/vocab")
+        .repartition(col("tbucket")),
+        s"$dir/vocab", Seq("tbucket"))
       s"$dir/vocab"
     })
 
@@ -515,14 +515,14 @@ object TextAnalysis {
     // (1) aggregating ONLY the batch's tokens (collection_freq and
     // doc_freq are additive over disjoint doc sets), (2) a merge join
     // bounded by the BATCH's vocabulary against the partition-PRUNED
-    // resident rows, and (3) a partition-local upsert that rewrites
-    // only the buckets the batch's terms hash into. The corpus-scale
-    // aggregation never re-runs — at 100 TB the increment costs
-    // O(batch + touched buckets). Oracle = q46's full recompute over
-    // the whole corpus: the path-dependent increment must equal the
-    // one-shot aggregate exactly.
+    // resident rows, and (3) a copy-on-write merge commit that
+    // rewrites only the buckets the batch's terms hash into. The
+    // corpus-scale aggregation never re-runs — at 100 TB the increment
+    // costs O(batch + touched buckets). Oracle = q46's full recompute
+    // over the whole corpus: the path-dependent increment must equal
+    // the one-shot aggregate exactly.
     "q116_vocab_increment" -> { (s, d) =>
-      import graft.plans.IndexMaintenance
+      import graft.plans.{SnapshotTable, Snapshots}
       val src = stageVocabStats(s, d)
       val staging = graft.Fs.createStagingDir(s, "graft-q116")
       try {
@@ -539,7 +539,9 @@ object TextAnalysis {
         // buckets the batch hashes into (bounded by VocabBuckets)
         val touched = batchAgg.select(col("tbucket")).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val res = graft.plans.ManifestIO.readDir(s, tbl)
+        def current() = SnapshotTable.readAsOf(s, tbl,
+          Snapshots.current(s, tbl).get, "term")
+        val res = current()
           .where(col("tbucket").isin(touched: _*))
           .select(col("term"), col("collection_freq").as("cf_r"),
             col("doc_freq").as("df_r"))
@@ -548,9 +550,8 @@ object TextAnalysis {
             (coalesce(col("cf_r"), lit(0L)) + col("cf_b")).as("collection_freq"),
             (coalesce(col("df_r"), lit(0L)) + col("df_b")).as("doc_freq"),
             col("tbucket"))
-        IndexMaintenance.upsertPartitioned(s, tbl, Seq("tbucket"), "term",
-          updates, partitionFromKey = true)
-        graft.Materialize.cut(graft.plans.ManifestIO.readDir(s, tbl)
+        SnapshotTable.mergeCommit(s, tbl, Seq("tbucket"), "term", updates)
+        graft.Materialize.cut(current()
           .select(col("term"), col("collection_freq"), col("doc_freq")))
           .orderBy(col("term"))
       } finally graft.Fs.deleteRecursively(staging,

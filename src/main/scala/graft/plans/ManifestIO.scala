@@ -3,16 +3,18 @@ package graft.plans
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Manifest-fed reads for the snapshot/index serve paths.
+/** Manifest-fed reads for every committed table and index.
   *
-  * Every committed-artifact serve in this engine reads an EXPLICIT
-  * manifested file list (`spark.read.option("basePath", dir)
-  * .parquet(files: _*)`). Spark resolves such a read by re-LISTING the
-  * paths — above `spark.sql.sources.parallelPartitionDiscovery
-  * .threshold` (default 32) that is a whole distributed Spark job per
-  * read ("Listing leaf files and directories for N paths", measured
-  * 1.4–1.6 s per 763-file serve leg at sf0.1, one per as-of leg of
-  * every lifecycle query) — to discover metadata the manifest layer
+  * Every committed-artifact serve in this engine — the index families
+  * and the [[SnapshotTable]]s, the cluster-label and vocabulary state
+  * tables included — reads an EXPLICIT manifested file list
+  * (`spark.read.option("basePath", dir).parquet(files: _*)`). Spark
+  * resolves such a read by re-LISTING the paths — above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (default
+  * 32) that is a whole distributed Spark job per read ("Listing leaf
+  * files and directories for N paths", measured 1.4–1.6 s per
+  * 763-file serve leg at sf0.1, one per as-of leg of every lifecycle
+  * query) — to discover metadata the manifest layer
   * ALREADY VALIDATED when it committed the files. This is the
   * guide-§6 argument for manifest-backed table formats ("avoid
   * directory listing altogether"), applied to our own manifests.
@@ -71,22 +73,5 @@ object ManifestIO {
       (if (mergeSchema) Map("mergeSchema" -> "true") else Map.empty)
     org.apache.spark.sql.execution.datasources.GraftManifestReadBridge
       .read(s, opts, statuses)
-  }
-
-  /** Whole-DIRECTORY read with semantics identical to
-    * `spark.read.parquet(dir)` (partition inference included), fed by
-    * the same one driver-side enumeration instead of Spark's listing
-    * pass — for the UNCOMMITTED hot-path tables (bucketed label /
-    * vocab state, live index trees) whose hive layouts sit above the
-    * parallel-discovery threshold and otherwise pay a distributed
-    * listing job per read. Falls back to the plain read when the
-    * enumeration finds nothing, preserving the plain read's
-    * empty-directory error contract. */
-  def readDir(s: SparkSession, dir: String): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val statuses = graft.Fs.listDataFiles(dir, conf)
-    if (statuses.isEmpty) s.read.parquet(dir)
-    else org.apache.spark.sql.execution.datasources.GraftManifestReadBridge
-      .read(s, Map("basePath" -> dir), statuses)
   }
 }

@@ -37,6 +37,10 @@ import org.apache.spark.sql.functions._
   *  - [[appendCommit]] guards RE-INGEST of a tombstoned id — the
   *    physical rows would resurrect the moment a purge drops the
   *    list — mirroring the index families' guard.
+  *  - [[mergeCommit]] is the copy-on-write MERGE-INTO of a
+  *    hash-bucketed state table (the cluster-label and vocabulary
+  *    tables): only the partitions its change rows hash into rewrite,
+  *    as new siblings that the commit selects by name.
   *
   * Layouts: FLAT tables by default; hive-partitioned tables are
   * supported by DECLARING `partitionCols` on every lifecycle call —
@@ -136,7 +140,7 @@ object SnapshotTable {
     * FLAT: a hive layout this lifecycle was not told about would make
     * the purge rewrite lose the spraying. With declared columns every
     * data file must sit under exactly the declared `c=v` segments in
-    * order (the same path grammar [[Snapshots.compactCommit]] parses),
+    * order (the `c=v` path grammar [[mergeCommit]] matches),
     * so the partitionBy rewrite reconstructs the spraying faithfully.
     * Tombstone files under `deletes/` are bookkeeping, not sprayed
     * data, and are exempt from the partitioned-shape check. */
@@ -515,6 +519,92 @@ object SnapshotTable {
     Snapshots.commitReplacingWhere(s, dataDir, v, dropRel.contains)
   }
 
+  /** COPY-ON-WRITE MERGE-INTO for a partitioned state table whose
+    * partition columns are a PURE FUNCTION of `key` (the hash-bucketed
+    * label and vocabulary tables): every `upserts` row replaces the
+    * resident row with its key or is inserted, every `deletes` key
+    * leaves, and both frames carry `key` and `partitionCols`. The
+    * touched partitions are the change rows' own partition tuples,
+    * harvested by an `observe` on the job that materializes them, so
+    * the table is never scanned for them. Only the current version's
+    * files in those partitions are read, anti-joined on the change
+    * keys and unioned with the upserts; the merged rows land through
+    * [[Snapshots.landStaged]] and the commit selects exactly them over
+    * every untouched partition's files, verbatim. A partition the
+    * merge empties drops out of the manifest; older versions keep
+    * reading their own files until [[Snapshots.expire]]. Refuses a
+    * version that pins a `deletes/` list (merge-on-read tombstones and
+    * a key-replacing merge do not compose; purge first) and
+    * non-integral partition columns (touched dirs are matched as raw
+    * `c=v` segments, which Hive path-escaping would break). Returns
+    * the committed version (unchanged when there is no change row). */
+  def mergeCommit(s: SparkSession, dataDir: String,
+      partitionCols: Seq[String], key: String, upserts: DataFrame,
+      deletes: Option[DataFrame] = None): Int = {
+    require(partitionCols.nonEmpty,
+      "mergeCommit: a merge rewrites whole partitions — declare them")
+    val v = Snapshots.current(s, dataDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"mergeCommit: no committed version under $dataDir"))
+    requireLayout(s, dataDir, v, partitionCols)
+    val (dataF, tombF) = pieces(s, dataDir, v)
+    require(tombF.isEmpty,
+      s"mergeCommit: v$v under $dataDir pins a $deletesPrefix/ list — " +
+        "run purgeCommit before merging")
+    val changes = upserts +: deletes.toSeq
+      .map(_.select((key +: partitionCols).map(col): _*))
+    for (df <- changes; c <- partitionCols) {
+      import org.apache.spark.sql.types._
+      val t = df.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"mergeCommit: partition column $c is $t — touched partitions " +
+          "are matched as unescaped integral c=v dirs (string/date/null " +
+          "values need Hive path escaping)")
+    }
+    val staged = changes.map(materializeWithPartitions(_, partitionCols))
+    try {
+      val touched = staged.flatMap(_._2).map(vs => partitionCols.zip(vs)
+        .map { case (c, value) => s"$c=$value" }.mkString("/")).toSet
+      if (touched.isEmpty) return v
+      def unitOf(rel: String) = rel.split('/').dropRight(1).mkString("/")
+      val ups = staged.head._1
+      val inTouched = dataF.filter(f => touched(unitOf(relOf(dataDir, f))))
+      val merged =
+        if (inTouched.isEmpty) ups
+        else {
+          val keys = staged.map(_._1.select(col(key))).reduce(_ union _)
+            .distinct()
+          readFiles(s, dataDir, v, inTouched)
+            .join(broadcast(keys), Seq(key), "left_anti").unionByName(ups)
+        }
+      val mine = Snapshots.landStaged(s, dataDir) { stage =>
+        merged.repartition(partitionCols.map(col): _*)
+          .sortWithinPartitions(partitionCols.map(col): _*)
+          .write.partitionBy(partitionCols: _*).parquet(stage)
+      }
+      Snapshots.commitSelectingExpecting(s, dataDir, v,
+        f => touched(unitOf(f)), mine)
+    } finally staged.foreach(p => graft.Materialize.release(p._1))
+  }
+
+  /** Materialize `df` and harvest its distinct partition tuples from
+    * the SAME job via an observe metric (it fires under all three
+    * [[graft.Materialize]] strategies). */
+  private def materializeWithPartitions(df: DataFrame,
+      cols: Seq[String]): (DataFrame, Seq[Seq[Any]]) = {
+    val obs = new org.apache.spark.sql.Observation()
+    val mat = graft.Materialize(df.observe(obs,
+      collect_set(struct(cols.map(col): _*)).as("parts")))
+    val parts = obs.get("parts") match {
+      case rows: scala.collection.Seq[_] => rows.toSeq.map {
+        case r: org.apache.spark.sql.Row => cols.indices.map(r.get)
+        case other => sys.error(s"unexpected partition tuple: $other")
+      }
+      case other => sys.error(s"unexpected observe metric: $other")
+    }
+    (mat, parts)
+  }
+
   /** COPY-ON-WRITE physical erasure: rewrite ONLY the data files
     * holding tombstoned rows (survivors land as new siblings), carry
     * every untouched file verbatim, drop the tombstone list from the
@@ -550,7 +640,7 @@ object SnapshotTable {
       // current schema with nulls — still merge-on-read-equal), and
       // the partitionBy write re-sprays survivors into their own
       // partition dirs — new siblings of the files they replace,
-      // exactly like Snapshots.compactCommit's merge
+      // exactly like compactCommit's merge
       val survivors = readFiles(s, dataDir, v, rewrite)
         .join(broadcast(tombs), Seq(idCol), "left_anti")
       writeRows(survivors, dataDir, partitionCols)

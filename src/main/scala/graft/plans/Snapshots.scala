@@ -11,8 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its exact file set and read THOSE files — so a reader holding
   * version N is unaffected by any later append, and a crashed writer
   * leaves only unreferenced files (invisible to every reader,
-  * reclaimed by [[expire]]). This is the general answer to the
-  * in-place caveats documented on the index maintenance passes: the
+  * reclaimed by [[expire]]). Nothing is maintained in place: the
   * pointer flip is the manifest rename, and "as-of" reads fall out for
   * free (Iceberg/Delta's core idea, reduced to what a file-listing
   * manifest can carry — single writer, no schema evolution; row-level
@@ -44,11 +43,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    compare-and-swap on filesystems that refuse to rename over an
   *    existing path (HDFS, object-store committers) and detects
   *    lost updates best-effort elsewhere.
-  *  - The label tables' IN-PLACE passes ([[IndexMaintenance]]'s
-  *    upsert/delete) rename directories, so they refuse a committed
-  *    dataset. Every index family is committed only and never
-  *    rewrites a file a manifest references: its compaction is a
-  *    copy-on-write purge whose merged files land as new siblings,
+  *  - Every index family and every [[SnapshotTable]] (the
+  *    cluster-label and vocabulary state tables included) is
+  *    committed only and never rewrites a file a manifest references:
+  *    a merge, purge or compaction lands its files as new siblings,
   *    and old versions keep reading their old files until expired.
   *
   * Versions are defined by the manifest files themselves
@@ -152,9 +150,8 @@ object Snapshots {
       .filterNot(isHidden)
 
   /** Commit an EXPLICIT dataDir-relative file set as the next version
-    * — the primitive behind both [[commit]] (current listing) and
-    * [[compactCommit]] (listing with compacted partitions' old files
-    * swapped for their merged replacements). Writes the DELTA form vs
+    * — the primitive behind [[commit]] (current listing),
+    * [[commitReplacingWhere]] and [[rollback]]. Writes the DELTA form vs
     * the current version whenever it is smaller than the full
     * re-listing — O(files changed) manifest bytes per commit. */
   private def writeManifest(s: SparkSession, dataDir: String,
@@ -309,63 +306,6 @@ object Snapshots {
     throw new IllegalStateException("unreachable")
   }
 
-  /** COPY-ON-WRITE compaction that PRESERVES every committed snapshot
-    * — the snapshot-safe form of the in-place maintenance passes
-    * (whose contract says "rewrites dangle older manifests; expire
-    * first"). Partitions of the CURRENT version holding more than
-    * `maxFiles` data files are merged into ONE NEW file each, written
-    * as a sibling (parquet append never mutates existing files), and
-    * the next manifest references [untouched old files + merged
-    * files] while every OLDER manifest keeps referencing the
-    * pre-compact files — which stay on disk, still resolvable, until
-    * [[expire]] drops the versions that need them. This is the
-    * Iceberg/Delta OPTIMIZE shape: time travel and compaction
-    * coexist, and write amplification stays bounded by where appends
-    * actually landed, never the table size. Integral partition keys
-    * only (values parse back out of the `c=v` path segments, same
-    * contract as the in-place passes). `sortCols` re-sorts rows within
-    * each merged partition (sorted layouts — Z-order's `z` — keep
-    * their row-group min/max tightness through the merge).
-    * Single-writer, like [[commit]]. Returns (version,
-    * partitionsRewritten) — with nothing fragmented no commit happens
-    * and the current version comes back. */
-  def compactCommit(s: SparkSession, dataDir: String,
-      partitionCols: Seq[String], maxFiles: Int = 1,
-      sortCols: Seq[String] = Nil): (Int, Int) = {
-    require(partitionCols.nonEmpty && maxFiles >= 1)
-    val v = current(s, dataDir).getOrElse(throw new IllegalArgumentException(
-      s"compactCommit: no committed version under $dataDir"))
-    val old = files(s, dataDir, v)
-    def partOf(file: String): Seq[Long] = {
-      val segs = rel(dataDir, file).split('/').dropRight(1)
-      partitionCols.map(c =>
-        segs.find(_.startsWith(c + "="))
-          .map(_.substring(c.length + 1).toLong)
-          .getOrElse(throw new IllegalStateException(
-            s"compactCommit: no $c= segment in ${rel(dataDir, file)}")))
-    }
-    val frag: Set[Seq[Long]] = old.groupBy(partOf)
-      .collect { case (vs, fl) if fl.size > maxFiles => vs }.toSet
-    if (frag.isEmpty) return (v, 0)
-    val before = listRel(s, dataDir).toSet
-    // read EXACTLY version v's files of the fragmented partitions
-    // (basePath keeps the partition columns through the explicit
-    // listing); one shuffle by the partition key merges each to a
-    // single writer, landed in append mode so no existing file moves
-    val toMerge = old.filter(f => frag(partOf(f)))
-    val merged = graft.Materialize.cut(
-      ManifestIO.read(s, dataDir, toMerge))
-    merged
-      .repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .sortWithinPartitions(
-        (partitionCols ++ sortCols).map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("append").partitionBy(partitionCols: _*).parquet(dataDir)
-    graft.Materialize.release(merged)
-    val newFiles = listRel(s, dataDir).filterNot(before.contains)
-    val keep = old.filterNot(f => frag(partOf(f))).map(rel(dataDir, _))
-    (writeManifest(s, dataDir, keep ++ newFiles), frag.size)
-  }
-
   /** Commit the next version as: version `v`'s file set MINUS the
     * files under `dropPrefixes` (dataDir-relative directory prefixes,
     * e.g. "terms"), PLUS every on-disk data file that no existing
@@ -375,12 +315,11 @@ object Snapshots {
     * sibling files (parquet `append` — nothing existing mutates) and
     * the manifest swaps the SELECTION, while older versions keep
     * reading their own files until [[expire]] reclaims them.
-    * [[compactCommit]] is the same shape specialized to partition
-    * merging; [[SnapshotTable]] and the label tables'
-    * `upsertPartitionedCommit` use this form. Because it sweeps, any
-    * unreferenced file on disk goes live — including a refused
-    * append's landed files; writers that know their file set use
-    * [[commitSelectingExpecting]] instead (every index family).
+    * [[SnapshotTable]]'s append, delete, compaction, partition drop and
+    * purge use this form. Because it sweeps, any unreferenced file on
+    * disk goes live — including a refused append's landed files;
+    * writers that know their file set use [[commitSelectingExpecting]]
+    * instead (every index family and [[SnapshotTable.mergeCommit]]).
     * SINGLE WRITER (`v` must be the
     * current version — a stale base is a lost update and is rejected);
     * unreferenced leftovers from a CRASHED past writer would be swept
@@ -420,8 +359,9 @@ object Snapshots {
     * without writer A's commit absorbing writer B's half-landed batch;
     * each commit selects exactly its own tracked additions. Every
     * commit an index family makes after `save` — append, delete,
-    * purge, in the MinHash, BM25, IVF, PQ and Z-order families, and
-    * the IVF centroid refresh — goes through here.
+    * purge, in the MinHash, BM25, IVF, PQ and Z-order families, the
+    * IVF centroid refresh, and [[SnapshotTable.mergeCommit]] on the
+    * label and vocabulary tables — goes through here.
     * Same CAS + readback discipline as [[commitExpecting]]. */
   def commitSelectingExpecting(s: SparkSession, dataDir: String,
       expected: Int, drop: String => Boolean,
@@ -655,10 +595,10 @@ object Snapshots {
     * beyond the manifests both sides already have (Iceberg's
     * incremental scan / Delta's file-level change feed, reduced to the
     * manifest diff). Commits that REPLACE file selections
-    * ([[commitReplacing]], [[compactCommit]]) surface the replacement
-    * files too — file-level, not row-level, semantics there; pair with
-    * a row-level change feed (the q114 shape) when replacements are in
-    * play. `fromV` may be 0 (“from nothing”): the full `toV` set. */
+    * ([[commitReplacing]], [[commitSelectingExpecting]]) surface the
+    * replacement files too — file-level, not row-level, semantics
+    * there; pair with a row-level change feed (the q114 shape) when
+    * replacements are in play. `fromV` may be 0 (“from nothing”): the full `toV` set. */
   def readIncremental(s: SparkSession, dataDir: String, fromV: Int,
       toV: Int,
       emptySchema: Option[org.apache.spark.sql.types.StructType] = None)

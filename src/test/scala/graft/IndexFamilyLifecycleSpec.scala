@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.{IndexMaintenance, IvfTopK, PqIndex, Snapshots, ZOrderLayout}
+import graft.plans.{IvfTopK, PqIndex, Snapshots, ZOrderLayout}
 
 /** The IVF, PQ and Z-order families have one lifecycle, the
   * snapshot-committed one: `save` publishes v1, every serve reads a
@@ -135,8 +135,8 @@ class IndexFamilyLifecycleSpec extends SparkSpec {
     val simMethods = graft.operators.Similarity.getClass.getMethods.map(_.getName)
     assert(!simMethods.contains("refreshAssignment"),
       "the in-place refreshAssignment is back")
-    assert(!IndexMaintenance.getClass.getMethods.map(_.getName)
-      .contains("compactPartitioned"), "compactPartitioned is back")
+    intercept[ClassNotFoundException](
+      Class.forName("graft.plans.IndexMaintenance"))
   }
 
   /** Land `rows` as data files no manifest references, under their

@@ -1635,15 +1635,6 @@ class ScaleShapeSpec extends SparkSpec {
       assert(asOf == rows(
         graft.plans.MinHashIndex.serveAsOf(s, idx, v2, probe)),
         "compaction changed served rows")
-      // an IN-PLACE rewrite on the committed index must refuse loudly —
-      // it would delete files versions v2/v3 still reference
-      val e = intercept[IllegalArgumentException] {
-        graft.plans.IndexMaintenance.deletePartitioned(s, s"$idx/bands",
-          Seq("band_id"), "doc_id",
-          docs.limit(1).select(col("doc_id")))
-      }
-      assert(e.getMessage.contains("manifest-committed"),
-        s"wrong refusal message: ${e.getMessage}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -2570,65 +2561,54 @@ class ScaleShapeSpec extends SparkSpec {
       new java.io.File(staging))
   }
 
-  test("upsertPartitioned: partition-local merge — untouched buckets survive " +
-      "byte-identical, moves empty their source partition") {
+  test("mergeCommit: partition-local merge — untouched buckets carry verbatim") {
     val s = spark
     import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("upsert_part").toString
+    import graft.plans.{SnapshotTable, Snapshots}
+    val staging = java.nio.file.Files.createTempDirectory("merge_part").toString
     try {
       val dir = s"$staging/data"
-      // 4 buckets: b0={1,2}, b1={11}, b2={21,22}, b3={31}
-      Seq((1L, 100L, 0), (2L, 200L, 0), (11L, 110L, 1),
-          (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3))
-        .toDF("id", "v", "b")
-        .repartition(col("b"))
-        .write.partitionBy("b").parquet(dir)
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(dir, conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      // update id=1 in place (touches b0), MOVE id=11 from b1 to b0
-      // (b1 empties), insert id=41 into b3; b2 is untouched
-      val n = graft.plans.IndexMaintenance.upsertPartitioned(s, dir,
-        Seq("b"), "id",
-        Seq((1L, 101L, 0), (11L, 111L, 0), (41L, 410L, 3))
-          .toDF("id", "v", "b"))
-      assert(n == 5, s"expected 5 rows written (b0: 3, b3: 2), got $n")
-      val after = files()
-      // locality: b2's file survives byte-identical (same path, length,
-      // mtime) — a table-wide rewrite would replace every file
-      val untouched = after.keys.filter(_.contains("b=2"))
-      assert(untouched.nonEmpty &&
-        untouched.forall(p => before.get(p) == after.get(p)),
-        "the untouched bucket was rewritten — no upsert locality")
-      // the emptied source bucket is gone (dynamic overwrite alone
-      // would leave its stale file to resurrect)
-      assert(!after.keys.exists(_.contains("b=1")),
-        "emptied partition b=1 still has files")
-      val got = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
-      assert(got === Set((1L, 101L, 0), (2L, 200L, 0), (11L, 111L, 0),
+      // 4 buckets, b = id / 10: b0={1,2}, b1={11}, b2={21,22}, b3={31}
+      val v1 = SnapshotTable.saveCommit(s,
+        Seq((1L, 100L, 0), (2L, 200L, 0), (11L, 110L, 1),
+            (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3))
+          .toDF("id", "v", "b").repartition(col("b")),
+        dir, Seq("b"))
+      def filesIn(v: Int, b: Int) = Snapshots.files(s, dir, v)
+        .filter(_.contains(s"/b=$b/")).toSet
+      def rows(v: Int) = SnapshotTable.readAsOf(s, dir, v, "id")
+        .as[(Long, Long, Int)].collect().toSet
+      // update id=1 (touches b0), delete id=11 (b1 empties), insert
+      // id=41 into b3; b2 is untouched
+      val v2 = SnapshotTable.mergeCommit(s, dir, Seq("b"), "id",
+        Seq((1L, 101L, 0), (41L, 410L, 3)).toDF("id", "v", "b"),
+        Some(Seq((11L, 1)).toDF("id", "b")))
+      assert(v2 == v1 + 1, s"the merge did not commit one version: v$v2")
+      // locality: b2's manifested files carry over by name — a
+      // table-wide rewrite would replace every file
+      assert(filesIn(v1, 2).nonEmpty && filesIn(v2, 2) == filesIn(v1, 2),
+        "the untouched bucket was rewritten — no merge locality")
+      assert(filesIn(v2, 0) != filesIn(v1, 0) &&
+        filesIn(v2, 3) != filesIn(v1, 3), "a touched bucket was not rewritten")
+      // the emptied bucket drops out of the new manifest
+      assert(filesIn(v2, 1).isEmpty, "emptied partition b=1 still has files")
+      assert(rows(v2) === Set((1L, 101L, 0), (2L, 200L, 0),
         (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3), (41L, 410L, 3)),
-        s"merged rows wrong: $got")
-      // partitionFromKey fast path: partition is a pure function of
-      // the key here (each id stays in its bucket), so the touched set
-      // comes from the update rows alone — same merge result, and the
-      // still-untouched bucket again survives byte-identical
-      val before2 = files()
-      val n2 = graft.plans.IndexMaintenance.upsertPartitioned(s, dir,
-        Seq("b"), "id",
-        Seq((2L, 201L, 0), (51L, 510L, 2)).toDF("id", "v", "b"),
-        partitionFromKey = true)
-      assert(n2 == 6, s"expected 6 rows written (b0: 3, b2: 3), got $n2")
-      val after2 = files()
-      val untouched2 = after2.keys.filter(_.contains("b=3"))
-      assert(untouched2.nonEmpty &&
-        untouched2.forall(p => before2.get(p) == after2.get(p)),
-        "partitionFromKey rewrote an untouched bucket")
-      val got2 = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
-      assert(got2 === Set((1L, 101L, 0), (2L, 201L, 0), (11L, 111L, 0),
-        (21L, 210L, 2), (22L, 220L, 2), (51L, 510L, 2),
-        (31L, 310L, 3), (41L, 410L, 3)), s"fast-path merge wrong: $got2")
+        s"merged rows wrong: ${rows(v2)}")
+      // a second merge: update id=2 (b0), insert id=51 (b5, a new
+      // bucket); b2 and b3 again carry over unchanged
+      val v3 = SnapshotTable.mergeCommit(s, dir, Seq("b"), "id",
+        Seq((2L, 201L, 0), (51L, 510L, 5)).toDF("id", "v", "b"))
+      assert(filesIn(v3, 2) == filesIn(v2, 2) &&
+        filesIn(v3, 3) == filesIn(v2, 3), "the merge rewrote an untouched bucket")
+      assert(rows(v3) === Set((1L, 101L, 0), (2L, 201L, 0),
+        (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3), (41L, 410L, 3),
+        (51L, 510L, 5)), s"second merge wrong: ${rows(v3)}")
+      // older versions still read their own rows
+      assert(rows(v1).size == 6 && rows(v1).contains((11L, 110L, 1)))
+      // no change rows: nothing commits
+      assert(SnapshotTable.mergeCommit(s, dir, Seq("b"), "id",
+        Seq.empty[(Long, Long, Int)].toDF("id", "v", "b")) == v3)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -2655,10 +2635,14 @@ class ScaleShapeSpec extends SparkSpec {
       val before = files()
       assert(before.keys.count(_.contains("b=0")) == 3 &&
         before.keys.count(_.contains("b=1")) == 2, s"fixture rot: $before")
-      import graft.plans.Snapshots
-      Snapshots.commit(s, dir)
-      val (v2, n) = Snapshots.compactCommit(s, dir, Seq("b"), maxFiles = 2)
-      assert(n == 1, s"expected 1 partition rewritten, got $n")
+      import graft.plans.{SnapshotTable, Snapshots}
+      val v1 = Snapshots.commit(s, dir)
+      val v2 = SnapshotTable.compactCommit(s, dir, maxFiles = 2,
+        partitionCols = Seq("b"))
+      def partOf(p: String) = p.split('/').filter(_.startsWith("b=")).toSeq
+      val n = (Snapshots.files(s, dir, v2).toSet --
+        Snapshots.files(s, dir, v1)).map(partOf).size
+      assert(v2 == v1 + 1 && n == 1, s"expected 1 partition rewritten, got $n")
       val after = files()
       val live = Snapshots.files(s, dir, v2)
         .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
@@ -2677,30 +2661,35 @@ class ScaleShapeSpec extends SparkSpec {
       assert(got === Set((1L, 10L, 0), (2L, 20L, 0), (3L, 30L, 0),
         (101L, 11L, 1), (102L, 21L, 1)), s"rows changed: $got")
       // idempotent: nothing left over threshold
-      assert(Snapshots.compactCommit(s, dir, Seq("b"), maxFiles = 2) ==
-        (v2, 0))
+      assert(SnapshotTable.compactCommit(s, dir, maxFiles = 2,
+        partitionCols = Seq("b")) == v2)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
   }
 
-  test("deletePartitioned refuses non-integral partition columns (Hive path escaping)") {
+  test("mergeCommit refuses non-integral partition columns (Hive path escaping)") {
     val s = spark
     import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("delpart_guard").toString
+    import graft.plans.{SnapshotTable, Snapshots}
+    val staging = java.nio.file.Files.createTempDirectory("merge_guard").toString
     try {
-      Seq((1L, "a x"), (2L, "b%2"), (3L, "a x"))
-        .toDF("id", "part")
-        .write.partitionBy("part").parquet(s"$staging/data")
+      val dir = s"$staging/data"
+      SnapshotTable.saveCommit(s,
+        Seq((1L, "a x"), (2L, "b%2"), (3L, "a x")).toDF("id", "part"),
+        dir, Seq("part"))
       val err = intercept[IllegalArgumentException] {
-        graft.plans.IndexMaintenance.deletePartitioned(s, s"$staging/data",
-          Seq("part"), "id", Seq(1L).toDF("id"))
+        SnapshotTable.mergeCommit(s, dir, Seq("part"), "id",
+          Seq((4L, "a x")).toDF("id", "part"),
+          Some(Seq((1L, "a x")).toDF("id", "part")))
       }
       // string partition values are Hive path-escaped on disk; the
-      // emptied-dir cleanup builds raw "$c=$v" paths, so the guard
-      // must refuse before any rewrite happens
+      // merge matches touched dirs as raw "$c=$v" segments, so the
+      // guard must refuse before anything lands or commits
       assert(err.getMessage.contains("integral"))
-      assert(s.read.parquet(s"$staging/data").count() == 3,
+      assert(Snapshots.versions(s, dir) == Seq(1),
+        "guard must refuse BEFORE committing a version")
+      assert(SnapshotTable.readAsOf(s, dir, 1, "id").count() == 3,
         "guard must refuse BEFORE mutating the layout")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
@@ -4043,7 +4032,8 @@ class ScaleShapeSpec extends SparkSpec {
       for (i <- 4 to 20) {
         append(i)
         if (i % 5 == 0) {
-          Snapshots.compactCommit(s, dir, Seq("b"), maxFiles = 2)
+          graft.plans.SnapshotTable.compactCommit(s, dir, maxFiles = 2,
+            partitionCols = Seq("b"))
           Snapshots.expireKeeping(s, dir, keepLast = 3)
           // the pin holds at every cadence point: manifest resolvable,
           // files byte-identical, rollback legal
