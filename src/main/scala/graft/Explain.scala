@@ -88,11 +88,11 @@ object Explain {
     "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.purgeCommit (maxFiles = 1): each band fragmented by the appends is merged copy-on-write into one file and committed as the next version — identical verdict oracle proves the rewrite result-neutral",
     "q103s_stream_ingest" -> "q103 driven through the engine's micro-batch cycle: foreachBatch admits each arriving batch (verdicts staged to parquet, admitted ids JOINED — no In-literal) and appends before the next trigger; pinned plan is the final verdict read",
     "q104_stream_budget" -> "transformWithState on RocksDB state v2: per-source Long counter seeded from the initial-state budget relation, arrival-ordered cap; pinned plan is the post-replay ordering over the sink cut",
-    "q107_index_delete" -> "retention delete from the persisted LSH index: a tombstone commit, then a band-local purge commit that rewrites ONLY the bands holding the deleted docs' band rows, one new file each; pinned plan is the serve scan over the purged version's manifested files",
+    "q107_index_delete" -> "retention delete from the persisted LSH index: MinHashIndex.deleteCommit (Tombstoned.deleteCommit keyed by doc_id) lands the ids as one tombstone file, then Tombstoned.purgeCommit rewrites ONLY the band_id dirs holding the deleted docs' band rows, one new file each, and commits exactly the files it landed (commitSelectingExpecting — nothing swept in); the probe serve reads the purged version's manifested band files, but the pinned plan is only the presentation sort over that serve's Materialize.cut scan",
     "q109_index_timetravel" -> "snapshot-isolated index with time travel (manifest commits): append adds files + commits v2, then ONE probe sketch serves as-of v1 AND v2 — the v1 leg reads the v1 manifest's band files, blind to the append by construction",
     "q110_incremental_clusters" -> "incremental cluster maintenance: batch edges from the persisted-index serve + within-batch band join (one shared probe sketch), label propagation on the QUOTIENT graph (batch docs + touched cluster labels only), broadcast label remap back onto the resident state — never a corpus re-cluster",
-    "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented bands lands ONE new sibling file per band and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
-    "q114_cluster_changefeed" -> "change data feed from the incremental cluster step: inserts straight from the quotient propagation, updates from the label table joined against the BROADCAST changed-remap — O(batch + touched members), never a corpus diff of two label snapshots; pinned plan is the feed union",
+    "q113_snapshot_compact" -> "snapshot-preserving compaction: appendCommitRetrying commits v2 (one new file per band), then Tombstoned.purgeCommit merges each fragmented band into ONE new sibling file landed through landStaged and commits v3 selecting exactly those files, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; the pinned plan is only the presentation sort over the three-leg as-of serve union's Materialize.cut scan",
+    "q114_cluster_changefeed" -> "change data feed from the incremental cluster step: inserts straight from the quotient propagation, updates from the label table joined against the BROADCAST changed-remap — O(batch + touched members), never a corpus diff of two label snapshots; the feed union is materialized (Materialize.cut), so the pinned plan is only the presentation sort over its scan",
     "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, commits one copy-on-write mergeCommit into the bucket-partitioned label table (touched buckets from the change rows — no resident scan; untouched buckets keep their files), and appends to the index before the next trigger; pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
     "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and commits its delete and relabels as ONE copy-on-write mergeCommit before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
     "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; the retired rows' delete and the relabels land as ONE copy-on-write mergeCommit (one version; untouched buckets keep their files); pinned plan is the presentation sort over the Materialize.cut of the final as-of label-table read",
@@ -123,23 +123,23 @@ object Explain {
     "q135_state_timetravel" -> "cluster-state time travel: the q110 quotient increment lands through SnapshotTable.mergeCommit on the born-committed v1 (touched dbuckets rewrite as sibling files the commit selects by name), then one query reads the label table as-of v1 AND v2 — the reproducibility record of a run's own dedup decisions; pinned plan is the presentation sort over the Materialize.cut of the two-leg as-of union",
     "q136_parse_quarantine" -> "dead-letter quarantine: pure column expressions over ONE scan of the raw feed (no second pass), each record parsed ONCE behind an explode(array(from_json(…))) generator barrier (one row per raw record, null structs included) — reasons keyed off the parser's own corrupt-record column so the parse/quarantine split is independent of the partial-results conf; the only shuffle is the presentation sort",
     "q137_occ_commit_retry" -> "optimistic-concurrency commit loop: both writers' data land as ordinary parquet appends; conflict detection is one manifest stat + an atomic-rename CAS and the retry re-LISTS file names, never re-writes — pinned plan is the committed-version read (a plain pruned scan of the manifested files)",
-    "q138_snapshot_delete" -> "committed-index row-level delete: the tombstone list rides a BROADCAST anti-join under each version's manifested band scan (merge-on-read), the purge rewrites only bands holding tombstoned rows into one new file each (a doc has exactly Bands band rows, so a purge writes at most Bands files); pinned plan is the three-leg as-of serve union",
-    "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption — both serve legs are ordinary manifest-listing scans of the version's band files, the tag-resolved leg byte-identical to the pre-append version months of retention later; pinned plan is the two-leg as-of serve union",
+    "q138_snapshot_delete" -> "committed-index row-level delete: MinHashIndex.deleteCommit (Tombstoned.deleteCommit keyed by doc_id) lands the tombstone list as one file under bands/deletes/, which every later version's serve BROADCAST-anti-joins under its manifested band scan (merge-on-read); Tombstoned.purgeCommit rewrites only bands holding tombstoned rows into one new file each (a doc has exactly Bands band rows, so a purge writes at most Bands files) and commits only those; the pinned plan is only the presentation sort over the three-leg as-of serve union's Materialize.cut scan",
+    "q139_tagged_snapshot" -> "tagged snapshot surviving retention: the tag is one ref file and an expire-time manifest exemption; appendCommitRetrying commits v2 selecting only its own landed band files, expire reclaims the untagged history, and both serve legs are manifest-listing scans of the version's band files, the tag-resolved leg byte-identical to the pre-append version; the pinned plan is only the presentation sort over the two-leg as-of serve union's Materialize.cut scan",
     "q140_cluster_representative" -> "quality-aware dup representative: row_number window PARTITIONED by cluster_id (no SinglePartition exchange) over the memoized cluster relation joined to doc lengths — the keep-longest keep-list costs one shuffle of skinny rows, per-task work bounded by the largest cluster",
     "q141_bm25_occ_append" -> "OCC for derived-artifact commits: both writers run appendCommitRetrying; additive postings/df-delta segments land once, the conditional stats row is re-DERIVED against each new current and re-published via an explicit-selection CAS commit (a concurrent writer's half-landed files are never swept in); each serve leg keeps tbucket pruning + query-term pushdown, but the pinned plan is only the presentation sort over the three-leg union's Materialize.cut scan",
     "q142_zorder_timetravel" -> "Z-order snapshot lifecycle: save commits v1, appendCommit/deleteCommit/purgeCommit each commit only the files they land, serves as-of every version with the driver-side coarse-cell zbucket predicate pruning THROUGH the manifested listing (basePath); tombstones broadcast-anti-join, the COW purge re-z-sorts only touched zbuckets; the pinned plan is only the presentation sort over the four-leg as-of serve union's Materialize.cut scan",
     "q143_ivf_snapshot_delete" -> "committed IVF row-level delete: tombstones land under the manifested tree, version-aware serves anti-join their own version's broadcast list under the cid-pruned probe scan, the COW purge rewrites only cid cells holding tombstoned vectors (a vector lives in exactly ONE cell) and commits only its own files; the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
     "q144_pq_snapshot_delete" -> "committed PQ row-level delete: tombstones under codes/deletes/, ADC serves anti-join the pinned list under the broadcast lookup-table join, the COW purge rewrites only code FILES holding tombstoned rows (flat table — file granularity) and commits only its own files; the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
     "q145_stats_skipping" -> "manifest-level file statistics: the 3-day range plans over only the intersecting files of the version (driver-side bounds check against the appended stats segments — non-matching footers never open), then the exact predicate + one partial-aggregated groupBy; pinned plan is the pruned scan's file count vs the version's",
-    "q146_table_delete" -> "corpus-table row-level delete: tombstones land as one file inside the manifested tree (merge-on-read — broadcast anti-join under each version's scan), the COW purge rewrites only files holding tombstoned rows via a skinny (id, input_file_name) probe under the broadcast list; pinned plan is the three-leg as-of union",
+    "q146_table_delete" -> "corpus-table row-level delete: SnapshotTable.deleteCommit checks residency, then Tombstoned.deleteCommit lands the tombstones as one file under deletes/ (merge-on-read — broadcast anti-join under each version's scan); SnapshotTable.purgeCommit is Tombstoned.purgeCommit with the file as the rewrite unit — a skinny (id, input_file_name) probe under the broadcast list finds the files holding tombstoned rows, their survivors land through landStaged and the commit selects exactly them (commitSelectingExpecting); the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
     "q147_pruned_serve" -> "generic pruned serve: the DEFAULT committed-table read path consults the FileStats sidecar — string-lane (16-char truncated, Iceberg-style) bounds drop the non-intersecting files of the source-clustered corpus from the plan before any footer opens, the pinned tombstone list still broadcast-anti-joins merge-on-read; pinned plan is the pruned scan + anti-join + exact predicate",
-    "q148_partitioned_delete" -> "partitioned-table row-level DML: day-sprayed committed events, tombstones merge-on-read (broadcast anti-join under each version's basePath scan — partition pruning survives the manifested listing), the COW purge re-sprays only files holding tombstoned rows back into their own day dirs via partitionBy (touched set confined to the tombstoned days by the clustering); pinned plan is the three-leg as-of union",
-    "q149_lsh_occ_append" -> "OCC append for the band family (df-free, so every landed artifact is additive): both writers' band files land exactly once, one file per band each, the loser's retry re-validates only the re-ingest guard and re-publishes an explicit file selection (commitSelectingExpecting — no sweep); pinned plan is the three-leg as-of serve union over each version's band files",
-    "q150_schema_evolution" -> "schema evolution on the committed corpus: a widening batch flips the one-stat evolved marker, serves of evolved versions schema-merge (distributed footer pass — pre-evolution files null-fill the added column) while v1 time travel keeps its own schema; pinned plan is the merged-schema serve scan",
-    "q151_table_compact" -> "flat-table small-file compaction (OPTIMIZE): the COW rewrite is one repartition shuffle of the current selection into maxFiles sibling files, the commit swaps the selection, tombstones stay pinned; pinned plan is the three-leg as-of union where the compacted leg reads exactly maxFiles files",
+    "q148_partitioned_delete" -> "partitioned-table row-level DML: day-sprayed committed events, tombstones merge-on-read (broadcast anti-join under each version's basePath scan — partition pruning survives the manifested listing), and the Tombstoned purge re-sprays only files holding tombstoned rows back into their own day dirs via a partitionBy write into a private staging dir, committing exactly those files (touched set confined to the tombstoned days by the clustering); the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
+    "q149_lsh_occ_append" -> "OCC append for the band family (df-free, so every landed artifact is additive): both writers' band files land exactly once, one file per band each, the loser's retry re-validates only the re-ingest guard (Tombstoned.refuseTombstoned) and re-publishes an explicit file selection (commitSelectingExpecting — no sweep); the pinned plan is only the presentation sort over the three-leg as-of serve union's Materialize.cut scan",
+    "q150_schema_evolution" -> "schema evolution on the committed corpus: a widening batch flips the one-stat evolved marker and lands through Tombstoned.appendCommit (commitSelectingExpecting selects exactly its files); serves of evolved versions schema-merge (distributed footer pass — pre-evolution files null-fill the added column) while v1 time travel keeps its own schema; the sorted merged-schema serve is materialized (Materialize.cut), so the pinned plan is only its scan",
+    "q151_table_compact" -> "flat-table small-file compaction (OPTIMIZE): the COW rewrite is one repartition shuffle of the current selection into maxFiles sibling files landed through landStaged, the commit drops exactly the files it rewrote (commitSelectingExpecting), tombstones stay pinned; the compacted leg reads exactly maxFiles files, but the pinned plan is only the presentation sort over the three-leg as-of union's Materialize.cut scan",
     "q152_partitioned_compact" -> "partitioned-table compaction: each fragmented day merges to ONE file inside its own dir via one shuffle hash-keyed by the partition column (task count = fragmented-partition count), untouched days carry byte-identical, tombstones stay pinned; the compacted leg reads one file per day, but the pinned plan is only the presentation sort over the four-leg as-of union's Materialize.cut scan",
     "q153_pruned_serve_multi" -> "conjunctive multi-column pruned serve: the (source, doc_id)-clustered corpus prunes on BOTH recorded lanes — the survivor file set is the intersection of the string-lane and long-lane prunes, strictly smaller than either alone — then the exact predicate + pinned-tombstone anti-join run on what remains; pinned plan is the doubly-pruned scan",
-    "q154_partition_drop" -> "partition-level retention: dropPartitionsCommit is a pure manifest selection swap — no file read, written, or deleted; one manifest delta however many terabytes the dropped days hold — and v1 time travel keeps serving the dropped days until expire; pinned plan is the two-leg as-of union where the post-drop leg lists only surviving day dirs",
+    "q154_partition_drop" -> "partition-level retention: dropPartitionsCommit is a pure manifest selection swap (commitSelectingExpecting with no new file) — no file read, written, or deleted; one manifest delta however many terabytes the dropped days hold — and v1 time travel keeps serving the dropped days until expire; the post-drop leg lists only surviving day dirs, but the pinned plan is only the presentation sort over the two-leg as-of union's Materialize.cut scan",
   )
 
   /** The >=1 s set (BENCH_r12 medians + the round-13 bench for the

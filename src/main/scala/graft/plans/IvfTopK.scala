@@ -200,9 +200,11 @@ object IvfTopK {
     * Returns the committed version (unchanged when there is nothing
     * to purge or merge). */
   def purgeCommit(s: SparkSession, indexDir: String,
-      maxFiles: Int = 1): Int =
-    Tombstoned.purgeCommit(s, s"${qualify(s, indexDir)}/assignment",
-      "vec_id", maxFiles, Tombstoned.segment("cid"))(writeCells(_, _, "append"))
+      maxFiles: Int = 1): Int = {
+    val dir = s"${qualify(s, indexDir)}/assignment"
+    Tombstoned.purgeCommit(s, dir, "vec_id", maxFiles, Tombstoned.segment("cid"),
+      ManifestIO.read(s, dir, _))(writeCells(_, _, "append"))
+  }
 
   /** The serve body over an assignment RELATION (a snapshot file
     * set): q39's probe arithmetic from the saved centroids, static

@@ -41,8 +41,11 @@ import graft.operators.Dedup
   * [[deleteCommit]], [[purgeCommit]] — lands its files through
   * [[Snapshots.landStaged]] and publishes exactly those files on top
   * of the version it read ([[Snapshots.commitSelectingExpecting]]).
-  * No file an index references is ever rewritten, and no commit
-  * claims a file another writer left on disk.
+  * The delete, the purge and the versioned read are [[Tombstoned]]'s,
+  * the lifecycle every tombstoned table shares (key `doc_id`, rewrite
+  * unit the `band_id=` dir); only the batch append and its retry loop
+  * are this index's own. No file an index references is ever
+  * rewritten, and no commit claims a file another writer left on disk.
   *
   * `serve` probes a batch: the batch is sketched map-side with the
   * exact q31 kernel, BROADCAST (the incremental contract is
@@ -90,13 +93,6 @@ object MinHashIndex {
       .write.mode(mode).partitionBy("band_id").parquet(path)
   }
 
-  /** The band a bands-tree file sits in, read off its `band_id=b/`
-    * path segment. */
-  private def bandOf(f: String): Int =
-    f.split('/').find(_.startsWith("band_id=")).map(_.drop(8).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"MinHashIndex: no band_id= segment in $f"))
-
   /** The OCC append's LANDING step, writer-exact: write `bandRows` into
     * a private staging subdir and move them into the live
     * `band_id=` layout ([[Snapshots.landStaged]]), returning
@@ -139,137 +135,41 @@ object MinHashIndex {
     savedDirs.computeIfAbsent((s, IvfTopK.qualify(s, indexDir)),
       _ => save(s, residentDocs, docsPath, indexDir))
 
-  /** Version `v`'s manifested files split into (band files, tombstone
-    * files) — the tombstone list lives under `bands/deletes/` INSIDE
-    * the manifested tree, so one version number pins the index rows
-    * and the deletes that apply to them consistently. */
-  private def manifestPieces(s: SparkSession, bands: String,
-      v: Int): (Seq[String], Seq[String]) =
-    Snapshots.files(s, bands, v)
-      .partition(f => !f.startsWith(s"$bands/deletes/"))
-
-  /** The tombstone rows of `tombF` (a version's `deletes/` files), read
-    * off the manifest with the footer on the driver — no schema job. */
-  private def tombstones(s: SparkSession, bands: String,
-      tombF: Seq[String]): DataFrame =
-    ManifestIO.read(s, s"$bands/deletes", tombF)
-
-  /** Version `v`'s effective bands RELATION: exactly its manifested
-    * band files (basePath keeps the band_id partition column), with
-    * that version's tombstones anti-joined out (broadcast — tombstones
-    * are delete-sized, never corpus-sized). */
-  private def versionRelation(s: SparkSession, bands: String,
-      v: Int): DataFrame = {
-    val (bandF, tombF) = manifestPieces(s, bands, v)
-    if (bandF.isEmpty)
-      throw new IllegalStateException(
-        s"snapshot v$v under $bands references no band files")
-    val rel = ManifestIO.read(s, bands, bandF)
-    if (tombF.isEmpty) rel
-    else rel.join(broadcast(tombstones(s, bands, tombF)),
-      Seq("doc_id"), "left_anti")
-  }
-
-  /** Refuse `ids` that version `w` already tombstones: a
-    * tombstone-×-batch-sized broadcast semi-join, and no job at all
-    * when `w` carries no tombstone list. */
-  private def refuseTombstoned(s: SparkSession, bands: String, w: Int,
-      ids: DataFrame, op: String, why: String): Unit = {
-    val tombF = manifestPieces(s, bands, w)._2
-    if (tombF.nonEmpty) {
-      val clash = ids.join(broadcast(tombstones(s, bands, tombF)),
-        Seq("doc_id"), "left_semi").count()
-      require(clash == 0L,
-        s"$op: $clash doc_id(s) are tombstoned as of v$w — $why")
-    }
-  }
-
-  /** Row-level DELETE under snapshot isolation — the tombstone +
-    * purge-compaction shape ([[Bm25Index.deleteCommit]]'s lexical
-    * form) applied to the band index: the doc_ids land as ONE
-    * tombstone file under the manifested tree and ONE commit pins
-    * them, so readers of version v-and-later anti-join them out
-    * (broadcast) while readers pinned to older versions never see
-    * them — byte-identical time travel through the delete.
-    * [[purgeCommit]] later rewrites exactly the bands holding
-    * tombstoned rows and drops the list. The commit selects v's files
-    * plus the tombstone file this call landed, nothing else: band rows
-    * another writer left unreferenced (a refused append) stay out.
-    * Ids already tombstoned as of the current version are refused
-    * loudly (a double delete is a caller bug; silently re-appending
-    * the tombstone would bloat every later anti-join). Returns the
-    * committed version. */
+  /** Row-level DELETE under snapshot isolation, keyed by doc_id
+    * ([[Tombstoned.deleteCommit]]): the doc_ids land as ONE tombstone
+    * file under `bands/deletes/` and ONE commit pins them, so readers
+    * of that version and later anti-join them out (broadcast) while
+    * readers pinned to older versions never see them — byte-identical
+    * time travel through the delete. [[purgeCommit]] later rewrites
+    * exactly the bands holding tombstoned rows and drops the list.
+    * Ids already tombstoned are refused loudly (a double delete is a
+    * caller bug). Returns the committed version. */
   def deleteCommit(s: SparkSession, indexDir: String,
-      deleteIds: DataFrame): Int = {
-    val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
-    val v = Snapshots.current(s, bands).getOrElse(
-      throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $bands — an index " +
-          "is committed by save()"))
-    val ids = deleteIds.select(col("doc_id")).distinct()
-    // the ids feed a second consumer (the double-delete check) only
-    // when v already carries tombstones: materialize them just then
-    val tombed = manifestPieces(s, bands, v)._2.nonEmpty
-    val staged = if (tombed) graft.Materialize.cut(ids) else ids
-    try {
-      refuseTombstoned(s, bands, v, staged, "deleteCommit",
-        "a repeated delete is a caller bug")
-      val mine = Snapshots.landStaged(s, bands)(stage =>
-        staged.coalesce(1).write.mode("append").parquet(s"$stage/deletes"))
-      Snapshots.commitSelectingExpecting(s, bands, v, _ => false, mine)
-    } finally if (tombed) graft.Materialize.release(staged)
-  }
+      deleteIds: DataFrame): Int =
+    Tombstoned.deleteCommit(s, s"${IvfTopK.qualify(s, indexDir)}/bands",
+      deleteIds, "doc_id")
 
-  /** COPY-ON-WRITE tombstone-purge compaction, BAND-LOCAL: only bands
-    * that hold a tombstoned row (derived from a probe of the
-    * (doc_id, band_id) columns against the broadcast tombstone list)
-    * or more than `maxFiles` data files rewrite their surviving rows
-    * as ONE new sibling file each; every other band's files carry
-    * VERBATIM into the next manifest, which also drops the tombstone
-    * list. With no tombstones this is plain small-file compaction —
-    * the maintenance pass an appending index needs, since every append
-    * adds one file per band. A deleted doc has exactly [[Dedup.Bands]]
-    * rows, one per band, so a purge of a delete rewrites every band
-    * that still holds one of them. The rewrite lands through
-    * [[Snapshots.landStaged]] and the commit selects exactly it, so
-    * files another writer left unreferenced stay out. Older versions
-    * keep time-traveling over their own files until
-    * [[Snapshots.expire]]. Returns the committed version (unchanged
-    * when there is nothing to purge or merge). */
+  /** COPY-ON-WRITE tombstone-purge compaction, BAND-LOCAL
+    * ([[Tombstoned.purgeCommit]] with the band as the rewrite unit):
+    * only bands that hold a tombstoned row or more than `maxFiles`
+    * data files rewrite their surviving rows as ONE new file each
+    * ([[writeBands]]); every other band's files carry VERBATIM into
+    * the next manifest, which also drops the tombstone list. With no
+    * tombstones this is plain small-file compaction — the maintenance
+    * pass an appending index needs, since every append adds one file
+    * per band. A deleted doc has exactly [[Dedup.Bands]] rows, one per
+    * band, so a purge of a delete rewrites every band that still
+    * holds one of them. Older versions keep time-traveling over their
+    * own files until [[Snapshots.expire]]. Returns the committed
+    * version (unchanged when there is nothing to purge or merge). */
   def purgeCommit(s: SparkSession, indexDir: String,
       maxFiles: Int = 1): Int = {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
-    val v = Snapshots.current(s, bands).getOrElse(
-      throw new IllegalStateException(
-        s"purgeCommit: no committed snapshot under $bands"))
-    val (bandF, tombF) = manifestPieces(s, bands, v)
-    val fragged: Set[Int] = bandF.groupBy(bandOf)
-      .filter { case (_, fl) => fl.size > maxFiles }.keySet
-    val tombed: Set[Int] =
-      if (tombF.isEmpty) Set.empty
-      else ManifestIO.read(s, bands, bandF)
-        .join(broadcast(tombstones(s, bands, tombF)), Seq("doc_id"), "left_semi")
-        .select(col("band_id")).distinct()
-        .collect().map(_.getInt(0)).toSet
-    val touched = fragged ++ tombed
-    if (touched.isEmpty && tombF.isEmpty) return v
-    // the rewrite reads v's manifested files and writes into a private
-    // staging dir, so nothing it reads is overwritten under it
-    val mine =
-      if (touched.isEmpty) Nil
-      else {
-        val cur = ManifestIO.read(s, bands,
-          bandF.filter(f => touched(bandOf(f))))
-        val purged =
-          if (tombF.isEmpty) cur
-          else cur.join(broadcast(tombstones(s, bands, tombF)),
-            Seq("doc_id"), "left_anti")
-        Snapshots.landStaged(s, bands)(stage =>
-          graft.Jobs.labeled(s, "lsh: purge rewrite")(
-            writeBands(purged, stage, "append")))
-      }
-    Snapshots.commitSelectingExpecting(s, bands, v,
-      f => f.startsWith("deletes/") || touched(bandOf(f)), mine)
+    Tombstoned.purgeCommit(s, bands, "doc_id", maxFiles,
+      Tombstoned.segment("band_id"), ManifestIO.read(s, bands, _)) {
+      (rows, stage) => graft.Jobs.labeled(s, "lsh: purge rewrite")(
+        writeBands(rows, stage, "append"))
+    }
   }
 
   /** OPTIMISTIC-CONCURRENCY append — the q141 re-derive protocol
@@ -328,14 +228,13 @@ object MinHashIndex {
       batch: DataFrame, bandRowsOf: DataFrame => DataFrame,
       expected: Option[Int], maxRetries: Int): (Int, Int) = {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
-    var v = expected.orElse(Snapshots.current(s, bands)).getOrElse(
-      throw new IllegalStateException(
-        s"appendCommitRetrying: no committed snapshot under $bands"))
+    val op = "appendCommitRetrying"
+    var v = expected.getOrElse(Tombstoned.current(s, bands, op))
     val local = isLocal(batch)
     val staged = if (local) batch else graft.Materialize.cut(batch)
     val ids = staged.select(col("doc_id")).distinct()
     def checkTombstones(w: Int): Unit =
-      refuseTombstoned(s, bands, w, ids, "appendCommitRetrying",
+      Tombstoned.refuseTombstoned(s, bands, w, ids, "doc_id", op,
         "a purgeCommit must land first (landed band rows are " +
           "unreferenced; expire() reclaims them)")
     // a materialized `staged` must stay so through the retry loop —
@@ -361,9 +260,7 @@ object MinHashIndex {
             throw new Snapshots.SnapshotConflictException(
               s"appendCommitRetrying: still conflicting after " +
                 s"$maxRetries retries under $bands — last: ${e.getMessage}")
-          v = Snapshots.current(s, bands).getOrElse(
-            throw new IllegalStateException(
-              s"appendCommitRetrying: snapshots vanished under $bands"))
+          v = Tombstoned.current(s, bands, op)
           checkTombstones(v)
         }
       }
@@ -443,7 +340,7 @@ object MinHashIndex {
   /** [[serveAsOf]] over ALREADY-SKETCHED probe band rows (one probe
     * sketch shared across several as-of reads — the q109 form). The
     * relation is the version's manifested band files with ITS
-    * tombstones anti-joined ([[versionRelation]]) — a version
+    * tombstones anti-joined ([[Tombstoned.relation]]) — a version
     * committed before a [[deleteCommit]] still sees the deleted docs,
     * one committed after does not. */
   def serveRowsAsOf(s: SparkSession, indexDir: String, version: Int,
@@ -466,10 +363,7 @@ object MinHashIndex {
     * by [[save]] and is refused. One manifest-dir listing. */
   private def serveFrom(s: SparkSession, h: Handle,
       probeRows: DataFrame): DataFrame =
-    serveOn(s, h.bandsPath, Snapshots.current(s, h.bandsPath).getOrElse(
-      throw new IllegalStateException(
-        s"MinHashIndex: no committed snapshot under ${h.bandsPath} — an " +
-          "index is committed by save(); this bands dir was not")),
+    serveOn(s, h.bandsPath, Tombstoned.current(s, h.bandsPath, "serve"),
       probeRows)
 
   /** The serve join against version `version` of the bands under
@@ -479,7 +373,7 @@ object MinHashIndex {
     val probe = probeRows.select(
       col("doc_id").as("probe_doc"), col("sig").as("sig_a"),
       col("bk0").as("probe_bk0"), col("band_id"), col("band_key"))
-    val idx = versionRelation(s, bands, version)
+    val idx = Tombstoned.relation(s, bands, version, "doc_id")
       .select(col("doc_id").as("corpus_doc"), col("sig").as("sig_b"),
         col("bk0").as("corpus_bk0"), col("band_id"), col("band_key"))
     idx.join(broadcast(probe), Seq("band_id", "band_key"))

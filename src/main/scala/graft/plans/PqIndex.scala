@@ -159,9 +159,11 @@ object PqIndex {
     * manifest selects [untouched files + the rewrite] and drops the
     * tombstone list. Returns the committed version (unchanged with
     * nothing to purge). */
-  def purgeCommit(s: SparkSession, indexDir: String): Int =
-    Tombstoned.purgeCommit(s, s"${IvfTopK.qualify(s, indexDir)}/codes",
-      "vec_id", 1, identity)(_.write.mode("append").parquet(_))
+  def purgeCommit(s: SparkSession, indexDir: String): Int = {
+    val dir = s"${IvfTopK.qualify(s, indexDir)}/codes"
+    Tombstoned.purgeCommit(s, dir, "vec_id", 1, identity,
+      ManifestIO.read(s, dir, _))(_.write.mode("append").parquet(_))
+  }
 
   /** The ADC body over a codes RELATION (a snapshot file set):
     * map-side shift/mask unpack, then the q89b broadcast-ADC join. */

@@ -42,14 +42,25 @@ import org.apache.spark.sql.functions._
   *    tables): only the partitions its change rows hash into rewrite,
   *    as new siblings that the commit selects by name.
   *
+  * The append, delete and purge are [[Tombstoned]]'s, the lifecycle
+  * every tombstoned table shares; what is this table's own is schema
+  * evolution and its markers, the declared layout
+  * ([[requireLayout]]), the delete's resident check and the
+  * [[FileStats]]-pruned serves. After [[saveCommit]] every commit
+  * lands its files through [[Snapshots.landStaged]] and selects
+  * exactly those on top of the version it read
+  * ([[Snapshots.commitSelectingExpecting]]): a file another writer
+  * left on disk is never swept in, and a lost race fails with
+  * [[Snapshots.SnapshotConflictException]] instead of publishing over
+  * the other writer.
+  *
   * Layouts: FLAT tables by default; hive-partitioned tables are
   * supported by DECLARING `partitionCols` on every lifecycle call —
   * the layout is validated against the declaration ([[requireLayout]])
   * and the purge reconstructs the spraying via a partitionBy rewrite
   * (survivors land as new siblings inside their own partition dirs,
   * so a key-local delete purges key-locally). An undeclared hive
-  * layout still refuses loudly. Single writer per table like
-  * [[Snapshots.commit]].
+  * layout still refuses loudly.
   */
 object SnapshotTable {
 
@@ -164,12 +175,6 @@ object SnapshotTable {
             s" do not match the declared [${partitionCols.mkString(",")}]")
     }
 
-  /** Version `v`'s manifested files split into (data, tombstones). */
-  private def pieces(s: SparkSession, dataDir: String,
-      v: Int): (Seq[String], Seq[String]) =
-    Snapshots.files(s, dataDir, v)
-      .partition(f => !f.startsWith(s"$dataDir/$deletesPrefix/"))
-
   private def writeRows(rows: DataFrame, dataDir: String,
       partitionCols: Seq[String]): Unit = {
     val w = rows.write.mode("append")
@@ -202,9 +207,10 @@ object SnapshotTable {
     Snapshots.commit(s, dataDir)
   }
 
-  /** Append a batch and commit — refusing ids that are tombstoned as
-    * of the current version (their physical rows would resurrect when
-    * a purge drops the list; purge first, then re-ingest).
+  /** Append a batch and commit ([[Tombstoned.appendCommit]]) —
+    * refusing ids that are tombstoned as of the current version (their
+    * physical rows would resurrect when a purge drops the list; purge
+    * first, then re-ingest).
     *
     * SCHEMA EVOLUTION (`allowEvolution = true`): the batch may WIDEN
     * the table — it must still carry every current column at its
@@ -220,16 +226,14 @@ object SnapshotTable {
   def appendCommit(s: SparkSession, dataDir: String, rows: DataFrame,
       idCol: String, partitionCols: Seq[String] = Nil,
       allowEvolution: Boolean = false): Int = {
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"appendCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "appendCommit")
     // validate the DECLARED layout against v's committed tree before
     // anything lands: an append that omits (or mistypes) partitionCols
     // on a partitioned table would write flat/mis-sprayed files into
     // the tree and commit them — corruption the next delete's own
     // layout check would only discover one committed version too late
     requireLayout(s, dataDir, v, partitionCols)
-    val dataF0 = pieces(s, dataDir, v)._1
+    val dataF0 = Tombstoned.pieces(s, dataDir, v)._1
     require(dataF0.nonEmpty,
       s"appendCommit: v$v under $dataDir has no data files")
     val current = readFiles(s, dataDir, v, dataF0).schema
@@ -260,38 +264,21 @@ object SnapshotTable {
       if (!fs.exists(m)) fs.create(m, true).close()
       dropUniformMarkers(s, dataDir)
     }
-    val tombF = pieces(s, dataDir, v)._2
-    if (tombF.nonEmpty) {
-      val clash = rows.select(col(idCol)).distinct()
-        .join(broadcast(s.read.parquet(tombF: _*)), Seq(idCol),
-          "left_semi").count()
-      require(clash == 0L,
-        s"appendCommit: $clash $idCol(s) are tombstoned as of v$v — " +
-          "run purgeCommit before re-ingesting a deleted id")
-    }
-    writeRows(rows, dataDir, partitionCols)
-    // SELECTION commit, never a full disk re-listing: after a purge
-    // the dropped pre-purge files and the tombstone list stay on disk
-    // for the OLDER versions until expire — a listing commit would
-    // sweep them back in (duplicated survivor rows, and a re-pinned
-    // tombstone list that anti-joins away exactly the ids the guard
-    // above just told the caller to purge-then-re-ingest). v's files
-    // plus the newly-landed unreferenced batch is the append.
-    Snapshots.commitReplacing(s, dataDir, v, Nil)
+    Tombstoned.appendCommit(s, dataDir, rows, idCol)(
+      writeRows(_, _, partitionCols))
   }
 
   /** Row-level DELETE under snapshot isolation: land the ids as ONE
-    * tombstone file inside the manifested tree and commit. Both
-    * delete-contract halves are enforced: every id must be a current
-    * RESIDENT (not merely un-tombstoned — deleting a never-ingested
-    * id would silently skew every later count) and not already
-    * tombstoned. Returns the committed version. */
+    * tombstone file inside the manifested tree and commit
+    * ([[Tombstoned.deleteCommit]]). Both delete-contract halves are
+    * enforced: every id must be a current RESIDENT (not merely
+    * un-tombstoned — deleting a never-ingested id would silently skew
+    * every later count) and not already tombstoned. Returns the
+    * committed version. */
   def deleteCommit(s: SparkSession, dataDir: String,
       deleteIds: DataFrame, idCol: String,
       partitionCols: Seq[String] = Nil): Int = {
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"deleteCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "deleteCommit")
     require(!partitionCols.contains(idCol),
       s"deleteCommit: $idCol is a partition column — row-level deletes " +
         "key on a data column; partition-level erasure is a manifest " +
@@ -301,25 +288,14 @@ object SnapshotTable {
       deleteIds.select(col(idCol)).distinct())
     try {
       val n = staged.count()
-      val (dataF, tombF) = pieces(s, dataDir, v)
-      if (tombF.nonEmpty) {
-        val clash = staged
-          .join(broadcast(s.read.parquet(tombF: _*)), Seq(idCol),
-            "left_semi").count()
-        require(clash == 0L,
-          s"deleteCommit: $clash $idCol(s) are already tombstoned as " +
-            s"of v$v — a repeated delete is a caller bug")
-      }
-      val resident = staged
-        .join(ManifestIO.read(s, dataDir, dataF).select(col(idCol)),
-          Seq(idCol), "left_semi").count()
+      val resident = staged.join(ManifestIO.read(s, dataDir,
+          Tombstoned.pieces(s, dataDir, v)._1).select(col(idCol)),
+        Seq(idCol), "left_semi").count()
       require(resident == n,
         s"deleteCommit: ${n - resident} $idCol(s) are not residents " +
           s"of v$v — deleting a never-ingested id would silently " +
           "skew every later version's row accounting")
-      staged.coalesce(1).write.mode("append")
-        .parquet(s"$dataDir/$deletesPrefix")
-      Snapshots.commitReplacing(s, dataDir, v, Nil)
+      Tombstoned.deleteCommit(s, dataDir, staged, idCol)
     } finally graft.Materialize.release(staged)
   }
 
@@ -391,7 +367,7 @@ object SnapshotTable {
 
   private def servePruned(s: SparkSession, dataDir: String, v: Int,
       idCol: String, prune: Seq[String] => Seq[String]): DataFrame = {
-    val (dataF, tombF) = pieces(s, dataDir, v)
+    val (dataF, tombF) = Tombstoned.pieces(s, dataDir, v)
     require(dataF.nonEmpty,
       s"SnapshotTable: v$v under $dataDir has no data files")
     val kept = prune(dataF)
@@ -403,8 +379,8 @@ object SnapshotTable {
       if (kept.isEmpty) readFiles(s, dataDir, v, dataF).limit(0)
       else readFiles(s, dataDir, v, kept)
     if (tombF.isEmpty) data
-    else data.join(broadcast(s.read.parquet(tombF: _*)), Seq(idCol),
-      "left_anti")
+    else data.join(broadcast(Tombstoned.tombstones(s, dataDir, tombF)),
+      Seq(idCol), "left_anti")
   }
 
   /** COPY-ON-WRITE small-file compaction — the OPTIMIZE leg of the
@@ -412,8 +388,9 @@ object SnapshotTable {
     * one small file per batch, and every serve's per-file open cost
     * grows with ingest history. When the current version holds more
     * than `maxFiles` data files, rewrite them as `maxFiles` new
-    * sibling files (ONE shuffle; parquet append never mutates existing
-    * files) and commit the swapped selection. Compaction is purely
+    * sibling files (ONE shuffle, landed through
+    * [[Snapshots.landStaged]]) and commit a selection that drops
+    * exactly the files it rewrote. Compaction is purely
     * PHYSICAL: tombstones (if any) stay pinned through the commit and
     * keep anti-joining merge-on-read — physical erasure remains
     * [[purgeCommit]]'s separate concern — and older versions keep
@@ -432,11 +409,9 @@ object SnapshotTable {
   def compactCommit(s: SparkSession, dataDir: String,
       maxFiles: Int = 1, partitionCols: Seq[String] = Nil): Int = {
     require(maxFiles >= 1, "compactCommit: maxFiles must be >= 1")
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"compactCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "compactCommit")
     requireLayout(s, dataDir, v, partitionCols)
-    val (dataF, _) = pieces(s, dataDir, v)
+    val dataF = Tombstoned.pieces(s, dataDir, v)._1
     val rewrite =
       if (partitionCols.isEmpty) {
         if (dataF.size <= maxFiles) return v
@@ -460,12 +435,11 @@ object SnapshotTable {
           rewrite.map(f => relOf(dataDir, f).split('/').dropRight(1)
             .mkString("/")).distinct.size,
           partitionCols.map(col): _*)
-    val merged = graft.Materialize.cut(
-      shape(readFiles(s, dataDir, v, rewrite)))
-    writeRows(merged, dataDir, partitionCols)
-    graft.Materialize.release(merged)
+    val mine = Snapshots.landStaged(s, dataDir)(
+      writeRows(shape(readFiles(s, dataDir, v, rewrite)), _, partitionCols))
     val dropRel = rewrite.map(relOf(dataDir, _)).toSet
-    val n = Snapshots.commitReplacingWhere(s, dataDir, v, dropRel.contains)
+    val n = Snapshots.commitSelectingExpecting(s, dataDir, v,
+      dropRel.contains, mine)
     // a compaction that merged EVERY file re-wrote the whole selection
     // through the merged-schema reader — uniformity restored; a
     // partition-local pass that skipped a partition did not
@@ -499,11 +473,9 @@ object SnapshotTable {
     require(partitionCols.nonEmpty,
       "dropPartitionsCommit: a flat table has no partitions to drop — " +
         "row-level erasure is deleteCommit + purgeCommit")
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"dropPartitionsCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "dropPartitionsCommit")
     requireLayout(s, dataDir, v, partitionCols)
-    val (dataF, _) = pieces(s, dataDir, v)
+    val dataF = Tombstoned.pieces(s, dataDir, v)._1
     def kvOf(f: String): Map[String, String] =
       relOf(dataDir, f).split('/').dropRight(1).filter(_.contains("="))
         .map { seg =>
@@ -516,7 +488,7 @@ object SnapshotTable {
         s"v$v under $dataDir — emptying a table through retention is a " +
         "caller bug; delete the dataset instead")
     val dropRel = dropped.map(relOf(dataDir, _)).toSet
-    Snapshots.commitReplacingWhere(s, dataDir, v, dropRel.contains)
+    Snapshots.commitSelectingExpecting(s, dataDir, v, dropRel.contains, Nil)
   }
 
   /** COPY-ON-WRITE MERGE-INTO for a partitioned state table whose
@@ -543,11 +515,9 @@ object SnapshotTable {
       deletes: Option[DataFrame] = None): Int = {
     require(partitionCols.nonEmpty,
       "mergeCommit: a merge rewrites whole partitions — declare them")
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"mergeCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "mergeCommit")
     requireLayout(s, dataDir, v, partitionCols)
-    val (dataF, tombF) = pieces(s, dataDir, v)
+    val (dataF, tombF) = Tombstoned.pieces(s, dataDir, v)
     require(tombF.isEmpty,
       s"mergeCommit: v$v under $dataDir pins a $deletesPrefix/ list — " +
         "run purgeCommit before merging")
@@ -605,51 +575,27 @@ object SnapshotTable {
     (mat, parts)
   }
 
-  /** COPY-ON-WRITE physical erasure: rewrite ONLY the data files
-    * holding tombstoned rows (survivors land as new siblings), carry
+  /** COPY-ON-WRITE physical erasure ([[Tombstoned.purgeCommit]] with
+    * the file as the rewrite unit): rewrite ONLY the data files
+    * holding tombstoned rows (survivors land as new siblings, re-sprayed
+    * into their own partition dirs by the partitionBy write), carry
     * every untouched file verbatim, drop the tombstone list from the
-    * next manifest. Older versions keep reading their own files until
-    * expired. Returns the committed version (unchanged when there is
-    * nothing to purge). */
+    * next manifest. The rewrite reads through the merged-schema reader
+    * once the table has evolved, so a rewritten pre-evolution file
+    * widens to the current schema with nulls. Older versions keep
+    * reading their own files until expired. Returns the committed
+    * version (unchanged when there is nothing to purge). */
   def purgeCommit(s: SparkSession, dataDir: String, idCol: String,
       partitionCols: Seq[String] = Nil): Int = {
-    val v = Snapshots.current(s, dataDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"purgeCommit: no committed version under $dataDir"))
+    val v = Tombstoned.current(s, dataDir, "purgeCommit")
     requireLayout(s, dataDir, v, partitionCols)
-    val (dataF, tombF) = pieces(s, dataDir, v)
-    if (tombF.isEmpty) return v
-    val tombs = s.read.parquet(tombF: _*)
-    // which FILES hold a tombstoned row: a skinny (id, file) scan
-    // under the broadcast delete list — columnar projection makes
-    // this one cheap column + file names. On a partitioned table the
-    // touched set is naturally confined to the partitions holding
-    // tombstoned rows (file granularity is strictly finer), so a
-    // key-local delete rewrites key-local files only.
-    val touched: Set[String] = ManifestIO.read(s, dataDir, dataF)
-      .select(col(idCol), input_file_name().as("__f"))
-      .join(broadcast(tombs), Seq(idCol), "left_semi")
-      .select(col("__f")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-    def hit(f: String) = touched(new Path(f).toUri.getPath)
-    val rewrite = dataF.filter(hit)
-    if (rewrite.nonEmpty) {
-      // basePath keeps the partition columns through the explicit
-      // listing (and the reader schema-merges once the table has
-      // evolved, so a rewritten pre-evolution file widens to the
-      // current schema with nulls — still merge-on-read-equal), and
-      // the partitionBy write re-sprays survivors into their own
-      // partition dirs — new siblings of the files they replace,
-      // exactly like compactCommit's merge
-      val survivors = readFiles(s, dataDir, v, rewrite)
-        .join(broadcast(tombs), Seq(idCol), "left_anti")
-      writeRows(survivors, dataDir, partitionCols)
-    }
-    val dropRel = (rewrite ++ tombF).map(relOf(dataDir, _)).toSet
-    val n = Snapshots.commitReplacingWhere(s, dataDir, v, dropRel.contains)
-    // a purge that happened to touch EVERY file re-wrote the whole
+    val dataF = Tombstoned.pieces(s, dataDir, v)._1
+    val n = Tombstoned.purgeCommit(s, dataDir, idCol, Int.MaxValue, identity,
+      readFiles(s, dataDir, v, _))(writeRows(_, _, partitionCols))
+    // a purge that happened to rewrite EVERY file re-wrote the whole
     // selection through the merged-schema reader — uniformity restored
-    if (rewrite.size == dataF.size) markUniform(s, dataDir, n)
+    if (n != v && (Tombstoned.pieces(s, dataDir, n)._1.toSet & dataF.toSet).isEmpty)
+      markUniform(s, dataDir, n)
     n
   }
 }

@@ -38,8 +38,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Contract boundaries, stated rather than hidden:
   *  - [[commit]] assumes a SINGLE WRITER (an ingest pipeline
-  *    serializes its own maintenance); uncoordinated writers use
-  *    [[commitExpecting]], whose publish rename doubles as a
+  *    serializes its own maintenance) and publishes the full listing,
+  *    so it is used for a table's first version; uncoordinated
+  *    writers use [[commitExpecting]], and every later change of a
+  *    committed table lands through [[landStaged]] and publishes with
+  *    [[commitSelectingExpecting]], which claims only the files that
+  *    writer landed. Their publish rename doubles as a
   *    compare-and-swap on filesystems that refuse to rename over an
   *    existing path (HDFS, object-store committers) and detects
   *    lost updates best-effort elsewhere.
@@ -71,11 +75,11 @@ object Snapshots {
     * validation alone cannot distinguish). Cross-PROCESS rewrites
     * still validate by (modTime, length) best-effort — the same
     * boundary the publish CAS has on local FS, stated rather than
-    * hidden. The cache is what keeps the bookkeeping passes that fold
-    * over EVERY version ([[commitReplacing]]'s referenced-set,
-    * [[expire]]'s live-set) at O(current + new) manifest I/O per call
+    * hidden. The cache is what keeps the bookkeeping pass that folds
+    * over EVERY version ([[expire]]'s live-set) and every commit's
+    * base resolution at O(current + new) manifest I/O per call
     * instead of re-reading the whole history — on a 100-version dir a
-    * commit stats 100 tiny files and reads ~1. */
+    * fold stats 100 tiny files and reads ~1. */
   private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, Long, Seq[String])]()
 
@@ -150,8 +154,8 @@ object Snapshots {
       .filterNot(isHidden)
 
   /** Commit an EXPLICIT dataDir-relative file set as the next version
-    * — the primitive behind [[commit]] (current listing),
-    * [[commitReplacingWhere]] and [[rollback]]. Writes the DELTA form vs
+    * — the primitive behind [[commit]] (current listing) and
+    * [[rollback]]. Writes the DELTA form vs
     * the current version whenever it is smaller than the full
     * re-listing — O(files changed) manifest bytes per commit. */
   private def writeManifest(s: SparkSession, dataDir: String,
@@ -306,62 +310,21 @@ object Snapshots {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Commit the next version as: version `v`'s file set MINUS the
-    * files under `dropPrefixes` (dataDir-relative directory prefixes,
-    * e.g. "terms"), PLUS every on-disk data file that no existing
-    * manifest references — the caller's newly-landed siblings. This is
-    * the primitive behind replacing a WHOLE-REWRITE artifact under
-    * snapshot isolation: the writer lands the replacement as new
-    * sibling files (parquet `append` — nothing existing mutates) and
-    * the manifest swaps the SELECTION, while older versions keep
-    * reading their own files until [[expire]] reclaims them.
-    * [[SnapshotTable]]'s append, delete, compaction, partition drop and
-    * purge use this form. Because it sweeps, any unreferenced file on
-    * disk goes live — including a refused append's landed files;
-    * writers that know their file set use [[commitSelectingExpecting]]
-    * instead (every index family and [[SnapshotTable.mergeCommit]]).
-    * SINGLE WRITER (`v` must be the
-    * current version — a stale base is a lost update and is rejected);
-    * unreferenced leftovers from a CRASHED past writer would be swept
-    * into the new version, so after a crash run [[expire]] before
-    * committing further — the standard lakehouse orphan-sweep rule. */
-  def commitReplacing(s: SparkSession, dataDir: String, v: Int,
-      dropPrefixes: Seq[String]): Int =
-    commitReplacingWhere(s, dataDir, v,
-      f => dropPrefixes.exists(p => f.startsWith(p + "/")))
-
-  /** [[commitReplacing]] with an arbitrary drop PREDICATE over
-    * dataDir-relative paths — for flat (un-partitioned) artifacts
-    * whose replaced files sit at the dataset root rather than under a
-    * directory prefix ([[SnapshotTable]]'s flat purge drops
-    * individual part files). Same single-writer/orphan-sweep
-    * contract. */
-  def commitReplacingWhere(s: SparkSession, dataDir: String, v: Int,
-      drop: String => Boolean): Int = {
-    require(current(s, dataDir).contains(v),
-      s"commitReplacing: base version $v is not current under $dataDir")
-    val vf = files(s, dataDir, v).map(rel(dataDir, _))
-    val referenced: Set[String] = versions(s, dataDir)
-      .flatMap(w => files(s, dataDir, w)).map(rel(dataDir, _)).toSet
-    val fresh = listRel(s, dataDir).filterNot(referenced)
-    val kept = vf.filterNot(drop)
-    writeManifest(s, dataDir, kept ++ fresh)
-  }
-
-  /** OPTIMISTIC-CONCURRENCY commit with an EXPLICIT file selection —
-    * the multi-writer form of [[commitReplacing]]: the next version is
-    * [version `expected`'s files minus those matching `drop`] plus
-    * `addRel` (dataDir-relative paths the CALLER landed and tracked),
-    * failing with [[SnapshotConflictException]] if any other writer
-    * committed since `expected` was read. Unlike [[commitReplacing]]'s
-    * sweep of every unreferenced on-disk file, nothing is swept here —
-    * so two uncoordinated writers may land data files CONCURRENTLY
-    * without writer A's commit absorbing writer B's half-landed batch;
-    * each commit selects exactly its own tracked additions. Every
-    * commit an index family makes after `save` — append, delete,
-    * purge, in the MinHash, BM25, IVF, PQ and Z-order families, the
-    * IVF centroid refresh, and [[SnapshotTable.mergeCommit]] on the
-    * label and vocabulary tables — goes through here.
+  /** OPTIMISTIC-CONCURRENCY commit with an EXPLICIT file selection:
+    * the next version is [version `expected`'s files minus those
+    * matching `drop`] plus `addRel` (dataDir-relative paths the CALLER
+    * landed and tracked, normally through [[landStaged]]), failing
+    * with [[SnapshotConflictException]] if any other writer committed
+    * since `expected` was read. Nothing on disk is swept in — so two
+    * uncoordinated writers may land data files CONCURRENTLY without
+    * writer A's commit absorbing writer B's half-landed batch, and a
+    * crashed or refused writer's files stay unreferenced until
+    * [[expire]] reclaims them; each commit selects exactly its own
+    * tracked additions. Every commit a committed table makes after
+    * its first version goes through here: append, delete and purge in
+    * the MinHash, BM25, IVF, PQ and Z-order families, the IVF
+    * centroid refresh, and every [[SnapshotTable]] change (append,
+    * delete, purge, compaction, partition drop, merge).
     * Same CAS + readback discipline as [[commitExpecting]]. */
   def commitSelectingExpecting(s: SparkSession, dataDir: String,
       expected: Int, drop: String => Boolean,
@@ -595,7 +558,7 @@ object Snapshots {
     * beyond the manifests both sides already have (Iceberg's
     * incremental scan / Delta's file-level change feed, reduced to the
     * manifest diff). Commits that REPLACE file selections
-    * ([[commitReplacing]], [[commitSelectingExpecting]]) surface the
+    * ([[commitSelectingExpecting]], [[rollback]]) surface the
     * replacement files too — file-level, not row-level, semantics
     * there; pair with a row-level change feed (the q114 shape) when
     * replacements are in play. `fromV` may be 0 (“from nothing”): the full `toV` set. */
@@ -785,8 +748,8 @@ object Snapshots {
   /** RETENTION BOUND, version-count form: keep only the newest
     * `keepLast` versions and [[expire]] everything older. Versions
     * accumulate one manifest each, and the passes that fold over the
-    * whole history ([[commitReplacing]]'s referenced-set, [[expire]]'s
-    * live-set) stat every surviving manifest per call — so an ingest
+    * whole history ([[expire]]'s live-set) stat every surviving
+    * manifest per call — so an ingest
     * pipeline that commits per batch should run this on a cadence
     * (every N commits) to keep the version count, the reclaimable-file
     * backlog, the delta-chain length AND time-travel exposure bounded,

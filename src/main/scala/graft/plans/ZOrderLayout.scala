@@ -269,10 +269,12 @@ object ZOrderLayout {
     * committed version (unchanged when there is nothing to purge or
     * merge). */
   def purgeCommit(s: SparkSession, layoutDir: String,
-      maxFiles: Int = 1): Int =
-    Tombstoned.purgeCommit(s, s"${IvfTopK.qualify(s, layoutDir)}/data",
-      "event_id", maxFiles, Tombstoned.segment("zbucket"))(
+      maxFiles: Int = 1): Int = {
+    val dir = s"${IvfTopK.qualify(s, layoutDir)}/data"
+    Tombstoned.purgeCommit(s, dir, "event_id", maxFiles,
+      Tombstoned.segment("zbucket"), ManifestIO.read(s, dir, _))(
       writeBuckets(_, _, "append"))
+  }
 
   /** [[serve]] AS OF a committed snapshot version: the scan is the
     * version's manifested file set with its tombstones anti-joined —

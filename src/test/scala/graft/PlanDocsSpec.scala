@@ -69,6 +69,32 @@ class PlanDocsSpec extends AnyFunSuite {
       s"q136's plan holds $parses from_json( calls, want one")
   }
 
+  test("a headline that pins only a Materialize.cut claims no serve " +
+      "union or serve scan") {
+    // a query ending in graft.Materialize.cut pins at most the
+    // presentation operators over a `Scan ExistingRDD`; its text must
+    // not claim the serve legs the cut hides
+    val explains = Files.readString(Paths.get("EXPLAINS.md"))
+    val claim = """pinned plan is the ([\w-]+ )*(union|serve scan)""".r
+    val stale = Explain.headline.collect {
+      case (name, why) if explains.contains(s"\n## $name\n") =>
+        val from = explains.indexOf(s"\n## $name\n")
+        val open = explains.indexOf("```", from)
+        val ops = explains.substring(open, explains.indexOf("```", open + 3))
+          .linesIterator.drop(2).takeWhile(_.trim.nonEmpty)
+          .map(_.replaceAll("""^[\s+\-:|*]*""", "")
+            .replaceAll("""\s*\(\d+\)$""", "")).toSeq
+        (name, why, ops)
+    }.collect {
+      case (name, why, ops) if ops.size <= 5 &&
+          ops.lastOption.contains("Scan ExistingRDD") &&
+          claim.findFirstIn(why).nonEmpty => name
+    }
+    assert(stale.isEmpty,
+      s"headlines claiming a serve plan EXPLAINS.md does not pin: " +
+        stale.mkString(", "))
+  }
+
   test("every oracle key has a registered query and vice versa") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet

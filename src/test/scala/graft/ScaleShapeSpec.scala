@@ -2355,15 +2355,17 @@ class ScaleShapeSpec extends SparkSpec {
         Snapshots.commit(s, dir)
       }
       val cur = Snapshots.current(s, dir).get
-      // warm the per-version cache once (first fold reads the history)
-      Snapshots.commitReplacing(s, dir, cur, Nil)
+      // warm the per-version cache once (resolving cur's delta chain
+      // reads the history)
+      Snapshots.commitSelectingExpecting(s, dir, cur, _ => false, Nil)
       val before = Snapshots.manifestReads.get()
       // a commit on the 31-version dir must READ O(new) manifests —
       // the 30-version history is served from the validated cache
       val cur2 = Snapshots.current(s, dir).get
-      Seq((99L, 99L)).toDF("id", "v")
-        .coalesce(1).write.mode("append").parquet(dir)
-      Snapshots.commitReplacing(s, dir, cur2, Nil)
+      val mine = Snapshots.landStaged(s, dir)(stage =>
+        Seq((99L, 99L)).toDF("id", "v")
+          .coalesce(1).write.mode("append").parquet(stage))
+      Snapshots.commitSelectingExpecting(s, dir, cur2, _ => false, mine)
       val delta = Snapshots.manifestReads.get() - before
       assert(delta <= 2,
         s"commit on a 31-version dir re-read $delta manifests — the " +
